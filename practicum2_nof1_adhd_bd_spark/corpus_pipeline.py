@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .operators import html as htmlops
 from .operators import urls
+from .operators.textops import pack_sequences
 from .sources import warc
 
 
@@ -156,6 +157,59 @@ def build_crawl_gold(
         }
     ).write.mode("overwrite").parquet(manifest_path)
     return {"packed": packed_path, "manifest": manifest_path}
+
+
+def write_training_shards(
+    df: DataFrame,
+    out_dir: str,
+    n_shards: int = 8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> str:
+    """Token-balanced training-shard sink: docs are laid out in id order on
+    a concatenated token stream (the pack_sequences prefix-sum shape) and
+    cut into ``n_shards`` equal token spans, so every shard carries ~the
+    same training token budget regardless of document-length skew — the
+    property a data-parallel trainer needs so no reader starves.
+
+    Shard assignment reuses the bucketed two-level prefix sum from
+    textops.pack_sequences (no single-task global window); the write is one
+    hash repartition on the shard key into ``shard=K`` parquet partitions.
+    At 100 TB: one shuffle of (id, text) rows keyed by shard — the same
+    cost as any partitioned write — with the assignment itself computed
+    from a tiny per-bucket offset frame.
+    """
+    path = os.path.join(out_dir, "training_shards")
+    packed = pack_sequences(df, budget=1, bucket_size=1024,
+                            text_col=text_col, id_col=id_col)
+    # total stream length via the last doc's end offset (single tiny agg)
+    total = packed.agg(
+        F.max(F.col("start_offset") + F.col("n_tokens")).alias("t")
+    )
+    assign = (
+        packed.crossJoin(F.broadcast(total))
+        # midpoint of the doc's span decides its shard: docs never split
+        .withColumn(
+            "shard",
+            F.least(
+                F.lit(n_shards - 1),
+                F.floor(
+                    (F.col("start_offset") + F.col("n_tokens") / 2)
+                    * n_shards
+                    / F.greatest(F.col("t"), F.lit(1))
+                ),
+            ).cast("int"),
+        )
+        .select(id_col, "n_tokens", "shard")
+    )
+    out = df.join(assign, id_col)
+    (
+        out.repartition(n_shards, F.col("shard"))
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .parquet(path)
+    )
+    return path
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -12,10 +12,17 @@ Layers (all snappy Parquet, written under ``<out_dir>/<layer>``):
 - bronze/events          raw events, partitioned by event_date (partition
                          pruning for every downstream temporal filter)
 - silver/daily           per-day per-type stats (A1 pivot fusion)
-- gold/unified           date-spine join of the daily domains (J2)
+- gold/unified           silver keyed by date. The date-spine join (J2,
+                         joins.spine_left_join) unifies SEVERAL daily
+                         domains onto one spine; silver is a single domain
+                         already one row per date, so joining its distinct
+                         dates back onto it would be an identity costing two
+                         shuffles, and the layer is silver as written
 - gold/labeled           z-scores + PBSI composite + exact-quantile labels
-                         (A7/A8, build_pbsi.py:139-176)
-- gold/segments          gaps-and-islands segment table (W6)
+                         (A7/A8, build_pbsi.py:139-176); the percentile runs
+                         on the bounded (daily-grain) path
+- gold/segments          gaps-and-islands segment table (W6), read from the
+                         written labeled layer
 
 At 100 TB: bronze is the only full-size layer and is written once,
 partitioned on the date key every later stage filters or joins on; silver
@@ -26,10 +33,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators import joins, labels, windows
+from .operators import labels, windows
 from .sources.readers import Catalog
 
 
@@ -72,14 +79,15 @@ def build_silver(spark: SparkSession, bronze_path: str, out_dir: str) -> str:
 
 
 def build_gold(spark: SparkSession, silver_path: str, out_dir: str) -> dict[str, str]:
-    """Unified + labeled + segments gold layers (J2, A7/A8, W6)."""
+    """Unified + labeled + segments gold layers (J2, A7/A8, W6).
+
+    Every layer is daily-grain, so each step reads the layer written
+    before it and runs only the jobs its own write needs."""
     daily = spark.read.parquet(silver_path)
     num_cols = [c for c in daily.columns if c.endswith("_mean")][:3]
 
     unified_path = os.path.join(out_dir, "gold", "unified")
-    spine = daily.select("date").distinct()
-    unified = joins.spine_left_join(spine, [daily])
-    unified.write.mode("overwrite").parquet(unified_path)
+    daily.write.mode("overwrite").parquet(unified_path)
 
     labeled_path = os.path.join(out_dir, "gold", "labeled")
     unified = spark.read.parquet(unified_path)
@@ -88,12 +96,13 @@ def build_gold(spark: SparkSession, silver_path: str, out_dir: str) -> dict[str,
         f"z_{c}": round(1.0 / max(len(num_cols), 1), 2) for c in num_cols
     }
     comp = labels.weighted_composite(z, zcols, "pbsi_score")
-    labeled = labels.quantile_3way_label(comp, "pbsi_score")
-    labeled.write.mode("overwrite").parquet(labeled_path)
+    labels.quantile_3way_label(comp, "pbsi_score", bounded=True).write.mode(
+        "overwrite"
+    ).parquet(labeled_path)
 
     segments_path = os.path.join(out_dir, "gold", "segments")
     seg = windows.gaps_and_islands(
-        labeled.select("date"), "date", [], max_gap_days=1
+        spark.read.parquet(labeled_path).select("date"), "date", [], max_gap_days=1
     )
     windows.segment_summary(seg, "date", []).write.mode("overwrite").parquet(
         segments_path
@@ -141,123 +150,6 @@ def main(argv: list[str] | None = None) -> None:
         print(f"{layer}: {path}")
 
 
-def _ddl_of(df: DataFrame) -> str:
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-
-def derive_bucket_count(sf_dir: str) -> int:
-    """Scale-adaptive bucket count for the bucketed fact layout (r17,
-    guide §2.2/§6: a partitioning constant tuned for one scale is wrong
-    at every other — the r16 10x probe flagged bucketed_join_scan at
-    3.2x because 8 buckets cap the served join's parallelism at 8 tasks
-    no matter how much data lands in them).
-
-    n_buckets = next power of two of (orders+lineitem parquet bytes /
-    target-bucket-bytes), clamped to [8, 65536]. The target is
-    parameterized via $SPARK_GRAFT_BUCKET_MB with a 4 MB local default:
-    at the shipped SFs (<= ~14 MB of facts) that keeps the historical 8
-    buckets — the driver's bench numbers stay comparable — while any
-    replicated 10x probe dir derives 32+ so the serve-time join keeps
-    the cores busy. A production deployment sets the env to a real
-    file-size target (e.g. 512 — parquet bucket files in the
-    128 MB-1 GB band per guide §6), which at 100 TB of facts derives
-    ~2^18-capped bucket counts instead of 8. Derivation is
-    DETERMINISTIC from the source bytes, and callers key the landed
-    layout's fingerprint on the derived count, so layouts built at
-    different targets/scales never alias."""
-    total = 0
-    for name in ("orders.parquet", "lineitem.parquet"):
-        p = os.path.join(sf_dir, name)
-        if os.path.isdir(p):
-            total += sum(
-                os.path.getsize(os.path.join(p, f))
-                for f in os.listdir(p)
-                if not f.startswith((".", "_"))
-            )
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    target = int(os.environ.get("SPARK_GRAFT_BUCKET_MB", "4")) * 1024 * 1024
-    n = 8
-    while n < 65536 and n * target < total:
-        n *= 2
-    return n
-
-
-def build_bucketed_facts(
-    spark: SparkSession, sf_dir: str, out_dir: str, n_buckets: int = 8
-) -> dict[str, str]:
-    """Bucketed (bucketBy) fact layout — the 100-TB repeated-join
-    amortization (r14 verdict #4): orders and lineitem land clustered AND
-    sorted on the join key into the same bucket count, so EVERY future
-    fact-fact join or re-aggregation on the order key is Exchange-free —
-    the shuffle both sides of a plain-parquet join would pay per query is
-    paid exactly once, at write time.
-
-    The pre-write ``repartition(n_buckets, key)`` uses the same Murmur3
-    hash as the bucket spec, so each write task holds exactly one
-    bucket's rows -> one well-sized file per bucket (the multitable-index
-    lesson: commit/listing overhead, not data bytes, dominates small
-    artifacts). Metadata is dropped after the write — the files are the
-    artifact; any session re-declares them with CREATE TABLE ...
-    CLUSTERED BY ... LOCATION (ensure_bucketed_facts), which is how a
-    real deployment shares one bucketed layout across many readers."""
-    cat = Catalog(spark, sf_dir)
-    paths: dict[str, str] = {}
-    for name, df, key in (
-        ("orders", cat.orders, "o_orderkey"),
-        ("lineitem", cat.lineitem, "l_orderkey"),
-    ):
-        path = os.path.join(out_dir, name)
-        tmp_tbl = f"bkt_build_{name}_{os.getpid()}"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-        (
-            df.repartition(n_buckets, F.col(key))
-            .write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .saveAsTable(tmp_tbl)
-        )
-        spark.sql(f"DROP TABLE {tmp_tbl}")  # external: files stay
-        paths[name] = path
-    return paths
-
-
-def ensure_bucketed_facts(
-    spark: SparkSession,
-    paths: dict[str, str],
-    tag: str,
-    sf_dir: str,
-    n_buckets: int = 8,
-) -> tuple[DataFrame, DataFrame]:
-    """Re-declare the landed bucketed files in THIS session's catalog
-    (CREATE TABLE IF NOT EXISTS ... CLUSTERED BY ... LOCATION — bucket
-    ids ride in the file names, the spec rides in the DDL) and return
-    (orders, lineitem). ``tag`` keys the table names per source
-    fingerprint so a regenerated sf_dir never aliases stale metadata."""
-    cat = Catalog(spark, sf_dir)
-    out = []
-    for name, src, key in (
-        ("orders", cat.orders, "o_orderkey"),
-        ("lineitem", cat.lineitem, "l_orderkey"),
-    ):
-        tbl = f"bkt_{name}_{tag}"
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl} ({_ddl_of(src)}) "
-            f"USING PARQUET CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{paths[name]}'"
-        )
-        # the landing may have been rebuilt since this session first
-        # declared the table (r16: _land_once reap + re-land between two
-        # reads left a cached file index pointing at deleted part files
-        # -> FAILED_READ_FILE); drop the cached listing, it relists lazily
-        spark.sql(f"REFRESH TABLE {tbl}")
-        out.append(spark.table(tbl))
-    return out[0], out[1]
-
-
 def run_medallion(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
     """Full lifecycle: bronze -> silver -> gold, file-materialized like the
     reference's stage handoff. Returns the layer paths. Each build_* step is
@@ -271,60 +163,3 @@ def run_medallion(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, s
 
 if __name__ == "__main__":
     main()
-
-
-def write_training_shards(
-    df: DataFrame,
-    out_dir: str,
-    n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """Token-balanced training-shard sink: docs are laid out in id order on
-    a concatenated token stream (the pack_sequences prefix-sum shape) and
-    cut into ``n_shards`` equal token spans, so every shard carries ~the
-    same training token budget regardless of document-length skew — the
-    property a data-parallel trainer needs so no reader starves.
-
-    Shard assignment reuses the bucketed two-level prefix sum from
-    textops.pack_sequences (no single-task global window); the write is one
-    hash repartition on the shard key into ``shard=K`` parquet partitions.
-    At 100 TB: one shuffle of (id, text) rows keyed by shard — the same
-    cost as any partitioned write — with the assignment itself computed
-    from a tiny per-bucket offset frame.
-    """
-    import os as _os
-
-    from .operators.textops import pack_sequences
-
-    path = _os.path.join(out_dir, "training_shards")
-    packed = pack_sequences(df, budget=1, bucket_size=1024,
-                            text_col=text_col, id_col=id_col)
-    # total stream length via the last doc's end offset (single tiny agg)
-    total = packed.agg(
-        F.max(F.col("start_offset") + F.col("n_tokens")).alias("t")
-    )
-    assign = (
-        packed.crossJoin(F.broadcast(total))
-        # midpoint of the doc's span decides its shard: docs never split
-        .withColumn(
-            "shard",
-            F.least(
-                F.lit(n_shards - 1),
-                F.floor(
-                    (F.col("start_offset") + F.col("n_tokens") / 2)
-                    * n_shards
-                    / F.greatest(F.col("t"), F.lit(1))
-                ),
-            ).cast("int"),
-        )
-        .select(id_col, "n_tokens", "shard")
-    )
-    out = df.join(assign, id_col)
-    (
-        out.repartition(n_shards, F.col("shard"))
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    return path

@@ -11662,8 +11662,8 @@ _register_medallion_silver()
 
 def _bucketed_facts(spark, sf_dir):
     """Shared landing for the bucketed fact layout: derive the
-    scale-adaptive bucket count (pipeline.derive_bucket_count — r17,
-    the 10x-probe fix: 8 buckets capped served parallelism at 8 tasks
+    scale-adaptive bucket count (layout.derive_bucket_count — the
+    10x-probe fix: 8 buckets capped served parallelism at 8 tasks
     on any data size), key the landed artifact's fingerprint on BOTH
     the source bytes and the derived count (layouts built at different
     scales/targets never alias), land once, and re-declare the files in
@@ -11671,20 +11671,20 @@ def _bucketed_facts(spark, sf_dir):
     import os
     import tempfile
 
-    from . import pipeline
+    from .operators import layout
 
-    n_buckets = pipeline.derive_bucket_count(sf_dir)
+    n_buckets = layout.derive_bucket_count(sf_dir)
     fp = _source_fingerprint(os.path.join(sf_dir, "orders.parquet"))
     fp += "_" + _source_fingerprint(os.path.join(sf_dir, "lineitem.parquet"))
     fp += f"_b{n_buckets}"
     prefix = os.path.join(tempfile.gettempdir(), "spark_graft_bktfacts_v1")
     root = _land_once(
         prefix, fp,
-        lambda tmp: pipeline.build_bucketed_facts(
+        lambda tmp: layout.build_bucketed_facts(
             spark, sf_dir, tmp, n_buckets=n_buckets
         ),
     )
-    orders, lineitem = pipeline.ensure_bucketed_facts(
+    orders, lineitem = layout.ensure_bucketed_facts(
         spark,
         {"orders": os.path.join(root, "orders"),
          "lineitem": os.path.join(root, "lineitem")},
@@ -11712,7 +11712,7 @@ def q_bucketed_join_scan(spark, sf_dir):
     verdict #4 — the standard 100-TB repeated-join amortization this
     engine demonstrated everywhere except in its stored-layout form):
     orders and lineitem land ONCE per source fingerprint as bucketBy(8,
-    orderkey).sortBy Parquet (pipeline.build_bucketed_facts — one file
+    orderkey).sortBy Parquet (layout.build_bucketed_facts — one file
     per bucket via a hash-matched pre-repartition), any session
     re-declares the files with CREATE TABLE ... CLUSTERED BY ... LOCATION
     (ensure_bucketed_facts), and the served join + per-order
@@ -11724,8 +11724,8 @@ def q_bucketed_join_scan(spark, sf_dir):
     oracle computes the same join over the raw tables, so the bucketed
     files' CONTENT is value-hash attested too. merge hint pins SMJ (the
     point is the exchange-free shuffle join; broadcast would dodge the
-    demonstration at toy scale). Bucket count is scale-adaptive since
-    r17 (pipeline.derive_bucket_count via _bucketed_facts): a constant
+    demonstration at toy scale). Bucket count is scale-adaptive
+    (layout.derive_bucket_count via _bucketed_facts): a constant
     8 capped the served join at 8 tasks regardless of data size — the
     r16 10x probe's 3.2x flag."""
     orders, lineitem, _ = _bucketed_facts(spark, sf_dir)

@@ -55,9 +55,9 @@ def test_bucketed_facts_one_file_per_bucket(spark, tmp_path, sf_dir):
     bucket — commit/listing overhead tracks bucket count, not tasks."""
     import glob
 
-    from practicum2_nof1_adhd_bd_spark import pipeline
+    from practicum2_nof1_adhd_bd_spark.operators import layout
 
-    paths = pipeline.build_bucketed_facts(
+    paths = layout.build_bucketed_facts(
         spark, sf_dir, str(tmp_path), n_buckets=4
     )
     for p in paths.values():
@@ -70,12 +70,12 @@ def test_bucketed_layout_prunes_buckets_for_point_lookup(spark, tmp_path, sf_dir
     lookups at 1/N cost: an equality filter on the bucket key prunes the
     scan to ONE bucket (SelectedBucketsCount: 1 out of N) — at 100 TB a
     key fetch touches one bucket's files, not the table."""
-    from practicum2_nof1_adhd_bd_spark import pipeline
+    from practicum2_nof1_adhd_bd_spark.operators import layout
 
-    paths = pipeline.build_bucketed_facts(
+    paths = layout.build_bucketed_facts(
         spark, sf_dir, str(tmp_path), n_buckets=4
     )
-    orders, _ = pipeline.ensure_bucketed_facts(
+    orders, _ = layout.ensure_bucketed_facts(
         spark, paths, tag="prune", sf_dir=sf_dir, n_buckets=4
     )
     # the auto-bucketed-scan heuristic turns the bucketed read OFF when
@@ -99,8 +99,7 @@ def test_bucketed_point_lookup_prunes_to_one_bucket(spark, sf_dir):
     (SelectedBucketsCount: 1 out of 8) and join them with no Exchange —
     the 1/N point-lookup cost model SCALING §2v claims."""
     from practicum2_nof1_adhd_bd_spark import registry
-
-    from practicum2_nof1_adhd_bd_spark import pipeline
+    from practicum2_nof1_adhd_bd_spark.operators import layout
 
     df = registry.QUERIES["bucketed_point_lookup"](spark, sf_dir)
     rows = df.collect()
@@ -111,9 +110,9 @@ def test_bucketed_point_lookup_prunes_to_one_bucket(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     # AQE prints scans in final + initial sections; every printed scan
     # must carry the one-bucket selection. The bucket count is
-    # scale-adaptive since r17 (pipeline.derive_bucket_count), so the
+    # scale-adaptive (layout.derive_bucket_count), so the
     # expected N is derived, not pinned.
-    n = pipeline.derive_bucket_count(sf_dir)
+    n = layout.derive_bucket_count(sf_dir)
     n_sel = plan.count(f"SelectedBucketsCount: 1 out of {n}")
     assert n_sel >= 2, plan[:2000]
     assert "Exchange hashpartitioning" not in plan, plan[:2000]

@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from practicum2_nof1_adhd_bd_spark import pipeline
@@ -30,6 +31,115 @@ def test_medallion_end_to_end(spark, sf_dir, tmp_path):
     gold2 = pipeline.build_gold(spark, paths["silver"], str(tmp_path / "lake2"))
     l2 = spark.read.parquet(gold2["labeled"])
     assert sorted(map(str, l2.collect())) == sorted(map(str, labeled.collect()))
+
+
+def _gold_oracle(silver_path: str):
+    """DuckDB twin of gold/labeled and gold/segments, recomputed from the
+    written silver: global z-scores (avg, stddev_samp, 6 dp) of the first
+    three ``*_mean`` columns, the equal-weight composite clipped to +-3,
+    P25/P75 ``quantile_cont`` labels, and gaps-and-islands date runs that
+    break on a gap over one day or a month change."""
+    import duckdb
+
+    src = f"read_parquet('{silver_path}/*.parquet')"
+    con = duckdb.connect()
+    cols = [r[0] for r in con.sql(f"DESCRIBE SELECT * FROM {src}").fetchall()]
+    num = [c for c in cols if c.endswith("_mean")][:3]
+    w = round(1.0 / max(len(num), 1), 2)
+    stats = ", ".join(
+        f"avg({c}) AS mu{i}, stddev_samp({c}) AS sd{i}" for i, c in enumerate(num)
+    )
+    zs = ", ".join(
+        f"round(CASE WHEN sd{i} > 0 THEN ({c} - mu{i}) / sd{i} "
+        f"ELSE 0.0::DOUBLE END, 6) AS z{i}"
+        for i, c in enumerate(num)
+    )
+    comp = " + ".join(
+        f"coalesce(z{i}, 0.0::DOUBLE) * {w}::DOUBLE" for i in range(len(num))
+    )
+    labeled = con.sql(f"""
+        WITH st AS (SELECT {stats} FROM {src}),
+        z AS (SELECT date, {zs} FROM {src}, st),
+        c AS (SELECT date,
+                     round(least(greatest({comp}, -3.0::DOUBLE), 3.0::DOUBLE), 6)
+                       AS pbsi_score
+              FROM z),
+        q AS (SELECT quantile_cont(pbsi_score, 0.25) AS lo,
+                     quantile_cont(pbsi_score, 0.75) AS hi FROM c)
+        SELECT date, pbsi_score,
+               CASE WHEN pbsi_score <= lo THEN -1
+                    WHEN pbsi_score >= hi THEN 1 ELSE 0 END AS label_3cls
+        FROM c, q ORDER BY date
+    """).fetchall()
+    segments = con.sql(f"""
+        WITH d AS (SELECT date, lag(date) OVER (ORDER BY date) AS prev FROM {src}),
+        f AS (SELECT date,
+                     CASE WHEN prev IS NULL OR date - prev > 1
+                               OR month(date) <> month(prev)
+                               OR year(date) <> year(prev)
+                          THEN 1 ELSE 0 END AS is_new
+              FROM d),
+        g AS (SELECT date, sum(is_new) OVER (
+                  ORDER BY date ROWS UNBOUNDED PRECEDING) AS segment_id
+              FROM f)
+        SELECT segment_id, min(date), max(date), count(*),
+               datediff('day', min(date), max(date)) + 1
+        FROM g GROUP BY segment_id ORDER BY segment_id
+    """).fetchall()
+    con.close()
+    return labeled, segments
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01"])
+def test_gold_values_match_duckdb(spark, sf_dir, tmp_path, scale):
+    """Gold value parity: every date's PBSI score and label, and every
+    segment, equal a DuckDB recomputation from the written silver."""
+    out = str(tmp_path / "lake")
+    src = os.path.join(os.path.dirname(sf_dir), scale)
+    silver = pipeline.build_silver(
+        spark, pipeline.build_bronze(spark, src, out), out
+    )
+    gold = pipeline.build_gold(spark, silver, out)
+    want_labeled, want_segments = _gold_oracle(silver)
+
+    got_labeled = [
+        tuple(r)
+        for r in spark.read.parquet(gold["labeled"])
+        .select("date", "pbsi_score", "label_3cls")
+        .orderBy("date")
+        .collect()
+    ]
+    assert got_labeled == want_labeled
+    got_segments = [
+        tuple(r)
+        for r in spark.read.parquet(gold["segments"])
+        .select("segment_id", "date_start", "date_end", "n_days", "duration_days")
+        .orderBy("segment_id")
+        .collect()
+    ]
+    assert got_segments == want_segments
+
+
+def test_gold_job_budget(spark, sf_dir, tmp_path):
+    """Gold writes three daily-grain tables in 12 Spark jobs: labels on
+    the bounded percentile path, silver written as the unified layer,
+    segments read from the written labeled layer. The budget keeps one
+    job of headroom; a return to the refined quantile path (31 jobs) or
+    to the single-domain spine join (14) exceeds it."""
+    out = str(tmp_path / "lake")
+    silver = pipeline.build_silver(
+        spark, pipeline.build_bronze(spark, sf_dir, out), out
+    )
+    sc = spark.sparkContext
+    group = "gold-job-budget"
+    sc.setJobGroup(group, "gold job budget")
+    try:
+        pipeline.build_gold(spark, silver, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 13, n_jobs
 
 
 def test_bronze_partition_pruning(spark, sf_dir, tmp_path):
@@ -66,7 +176,7 @@ def test_asof_latest(spark):
 
 
 def test_training_shards_token_balanced(spark, tmp_path):
-    from practicum2_nof1_adhd_bd_spark.pipeline import write_training_shards
+    from practicum2_nof1_adhd_bd_spark.corpus_pipeline import write_training_shards
 
     # skewed doc lengths: a few giants + many small docs
     rows = [(i, "w " * (500 if i % 20 == 0 else 10)) for i in range(200)]

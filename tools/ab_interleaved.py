@@ -1,4 +1,4 @@
-"""Same-session interleaved A/B of two code versions of registry queries.
+"""Same-session interleaved A/B of two code versions: registry queries or medallion builds.
 
 The host shows multi-second CPU-steal waves (documented since r03), so
 SESSION-level A/B — one microbench run per code version — confounds the
@@ -19,50 +19,116 @@ UDFs (both versions' DataFrame plans are built from live module objects;
 the JVM sees only expressions), which covers the graph/similarity/
 textops paths this round touches.
 
+``--pipeline`` runs the same interleaving over the medallion instead of
+registry queries: each pair is one old and one new
+``build_bronze -> build_silver -> build_gold`` into fresh directories,
+timed per layer, with each layer's Spark jobs counted through a job group
+(``statusTracker().getJobIdsForGroup``), so a layer's gain is attributed
+by wall time and by jobs per build in the same contention window.
+
 Usage:
   python tools/ab_interleaved.py --old /tmp/repo_old [-n 5] q1 q2 ...
+  python tools/ab_interleaved.py --old /tmp/repo_old --pipeline [-n 7]
 
 Prints one JSON line:
   {query: {"old": [...], "new": [...], "pair_ratios": [...],
            "median_pair_ratio": r}}   (ratio > 1 -> NEW is faster)
+  --pipeline: {"pipeline": {"old": {layer: [s...]}, "new": {...},
+               "jobs": {"old": {layer: n}, "new": {...}},
+               "pair_ratios": {layer: [...]},
+               "median_pair_ratio": {layer: r}}}
+  with layer in bronze, silver, gold, total.
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 PKG = "practicum2_nof1_adhd_bd_spark"
 OLD_PKG = "_ab_old_" + PKG
 
 
-def _load_old_queries(old_root: str):
+def _load_old(old_root: str, module: str):
     """Copy the OLD checkout's package under a renamed import name and
-    load its registry — lazy relative imports inside old functions then
-    resolve within the renamed package, never the new one."""
-    import importlib
-    import shutil
-    import tempfile
-
+    load ``module`` from it — lazy relative imports inside old functions
+    then resolve within the renamed package, never the new one."""
     stage = tempfile.mkdtemp(prefix="ab_old_pkg_")
     shutil.copytree(
         os.path.join(old_root, PKG), os.path.join(stage, OLD_PKG)
     )
     sys.path.insert(0, stage)
-    reg = importlib.import_module(f"{OLD_PKG}.registry")
-    return dict(reg.QUERIES)
+    return importlib.import_module(f"{OLD_PKG}.{module}")
 
 
-def _load_new_queries(root: str):
-    import importlib
-
+def _load_new(root: str, module: str):
     sys.path.insert(0, root)
-    reg = importlib.import_module(f"{PKG}.registry")
-    return dict(reg.QUERIES)
+    return importlib.import_module(f"{PKG}.{module}")
+
+
+LAYERS = ("bronze", "silver", "gold")
+
+
+def _build(spark, pipe, sf_dir: str, tag: str) -> tuple[dict, dict]:
+    """One full medallion build into a fresh directory. Returns seconds
+    per layer (plus total) and Spark jobs per layer (plus total)."""
+    sc = spark.sparkContext
+    out = tempfile.mkdtemp(prefix="ab_build_")
+    secs, jobs = {}, {}
+    try:
+        prev = sf_dir
+        for layer in LAYERS:
+            group = f"ab {tag} {layer}"
+            sc.setJobGroup(group, group)
+            t0 = time.time()
+            prev = getattr(pipe, f"build_{layer}")(spark, prev, out)
+            secs[layer] = round(time.time() - t0, 3)
+            jobs[layer] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        shutil.rmtree(out, ignore_errors=True)
+    secs["total"] = round(sum(secs.values()), 3)
+    jobs["total"] = sum(jobs.values())
+    return secs, jobs
+
+
+def _pipeline_ab(spark, old_pipe, new_pipe, sf_dir: str, n: int) -> dict:
+    """Alternate old/new medallion builds after one untimed warm build
+    of each; pair i's ratio is old/new wall time per layer (> 1 -> NEW
+    is faster)."""
+    _build(spark, old_pipe, sf_dir, "warm old")
+    _build(spark, new_pipe, sf_dir, "warm new")
+    layers = (*LAYERS, "total")
+    secs = {"old": {k: [] for k in layers}, "new": {k: [] for k in layers}}
+    jobs = {}
+    sides = [("old", old_pipe), ("new", new_pipe)]
+    for i in range(n):
+        # alternate which side runs first, so a pair's position in a
+        # contention wave does not favour one version
+        for side, pipe in sides if i % 2 == 0 else sides[::-1]:
+            s, jobs[side] = _build(spark, pipe, sf_dir, f"{side}[{i}]")
+            for k in layers:
+                secs[side][k].append(s[k])
+    ratios = {
+        k: [round(o / nw, 3) for o, nw in zip(secs["old"][k], secs["new"][k])]
+        for k in layers
+    }
+    return {
+        **secs,
+        "jobs": jobs,
+        "pair_ratios": ratios,
+        "median_pair_ratio": {
+            k: round(statistics.median(r), 3) for k, r in ratios.items()
+        },
+    }
 
 
 def main() -> None:
@@ -73,18 +139,38 @@ def main() -> None:
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
-    ap.add_argument("names", nargs="+")
+    ap.add_argument(
+        "--pipeline",
+        action="store_true",
+        help="A/B the medallion builds instead of registry queries",
+    )
+    ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    if not args.pipeline and not args.names:
+        ap.error("name at least one query, or pass --pipeline")
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    old_q = _load_old_queries(os.path.abspath(args.old))
-    new_q = _load_new_queries(here)
+    module = "pipeline" if args.pipeline else "registry"
+    old_mod = _load_old(os.path.abspath(args.old), module)
+    new_mod = _load_new(here, module)
 
     from practicum2_nof1_adhd_bd_spark.session import get_spark
 
     spark = get_spark("ab-interleaved")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
+
+    if args.pipeline:
+        res = _pipeline_ab(spark, old_mod, new_mod, args.sf_dir, args.n)
+        print(
+            "# pipeline: median_pair_ratio "
+            + " ".join(f"{k}={v:.2f}" for k, v in res["median_pair_ratio"].items())
+            + f" jobs old={res['jobs']['old']} new={res['jobs']['new']}",
+            file=sys.stderr,
+        )
+        print(json.dumps({"pipeline": res}))
+        return
+    old_q, new_q = dict(old_mod.QUERIES), dict(new_mod.QUERIES)
 
     def _ident(batches):
         for b in batches:
