@@ -123,19 +123,14 @@ HEADLINE = [
     "forecast_revenue_change",
     "promo_revenue_share",
     "boilerplate_strip_report",
-    "warc_response_scan",
     "shipmode_priority_counts",
     "url_canonical_dedup",
     # streaming_url_seen_decisions excluded: an availableNow stream per
     # repeat measures stream machinery, not throughput (same reason
     # streaming_ingest_decisions never entered HEADLINE)
-    "html_text_extract",
-    "crawl_silver_scan",
     "robots_screen_decisions",
-    "host_pagerank",
     # round-12 session-4 additions
     "pmi_collocations",
-    "host_triangle_count",
     "scd2_merge_parity",
     "session_episode_overlap",
     "zorder_cell_stats",
@@ -144,7 +139,6 @@ HEADLINE = [
     "setsim_prefix_join",
     "kmv_distinct_estimate",
     "weighted_sample_topk",
-    "host_lpa_communities",
     "decontaminate_containment",
     "zipf_law_fit",
     "benford_digit_audit",

@@ -11,7 +11,6 @@ the uniform surface is the query registry:
         [--limit N] [--out PARQUET_DIR] [--explain]
     python -m practicum2_nof1_adhd_bd_spark audit [--sf-dir D]
     python -m practicum2_nof1_adhd_bd_spark pipeline ...  (medallion CLI)
-    python -m practicum2_nof1_adhd_bd_spark corpus ...    (crawl-corpus medallion)
     python -m practicum2_nof1_adhd_bd_spark ann build --index DIR
         [--sf-dir D] [--n-bits B]           (bucket-partitioned artifact)
     python -m practicum2_nof1_adhd_bd_spark ann query --index DIR
@@ -50,7 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     p_audit.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
 
     sub.add_parser("pipeline", add_help=False)
-    sub.add_parser("corpus", add_help=False)
 
     p_ann = sub.add_parser(
         "ann", help="vector-index serving: build / query the partitioned artifact"
@@ -89,11 +87,6 @@ def main(argv: list[str] | None = None) -> int:
 
         return pipeline_main(rest) or 0
 
-    if args.cmd == "corpus":
-        from .corpus_pipeline import main as corpus_main
-
-        return corpus_main(rest) or 0
-
     from . import registry
 
     if args.cmd == "list":
@@ -102,6 +95,10 @@ def main(argv: list[str] | None = None) -> int:
                 oracle = "oracle" if name in registry.ORACLES else "rows-only"
                 print(f"{name}\t{oracle}")
         return 0
+
+    if args.cmd == "run" and args.query not in registry.QUERIES:
+        print(f"unknown query: {args.query} (try `list`)", file=sys.stderr)
+        return 2
 
     from .session import get_spark
 
@@ -168,9 +165,6 @@ def main(argv: list[str] | None = None) -> int:
                   f"metric={r['metric']} threshold={r['threshold']}")
         return audit_exit_code(report)
 
-    if args.query not in registry.QUERIES:
-        print(f"unknown query: {args.query} (try `list`)", file=sys.stderr)
-        return 2
     df = registry.QUERIES[args.query](spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")

@@ -1564,10 +1564,8 @@ def write_vector_index(
     PARTITIONED, one parquet partition directory per axis-sign bucket, so
     a probe reads only the Hamming ball's directories (PartitionFilters
     in the scan, asserted in tests/test_plans.py) instead of scanning the
-    corpus. The same layout the streaming vector ingest appends to
-    (streaming/vector_ingest.py), so batch builds and continuous ingest
-    produce one interchangeable artifact. Norms are precomputed at build
-    so queries never re-fold them."""
+    corpus. Norms are precomputed at build so queries never re-fold
+    them."""
     rows = vector_index_rows(embeddings, id_col, vec_col, n_bits)
     # cluster rows by the partition key before the write: without it every
     # write task emits one small file into EVERY bucket directory

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from .functions import skew
 from .operators import biomarkers, daily, dedup, drift, folds, impute, joins, labels
 from .operators import metrics, multimodal, similarity as sim, sketches
-from .operators import html as htmlops
 from .operators import textops, urls, windows
 from .sources.readers import Catalog
 
@@ -2760,67 +2759,6 @@ def q_boilerplate_strip_report(spark, sf_dir):
 
 
 @register(
-    "warc_response_scan",
-    """
-    WITH idx AS (
-        SELECT i FROM generate_series(0, 239) t(i) WHERE i % 4 != 3
-    ),
-    rec AS (
-        SELECT i AS doc_id,
-               'site' || (i % 7) || '.example' AS host,
-               CASE WHEN i % 6 = 0 THEN 404 ELSE 200 END AS http_status,
-               'text/html' AS content_type,
-               'doc ' || i || ' the value ' || (i * 13) % 97 ||
-               ' of the table is here' ||
-               CASE WHEN i % 5 = 0
-                    THEN chr(13) || chr(10) || chr(13) || chr(10) ||
-                         'second paragraph ' || i
-                    ELSE '' END AS body
-        FROM idx
-    )
-    SELECT doc_id, host, http_status, content_type, body,
-           CAST(length(body) AS INT) AS n_body_chars,
-           host IN ('site0.example', 'site3.example') AS blocked
-    FROM rec ORDER BY doc_id
-    """,
-)
-def q_warc_response_scan(spark, sf_dir):
-    """WARC ingest (the Common Crawl interchange format — the raw input
-    of web-scale pretraining pipelines): splittable lineSep='WARC/1.0'
-    text scan, response records parsed with codegen'd column algebra
-    (status/content-type from the HTTP preamble, body after two
-    FRONT-anchored blank-line splits so embedded blank lines survive),
-    host extraction, and the UT1-style domain-blocklist screen as a
-    broadcast join. Fixture-formula oracle over a deterministic
-    synthesized crawl (request records must drop, every-fifth body
-    carries an embedded blank line, trailing inter-record CRLFs trim);
-    split-robustness pinned in tests/test_sources.py. sf-independent
-    fixture."""
-    from .sources import warc as warc_src
-
-    src = _land_once(
-        "/tmp/spark_graft_warc", "v1",
-        lambda d: warc_src.synthesize_warc(d, n_records=240),
-    )
-    resp = warc_src.warc_responses(spark, src)
-    blocked = spark.createDataFrame(
-        [("site0.example",), ("site3.example",)], "host string"
-    )
-    out = warc_src.filter_blocklist(resp, blocked)
-    return out.select(
-        F.regexp_extract("target_uri", r"/page/(\d+)$", 1)
-        .cast("bigint")
-        .alias("doc_id"),
-        "host",
-        "http_status",
-        "content_type",
-        "body",
-        F.col("n_body_chars").cast("int").alias("n_body_chars"),
-        "blocked",
-    ).orderBy("doc_id")
-
-
-@register(
     "url_canonical_dedup",
     """
     WITH f AS (
@@ -2898,334 +2836,6 @@ def _messy_url_frame(spark, n: int, id_offset: int = 0) -> DataFrame:
         (i + id_offset).alias("doc_id"),
         F.when(solo | (v == 0), messy_even).otherwise(messy_odd).alias("url"),
     )
-
-
-@register(
-    "crawl_silver_scan",
-    """
-    WITH r AS (
-        SELECT i, CASE WHEN i % 8 = 6 THEN i - 2 ELSE i END AS p
-        FROM generate_series(0, 239) t(i)
-        WHERE i % 4 != 3 AND i % 6 != 0
-    ),
-    s AS (
-        SELECT i, p, p % 7 AS h FROM r WHERE p % 7 NOT IN (0, 3)
-    ),
-    k AS (SELECT i, p, h, min(i) OVER (PARTITION BY p) AS w FROM s),
-    x AS (
-        SELECT i, p, h,
-               'Page ' || i || chr(10) || 'Page ' || i || chr(10) ||
-               'text ' || i || ' alpha & beta' ||
-               CASE WHEN i % 5 = 0 THEN chr(10) || 'extra ' || i
-                    ELSE '' END AS text
-        FROM k WHERE i = w
-    )
-    SELECT i AS doc_id,
-           'site' || h || '.example' AS host,
-           'http://site' || h || '.example/page/' || p AS canonical_url,
-           text,
-           CAST(length(text) AS BIGINT) AS n_chars
-    FROM x ORDER BY doc_id
-    """,
-)
-def q_crawl_silver_scan(spark, sf_dir):
-    """The crawl-corpus medallion END-TO-END (corpus_pipeline.py):
-    synthesize an HTML-body WARC fixture (every 8th record a RESPELLED
-    recrawl of page i-2 — uppercase scheme, www., default port), land
-    bronze (parsed responses + canonical URL/host) and silver (status +
-    content-type screens, blocklist on the CANONICAL host, URL-grain
-    dedup, HTML→text) under /tmp, and read silver back. The oracle
-    replays every stage from the record-index formula, so one value hash
-    attests the whole composition: WARC parsing → canonicalization →
-    blocklist → dedup (min record per canonical URL, including the case
-    where the ORIGINAL died on HTTP 404 and its respelled recrawl
-    survives alone) → text extraction. sf-independent fixture."""
-    import os
-
-    from . import corpus_pipeline as cp
-    from .sources import warc as warc_src
-
-    def _build(d):
-        wd = os.path.join(d, "warc")
-        warc_src.synthesize_warc(wd, 240, html_bodies=True)
-        blocked = spark.createDataFrame(
-            [("site0.example",), ("site3.example",)], "host string"
-        )
-        bronze = cp.build_crawl_bronze(spark, wd, d)
-        cp.build_crawl_silver(spark, bronze, d, blocked)
-
-    root = _land_once("/tmp/spark_graft_crawlmed", "v1", _build)
-    return spark.read.parquet(os.path.join(root, "silver", "docs")).orderBy(
-        "doc_id"
-    )
-
-
-@register(
-    "host_pagerank",
-    """
-    WITH e0 AS (
-        SELECT i AS src,
-               CASE WHEN (2*i+1) % 60 = i THEN (2*i+2) % 60
-                    ELSE (2*i+1) % 60 END AS dst
-        FROM generate_series(0, 59) t(i) WHERE i % 7 != 0
-        UNION
-        SELECT i,
-               CASE WHEN (3*i+2) % 60 = i THEN (3*i+3) % 60
-                    ELSE (3*i+2) % 60 END
-        FROM generate_series(0, 59) t(i) WHERE i % 7 != 0
-    ),
-    nodes AS (
-        SELECT DISTINCT node FROM
-        (SELECT src AS node FROM e0 UNION SELECT dst FROM e0)
-    ),
-    nn AS (SELECT CAST(count(*) AS DOUBLE) AS N FROM nodes),
-    deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS od FROM e0 GROUP BY 1),
-    r0 AS (SELECT node, 1.0 / N AS rank FROM nodes, nn),
-    r1 AS (
-        SELECT n.node,
-               0.15 / nn.N + 0.85 * (COALESCE(s.in_sum, 0)
-                   + dm.m / nn.N) AS rank
-        FROM nodes n
-        LEFT JOIN (SELECT e.dst AS node, sum(r.rank / deg.od) AS in_sum
-                   FROM r0 r JOIN deg ON r.node = deg.src
-                   JOIN e0 e ON e.src = r.node GROUP BY 1) s
-            ON n.node = s.node
-        CROSS JOIN (SELECT COALESCE(sum(r.rank), 0) AS m FROM r0 r
-                    LEFT JOIN deg ON r.node = deg.src
-                    WHERE deg.src IS NULL) dm
-        CROSS JOIN nn
-    ),
-    r2 AS (
-        SELECT n.node,
-               0.15 / nn.N + 0.85 * (COALESCE(s.in_sum, 0)
-                   + dm.m / nn.N) AS rank
-        FROM nodes n
-        LEFT JOIN (SELECT e.dst AS node, sum(r.rank / deg.od) AS in_sum
-                   FROM r1 r JOIN deg ON r.node = deg.src
-                   JOIN e0 e ON e.src = r.node GROUP BY 1) s
-            ON n.node = s.node
-        CROSS JOIN (SELECT COALESCE(sum(r.rank), 0) AS m FROM r1 r
-                    LEFT JOIN deg ON r.node = deg.src
-                    WHERE deg.src IS NULL) dm
-        CROSS JOIN nn
-    ),
-    r3 AS (
-        SELECT n.node,
-               0.15 / nn.N + 0.85 * (COALESCE(s.in_sum, 0)
-                   + dm.m / nn.N) AS rank
-        FROM nodes n
-        LEFT JOIN (SELECT e.dst AS node, sum(r.rank / deg.od) AS in_sum
-                   FROM r2 r JOIN deg ON r.node = deg.src
-                   JOIN e0 e ON e.src = r.node GROUP BY 1) s
-            ON n.node = s.node
-        CROSS JOIN (SELECT COALESCE(sum(r.rank), 0) AS m FROM r2 r
-                    LEFT JOIN deg ON r.node = deg.src
-                    WHERE deg.src IS NULL) dm
-        CROSS JOIN nn
-    )
-    SELECT node, round(rank, 7) AS rank FROM r3 ORDER BY node
-    """,
-)
-def q_host_pagerank(spark, sf_dir):
-    """PageRank host ranking (operators/graph.py) — the crawl-
-    prioritization centrality Common Crawl publishes per host, and the
-    engine's iterative-graph-algorithm witness: K synchronous rounds of
-    ranks-join-edges + groupBy(dst) sums, dangling mass as a 1-row
-    broadcast, lineage cut per round with localCheckpoint. Fixture: a
-    deterministic 2-out-regular formula graph on 60 ids with every 7th
-    node DANGLING (no out-edges, so the redistribution term is live) and
-    one formula-collision node with out-degree 1 (distinct() collapse,
-    exercised on both engines). The oracle unrolls the SAME three rounds
-    symbolically as chained CTEs — iteration-for-iteration parity, not
-    just a final sanity check. Outputs round to 7dp; double combine-
-    order differences live at ~1e-15, eight orders below the gate.
-    sf-independent fixture."""
-    i = F.col("id")
-    e1 = F.when((2 * i + 1) % 60 == i, (2 * i + 2) % 60).otherwise(
-        (2 * i + 1) % 60
-    )
-    e2 = F.when((3 * i + 2) % 60 == i, (3 * i + 3) % 60).otherwise(
-        (3 * i + 2) % 60
-    )
-    base = spark.range(60).filter(i % 7 != 0)
-    edges = base.select(i.alias("src"), e1.alias("dst")).unionByName(
-        base.select(i.alias("src"), e2.alias("dst"))
-    )
-    from .operators import graph
-
-    pr = graph.pagerank(edges, n_iter=3, damping=0.85)
-    return pr.select(
-        "node", F.round("rank", 7).alias("rank")
-    ).orderBy("node")
-
-
-@register("harmonic_centrality_approx", None)
-def q_harmonic_centrality_approx(spark, sf_dir):
-    """HyperBall approximate harmonic centrality (operators/graph.py) —
-    the Boldi-Vigna algorithm behind Common Crawl's published host
-    rankings: per-node HLL in-ball counters, K rounds of elementwise-max
-    merges along edges, (|B_r|-|B_{r-1}|)/r credited per round. Runs on
-    the same formula graph as host_pagerank. ROWS-ONLY by design: the
-    output is a sketch ESTIMATE (~1.04/sqrt(m) relative error), so exact
-    SQL parity is the wrong spec — correctness is pinned in
-    tests/test_graph.py against exact BFS harmonic centrality on
-    hand-analyzable graphs (path monotonicity + hub dominance), and the
-    register/merge determinism follows from the md5 hashing device."""
-    i = F.col("id")
-    e1 = F.when((2 * i + 1) % 60 == i, (2 * i + 2) % 60).otherwise(
-        (2 * i + 1) % 60
-    )
-    e2 = F.when((3 * i + 2) % 60 == i, (3 * i + 3) % 60).otherwise(
-        (3 * i + 2) % 60
-    )
-    base = spark.range(60).filter(i % 7 != 0)
-    edges = base.select(i.alias("src"), e1.alias("dst")).unionByName(
-        base.select(i.alias("src"), e2.alias("dst"))
-    )
-    from .operators import graph
-
-    return graph.hyperball_harmonic(edges, n_iter=3).orderBy("node")
-
-
-@register(
-    "host_triangle_count",
-    """
-    WITH raw AS (
-        SELECT i AS s, (i + 1) % 48 AS t FROM generate_series(0, 47) g(i)
-        UNION ALL
-        SELECT i, (i + 2) % 48 FROM generate_series(0, 47) g(i)
-        UNION ALL
-        SELECT (i + 1) % 48, i FROM generate_series(0, 47) g(i) WHERE i % 3 = 0
-        UNION ALL
-        SELECT 0, i FROM generate_series(5, 45, 5) g(i)
-        UNION ALL
-        SELECT i, i FROM generate_series(0, 47) g(i) WHERE i % 11 = 0
-    ),
-    e AS (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
-          FROM raw WHERE s <> t),
-    deg AS (SELECT node, count(*) AS degree
-            FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-            GROUP BY 1),
-    dd AS (SELECT e.a, e.b, da.degree AS da, db.degree AS db
-           FROM e JOIN deg da ON e.a = da.node
-                  JOIN deg db ON e.b = db.node),
-    o AS (SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS u,
-                 CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS v,
-                 CASE WHEN da < db OR (da = db AND a < b) THEN db ELSE da END AS dv
-          FROM dd),
-    w AS (SELECT o1.u, o1.v AS v1, o2.v AS v2
-          FROM o o1 JOIN o o2 ON o1.u = o2.u
-          WHERE o1.dv < o2.dv OR (o1.dv = o2.dv AND o1.v < o2.v)),
-    tri AS (SELECT w.u, w.v1, w.v2
-            FROM w JOIN o ON o.u = w.v1 AND o.v = w.v2),
-    pn AS (SELECT node, count(*) AS n_triangles
-           FROM (SELECT u AS node FROM tri
-                 UNION ALL SELECT v1 FROM tri
-                 UNION ALL SELECT v2 FROM tri)
-           GROUP BY 1)
-    SELECT deg.node, deg.degree,
-           CAST(coalesce(pn.n_triangles, 0) AS BIGINT) AS n_triangles,
-           CASE WHEN deg.degree >= 2
-                THEN round(coalesce(pn.n_triangles, 0) * 2.0
-                           / (deg.degree * (deg.degree - 1)), 6)
-           END AS clustering
-    FROM deg LEFT JOIN pn USING (node)
-    ORDER BY deg.node
-    """,
-)
-def q_host_triangle_count(spark, sf_dir):
-    """Degree-oriented triangle counting (operators/graph.py,
-    Suri-Vassilvitskii 2011) — per-host triangle participation and
-    local clustering coefficient, the community-density/link-farm
-    signal next to host_pagerank. Fixture: a circulant ring (i->i+1,
-    i->i+2 mod 48, so every ring node closes {i, i+1, i+2}) plus a
-    degree-skewed hub (0 -> every 5th node) to exercise the
-    orientation's skew bound, reversed-duplicate edges (every 3rd ring
-    edge also arrives flipped) and self-loops (every 11th node) to
-    attest canonicalization hygiene. The oracle replays orientation,
-    wedge formation, and closure symbolically. sf-independent
-    fixture."""
-    i = F.col("id")
-    base = spark.range(48)
-    ring1 = base.select(i.alias("src"), ((i + 1) % 48).alias("dst"))
-    ring2 = base.select(i.alias("src"), ((i + 2) % 48).alias("dst"))
-    rev = base.filter(i % 3 == 0).select(
-        ((i + 1) % 48).alias("src"), i.alias("dst")
-    )
-    hub = base.filter((i % 5 == 0) & (i != 0)).select(
-        F.lit(0).cast("long").alias("src"), i.alias("dst")
-    )
-    loops = base.filter(i % 11 == 0).select(
-        i.alias("src"), i.alias("dst")
-    )
-    edges = (
-        ring1.unionByName(ring2)
-        .unionByName(rev)
-        .unionByName(hub)
-        .unionByName(loops)
-    )
-    from .operators import graph
-
-    return graph.triangle_count(edges).orderBy("node")
-
-
-@register(
-    "host_lpa_communities",
-    """
-    WITH raw AS (
-      SELECT i AS src, (i // 8) * 8 + ((i % 8) + 1) % 8 AS dst
-      FROM generate_series(0, 47) t(i)
-      UNION ALL
-      SELECT i, (i // 8) * 8 + ((i % 8) + 2) % 8 FROM generate_series(0, 47) t(i)
-      UNION ALL
-      SELECT i, i + 1 FROM generate_series(0, 47) t(i) WHERE i % 8 = 7 AND i < 40
-    ),
-    sym AS (SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM raw WHERE src <> dst
-        UNION ALL SELECT dst, src FROM raw WHERE src <> dst)),
-    l0 AS (SELECT DISTINCT src AS node, src AS lab FROM sym),
-    v1 AS (SELECT s.src AS node, l.lab, count(*) AS n
-           FROM sym s JOIN l0 l ON s.dst = l.node GROUP BY 1, 2),
-    l1 AS (SELECT node, lab FROM v1
-           QUALIFY row_number() OVER (PARTITION BY node ORDER BY n DESC, lab ASC) = 1),
-    v2 AS (SELECT s.src AS node, l.lab, count(*) AS n
-           FROM sym s JOIN l1 l ON s.dst = l.node GROUP BY 1, 2),
-    l2 AS (SELECT node, lab FROM v2
-           QUALIFY row_number() OVER (PARTITION BY node ORDER BY n DESC, lab ASC) = 1),
-    v3 AS (SELECT s.src AS node, l.lab, count(*) AS n
-           FROM sym s JOIN l2 l ON s.dst = l.node GROUP BY 1, 2),
-    l3 AS (SELECT node, lab FROM v3
-           QUALIFY row_number() OVER (PARTITION BY node ORDER BY n DESC, lab ASC) = 1),
-    sz AS (SELECT lab, count(*) AS community_size FROM l3 GROUP BY 1)
-    SELECT l3.node, l3.lab AS community, sz.community_size
-    FROM l3 JOIN sz USING (lab)
-    """,
-)
-def q_host_lpa_communities(spark, sf_dir):
-    """Synchronous label-propagation communities (graph.label_propagation,
-    Raghavan et al. 2007) with pinned deterministic tie-breaks (count
-    desc, label asc — GraphX's hash-order LPA is run-to-run unstable,
-    this one is oracle-attestable). Fixture: six 8-node circulant
-    blocks (i->i+1, i->i+2 within the block) chained by single bridge
-    edges — dense blocks must coalesce onto their minimum node id while
-    the weak bridges must NOT merge neighbouring blocks in 3 rounds.
-    The oracle unrolls all three vote/top-1 rounds symbolically, so the
-    hash match proves every round's message join, vote count, and
-    tie-break. sf-independent fixture; convergence/tie-break unit
-    tests in tests/test_graph.py."""
-    i = F.col("id")
-    base = spark.range(48)
-    blk = F.expr("(id DIV 8) * 8")
-    e1 = base.select(i.alias("src"), (blk + (i % 8 + 1) % 8).alias("dst"))
-    e2 = base.select(i.alias("src"), (blk + (i % 8 + 2) % 8).alias("dst"))
-    eb = base.filter((i % 8 == 7) & (i < 40)).select(
-        i.alias("src"), (i + 1).alias("dst")
-    )
-    from .operators import graph
-
-    return graph.label_propagation(
-        e1.unionByName(e2).unionByName(eb), n_iter=3
-    ).orderBy("node")
 
 
 @register(
@@ -3543,85 +3153,6 @@ def q_streaming_frontier_slots(spark, sf_dir):
 
 
 @register(
-    "html_text_extract",
-    """
-    WITH d AS (SELECT i FROM generate_series(0, 139) t(i)),
-    f AS (
-        SELECT i, i % 3 AS k3, (i % 4 = 0) AS has_link,
-               '<html><head><title>Doc ' || i || '</title>'
-               || '<style>body {color: red}</style>'
-               || '<script>var x = ' || i || ';</script></head><body>'
-               || '<!-- c' || i || ' --><h1>Doc ' || i || '</h1>'
-               || '<p>para ' || i || ' 0 with &amp; and &lt;tag&gt;</p>'
-               || CASE WHEN i % 3 >= 1 THEN '<p>para ' || i
-                       || ' 1 with &amp; and &lt;tag&gt;</p>' ELSE '' END
-               || CASE WHEN i % 3 >= 2 THEN '<p>para ' || i
-                       || ' 2 with &amp; and &lt;tag&gt;</p>' ELSE '' END
-               || CASE WHEN i % 4 = 0 THEN '<a href="http://site'
-                       || (i % 7) || '.example/page/' || i || '">more '
-                       || i || '</a>' ELSE '' END
-               || '</body></html>' AS html,
-               'Doc ' || i || chr(10) || 'Doc ' || i || chr(10)
-               || 'para ' || i || ' 0 with & and <tag>'
-               || CASE WHEN i % 3 >= 1 THEN chr(10) || 'para ' || i
-                       || ' 1 with & and <tag>' ELSE '' END
-               || CASE WHEN i % 3 >= 2 THEN chr(10) || 'para ' || i
-                       || ' 2 with & and <tag>' ELSE '' END
-               || CASE WHEN i % 4 = 0 THEN chr(10) || 'more ' || i
-                       ELSE '' END AS text
-        FROM d
-    )
-    SELECT i AS doc_id, text,
-           CAST(CASE WHEN has_link THEN 1 ELSE 0 END AS BIGINT) AS n_links,
-           CAST(15 + 2 * (k3 + 1) + CASE WHEN has_link THEN 2 ELSE 0 END
-                AS BIGINT) AS n_tags,
-           round(CAST(length(text) AS DOUBLE) / greatest(length(html), 1),
-                 6) AS text_frac
-    FROM f ORDER BY doc_id
-    """,
-)
-def q_html_text_extract(spark, sf_dir):
-    """HTML text extraction (operators/html.py) — the step between the
-    WARC scan and boilerplate removal, as pure codegen'd column algebra
-    (no DOM, no UDF: a Python parser per document is the row-at-a-time
-    trap at crawl scale). Fixture-formula oracle: doc i's HTML is built
-    by formula (title + style + script + comment + h1 + 1..3 entity-
-    laden paragraphs + an anchor on every 4th doc) and the oracle
-    replays the EXPECTED extracted text independently — so the value
-    hash attests script/style/comment dropping, block-tag line
-    structure, inline-tag stripping, entity decoding (incl. the
-    no-double-decode order), whitespace collapse, and the link/tag/
-    text_frac signals. sf-independent fixture."""
-    i = F.col("id")
-    s = i.cast("string")
-    para = lambda j: F.concat(  # noqa: E731
-        F.lit("<p>para "), s, F.lit(f" {j} with &amp; and &lt;tag&gt;</p>")
-    )
-    raw = spark.range(140).select(
-        i.alias("doc_id"),
-        F.concat(
-            F.lit("<html><head><title>Doc "), s, F.lit("</title>"),
-            F.lit("<style>body {color: red}</style>"),
-            F.lit("<script>var x = "), s, F.lit(";</script></head><body>"),
-            F.lit("<!-- c"), s, F.lit(" --><h1>Doc "), s, F.lit("</h1>"),
-            para(0),
-            F.when(i % 3 >= 1, para(1)).otherwise(F.lit("")),
-            F.when(i % 3 >= 2, para(2)).otherwise(F.lit("")),
-            F.when(
-                i % 4 == 0,
-                F.concat(
-                    F.lit('<a href="http://site'), (i % 7).cast("string"),
-                    F.lit(".example/page/"), s, F.lit('">more '), s,
-                    F.lit("</a>"),
-                ),
-            ).otherwise(F.lit("")),
-            F.lit("</body></html>"),
-        ).alias("html"),
-    )
-    return htmlops.html_extract(raw).orderBy("doc_id")
-
-
-@register(
     "streaming_url_seen_decisions",
     """
     WITH f AS (
@@ -3814,7 +3345,6 @@ def q_calendar_month_folds(spark, sf_dir):
     return folds.month_folds(o, "o_orderdate", train_months=4, val_months=2).select(
         "o_orderkey", "fold_id", "split"
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -5968,7 +5498,6 @@ def q_decontaminate_ngram(spark, sf_dir):
     return textops.ngram_decontaminate(tr, ev, n=5)
 
 
-
 @register(
     "source_mixture_weights",
     f"""
@@ -8034,138 +7563,6 @@ def q_streaming_ingest_decisions(spark, sf_dir):
 
 
 ORACLES["streaming_ingest_decisions"] = _ingest_decisions_oracle()
-
-
-def _vector_ingest_oracle() -> str:
-    """DuckDB twin of streaming.vector_ingest.screen_vector_batch over
-    the deterministic batch/index split of q_incremental_vector_decisions:
-    axis-sign buckets of the RAW vectors, int8 quantize -> dequantize on
-    BOTH sides (the index stores int8 rows, and the batch is quantized
-    before screening because that is the form it will be stored in),
-    in-bucket cosine >= 0.9 over the dequantized vectors, near_dup
-    matched to the min qualifying index id. The quantization arithmetic
-    (scale = max|v|/127, q = round(v/scale)) is the int8_cosine_topk
-    oracle's attested device."""
-    bucket = (
-        "(CASE WHEN v[1] > 0 THEN 1 ELSE 0 END)"
-        " + (CASE WHEN v[2] > 0 THEN 2 ELSE 0 END)"
-        " + (CASE WHEN v[3] > 0 THEN 4 ELSE 0 END)"
-        " + (CASE WHEN v[4] > 0 THEN 8 ELSE 0 END)"
-    )
-    deq = (
-        "list_transform(v, x -> CAST(round(x / sc) AS INT) * sc)"
-    )
-    scale = (
-        "greatest(list_max(list_transform(v, x -> abs(x))), 1e-12) / 127.0"
-    )
-    return f"""
-    WITH ie AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-                WHERE vec_id % 5 != 0),
-    is_ AS (SELECT vec_id, v, {bucket} AS bucket, {scale} AS sc FROM ie),
-    idx AS (SELECT vec_id, bucket, {deq} AS dv FROM is_),
-    be AS (
-        SELECT vec_id + 1000000 AS vec_id, embedding::DOUBLE[] AS v
-        FROM embeddings WHERE vec_id % 10 = 1
-        UNION ALL
-        SELECT vec_id + 2000000 AS vec_id, embedding::DOUBLE[] AS v
-        FROM embeddings WHERE vec_id % 5 = 0
-    ),
-    bs AS (SELECT vec_id, v, {bucket} AS bucket, {scale} AS sc FROM be),
-    bb AS (SELECT vec_id, bucket, {deq} AS dv FROM bs),
-    near AS (
-        SELECT b.vec_id, 'near_dup' AS status, min(i.vec_id) AS matched_id
-        FROM bb b JOIN idx i ON b.bucket = i.bucket
-        WHERE round(list_inner_product(b.dv, i.dv)
-                    / (sqrt(list_inner_product(b.dv, b.dv))
-                       * sqrt(list_inner_product(i.dv, i.dv))), 6) >= 0.9
-        GROUP BY 1
-    )
-    SELECT * FROM near
-    UNION ALL
-    SELECT vec_id, 'admitted' AS status, CAST(NULL AS BIGINT) AS matched_id
-    FROM bb WHERE vec_id NOT IN (SELECT vec_id FROM near)
-    """
-
-
-@register("incremental_vector_decisions", None)
-def q_incremental_vector_decisions(spark, sf_dir):
-    """Batch-mode attestation of the streaming VECTOR ingest screen
-    (streaming/vector_ingest.screen_vector_batch — streaming SemDeDup):
-    index = vectors with vec_id%5 != 0 in their axis-sign buckets; batch
-    = exact vector copies (vec_id%10==1, re-keyed +1e6 — cosine 1.0 with
-    their originals) plus vectors absent from the index (vec_id%5==0,
-    re-keyed +2e6). Copies must come out near_dup matched to their
-    original; novel vectors admitted. The oracle replays bucket + cosine
-    algebra in SQL."""
-    from .streaming import vector_ingest as vi
-
-    emb = _cat(spark, sf_dir).embeddings
-    index = vi._batch_vectors(
-        emb.filter(F.col("vec_id") % 5 != 0), "vec_id", "embedding", 4
-    )
-    batch = (
-        emb.filter(F.col("vec_id") % 10 == 1)
-        .select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-        .unionByName(
-            emb.filter(F.col("vec_id") % 5 == 0).select(
-                (F.col("vec_id") + 2000000).alias("vec_id"), "embedding"
-            )
-        )
-    )
-    dec, _adm = vi.screen_vector_batch(batch, index, threshold=0.9, n_bits=4)
-    return dec.localCheckpoint(eager=True)
-
-
-ORACLES["incremental_vector_decisions"] = _vector_ingest_oracle()
-
-
-@register("streaming_vector_decisions", None)
-def q_streaming_vector_decisions(spark, sf_dir):
-    """§2.9: the vector-ingest STREAM under the value-hash gate — same
-    fixture as incremental_vector_decisions (same SQL oracle), executed
-    as a real foreachBatch run: the batch lands as JSON, the vector
-    index is bootstrapped on disk, ingest_vector_stream processes
-    availableNow against a fresh checkpoint, and the decisions are read
-    back from the parquet sink. Per-invocation uuid dirs are
-    fixture-sized."""
-    import os
-    import tempfile
-    import uuid
-
-    from .streaming import vector_ingest as vi
-
-    emb = _cat(spark, sf_dir).embeddings
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_vingest_{uuid.uuid4().hex[:8]}"
-    )
-    src, index_dir = os.path.join(work, "src"), os.path.join(work, "index")
-    dec_dir, ckpt = os.path.join(work, "dec"), os.path.join(work, "ckpt")
-    vi._batch_vectors(
-        emb.filter(F.col("vec_id") % 5 != 0), "vec_id", "embedding", 4
-    ).write.partitionBy("bucket").mode("overwrite").parquet(index_dir)
-    batch = (
-        emb.filter(F.col("vec_id") % 10 == 1)
-        .select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-        .unionByName(
-            emb.filter(F.col("vec_id") % 5 == 0).select(
-                (F.col("vec_id") + 2000000).alias("vec_id"), "embedding"
-            )
-        )
-    )
-    batch.coalesce(1).write.mode("overwrite").json(src)
-    stream = spark.readStream.schema(
-        "vec_id bigint, embedding array<double>"
-    ).json(src)
-    q = vi.ingest_vector_stream(stream, index_dir, dec_dir, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_vector_decisions: stream did not finish in 300s")
-    return spark.read.schema(vi.VDECISION_SCHEMA).parquet(dec_dir).select(
-        "vec_id", "status", "matched_id"
-    )
-
-
-ORACLES["streaming_vector_decisions"] = _vector_ingest_oracle()
 
 
 @register(
@@ -11870,67 +11267,6 @@ def q_csv_permissive_scan(spark, sf_dir):
     )
 
 
-def q_jsonl_corpus_scan(spark, sf_dir):
-    """S5-adjacent driver surface for the JSONL corpus source: training
-    corpora travel as JSON Lines, so synthesize a deterministic JSONL shard
-    (including corrupt lines a web-scrape always contains) under /tmp and
-    run the defensive read (sources/jsonl.py: explicit schema — one scan,
-    not inference's two — PERMISSIVE, corrupt-line capture), then a
-    per-lang rollup. Content is a pure function of the line index, so the
-    oracle regenerates the expected aggregate in SQL — full value-hash
-    attestation despite the filesystem source."""
-    import os
-    import tempfile
-
-    from .sources import jsonl
-
-    # bump the _vN suffix whenever the synthesis formula changes: /tmp
-    # persists across rounds and a stale fixture would be reused silently
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_corpus_demo_v1.jsonl")
-    if not os.path.exists(path):
-        langs = ["en", "de", "fr", "pt"]
-        lines = []
-        for i in range(3000):
-            if i % 97 == 13:  # deliberately corrupt line (unclosed object)
-                lines.append('{"doc_id": %d, "text": "broken' % i)
-            else:
-                lines.append(
-                    '{"doc_id": %d, "text": "doc %d", "lang": "%s", '
-                    '"source": "web", "n_chars": %d}'
-                    % (i, i, langs[i % 4], (i * 17) % 400 + 10)
-                )
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(lines))
-        os.replace(tmp, path)  # atomic: concurrent runs never see a partial
-    docs = jsonl.read_jsonl_corpus(spark, path)
-    return docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        # text = "doc <i>": integer lengths sum exactly in doubles, so the
-        # mean is combine-order-stable
-        F.round(F.avg(F.length("text")), 6).alias("mean_text_len"),
-    )
-
-QUERIES["jsonl_corpus_scan"] = q_jsonl_corpus_scan
-# Line i (i%97!=13): lang = [en,de,fr,pt][i%4], n_chars = (i*17)%400+10,
-# text "doc i" -> length 4+len(str(i)). The oracle rebuilds the rollup
-# from that formula; corrupt lines (i%97==13) are excluded exactly as the
-# PERMISSIVE read drops them.
-ORACLES["jsonl_corpus_scan"] = """
-    WITH g AS (SELECT unnest(range(0, 3000)) AS i),
-    d AS (
-        SELECT (['en','de','fr','pt'])[(i % 4) + 1] AS lang,
-               (i * 17) % 400 + 10 AS n_chars,
-               4 + length(CAST(i AS VARCHAR)) AS text_len
-        FROM g WHERE i % 97 != 13
-    )
-    SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           round(avg(CAST(text_len AS DOUBLE)), 6) AS mean_text_len
-    FROM d GROUP BY 1
-"""
-
-
 @register(
     "feature_attribution_topk",
     """
@@ -12091,7 +11427,6 @@ def _register_shap_attribution() -> None:
 
 
 _register_shap_attribution()
-
 
 
 # ---------------------------------------------------------------------------
@@ -12272,7 +11607,6 @@ _FRONT_ORDER = [
     "forward_fill_daily",
     "global_zscore",
     "high_activity_blocks",
-    "jsonl_corpus_scan",
     "ks_drift",
     "label_halves_drift",
     "lag_persistence",
@@ -12296,7 +11630,6 @@ _FRONT_ORDER = [
     "sliding_seq_stats",
     "snapshot_provenance",
 ]
-
 
 
 def _reorder() -> None:

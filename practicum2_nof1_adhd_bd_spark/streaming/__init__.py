@@ -2,7 +2,6 @@ from .daily_stream import (
     attribution_join_stream,
     daily_exact_stream,
     daily_stats_stream,
-    dedup_stream,
     enriched_daily_stream,
     sessionize_stream,
     sliding_stats_stream,
@@ -13,7 +12,6 @@ __all__ = [
     "attribution_join_stream",
     "daily_exact_stream",
     "daily_stats_stream",
-    "dedup_stream",
     "enriched_daily_stream",
     "sessionize_stream",
     "shift_detector_stream",

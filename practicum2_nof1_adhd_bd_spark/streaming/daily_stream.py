@@ -115,39 +115,6 @@ def sessionize_stream(
     )
 
 
-def dedup_stream(
-    docs: DataFrame,
-    ts_col: str = "ingest_ts",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup for a live corpus-ingest feed (the streaming
-    twin of operators/dedup.exact_dedup): each arriving document is kept
-    only if its normalized content hash has not been seen within the
-    watermark horizon.
-
-    dropDuplicatesWithinWatermark keeps ONE state row per distinct content
-    hash (16-byte md5 key — not the text) and EVICTS it once the hash's
-    event time falls behind the watermark. Plain dropDuplicates on a
-    non-event-time key would grow state with all-time distinct hashes;
-    the WithinWatermark variant is what actually bounds state to the
-    horizon's distinct-hash count, so a 100-TB/day firehose holds state
-    proportional to the dedup window, not the corpus. Duplicates are
-    suppressed within the watermark horizon (a hash re-arriving after its
-    state was evicted is re-emitted — the documented windowed-dedup
-    semantics). Emitted rows are append-mode safe.
-    """
-    hashed = docs.withColumn(
-        "content_md5", F.md5(F.trim(F.lower(F.col(text_col))))
-    )
-    return (
-        hashed.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["content_md5"])
-        .select(id_col, ts_col, "content_md5")
-    )
-
-
 def daily_exact_stream(
     events: DataFrame,
     ts_col: str = "ts",

@@ -9,24 +9,22 @@ def test_oracle_keys_subset_of_queries():
     assert set(oracles) <= set(qs)
     # every query is callable
     assert all(callable(f) for f in qs.values())
-    # substantial coverage: at least 40 queries; rows-only (no-oracle)
-    # budget is 11: adwin, impute, logreg_cv, ivf_kmeans, model_zoo,
-    # model_selection_grid (MLlib), the four sequence-model cells
-    # lstm_cv / gru_cv / conv1d_cv / cnn_lstm_cv (iterative training is
-    # not SQL-expressible; gradients finite-difference-verified in
-    # tests/test_deep.py), and quality_classifier_fit (r12: distributed
-    # logistic GD, numpy-reference-verified in tests/test_textops.py —
-    # its frozen-weight scoring twin quality_classifier_scores IS
-    # oracle-attested). ann_lsh_topk graduated in r06 via md5-derived
-    # (SQL-replayable) hyperplanes; ivf_kmeans got its deterministic
-    # twin ivf_lloyd_topk in r07; quantile_3way_label_approx graduated
-    # in r09 via a label-level (cut-point-free) oracle.
-    # harmonic_centrality_approx (r12) is rows-only BY DESIGN: HyperBall
-    # outputs sketch ESTIMATES, so exact SQL parity is the wrong spec —
-    # its correctness pin is exact-BFS parity tests on hand-analyzable
-    # graphs (tests/test_graph.py).
+    # rows-only (no-oracle) queries are exactly the ones whose output is
+    # not SQL-expressible: the sequential ADWIN detector, iterative
+    # segment imputation, the fold-CV model fits (MLlib logistic
+    # regression, the sequence-model cells, the zoo and the selection
+    # grid; gradients finite-difference-verified in tests/test_deep.py),
+    # quality_classifier_fit (distributed logistic GD, numpy-reference-
+    # verified in tests/test_textops.py; its frozen-weight scoring twin
+    # quality_classifier_scores IS oracle-attested) and ivf_kmeans_topk
+    # (its deterministic twin ivf_lloyd_topk is oracle-attested)
     assert len(qs) >= 40
-    assert len(set(qs) - set(oracles)) <= 12
+    assert set(qs) - set(oracles) == {
+        "adwin_changes", "impute_segments", "logreg_fold_cv",
+        "lstm_fold_cv", "gru_fold_cv", "conv1d_fold_cv",
+        "cnn_lstm_fold_cv", "model_zoo_fold_cv", "model_selection_grid",
+        "quality_classifier_fit", "ivf_kmeans_topk",
+    }
 
 
 def test_entry_runs_and_is_deterministic(spark):
@@ -77,7 +75,7 @@ def test_attestation_window_is_stable():
         "dominant_source_change", "dsir_select_topk", "exact_dedup",
         "excess_shipment_suppliers", "feature_attribution_topk",
         "fold_class_check", "forward_fill_daily", "global_zscore",
-        "high_activity_blocks", "jsonl_corpus_scan", "ks_drift",
+        "high_activity_blocks", "ks_drift",
         "label_halves_drift", "lag_persistence", "late_shipment_priority",
         "macro_summary", "majority_baseline", "min_cost_supplier",
         "missing_days_per_user", "nation_profit_share", "nway_outer_merge",

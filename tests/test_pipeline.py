@@ -175,27 +175,6 @@ def test_asof_latest(spark):
     assert out[2]["value_at"] == 7.0
 
 
-def test_training_shards_token_balanced(spark, tmp_path):
-    from practicum2_nof1_adhd_bd_spark.corpus_pipeline import write_training_shards
-
-    # skewed doc lengths: a few giants + many small docs
-    rows = [(i, "w " * (500 if i % 20 == 0 else 10)) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    path = write_training_shards(df, str(tmp_path), n_shards=4)
-    back = spark.read.parquet(path)
-    assert back.count() == 200
-    per = {
-        r["shard"]: r["tok"]
-        for r in back.groupBy("shard")
-        .agg(F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("tok"))
-        .collect()
-    }
-    assert set(per) == {0, 1, 2, 3}
-    total = sum(per.values())
-    # every shard within 2x of the ideal quarter despite 50x length skew
-    assert all(abs(v - total / 4) < total / 8 for v in per.values())
-
-
 def test_pipeline_report_sections(spark, sf_dir):
     from practicum2_nof1_adhd_bd_spark.registry import QUERIES
 
@@ -246,3 +225,17 @@ def test_cli_list_run_audit(spark, sf_dir, capsys, tmp_path):
     rep = capsys.readouterr().out
     assert "hour_coverage_pct" in rep
     assert rc in (0, 1, 2)
+
+
+def test_cli_rejects_unknown_query_before_session_start(monkeypatch, capsys):
+    """An unknown query name exits 2 without starting the JVM: the name
+    is checked against the registry before any session is built."""
+    from practicum2_nof1_adhd_bd_spark import session
+    from practicum2_nof1_adhd_bd_spark.__main__ import main
+
+    def _no_session(*args, **kwargs):
+        raise AssertionError("get_spark called for an unknown query")
+
+    monkeypatch.setattr(session, "get_spark", _no_session)
+    assert main(["run", "no_such_query"]) == 2
+    assert "unknown query: no_such_query" in capsys.readouterr().err

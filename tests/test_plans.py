@@ -296,28 +296,6 @@ def test_vector_index_probe_prunes_partitions(spark, tmp_path, sf_dir):
     assert [r["vec_id"] for r in rows] == expect
 
 
-def test_streaming_vector_screen_prunes_index_partitions(spark, tmp_path, sf_dir):
-    """The streaming ingest's index read (vector_ingest.read_index_pruned
-    — the exact frame each micro-batch screens against) must push the
-    batch's Hamming-ball bucket set down as PartitionFilters, so screen
-    IO tracks batch diversity, not index size."""
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-    from practicum2_nof1_adhd_bd_spark.sources.readers import Catalog
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
-
-    emb = Catalog(spark, sf_dir).embeddings
-    index_dir = str(tmp_path / "vingest_index")
-    sim.write_vector_index(emb, index_dir, n_bits=4)
-    ball = sim.hamming_ball([3], 4, 1)
-    idx = vi.read_index_pruned(spark, index_dir, ball)
-    plan = _plan(idx)
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters")[1][:300]
-    assert "bucket" in pf
-    got_buckets = {r["bucket"] for r in idx.select("bucket").distinct().collect()}
-    assert got_buckets <= set(ball)
-
-
 def test_multitable_index_probe_prunes_partitions(spark, tmp_path, sf_dir):
     """write_multitable_index + query_multitable_index: the directed
     probe sets must reach the scan as PartitionFilters over (tbl,

@@ -146,44 +146,6 @@ def test_cda_probe_counts_and_codes(spark, tmp_path):
     assert ("code", "SEC-1") not in out
 
 
-def test_jsonl_corpus_read_write_roundtrip(spark, tmp_path):
-    from practicum2_nof1_adhd_bd_spark.sources.jsonl import (
-        read_jsonl_corpus,
-        write_jsonl_corpus,
-    )
-
-    src = tmp_path / "corpus.jsonl"
-    src.write_text(
-        "\n".join(
-            [
-                '{"doc_id": 1, "text": "hello world", "lang": "en", '
-                '"source": "web", "n_chars": 11}',
-                '{"doc_id": 2, "text": "bonjour", "lang": "fr", '
-                '"source": "web", "n_chars": 7, "meta": {"url": "x"}}',
-                '{"doc_id": 3, "text": "broken',  # corrupt: dropped
-                "not json at all",  # corrupt: dropped
-                '{"doc_id": 4, "text": "ola", "lang": "pt", '
-                '"source": "books", "n_chars": 3}',
-            ]
-        )
-    )
-    df = read_jsonl_corpus(spark, str(src))
-    rows = {r["doc_id"]: r for r in df.collect()}
-    assert set(rows) == {1, 2, 4}
-    assert rows[2]["meta"]["url"] == "x"
-    assert "_corrupt_record" not in df.columns
-
-    kept = read_jsonl_corpus(spark, str(src), drop_corrupt=False)
-    # collect full rows: a query touching ONLY the corrupt column is
-    # disallowed by the JSON reader (SPARK-21610)
-    assert sum(r["_corrupt_record"] is not None for r in kept.collect()) == 2
-
-    out = tmp_path / "out"
-    write_jsonl_corpus(df, str(out), max_records_per_file=2, compression=None)
-    back = read_jsonl_corpus(spark, str(out))
-    assert {r["doc_id"] for r in back.collect()} == {1, 2, 4}
-
-
 def test_zip_ingest_members_and_pattern(spark, tmp_path):
     import zipfile
 
@@ -391,68 +353,6 @@ def test_cda_order_robust_to_file_splits(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
     assert split_read == base
     assert ("n_observation", None, 400) in base
-
-
-def test_warc_response_parsing_and_blocklist(spark, tmp_path):
-    """WARC scan semantics on the deterministic fixture: request records
-    drop, status/content-type/host parse from the HTTP preamble, bodies
-    with EMBEDDED blank lines survive intact (front-anchored split), the
-    trailing inter-record CRLFs are trimmed, and the blocklist anti-join
-    flags exactly the blocked hosts."""
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.sources import warc
-
-    d = str(tmp_path / "warc_fix")
-    warc.synthesize_warc(d, n_records=60)
-    resp = warc.warc_responses(spark, d)
-    rows = {
-        int(r["target_uri"].rsplit("/", 1)[1]): r for r in resp.collect()
-    }
-    assert len(rows) == 45  # 60 minus the i%4==3 requests
-    assert all(i % 4 != 3 for i in rows)
-    r14 = rows[14]
-    assert r14["host"] == "site0.example"
-    assert r14["http_status"] == 200
-    assert r14["content_type"] == "text/html"
-    assert r14["body"] == "doc 14 the value 85 of the table is here"
-    assert rows[0]["http_status"] == 404
-    # embedded blank line: body splits must anchor from the front
-    assert rows[5]["body"].endswith("second paragraph 5")
-    assert "\r\n\r\n" in rows[5]["body"]
-    assert rows[5]["n_body_chars"] == len(rows[5]["body"])
-
-    blocked = spark.createDataFrame(
-        [("site0.example",), ("site3.example",)], "host string"
-    )
-    flagged = warc.filter_blocklist(resp, blocked)
-    got = {r["host"]: r["blocked"] for r in flagged.collect()}
-    for h, want in [
-        ("site0.example", True), ("site3.example", True),
-        ("site1.example", False), ("site6.example", False),
-    ]:
-        assert got[h] == want, h
-    plan = flagged._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-
-
-def test_warc_scan_split_robustness(spark, tmp_path):
-    """The lineSep text scan must parse identically when the file is
-    forced into many small splits (records land mid-split)."""
-    from practicum2_nof1_adhd_bd_spark.sources import warc
-
-    d = str(tmp_path / "warc_split")
-    warc.synthesize_warc(d, n_records=120)
-    whole = sorted(
-        map(str, warc.warc_responses(spark, d).collect())
-    )
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-    try:
-        split = sorted(map(str, warc.warc_responses(spark, d).collect()))
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-    assert split == whole
 
 
 def _write_aes_zip(path, password=b"pw"):

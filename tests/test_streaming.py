@@ -151,40 +151,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert rows == [("2024-01-01", 1, 10.0), ("2024-01-05", 1, 20.0)]
 
 
-def test_dedup_stream_matches_batch_exact_dedup(spark, tmp_path):
-    from practicum2_nof1_adhd_bd_spark.streaming import dedup_stream
-
-    docs = [
-        ("2024-01-01 00:00:01", 1, "the quick brown fox"),
-        ("2024-01-01 00:00:02", 2, "THE QUICK  brown fox".lower()),  # same norm? no: double space
-        ("2024-01-01 00:00:03", 3, "the quick brown fox"),  # exact dup of 1
-        ("2024-01-01 00:00:04", 4, "something else entirely"),
-    ]
-    schema = "ingest_ts timestamp, doc_id long, text string"
-    src = str(tmp_path / "docs_src")
-    batch = spark.createDataFrame(
-        [(dt.datetime.fromisoformat(t), i, x) for t, i, x in docs], schema
-    )
-    batch.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_stream_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM dedup_stream_t").collect()
-    # one survivor per distinct normalized content: docs 1/3 collapse
-    hashes = [r["content_md5"] for r in out]
-    assert len(hashes) == len(set(hashes)) == 3
-    survivors = {r["doc_id"] for r in out}
-    assert 4 in survivors and len(survivors & {1, 3}) == 1 and 2 in survivors
-
-
 def test_incremental_corpus_ingest_stream(spark, tmp_path):
     """foreachBatch incremental ingestion: batch 1 seeds the signature
     index; batch 2 (processed later, same checkpoint) is screened against
@@ -352,123 +318,26 @@ def test_ingest_stream_cold_start_vs_corrupt_index(spark, tmp_path):
             raise RuntimeError(q2.exception().desc)
 
 
-def test_incremental_vector_ingest_stream(spark, tmp_path):
-    """Streaming SemDeDup: batch 1 seeds the vector index; batch 2 (same
-    checkpoint, later file) is screened against the STORED index — a copy
-    of a batch-1 vector is flagged near_dup against it, an orthogonal
-    vector is admitted."""
-    import json
-
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
-
-    src = tmp_path / "src"
-    src.mkdir()
-    index_dir = str(tmp_path / "index")
-    dec_dir = str(tmp_path / "dec")
-    ckpt = str(tmp_path / "ckpt")
-
-    def land(name, rows):
-        tmp = src / f".{name}.tmp"
-        with open(tmp, "w") as f:
-            for vec_id, v in rows:
-                f.write(json.dumps({"vec_id": vec_id, "embedding": v}) + "\n")
-        tmp.rename(src / name)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "vec_id bigint, embedding array<double>"
-        ).json(str(src))
-        q = vi.ingest_vector_stream(stream, index_dir, dec_dir, ckpt)
-        assert q.awaitTermination(120)
-
-    e1 = [1.0, 0.2, 0.1, 0.05]
-    e2 = [-1.0, -0.2, 0.3, 0.4]
-    land("b1.json", [(1, e1), (2, e2)])
-    run_once()
-    land(
-        "b2.json",
-        [
-            (11, [x * 2 for x in e1]),      # same direction as 1 -> near_dup
-            (12, [0.05, -1.0, 0.2, -0.3]),  # roughly orthogonal -> admitted
-        ],
-    )
-    run_once()
-
-    dec = {r["vec_id"]: r for r in spark.read.parquet(dec_dir).collect()}
-    assert dec[1]["status"] == "admitted"
-    assert dec[2]["status"] == "admitted"
-    assert dec[11]["status"] == "near_dup" and dec[11]["matched_id"] == 1
-    assert dec[12]["status"] == "admitted"
-    idx = spark.read.schema(vi.VINDEX_SCHEMA).parquet(index_dir)
-    assert sorted(r["vec_id"] for r in idx.collect()) == [1, 2, 12]
-
-
-def test_screen_vector_batch_internal(spark):
-    """batch_internal=True: two same-direction vectors in ONE batch admit
-    only the smaller id (matching a split across batches); the default
-    index-only screen admits both."""
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
-
-    empty = spark.createDataFrame([], vi.VINDEX_SCHEMA)
-    batch = spark.createDataFrame(
-        [
-            (1, [1.0, 0.1, 0.0, 0.0]),
-            (2, [2.0, 0.2, 0.0, 0.0]),     # same direction as 1
-            (3, [-0.1, 1.0, 0.3, -0.2]),   # different direction
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
-    dec_def, _ = vi.screen_vector_batch(batch, empty, threshold=0.95)
-    assert {r["status"] for r in dec_def.collect()} == {"admitted"}
-
-    dec_in, adm = vi.screen_vector_batch(
-        batch, empty, threshold=0.95, batch_internal=True
-    )
-    rows = {r["vec_id"]: r for r in dec_in.collect()}
-    assert rows[1]["status"] == "admitted"
-    assert rows[2]["status"] == "near_dup" and rows[2]["matched_id"] == 1
-    assert rows[3]["status"] == "admitted"
-    assert sorted(r["vec_id"] for r in adm.collect()) == [1, 3]
-
-
 def test_index_compaction_reclaims_files_and_preserves_results(
     spark, tmp_path
 ):
-    """File-hygiene contract for the continuously-ingested index: (a) each
-    micro-batch append writes at most ONE file per touched bucket (the
-    repartition-before-partitionBy recipe, not tasks x buckets), (b)
-    compact_index collapses the per-batch accretion to ~one file per
-    bucket, and (c) query_vector_index returns bit-identical rows before
-    and after the swap."""
-    import json
+    """File-hygiene contract for an append-grown index: (a) each batch
+    appended with the repartition-before-partitionBy recipe writes at most
+    ONE file per touched bucket (not tasks x buckets), (b) compact_index
+    collapses the per-batch accretion to ~one file per bucket, and (c)
+    query_vector_index returns bit-identical rows before and after the
+    swap."""
     import os
 
     from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
 
-    src = tmp_path / "src"
-    src.mkdir()
     index_dir = str(tmp_path / "index")
-    dec_dir = str(tmp_path / "dec")
-    ckpt = str(tmp_path / "ckpt")
 
-    def land(name, rows):
-        tmp = src / f".{name}.tmp"
-        with open(tmp, "w") as f:
-            for vec_id, v in rows:
-                f.write(json.dumps({"vec_id": vec_id, "embedding": v}) + "\n")
-        tmp.rename(src / name)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "vec_id bigint, embedding array<double>"
-        ).json(str(src))
-        # admit ~everything: this test is about file accretion, not the
-        # near-dup screen (covered elsewhere)
-        q = vi.ingest_vector_stream(
-            stream, index_dir, dec_dir, ckpt, threshold=0.99999
-        )
-        assert q.awaitTermination(120)
+    def append_batch(rows):
+        emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        sim.vector_index_rows(emb).repartition("bucket").write.partitionBy(
+            "bucket"
+        ).mode("append").parquet(index_dir)
 
     # 6 batches concentrated on TWO sign buckets so each directory
     # accretes one file per batch; magnitudes vary so nothing is an
@@ -484,8 +353,7 @@ def test_index_compaction_reclaims_files_and_preserves_results(
                     [s[i] * (1.0 + 0.37 * ((b + j + i) % 7)) for i in range(4)],
                 )
             )
-        land(f"b{b}.json", rows)
-        run_once()
+        append_batch(rows)
 
     def files_per_bucket():
         out = {}
@@ -919,105 +787,6 @@ def test_ingest_crash_between_decisions_and_index_append_is_idempotent(
     n_before = spark.read.parquet(x_dec).count()
     run_once()
     assert spark.read.parquet(x_dec).count() == n_before
-
-
-def test_vector_ingest_crash_before_marker_replay_idempotent(
-    spark, tmp_path, monkeypatch
-):
-    """The worst-window crash for the vector ingest: the index append
-    COMMITTED but the batch marker did not. The replay re-screens with
-    the batch's own prior admissions excluded (id shield), so decisions
-    come out identical to an uninterrupted run and nothing is flagged as
-    a duplicate of itself."""
-    import json
-
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
-
-    def harness(sub):
-        root = tmp_path / sub
-        src = root / "src"
-        src.mkdir(parents=True)
-        dirs = (str(root / "index"), str(root / "dec"), str(root / "ckpt"))
-
-        def land(name, rows):
-            p = src / f".{name}.tmp"
-            with open(p, "w") as f:
-                for vec_id, v in rows:
-                    f.write(
-                        json.dumps({"vec_id": vec_id, "embedding": v}) + "\n"
-                    )
-            p.rename(src / name)
-
-        def run_once(expect_fail=False):
-            stream = spark.readStream.schema(
-                "vec_id bigint, embedding array<double>"
-            ).json(str(src))
-            q = vi.ingest_vector_stream(stream, *dirs)
-            if expect_fail:
-                failed = False
-                try:
-                    q.awaitTermination(120)
-                except Exception:
-                    failed = True
-                assert failed, "stream was expected to fail"
-            else:
-                assert q.awaitTermination(120)
-
-        return land, run_once, dirs
-
-    e1 = [0.5, -0.2, 0.8, 0.1]
-    b1 = [(1, e1), (2, [-0.6, 0.4, -0.1, 0.9])]
-    b2 = [(11, [x * 2 for x in e1]), (12, [0.05, -1.0, 0.2, -0.3])]
-
-    land, run_once, (c_index, c_dec, _) = harness("vcontrol")
-    land("b1.json", b1)
-    run_once()
-    land("b2.json", b2)
-    run_once()
-
-    def read_state(index_dir, dec_dir):
-        dec = sorted(
-            map(
-                tuple,
-                spark.read.schema(vi.VDECISION_SCHEMA)
-                .parquet(dec_dir)
-                .select("vec_id", "status", "matched_id")
-                .collect(),
-            )
-        )
-        idx = sorted(
-            r["vec_id"]
-            for r in spark.read.schema(vi.VINDEX_SCHEMA)
-            .parquet(index_dir)
-            .select("vec_id")
-            .distinct()
-            .collect()
-        )
-        return dec, idx
-
-    want_dec, want_idx = read_state(c_index, c_dec)
-
-    land, run_once, (x_index, x_dec, _) = harness("vcrash")
-    land("b1.json", b1)
-    run_once()
-
-    real_mark = vi.mark_batch_committed
-    state = {"fail": True}
-
-    def failing_mark(spark_, index_dir, batch_id):
-        if state["fail"]:
-            state["fail"] = False
-            raise IOError("injected crash after index append, before marker")
-        return real_mark(spark_, index_dir, batch_id)
-
-    monkeypatch.setattr(vi, "mark_batch_committed", failing_mark)
-    land("b2.json", b2)
-    run_once(expect_fail=True)   # index appended, marker missing
-    run_once()                   # replay: id shield keeps decisions right
-
-    got_dec, got_idx = read_state(x_index, x_dec)
-    assert got_dec == want_dec
-    assert got_idx == want_idx
 
 
 def test_corpus_ingest_crash_before_marker_replay_idempotent(
@@ -1764,92 +1533,6 @@ def test_ingest_stream_decisions_retention_end_to_end(spark, tmp_path):
     dirs = ci._decision_batch_dirs(spark, r_dec)
     assert -1 in dirs
     assert len([d for d in dirs if d >= 0]) < len(batches)
-
-
-def test_vector_ingest_decisions_retention_end_to_end(spark, tmp_path):
-    """ingest_vector_stream(decisions_max_dirs=...): the retention
-    policy runs in the vector stream's batch gaps with the
-    VDECISION_SCHEMA (vec_id grain), decisions stay identical to a
-    control run, and the archive carries src_batch provenance."""
-    import json
-
-    from practicum2_nof1_adhd_bd_spark.streaming import corpus_ingest as ci
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
-
-    vecs = [
-        [1.0, 0.2, 0.1, 0.05],
-        [-1.0, -0.2, 0.3, 0.4],
-        [0.05, -1.0, 0.2, -0.3],
-        [0.3, 0.4, -1.0, 0.1],
-    ]
-
-    def harness(sub, **kw):
-        root = tmp_path / sub
-        src = root / "src"
-        src.mkdir(parents=True)
-        dirs = (str(root / "index"), str(root / "dec"), str(root / "ckpt"))
-
-        def land(name, rows):
-            p = src / f".{name}.tmp"
-            with open(p, "w") as f:
-                for vec_id, v in rows:
-                    f.write(
-                        json.dumps({"vec_id": vec_id, "embedding": v}) + "\n"
-                    )
-            p.rename(src / name)
-
-        def run_once():
-            stream = spark.readStream.schema(
-                "vec_id bigint, embedding array<double>"
-            ).json(str(src))
-            q = vi.ingest_vector_stream(stream, *dirs, **kw)
-            assert q.awaitTermination(120)
-
-        return land, run_once, dirs[1]
-
-    batches = [
-        [(1, vecs[0]), (2, vecs[1])],
-        [(11, [x * 2 for x in vecs[0]]), (12, vecs[2])],  # 11 near-dups 1
-        [(21, vecs[3]), (22, [x * 3 for x in vecs[2]])],  # 22 near-dups 12
-        [(31, [x * 0.5 for x in vecs[1]])],               # near-dups 2
-    ]
-
-    land, run_once, c_dec = harness("control")
-    for b, rows in enumerate(batches):
-        land(f"b{b}.json", rows)
-        run_once()
-    want = sorted(
-        map(
-            tuple,
-            spark.read.schema(vi.VDECISION_SCHEMA)
-            .parquet(c_dec)
-            .select("vec_id", "status", "matched_id")
-            .collect(),
-        )
-    )
-
-    land, run_once, r_dec = harness(
-        "retained", decisions_max_dirs=1, decisions_keep_last=1
-    )
-    for b, rows in enumerate(batches):
-        land(f"b{b}.json", rows)
-        run_once()
-    got = sorted(
-        map(
-            tuple,
-            spark.read.schema(vi.VDECISION_SCHEMA)
-            .parquet(r_dec)
-            .select("vec_id", "status", "matched_id")
-            .collect(),
-        )
-    )
-    assert got == want
-    dirs = ci._decision_batch_dirs(spark, r_dec)
-    assert -1 in dirs
-    assert len([d for d in dirs if d >= 0]) < len(batches)
-    # archive rows carry vec_id-grain schema + src_batch provenance
-    arch = spark.read.parquet(f"{r_dec}/batch=-1")
-    assert {"vec_id", "status", "matched_id", "src_batch"} <= set(arch.columns)
 
 
 def test_qsketch_stream_accumulates_across_batches_and_runs(spark, tmp_path):

@@ -16,8 +16,7 @@ a plain two-path import would break the moment any old function does a
 lazy relative import, which re-resolves through sys.modules and would
 silently pick up the NEW module. Only valid for queries with no Python
 UDFs (both versions' DataFrame plans are built from live module objects;
-the JVM sees only expressions), which covers the graph/similarity/
-textops paths this round touches.
+the JVM sees only expressions).
 
 ``--pipeline`` runs the same interleaving over the medallion instead of
 registry queries: each pair is one old and one new

@@ -599,13 +599,6 @@ NOTES = {
         "ratio come from one aggregate — no second pass, decimal-exact "
         "so the ratio cannot wobble with combine order."
     ),
-    "warc_response_scan": (
-        "Splittable lineSep text scan — records split across executors "
-        "at maxPartitionBytes grain; every header/payload extraction is "
-        "codegen'd regexp/substring algebra (no Python in the scan "
-        "path), and the domain blocklist joins as a broadcast anti — "
-        "the crawl never shuffles."
-    ),
     "boilerplate_strip_report": (
         "One posexplode to line grain (order carried by position), all "
         "features codegen'd, ONE per-doc window for the jusText context "
@@ -639,21 +632,6 @@ NOTES = {
         "combine absorbs hot-URL skew — joined back once. No window "
         "over the canonical key, so no whole-group buffering."
     ),
-    "html_text_extract": (
-        "The entire extraction (script/style/comment drop, block-tag "
-        "line structure, tag strip, entity decode, whitespace collapse, "
-        "link/tag counts, text_frac) is ONE shuffle-free projection "
-        "inside a single WholeStageCodegen span — no DOM, no Python, "
-        "plan-contract-tested in tests/test_html.py."
-    ),
-    "host_pagerank": (
-        "Each round is exactly two exchanges — the ranks-edges join on "
-        "src and the contribution sum on dst — and the per-round "
-        "localCheckpoint keeps the K-iteration plan flat (the returned "
-        "plan reads the final checkpoint, not K stacked joins). "
-        "Dangling mass enters as a broadcast 1-row cross join, never a "
-        "collect."
-    ),
     "robots_screen_decisions": (
         "The parsed rules are a per-host dim and BROADCAST; the "
         "path-prefix match is a broadcast theta-join against the crawl "
@@ -661,14 +639,6 @@ NOTES = {
         "verdict groupBy restoring the URL grain. Robots files are "
         "bounded, so the parse windows (partitioned by host) hold "
         "hundreds of lines of state, never corpus-scale."
-    ),
-    "crawl_silver_scan": (
-        "Reads the landed silver layer: every upstream screen "
-        "(status, content-type, blocklist anti-join, HTML→text) was "
-        "scan-local or broadcast at build time; the pipeline's only "
-        "shuffle is the URL-dedup verdict groupBy+join inside "
-        "build_crawl_silver. The serve plan is a bare parquet scan + "
-        "sort — re-entrancy means downstream never re-pays curation."
     ),
     "setsim_prefix_join": (
         "The global-rarity rank dictionary is vocab-sized and BROADCAST "
@@ -729,16 +699,6 @@ NOTES = {
         "out as a map-side-combinable count(*) per (train, eval) pair — "
         "no arrays shuffle, no all-pairs stage, and the per-doc argmax "
         "window runs on the post-threshold hits only."
-    ),
-    "host_lpa_communities": (
-        "Each LPA round is one edge-grain hash join (messages along "
-        "edges) + a (node, label) count that collapses hub fan-in to "
-        "distinct incident labels before the per-node top-1 window; the "
-        "per-round localCheckpoint (lazy since r16 — rounds chain inside "
-        "one job, no per-round driver barrier) keeps the returned plan "
-        "flat (it "
-        "reads the final round's checkpoint, not K stacked joins), the "
-        "same lineage-cut discipline as host_pagerank."
     ),
     "zipf_law_fit": (
         "One corpus scan -> (source, token) count -> per-source rank "

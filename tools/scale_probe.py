@@ -96,53 +96,6 @@ def probe_xml(spark, tmp: str, xml_mb: int) -> dict:
     }
 
 
-def probe_warc(spark, tmp: str, warc_mb: int) -> dict:
-    """WARC-scan throughput: synthesize ~warc_mb MB of records with
-    body sizes in the fixture formula's shape, scan with
-    sources.warc.warc_responses (splittable lineSep text scan + codegen
-    parsing), and aggregate a per-host rollup — MB/s and records/s for
-    the crawl-ingest front door."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.sources import warc
-
-    # ~430 bytes/record in the fixture shape
-    n_records = math.ceil(warc_mb * 1024 * 1024 / 430)
-    path = os.path.join(tmp, "warc_probe")
-    warc.synthesize_warc(path, n_records=n_records)
-    real_mb = sum(
-        os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)
-    ) / 1e6
-    prev_split = spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
-    )
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-    times = []
-    for _ in range(2):  # cold then warm
-        t0 = time.time()
-        resp = warc.warc_responses(spark, path)
-        n_hosts = (
-            resp.groupBy("host")
-            .agg(F.count(F.lit(1)), F.sum("n_body_chars"))
-            .count()
-        )
-        times.append(time.time() - t0)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-    dt = times[-1]
-    n_resp = int(n_records - n_records // 4)
-    return {
-        "warc_mb": round(real_mb, 1),
-        "warc_records": n_records,
-        "warc_scan_agg_cold_sec": round(times[0], 2),
-        "warc_scan_agg_warm_sec": round(dt, 2),
-        "warc_mb_per_sec": round(real_mb / dt, 1),
-        "warc_responses_per_sec": int(n_resp / dt),
-        "n_hosts": n_hosts,
-    }
-
-
 def replicate(spark, src: str, dst: str, factor: int) -> None:
     from pyspark.sql import functions as F
 
@@ -251,7 +204,6 @@ QUERIES = [
     # url_canonical_dedup excluded: constant-size fixture (like
     # iphone_backup_scan) — covered by the dedicated --url-rows probe
     # round-12 session-5 additions. Excluded for cause:
-    # host_lpa_communities (constant-size formula fixture);
     # simhash_near_dups + decontaminate_containment (document
     # replication makes every replica an exact dup / a 1.0-containment
     # hit, so pair output degenerates to the C(10,2)-per-group blowup
@@ -447,148 +399,6 @@ def _tree_bytes(path: str) -> int:
             if not f.startswith((".", "_")):
                 total += os.path.getsize(os.path.join(root, f))
     return total
-
-
-def probe_vector_ingest(
-    spark, tmp: str, n_batches: int, batch_vecs: int, dim: int = 16
-) -> dict:
-    """Streaming-SemDeDup scale probe (vector_ingest): per-batch screen
-    time AND bytes read vs vector-index size. Batch composition: for
-    b>0, 10% of vectors are exact copies of batch b-1's novel range
-    (cosine 1.0 -> near_dup at any threshold); the rest are md5-derived
-    deterministic novel vectors. The first 4 components' SIGNS are forced
-    by the seed's batch group ((seed/batch_vecs) % 16), so each batch
-    concentrates in ~2 axis-sign buckets (its own group's + the copied
-    range's) while the index accumulates across ALL 16 — the realistic
-    shape where partition pruning pays. Expect per-batch screen time
-    ~flat AND pruned_read_mb a small, roughly constant fraction of
-    index_total_mb as the index grows: the screen reads only the batch's
-    Hamming-ball partition directories (read_index_pruned)."""
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.operators.similarity import hamming_ball
-    from practicum2_nof1_adhd_bd_spark.streaming import vector_ingest as vi
-    from practicum2_nof1_adhd_bd_spark.streaming.corpus_ingest import (
-        _index_exists,
-    )
-
-    index_dir = os.path.join(tmp, "vingest_index")
-    rows = []
-    for b in range(n_batches):
-        base = spark.range(b * batch_vecs, (b + 1) * batch_vecs).select(
-            F.col("id").alias("vec_id")
-        )
-        pos = F.col("vec_id") % batch_vecs
-        novel_off = batch_vecs // 5
-        seed = F.when(
-            (F.lit(b) > 0) & (pos < batch_vecs // 10),
-            F.lit((b - 1) * batch_vecs + novel_off) + pos,
-        ).otherwise(F.col("vec_id"))
-        group = (seed / batch_vecs).cast("int") % 16
-        comps = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda j: (
-                F.conv(
-                    F.substring(F.md5((seed * 131 + j).cast("string")), 1, 8),
-                    16, 10,
-                ).cast("double")
-                / 4294967295.0
-                - 0.5
-            ),
-        )
-        # force signs of the first 4 comps from the seed's batch group so
-        # a batch touches ~2 buckets of 16 (sign derived from the SEED,
-        # not the current batch, so copies keep their original's bucket)
-        signed = F.transform(
-            comps,
-            lambda x, j: F.when(
-                j < 4,
-                (F.abs(x) + F.lit(0.01))
-                * F.when(
-                    F.floor(group / F.pow(F.lit(2.0), j)).cast("bigint")
-                    % 2
-                    == 1,
-                    F.lit(1.0),
-                ).otherwise(F.lit(-1.0)),
-            ).otherwise(x),
-        )
-        batch = base.select("vec_id", signed.alias("embedding"))
-
-        vb = vi._batch_vectors(batch, "vec_id", "embedding", 4).localCheckpoint(
-            eager=True
-        )
-        batch_buckets = [
-            r[0] for r in vb.select("bucket").distinct().collect()
-        ]
-        ball = hamming_ball(batch_buckets, 4, 0)
-        total_mb = _tree_bytes(index_dir) / 1e6 if os.path.exists(index_dir) else 0.0
-        pruned_mb = sum(
-            _tree_bytes(os.path.join(index_dir, f"bucket={bk}")) / 1e6
-            for bk in ball
-            if os.path.exists(os.path.join(index_dir, f"bucket={bk}"))
-        )
-        if _index_exists(spark, index_dir):
-            index = vi.read_index_pruned(spark, index_dir, ball)
-        else:
-            index = spark.createDataFrame([], vi.VINDEX_SCHEMA)
-        index_rows = index.count()
-        t0 = time.time()
-        dec, admitted = vi.screen_vector_batch(
-            vb, index, threshold=0.99, n_bits=4, prepared=True
-        )
-        dec = dec.persist()
-        counts = {
-            r["status"]: r["n"]
-            for r in dec.groupBy("status").agg(F.count("*").alias("n")).collect()
-        }
-        admitted.repartition("bucket").write.partitionBy("bucket").mode(
-            "append"
-        ).parquet(index_dir)
-        screen_sec = time.time() - t0
-        dec.unpersist()
-        n_files, max_per_bucket = _index_file_stats(index_dir)
-        rows.append(
-            {
-                "batch": b,
-                "index_rows_in_ball": index_rows,
-                "screen_sec": round(screen_sec, 2),
-                "admitted": counts.get("admitted", 0),
-                "near_dup": counts.get("near_dup", 0),
-                "batch_buckets": len(batch_buckets),
-                "pruned_read_mb": round(pruned_mb, 3),
-                "index_total_mb": round(total_mb, 3),
-                "index_files": n_files,
-                "max_files_per_bucket": max_per_bucket,
-            }
-        )
-    # file hygiene: compact the accreted artifact to ~one file per bucket
-    from practicum2_nof1_adhd_bd_spark.operators.similarity import (
-        compact_index,
-    )
-
-    t0 = time.time()
-    files_before, files_after = compact_index(spark, index_dir)
-    compact_sec = round(time.time() - t0, 2)
-    return {
-        "vector_ingest_batches": rows,
-        "batch_vecs": batch_vecs,
-        "dim": dim,
-        "first_to_last_ratio": (
-            round(rows[-1]["screen_sec"] / rows[1]["screen_sec"], 2)
-            if n_batches > 2 and rows[1]["screen_sec"] > 0
-            else None
-        ),
-        "last_pruned_fraction": (
-            round(rows[-1]["pruned_read_mb"] / rows[-1]["index_total_mb"], 3)
-            if rows and rows[-1]["index_total_mb"] > 0
-            else None
-        ),
-        "compaction": {
-            "files_before": files_before,
-            "files_after": files_after,
-            "sec": compact_sec,
-        },
-    }
 
 
 def probe_index_build(spark, tmp: str, sf_dir: str, factor: int) -> dict:
@@ -935,117 +745,6 @@ def probe_urls(spark, n_rows: int, factor: int = 10) -> dict:
     return out
 
 
-def probe_html(spark, n_rows: int, factor: int = 10) -> dict:
-    """HTML→text extraction throughput at realistic document sizes: each
-    synthesized doc is ~1.6 KB of markup (title, style, script, comment,
-    20 entity-laden paragraphs, anchors) so every regex in the chain
-    does real work per row. Timings at n and factor*n docs via the noop
-    sink (min-of-2); reports MB/s of raw HTML through the full
-    extraction projection and the 10x ratio (expect ~1.0: one
-    shuffle-free codegen span, cost linear in input bytes)."""
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.operators import html as H
-
-    def corpus(n: int):
-        i = F.col("id")
-        s = i.cast("string")
-        para = F.concat(
-            F.lit("<p>the quick value "), s,
-            F.lit(" of row &amp; table is &lt;here&gt; in the set</p>"),
-        )
-        paras = F.concat(*([para] * 20))
-        return spark.range(n).select(
-            i.alias("doc_id"),
-            F.concat(
-                F.lit("<html><head><title>Doc "), s, F.lit("</title>"),
-                F.lit("<style>body {margin: 0}</style>"),
-                F.lit("<script>var x = 1;</script></head><body>"),
-                F.lit("<!-- generated --><h1>Doc "), s, F.lit("</h1>"),
-                paras,
-                F.lit('<a href="/next">next</a></body></html>'),
-            ).alias("html"),
-        ).localCheckpoint(eager=True)
-
-    def timed(df) -> float:
-        # untimed JIT warmup first (see probe_urls)
-        df.write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    out = {"html_rows": n_rows, "html_factor": factor}
-    doc_bytes = None
-    for tag, n in (("1x", n_rows), (f"{factor}x", n_rows * factor)):
-        base = corpus(n)
-        if doc_bytes is None:
-            doc_bytes = base.select(F.avg(F.length("html"))).first()[0]
-        out[f"extract_{tag}_sec"] = timed(H.html_extract(base))
-        base.unpersist()
-    out["doc_bytes"] = int(doc_bytes)
-    big_mb = n_rows * factor * doc_bytes / 1e6
-    out["html_mb_per_sec"] = round(big_mb / out[f"extract_{factor}x_sec"], 1)
-    out["extract_ratio_10x"] = round(
-        out[f"extract_{factor}x_sec"] / max(out["extract_1x_sec"], 1e-9) / factor,
-        2,
-    )
-    return out
-
-
-def probe_pagerank(spark, n_edges: int, factor: int = 10) -> dict:
-    """PageRank iteration cost at volume: a synthetic graph with a
-    hub-skewed degree distribution (destination = id % sqrt-ish modulus,
-    so a few nodes take most in-links — the realistic web shape that
-    stresses the dst-sum aggregation) at n and factor*n edges, 3 rounds
-    each. Expect near-linear edge scaling: each round is one src join +
-    one dst partial-aggregated sum, and the hub skew is absorbed
-    map-side by the partial sum exactly like hot URLs in §2k."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.operators import graph
-
-    def edges(n: int):
-        m = int(math.isqrt(n))
-        i = F.col("id")
-        return spark.range(n).select(
-            (i % (n // 4)).alias("src"),
-            # 80% of edges land on the first ~sqrt(n) ids (hub skew)
-            F.when(i % 5 < 4, (i * 7919) % m)
-            .otherwise((i * 104729) % (n // 4))
-            .alias("dst"),
-        ).localCheckpoint(eager=True)
-
-    out = {"pagerank_edges": n_edges, "pagerank_factor": factor,
-           "n_iter": 3}
-    for tag, n in (("1x", n_edges), (f"{factor}x", n_edges * factor)):
-        e = edges(n)
-        # untimed warmup absorbs JIT + first-plan compile (see probe_urls)
-        graph.pagerank(e, n_iter=3).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        t0 = time.time()
-        graph.pagerank(e, n_iter=3).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"pagerank_{tag}_sec"] = round(time.time() - t0, 2)
-        e.unpersist()
-    out["edges_per_sec"] = int(
-        3 * n_edges * factor / out[f"pagerank_{factor}x_sec"]
-    )
-    out["pagerank_ratio_10x"] = round(
-        out[f"pagerank_{factor}x_sec"]
-        / max(out["pagerank_1x_sec"], 1e-9)
-        / factor,
-        2,
-    )
-    return out
-
-
 SF1_SUITE = [
     # the 10 most expensive headline queries per BENCH_FULL/r14 (the
     # judge's "do the per-query 10x ratios compose at suite grain" ask)
@@ -1131,9 +830,7 @@ FIXTURE_CONSTANT = {
     # 10x run re-lands the same-sized fixture under the new fingerprint,
     # so ratio ~1 is the EXPECTED result, not evidence of scaling
     "media_decode_features", "media_real_decode", "media_frame_decode",
-    "cda_probe", "warc_response_scan", "url_canonical_dedup",
-    "html_text_extract", "crawl_silver_scan", "robots_screen_decisions",
-    "host_pagerank", "host_triangle_count", "host_lpa_communities",
+    "cda_probe", "url_canonical_dedup", "robots_screen_decisions",
     "crawl_frontier_slots", "encrypted_zip_scan", "scd2_merge_parity",
     "pmi_collocations", "boilerplate_strip_report",
     "bloom_screen_decisions",
@@ -1240,13 +937,6 @@ def main() -> None:
     )
     ap.add_argument("--ingest-batch-docs", type=int, default=5000)
     ap.add_argument(
-        "--vector-ingest-batches",
-        type=int,
-        default=0,
-        help="run ONLY the vector-ingest (streaming SemDeDup) growth probe",
-    )
-    ap.add_argument("--vector-ingest-batch-vecs", type=int, default=5000)
-    ap.add_argument(
         "--index-build-factor",
         type=int,
         default=0,
@@ -1259,13 +949,6 @@ def main() -> None:
         help="run ONLY the hot-key salted-agg probe on n synthetic rows",
     )
     ap.add_argument("--skew-salts", type=int, default=16)
-    ap.add_argument(
-        "--warc-mb",
-        type=int,
-        default=0,
-        help="run ONLY the WARC-scan throughput probe on ~N MB of "
-        "synthesized records",
-    )
     ap.add_argument(
         "--cluster-merge-batch",
         type=int,
@@ -1281,20 +964,6 @@ def main() -> None:
         default=0,
         help="run ONLY the URL-canonicalization throughput probe at n "
         "and --factor x n synthesized messy URLs",
-    )
-    ap.add_argument(
-        "--html-rows",
-        type=int,
-        default=0,
-        help="run ONLY the HTML-extraction throughput probe at n and "
-        "--factor x n synthesized ~1.6 KB documents",
-    )
-    ap.add_argument(
-        "--pagerank-edges",
-        type=int,
-        default=0,
-        help="run ONLY the PageRank iteration-cost probe on a synthetic "
-        "power-law-ish graph at n and --factor x n edges",
     )
     ap.add_argument(
         "--sf1-full",
@@ -1346,25 +1015,8 @@ def main() -> None:
         )
         return
 
-    if args.warc_mb:
-        with tempfile.TemporaryDirectory(prefix="scale_probe_warc_") as tmp:
-            print(json.dumps(probe_warc(spark, tmp, args.warc_mb)))
-        return
-
     if args.url_rows:
         print(json.dumps(probe_urls(spark, args.url_rows, args.factor)))
-        return
-
-    if args.html_rows:
-        print(json.dumps(probe_html(spark, args.html_rows, args.factor)))
-        return
-
-    if args.pagerank_edges:
-        print(
-            json.dumps(
-                probe_pagerank(spark, args.pagerank_edges, args.factor)
-            )
-        )
         return
 
     if args.cluster_merge_batch:
@@ -1383,18 +1035,6 @@ def main() -> None:
                 json.dumps(
                     probe_ingest(
                         spark, tmp, args.ingest_batches, args.ingest_batch_docs
-                    )
-                )
-            )
-        return
-
-    if args.vector_ingest_batches:
-        with tempfile.TemporaryDirectory(prefix="scale_probe_ving_") as tmp:
-            print(
-                json.dumps(
-                    probe_vector_ingest(
-                        spark, tmp, args.vector_ingest_batches,
-                        args.vector_ingest_batch_vecs,
                     )
                 )
             )
