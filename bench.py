@@ -124,11 +124,6 @@ HEADLINE = [
     "promo_revenue_share",
     "boilerplate_strip_report",
     "shipmode_priority_counts",
-    "url_canonical_dedup",
-    # streaming_url_seen_decisions excluded: an availableNow stream per
-    # repeat measures stream machinery, not throughput (same reason
-    # streaming_ingest_decisions never entered HEADLINE)
-    "robots_screen_decisions",
     # round-12 session-4 additions
     "pmi_collocations",
     "scd2_merge_parity",
@@ -147,17 +142,12 @@ HEADLINE = [
     "funnel_conversion",
     "retention_cohorts",
     "event_transitions",
-    # round-13 additions (consolidation round: the two new queries +
-    # the late-r13 mergeable quantile sketch)
+    # round-13 additions
     "langid_classifier_scores",
-    "crawl_frontier_slots",
-    "token_length_qsketch",
-    # round-14 additions (streaming_frontier_slots excluded: availableNow
-    # stream per repeat measures stream machinery, the standing rule)
+    # round-14 additions
     "doc_size_qsketch_log",
     "qsketch_drift_psi",
     "embedding_cell_drift",
-    "cms_token_freq",
     # round-15 additions: real GIF frame decode; the bucketed
     # zero-Exchange fact-fact SMJ (bucketed_join_scan lands its layout
     # via _land_once, so repeats measure SERVING — the amortized state)

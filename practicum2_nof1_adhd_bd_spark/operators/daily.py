@@ -13,12 +13,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_event_date(df: DataFrame, ts_col: str = "ts", date_col: str = "date") -> DataFrame:
-    """Derive the calendar-day key (ref truncates strings to [:10];
-    stage_csv_aggregation.py:335 — here a proper DateType)."""
-    return df.withColumn(date_col, F.to_date(F.col(ts_col)))
-
-
 def range_filter(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
     """Biological-range filter (F1/F2): keep lo <= col <= hi.
 

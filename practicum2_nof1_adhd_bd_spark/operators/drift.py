@@ -76,15 +76,16 @@ class _Adwin:
         if n < 2 * self.min_window:
             return False
         changed = False
+        # the window only changes at the break, so both are per-insert
+        var = _variance(self.window)
+        dd = math.log(2.0 * math.log(n) / self.delta)
         # test splits from oldest side
         for cut in range(self.min_window, n - self.min_window + 1):
             w0, w1 = self.window[:cut], self.window[cut:]
             n0, n1 = len(w0), len(w1)
             m0 = sum(w0) / n0
             m1 = sum(w1) / n1
-            var = _variance(self.window)
             m_harm = 1.0 / (1.0 / n0 + 1.0 / n1)
-            dd = math.log(2.0 * math.log(n) / self.delta)
             eps = math.sqrt(2.0 * m_harm * var * dd) + (2.0 / 3.0) * dd * m_harm
             # normalized bound per Bifet-Gavalda eq. (3)
             eps = eps / m_harm

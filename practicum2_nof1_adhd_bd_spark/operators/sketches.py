@@ -109,55 +109,6 @@ def kmv_estimate(df: DataFrame, group_cols: list[str], value_col: str, k: int = 
     )
 
 
-def qhist_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    n_buckets: int = 1024,
-    lo: float = 0.0,
-    hi: float = 1024.0,
-) -> DataFrame:
-    """Fixed-grid quantile-histogram sketch: per-group counts over
-    ``n_buckets`` equal-width buckets of [lo, hi) (values outside clamp
-    to the edge buckets) — the DETERMINISTIC mergeable quantile
-    artifact this engine stores beside KMV.
-
-    Why not KLL/t-digest: their compactions depend on insertion/merge
-    ORDER, so a distributed build is not partitioning-invariant and the
-    estimate can only be attested at label level. The fixed grid trades
-    a KNOWN value domain (token lengths, document sizes, latencies —
-    the corpus-stats cases the incremental-percentile gap is about) for
-    bit-exact determinism: bucket assignment is one codegen'd floor(),
-    the sketch is pure counts, and the merge law is literal addition —
-
-        qhist(A ∪ B) = qhist(A) +_bucket qhist(B)
-
-    — EXACT, not approximate, so a stored per-snapshot sketch can be
-    merged across snapshots forever with zero drift, and a SQL oracle
-    can attest merged == whole at value level. Quantile estimates from
-    the grid are within one bucket width of the exact order statistic.
-
-    Sketch size: (groups x occupied buckets) rows, independent of row
-    count; the only shuffle carries bucket counts, never values."""
-    width = (hi - lo) / n_buckets
-    b = (
-        F.least(
-            F.greatest(
-                F.floor((F.col(value_col) - F.lit(lo)) / F.lit(width)),
-                F.lit(0),
-            ),
-            F.lit(n_buckets - 1),
-        )
-        .cast("int")
-        .alias("bucket")
-    )
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(*group_cols, b)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def qhist_merge(*sketches: DataFrame) -> DataFrame:
     """Merge quantile-histogram sketches (e.g. one per ingested
     snapshot): union + per-(group, bucket) sum — commutative and
@@ -170,65 +121,6 @@ def qhist_merge(*sketches: DataFrame) -> DataFrame:
     return out.groupBy(*keys).agg(F.sum("n").alias("n"))
 
 
-def qhist_quantiles(
-    sketch: DataFrame,
-    group_cols: list[str],
-    probs: list[float],
-    n_buckets: int = 1024,
-    lo: float = 0.0,
-    hi: float = 1024.0,
-) -> DataFrame:
-    """Quantile estimates from a qhist sketch: for each group and
-    probability p, locate the bucket holding rank ceil(p * total)
-    (type-1 rank on the bucketed mass) and interpolate linearly inside
-    it — every step is window/scalar algebra a SQL oracle replays
-    exactly. Output: (group..., p, q_est, total_n); estimates are
-    within one bucket width of the exact order statistic.
-
-    ``probs`` must lie in (0, 1]: p=0 would satisfy no bucket
-    (rank 0 precedes all cumulative mass) and p>1 would exceed every
-    rank, so either would silently DROP its (group, p) row from the
-    output instead of erroring — validate at entry."""
-    bad = [p for p in probs if not (0.0 < float(p) <= 1.0)]
-    if bad:
-        raise ValueError(f"probs must be in (0, 1], got {bad}")
-    from pyspark.sql import Window
-
-    width = (hi - lo) / n_buckets
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wg = Window.partitionBy(*group_cols)
-    cum = (
-        sketch.withColumn("_cum", F.sum("n").over(w))
-        .withColumn("_total", F.sum("n").over(wg))
-        .withColumn("_before", F.col("_cum") - F.col("n"))
-    )
-    probs_df = F.broadcast(
-        sketch.sparkSession.createDataFrame(
-            [(float(p),) for p in probs], "p double"
-        )
-    )
-    rank = F.ceil(F.col("p") * F.col("_total"))
-    est = (
-        F.lit(lo)
-        + F.lit(width)
-        * (F.col("bucket") + (rank - F.col("_before")) / F.col("n"))
-    )
-    return (
-        cum.crossJoin(probs_df)
-        .filter((F.col("_cum") >= rank) & (F.col("_before") < rank))
-        .select(
-            *group_cols,
-            "p",
-            F.round(est, 6).alias("q_est"),
-            F.col("_total").alias("total_n"),
-        )
-    )
-
-
 def _log_bucket_lo(v: "F.Column") -> "F.Column":
     """Lower edge of ``v``'s leading-two-decimal-digits band, the
     log-spaced bucket key: values 0..99 are their own bucket (exact),
@@ -237,8 +129,8 @@ def _log_bucket_lo(v: "F.Column") -> "F.Column":
     bucket -1. Built with STRING algebra only (substr + zero-padding,
     never floor(log10(v))): integer->string rendering is identical in
     Spark and DuckDB, while libm log/pow differ in the last ulp at
-    bucket boundaries — the cross-engine hazard the fixed grid never
-    had and this grid must not introduce."""
+    bucket boundaries — a cross-engine hazard this grid must not
+    introduce."""
     s = v.cast("string")
     d = F.length(s)
     band = F.concat(
@@ -269,22 +161,23 @@ def qhist_log_sketch(
     value_col: str,
 ) -> DataFrame:
     """Auto-ranged log-spaced quantile-histogram sketch for UNBOUNDED
-    non-negative integer domains (document sizes, byte lengths — the
-    domains where qhist_sketch's fixed [lo, hi) grid silently clamps
-    outliers into its edge buckets, r13 verdict #3). Buckets are
-    leading-two-decimal-digits bands: exact below 100, relative width
-    <= 1/10 above, growing with the data — no a-priori range at all.
+    non-negative integer domains (document sizes, byte lengths, sensor
+    values): a fixed [lo, hi) grid would silently clamp outliers into
+    its edge buckets. Buckets are leading-two-decimal-digits bands:
+    exact below 100, relative width <= 1/10 above, growing with the
+    data — no a-priori range at all.
 
-    Everything that made the fixed grid attestable survives: bucket
-    assignment is deterministic integer/string algebra (bit-identical
-    in Spark and DuckDB — no libm log whose last ulp differs at
-    boundaries), the sketch is pure (group, bucket_lo, n) counts, and
-    the merge law is literal bucket addition (qhist_merge applies
-    unchanged), so merged snapshot sketches equal the whole-corpus
+    Why not KLL/t-digest: their compactions depend on insertion/merge
+    ORDER, so a distributed build is not partitioning-invariant. Here
+    bucket assignment is deterministic integer/string algebra
+    (bit-identical in Spark and DuckDB — no libm log whose last ulp
+    differs at boundaries), the sketch is pure (group, bucket_lo, n)
+    counts, and the merge law is literal bucket addition
+    (qhist_merge), so merged snapshot sketches equal the whole-corpus
     sketch EXACTLY. Size: <= 90 occupied buckets per decade per group
     — ~170 rows cover 1..10^9 — independent of row count. Quantile
     estimates carry <= ~10% relative error plus in-bucket
-    interpolation (vs the fixed grid's one ABSOLUTE bucket width).
+    interpolation.
 
     Values are truncated to long at entry (the domain is counts/sizes);
     nulls drop, negatives land in the visible underflow bucket -1."""
@@ -301,10 +194,16 @@ def qhist_log_quantiles(
     group_cols: list[str],
     probs: list[float],
 ) -> DataFrame:
-    """Quantile estimates from a log-grid sketch: rank location on the
-    bucketed mass (exactly qhist_quantiles' rule) with each bucket's
-    edge/width recovered from ``bucket_lo`` itself — no grid knobs to
-    thread through. Output: (group..., p, q_est, total_n)."""
+    """Quantile estimates from a log-grid sketch: for each group and
+    probability p, locate the bucket holding rank ceil(p * total)
+    (type-1 rank on the bucketed mass) and interpolate linearly inside
+    it, with each bucket's edge/width recovered from ``bucket_lo``
+    itself — every step is window/scalar algebra a SQL oracle replays
+    exactly. Output: (group..., p, q_est, total_n).
+
+    ``probs`` must lie in (0, 1]: p=0 would satisfy no bucket and p>1
+    would exceed every rank, so either would silently DROP its
+    (group, p) row — validate at entry."""
     bad = [p for p in probs if not (0.0 < float(p) <= 1.0)]
     if bad:
         raise ValueError(f"probs must be in (0, 1], got {bad}")
@@ -348,7 +247,7 @@ def qhist_psi(
     alpha: float = 0.5,
 ) -> DataFrame:
     """Population Stability Index between two stored qhist sketches
-    (fixed OR log grid — any per-group (bucket, n) count frame): the
+    (any per-group (bucket, n) count frame): the
     drift check a 100-TB corpus runs between snapshot artifacts WITHOUT
     rescanning either snapshot. PSI = sum_i (p_i - q_i) * ln(p_i / q_i)
     over the union bucket domain, with a symmetric add-``alpha``
@@ -390,89 +289,3 @@ def qhist_psi(
             F.round(F.sum(term).cast("double"), 6).alias("psi"),
         )
     )
-
-
-def cms_sketch(
-    df: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 1024,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Count-Min sketch (Cormode & Muthukrishnan '05) — the FREQUENCY
-    member of the mergeable-sketch family this engine stores beside KMV
-    (distinct counts) and qhist (quantiles): ``depth`` independent
-    md5-derived hash rows of ``width`` counters; a value's estimate is
-    the MIN over its row counters, one-sided (never an undercount) with
-    overcount <= 2N/width at >= 1-(1/2)^depth probability.
-
-    Same attestation discipline as the siblings: counters are pure
-    addition, so the merge law cms(A ∪ B) = cms(A) +_cell cms(B) is
-    EXACT and partitioning-invariant, and the md5 bucket assignment is
-    bit-identical in SQL — the whole sketch, not just its answers,
-    value-hash attests. Sketch size: <= depth x width rows, independent
-    of stream length; the only shuffle carries cell counts (map-side
-    partial combine absorbs the token stream).
-
-    ``weight_col`` (r16): build from a PRE-AGGREGATED (value, count)
-    frame — each row adds ``weight_col`` to its cells instead of 1.
-    Cell-exact equivalence to the row-grain build (counters are pure
-    addition; pinned in tests/test_sketches.py), while the md5 bucket
-    hash runs once per distinct value instead of once per occurrence —
-    the vocab-vs-stream hashing win at corpus scale."""
-    rows = F.explode(
-        F.array(*[F.lit(r) for r in range(depth)])
-    ).alias("r")
-    cols = [F.col(value_col).cast("string").alias("_v"), rows]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).alias("_wt"))
-    ex = df.filter(F.col(value_col).isNotNull()).select(*cols)
-    b = (
-        hash64_md5(F.concat(F.col("r").cast("string"), F.lit(":"), F.col("_v")))
-        % width
-    ).alias("b")
-    agg = (
-        F.sum("_wt") if weight_col is not None else F.count(F.lit(1))
-    ).alias("n")
-    return ex.groupBy("r", b).agg(agg)
-
-
-def cms_estimate(
-    sketch: DataFrame,
-    items: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Point-frequency estimates from a CMS: min over the depth rows of
-    the item's counters (absent cell = 0). ``items`` is a bounded probe
-    frame; the sketch side is <= depth x width rows, so the join
-    broadcasts at any corpus size. Output: (``value_col``, cms_est) —
-    the probe's OTHER columns are not carried through (the groupBy is on
-    the probed value alone); callers needing them re-join on value_col,
-    as cms_token_freq does with its exact counts (r14 ADVICE: docstring
-    previously promised (items..., cms_est))."""
-    rows = F.explode(
-        F.array(*[F.lit(r) for r in range(depth)])
-    ).alias("r")
-    probe = items.select(
-        F.col(value_col),
-        F.col(value_col).cast("string").alias("_v"),
-        rows,
-    ).withColumn(
-        "b",
-        hash64_md5(
-            F.concat(F.col("r").cast("string"), F.lit(":"), F.col("_v"))
-        )
-        % width,
-    )
-    return (
-        probe.join(F.broadcast(sketch), ["r", "b"], "left")
-        .groupBy(value_col)
-        .agg(F.min(F.coalesce(F.col("n"), F.lit(0))).alias("cms_est"))
-    )
-
-
-# CMS merge is literal cell addition on (r, b) — qhist_merge's
-# keys-are-everything-but-n contract already implements it exactly.
-cms_merge = qhist_merge

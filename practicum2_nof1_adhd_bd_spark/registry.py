@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from .functions import skew
 from .operators import biomarkers, daily, dedup, drift, folds, impute, joins, labels
 from .operators import metrics, multimodal, similarity as sim, sketches
-from .operators import textops, urls, windows
+from .operators import textops, windows
 from .sources.readers import Catalog
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2756,484 +2756,6 @@ def q_boilerplate_strip_report(spark, sf_dir):
         F.array_join(lines, "\n").alias("text"),
     )
     return textops.boilerplate_strip(corpus)
-
-
-@register(
-    "url_canonical_dedup",
-    """
-    WITH f AS (
-        SELECT i AS doc_id, i // 2 AS g, i % 2 AS v,
-               (i % 9 = 8) AS solo,
-               ((CASE WHEN i % 2 = 0 THEN i + 1 ELSE i - 1 END) % 9 = 8)
-                   AS partner_solo
-        FROM generate_series(0, 179) t(i)
-    )
-    SELECT doc_id,
-           CASE WHEN g % 5 = 0 THEN 'https' ELSE 'http' END
-               || '://site' || (g % 7) || '.example'
-               || CASE WHEN solo THEN '/solo/' || doc_id
-                       ELSE '/path/' || g END
-               || '?id=' || g
-               || CASE WHEN g % 3 = 0 THEN '&q=x' ELSE '' END
-               AS canonical_url,
-           CAST(CASE WHEN solo OR partner_solo THEN 1 ELSE 2 END AS BIGINT)
-               AS group_size,
-           (solo OR partner_solo OR v = 0) AS keep
-    FROM f ORDER BY doc_id
-    """,
-)
-def q_url_canonical_dedup(spark, sf_dir):
-    """URL canonicalization + URL-grain dedup (operators/urls.py) — the
-    crawl pipeline's first screen, run BEFORE any content hashing.
-    Fixture-formula oracle: doc i is one of two deterministic messy
-    spellings of canonical group g = i DIV 2 — even docs carry uppercase
-    scheme, mixed-case host, and the scheme's default port; odd docs
-    carry a www. prefix, a trailing path slash, reversed query-param
-    order, utm/fbclid tracking params, and a fragment. Every ninth doc
-    is a singleton (unique /solo path, #frag). The oracle replays the
-    expected CANONICAL string and verdict from the index formula, so the
-    value hash attests the whole normalization chain (case, ports, www,
-    fragments, tracking filter, param sort, slash collapse) plus the
-    min-id-wins group decision. sf-independent fixture."""
-    raw = _messy_url_frame(spark, 180)
-    return urls.url_dedup_decisions(raw, "url", "doc_id").orderBy("doc_id")
-
-
-def _messy_url_frame(spark, n: int, id_offset: int = 0) -> DataFrame:
-    """The deterministic messy-URL fixture shared by the batch and
-    streaming URL-dedup queries: doc i is one of two spellings of
-    canonical group g = i DIV 2 (see q_url_canonical_dedup's docstring),
-    every ninth doc a /solo singleton."""
-    i = F.col("id")
-    g = F.expr("id DIV 2")
-    v = i % 2
-    solo = (i % 9) == 8
-    scheme = F.when(g % 5 == 0, F.lit("https")).otherwise(F.lit("http"))
-    host_n = (g % 7).cast("string")
-    pathp = F.when(
-        solo, F.concat(F.lit("/solo/"), i.cast("string"))
-    ).otherwise(F.concat(F.lit("/path/"), g.cast("string")))
-    q_can = F.concat(
-        F.lit("id="),
-        g.cast("string"),
-        F.when(g % 3 == 0, F.lit("&q=x")).otherwise(F.lit("")),
-    )
-    defport = F.when(g % 5 == 0, F.lit(":443")).otherwise(F.lit(":80"))
-    messy_even = F.concat(
-        F.upper(scheme), F.lit("://Site"), host_n, F.lit(".Example"),
-        defport, pathp, F.lit("?"), q_can,
-        F.when(solo, F.lit("#frag")).otherwise(F.lit("")),
-    )
-    messy_odd = F.concat(
-        scheme, F.lit("://www.site"), host_n, F.lit(".example"), pathp,
-        F.lit("/?utm_source=news&"),
-        F.when(
-            g % 3 == 0, F.concat(F.lit("q=x&id="), g.cast("string"))
-        ).otherwise(F.concat(F.lit("id="), g.cast("string"))),
-        F.lit("&fbclid=abc#top"),
-    )
-    return spark.range(n).select(
-        (i + id_offset).alias("doc_id"),
-        F.when(solo | (v == 0), messy_even).otherwise(messy_odd).alias("url"),
-    )
-
-
-@register(
-    "robots_screen_decisions",
-    """
-    WITH u AS (
-        SELECT i, i % 4 AS k, i % 6 AS c, i // 24 AS g
-        FROM generate_series(0, 119) t(i)
-    )
-    SELECT i AS doc_id,
-           'http://' || ['a.com','b.com','c.com','d.com'][1 + CAST(k AS INT)]
-               || CASE c WHEN 0 THEN '/'
-                         WHEN 1 THEN '/page/' || g
-                         WHEN 2 THEN '/private/p' || g
-                         WHEN 3 THEN '/private/ok/' || g
-                         WHEN 4 THEN '/x/y/' || g
-                         ELSE '/x/z' || g END AS url,
-           CASE WHEN k = 0 THEN FALSE
-                WHEN k = 1 THEN c != 1
-                WHEN k = 2 THEN c != 5
-                ELSE TRUE END AS crawlable
-    FROM u ORDER BY doc_id
-    """,
-)
-def q_robots_screen_decisions(spark, sf_dir):
-    """Robots.txt crawl-permission screen (operators/urls.py): parse
-    robots bodies to (agent, allow, prefix) rule rows — group structure
-    recovered distributively via the gaps-and-islands device over
-    User-agent runs — then screen URLs under the REP longest-match rule
-    with EXCLUSIVE group selection (an exact agent group shadows ``*``
-    entirely; b.com proves it: the * group disallows /private but the
-    graftbot group doesn't, so /private stays crawlable for graftbot).
-    Fixture: four hosts covering blanket disallow, exact-vs-* shadowing,
-    stacked agents with an Allow carve-out under a Disallow (longest
-    match flips it), and a no-matching-group host; the oracle is the
-    hand-derived permission truth table. Rules broadcast; the crawl
-    side never shuffles (one groupBy restores the URL grain).
-    sf-independent fixture."""
-    i = F.col("id")
-    k, c = i % 4, i % 6
-    g = F.expr("id DIV 24").cast("string")
-    host = F.element_at(
-        F.array(*[F.lit(h) for h in ("a.com", "b.com", "c.com", "d.com")]),
-        (k + 1).cast("int"),
-    )
-    path = (
-        F.when(c == 0, F.lit("/"))
-        .when(c == 1, F.concat(F.lit("/page/"), g))
-        .when(c == 2, F.concat(F.lit("/private/p"), g))
-        .when(c == 3, F.concat(F.lit("/private/ok/"), g))
-        .when(c == 4, F.concat(F.lit("/x/y/"), g))
-        .otherwise(F.concat(F.lit("/x/z"), g))
-    )
-    u = spark.range(120).select(
-        i.alias("doc_id"),
-        F.concat(F.lit("http://"), host, path).alias("url"),
-    )
-    robots = spark.createDataFrame(
-        [
-            ("a.com", "User-agent: *\nDisallow: /\n"),
-            (
-                "b.com",
-                "# site policy\nUser-agent: *\nDisallow: /private\n"
-                "Allow: /private/ok\n\nUser-agent: graftbot\n"
-                "Disallow: /page\n",
-            ),
-            (
-                "c.com",
-                "User-agent: graftbot\nUser-agent: otherbot\n"
-                "Disallow: /x\nAllow: /x/y\n",
-            ),
-            ("d.com", "User-agent: otherbot\nDisallow: /\n"),
-        ],
-        "host string, robots_txt string",
-    )
-    return (
-        urls.robots_screen(u, robots, agent="graftbot")
-        .select("doc_id", "url", "crawlable")
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "crawl_frontier_slots",
-    """
-    WITH u AS (
-        SELECT i, i % 4 AS k, i // 4 AS n,
-               CAST((i * 7) % 13 AS INT) AS priority
-        FROM generate_series(0, 119) t(i)
-    ),
-    c AS (
-        SELECT ['a.com','b.com','c.com','d.com'][1 + CAST(k AS INT)] AS host,
-               'http://' || ['a.com','b.com','c.com','d.com'][1 + CAST(k AS INT)]
-                   || '/p' || n AS url,
-               priority,
-               CAST(CASE k WHEN 0 THEN 5.0 WHEN 1 THEN 2.0 ELSE 1.0 END
-                    AS DOUBLE) AS crawl_delay
-        FROM u
-    ),
-    r AS (
-        SELECT host, url, priority, crawl_delay,
-               row_number() OVER (PARTITION BY host
-                                  ORDER BY priority DESC, url) - 1 AS slot
-        FROM c
-    )
-    SELECT host, url, priority, slot, crawl_delay,
-           round(slot * crawl_delay, 6) AS fetch_at_s
-    FROM r WHERE slot * crawl_delay < 20
-    """,
-)
-def q_crawl_frontier_slots(spark, sf_dir):
-    """Per-host politeness frontier (urls.crawl_frontier — the
-    scheduling step between robots_screen and the fetcher, r12 verdict
-    #5): each candidate URL gets a fetch slot on its host's clock at
-    slot * Crawl-delay, slots by (priority DESC, url ASC) rank, only
-    slots inside the 20s horizon emitted — so output scales with hosts
-    x (horizon/delay), never with candidate-list size. Fixture: 30
-    candidates on each of four hosts whose robots exercise the delay
-    selection table — a.com declares 5s under ``*``; b.com declares 10s
-    under ``*`` but 2s under the exact agent (exact wins); c.com has
-    robots but no delay (default 1s); d.com declares 9s under ``*``
-    while an exact graftbot group EXISTS without a delay (REP exclusive
-    groups: the ``*`` delay is shadowed, default applies). Emitted
-    slots: 4 + 10 + 20 + 20 = 54. The oracle replays the rank/slot
-    arithmetic against the hand-derived delay table, exactly like
-    robots_screen_decisions' truth table; delay parsing itself is
-    pinned in tests/test_urls.py."""
-    i = F.col("id")
-    k = i % 4
-    n = F.expr("id DIV 4").cast("string")
-    host = F.element_at(
-        F.array(*[F.lit(h) for h in ("a.com", "b.com", "c.com", "d.com")]),
-        (k + 1).cast("int"),
-    )
-    u = spark.range(120).select(
-        F.concat(F.lit("http://"), host, F.lit("/p"), n).alias("url"),
-        ((i * 7) % 13).cast("int").alias("priority"),
-    )
-    robots = spark.createDataFrame(
-        [
-            ("a.com", "User-agent: *\nCrawl-delay: 5\nDisallow: /tmp\n"),
-            (
-                "b.com",
-                "User-agent: *\nCrawl-delay: 10\n\n"
-                "User-agent: graftbot\nCrawl-delay: 2\n",
-            ),
-            ("c.com", "User-agent: *\nDisallow: /tmp\n"),
-            (
-                "d.com",
-                "User-agent: graftbot\nDisallow: /q\n\n"
-                "User-agent: *\nCrawl-delay: 9\n",
-            ),
-        ],
-        "host string, robots_txt string",
-    )
-    return urls.crawl_frontier(
-        u, robots, agent="graftbot", horizon_s=20.0
-    )
-
-
-@register(
-    "streaming_frontier_slots",
-    """
-    WITH u AS (
-        SELECT i, i % 4 AS k, i // 4 AS n,
-               CAST((i * 7) % 13 AS INT) AS priority,
-               CAST(i // 40 AS INT) AS wave
-        FROM generate_series(0, 119) t(i)
-    ),
-    c AS (
-        SELECT wave,
-               ['a.com','b.com','c.com','d.com'][1 + CAST(k AS INT)] AS host,
-               'http://' || ['a.com','b.com','c.com','d.com'][1 + CAST(k AS INT)]
-                   || '/p' || n AS url,
-               priority,
-               CAST(CASE k WHEN 0 THEN 5.0 WHEN 1 THEN 2.0 ELSE 1.0 END
-                    AS DOUBLE) AS crawl_delay
-        FROM u
-    ),
-    w0 AS (SELECT host, url, priority, crawl_delay,
-                  row_number() OVER (PARTITION BY host
-                                     ORDER BY priority DESC, url) - 1 AS slot
-           FROM c WHERE wave = 0),
-    c1 AS (SELECT host, url, priority, crawl_delay FROM c WHERE wave = 1
-           UNION ALL
-           SELECT host, url, priority, crawl_delay FROM w0
-           WHERE slot * crawl_delay >= 20),
-    w1 AS (SELECT host, url, priority, crawl_delay,
-                  row_number() OVER (PARTITION BY host
-                                     ORDER BY priority DESC, url) - 1 AS slot
-           FROM c1),
-    c2 AS (SELECT host, url, priority, crawl_delay FROM c WHERE wave = 2
-           UNION ALL
-           SELECT host, url, priority, crawl_delay FROM w1
-           WHERE slot * crawl_delay >= 20),
-    w2 AS (SELECT host, url, priority, crawl_delay,
-                  row_number() OVER (PARTITION BY host
-                                     ORDER BY priority DESC, url) - 1 AS slot
-           FROM c2)
-    SELECT CAST(b AS INT) AS batch, host, url, priority,
-           CAST(slot AS INT) AS slot, crawl_delay,
-           round(slot * crawl_delay, 6) AS fetch_at_s
-    FROM (
-        SELECT 0 AS b, * FROM w0 WHERE slot * crawl_delay < 20
-        UNION ALL SELECT 1, * FROM w1 WHERE slot * crawl_delay < 20
-        UNION ALL SELECT 2, * FROM w2 WHERE slot * crawl_delay < 20
-    )
-    """,
-)
-def q_streaming_frontier_slots(spark, sf_dir):
-    """Persistent STREAMING crawl frontier (streaming/frontier_ingest.py,
-    r13 verdict #7): the politeness scheduler as a keyed ingest stream
-    with a parquet-backed backlog. The 120-candidate fixture of
-    crawl_frontier_slots lands as THREE wave files (strictly increasing
-    mtimes pin the FileStreamSource order; maxFilesPerTrigger=1 makes
-    each a real micro-batch); every wave merges new candidates with the
-    stored backlog, schedules the union under the 20s horizon, lands
-    emitted slots under batch={id} (overwrite = replay-idempotent) and
-    the unscheduled remainder as the next backlog snapshot
-    (state={id}, replace semantics — replay recomputes from the
-    untouched previous snapshot). a.com (delay 5, capacity 4/wave,
-    10 new candidates/wave) genuinely accretes backlog: waves emit its
-    top-4 of 10, 16, then 22 candidates, and 18 remain queued at the
-    end — the overflow path the batch operator only promises. The
-    oracle unrolls the three waves as chained CTEs (the iterative-
-    algorithm device), so the value hash attests wave composition,
-    cross-wave re-queueing, AND per-wave schedule arithmetic at once.
-    Retention/replay semantics pinned in tests/test_streaming.py."""
-    import os
-    import tempfile
-    import uuid
-
-    from .streaming import frontier_ingest as fi
-
-    hostlist = ("a.com", "b.com", "c.com", "d.com")
-
-    def _write_waves(tmp: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(tmp, exist_ok=True)
-        base = 1_700_000_000
-        for w in range(3):
-            ids = range(40 * w, 40 * w + 40)
-            tbl = pa.table(
-                {
-                    "url": [
-                        f"http://{hostlist[i % 4]}/p{i // 4}" for i in ids
-                    ],
-                    "priority": pa.array(
-                        [(i * 7) % 13 for i in ids], type=pa.int32()
-                    ),
-                }
-            )
-            p = os.path.join(tmp, f"wave{w}.parquet")
-            pq.write_table(tbl, p)
-            # FileStreamSource orders new files by modification time:
-            # 60s apart pins wave k -> batch k deterministically
-            os.utime(p, (base + 60 * w, base + 60 * w))
-
-    src = _land_once(
-        os.path.join(tempfile.gettempdir(), "spark_graft_frontier_src"),
-        "fixture_v1",  # sf-independent formula fixture
-        _write_waves,
-    )
-    robots = spark.createDataFrame(
-        [
-            ("a.com", "User-agent: *\nCrawl-delay: 5\nDisallow: /tmp\n"),
-            (
-                "b.com",
-                "User-agent: *\nCrawl-delay: 10\n\n"
-                "User-agent: graftbot\nCrawl-delay: 2\n",
-            ),
-            ("c.com", "User-agent: *\nDisallow: /tmp\n"),
-            (
-                "d.com",
-                "User-agent: graftbot\nDisallow: /q\n\n"
-                "User-agent: *\nCrawl-delay: 9\n",
-            ),
-        ],
-        "host string, robots_txt string",
-    )
-    # the bounded per-host dim, derived ONCE through the real REP path
-    delays_rows = [
-        (r["host"], r["crawl_delay"])
-        for r in urls.crawl_delays(robots, "graftbot", 1.0).collect()
-    ]
-    stream = (
-        spark.readStream.schema("url string, priority int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_frontier_{uuid.uuid4().hex[:8]}",
-    )
-    q = fi.frontier_stream(
-        stream,
-        delays_rows,
-        slots_dir=os.path.join(work, "slots"),
-        backlog_dir=os.path.join(work, "backlog"),
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        default_delay=1.0,
-        horizon_s=20.0,
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_frontier_slots: stream did not finish in 300s"
-        )
-    return fi.read_all_slots(spark, os.path.join(work, "slots")).select(
-        "batch", "host", "url", "priority", "slot", "crawl_delay",
-        "fetch_at_s",
-    )
-
-
-@register(
-    "streaming_url_seen_decisions",
-    """
-    WITH f AS (
-        SELECT i, i // 2 AS g, i % 2 AS v,
-               (i % 9 = 8) AS solo,
-               ((CASE WHEN i % 2 = 0 THEN i + 1 ELSE i - 1 END) % 9 = 8)
-                   AS partner_solo,
-               1000000 + i AS doc_id
-        FROM generate_series(0, 179) t(i)
-    )
-    SELECT doc_id,
-           CASE WHEN solo THEN 'admitted'
-                WHEN v = 1 AND NOT partner_solo THEN 'exact_dup'
-                WHEN g < 60 THEN 'exact_dup'
-                ELSE 'admitted' END AS status,
-           CAST(CASE WHEN solo THEN NULL
-                     WHEN v = 1 AND NOT partner_solo THEN 1000000 + 2 * g
-                     WHEN g < 60 THEN g
-                     ELSE NULL END AS BIGINT) AS matched_id
-    FROM f ORDER BY doc_id
-    """,
-)
-def q_streaming_url_seen_decisions(spark, sf_dir):
-    """§2.9: the crawl frontier's URL seen-filter as a real stream —
-    corpus_ingest.ingest_stream keyed on md5(canonical_url(url)) via
-    key_expr, against a STORED index of already-crawled canonical URLs
-    (groups g < 60, bootstrapped in the hp-partitioned layout so the
-    micro-batch runs the Bloom-pruned prefix read). The batch is the
-    180-doc messy-URL fixture re-keyed +1e6: each crawled group's two
-    spellings must come back exact_dup (the smaller-id spelling matched
-    to the INDEX id g, the larger to its batch twin via the
-    batch-internal collapse — two distinct matched_id paths attested),
-    /solo URLs and uncrawled groups' min-id spellings admit, and near
-    screens are vacuous by construction (null sigs at URL grain: two
-    URLs are the same resource or they aren't). The oracle replays the
-    decision table from the index formula. Same commit protocol as
-    streaming_ingest_decisions (idempotent markers, per-batch decisions,
-    bloom-before-index). sf-independent fixture."""
-    import os
-    import tempfile
-    import uuid
-
-    from .streaming import corpus_ingest as ci
-
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_urlseen_{uuid.uuid4().hex[:8]}"
-    )
-    src, index_dir = os.path.join(work, "src"), os.path.join(work, "index")
-    dec_dir, ckpt = os.path.join(work, "dec"), os.path.join(work, "ckpt")
-    key = urls.canonical_url(F.col("url"))
-    # already-crawled store: one row per group g < 60, carrying the
-    # group's CANONICAL pair URL (built clean by the formula —
-    # canonical_url is idempotent on it, which this also exercises)
-    gg = F.col("id")
-    crawled = spark.range(60).select(
-        gg.alias("doc_id"),
-        F.concat(
-            F.when(gg % 5 == 0, F.lit("https")).otherwise(F.lit("http")),
-            F.lit("://site"), (gg % 7).cast("string"), F.lit(".example/path/"),
-            gg.cast("string"), F.lit("?id="), gg.cast("string"),
-            F.when(gg % 3 == 0, F.lit("&q=x")).otherwise(F.lit("")),
-        ).alias("url"),
-    )
-    ci.write_index(
-        ci._batch_signatures(crawled, "url", "doc_id", 8, 3, key_expr=key),
-        index_dir,
-    )
-    batch = _messy_url_frame(spark, 180, id_offset=1000000)
-    batch.coalesce(1).write.mode("overwrite").json(src)
-    stream = spark.readStream.schema("doc_id bigint, url string").json(src)
-    q = ci.ingest_stream(
-        stream, index_dir, dec_dir, ckpt, text_col="url", key_expr=key
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_url_seen_decisions: stream did not finish in 300s"
-        )
-    return spark.read.schema(ci.DECISION_SCHEMA).parquet(dec_dir).select(
-        "doc_id", "status", "matched_id"
-    )
 
 
 @register(
@@ -7785,77 +7307,6 @@ def q_kmv_distinct_estimate(spark, sf_dir):
     )
 
 
-# Shared DuckDB replay for the qhist family: the WHOLE-corpus
-# histogram + rank-location quantiles. Both the two-snapshot batch
-# merge (token_length_qsketch) and the micro-batch stream
-# (streaming_qsketch_stats) attest against it — the exact merge law
-# is what makes split == whole, so the hash match IS the merge proof.
-_QSKETCH_ORACLE = """
-    WITH t AS (SELECT lang,
-                      len(regexp_extract_all(text, '\\S+')) AS n_tokens
-               FROM documents),
-    bkt AS (SELECT lang,
-                   CAST(least(greatest(floor(n_tokens / 2.0), 0), 255) AS INT)
-                       AS bucket,
-                   count(*) AS cnt
-            FROM t GROUP BY 1, 2),
-    cum AS (SELECT lang, bucket, cnt,
-                   sum(cnt) OVER (PARTITION BY lang ORDER BY bucket) AS cum,
-                   sum(cnt) OVER (PARTITION BY lang) AS total
-            FROM bkt),
-    p AS (SELECT unnest([0.1::DOUBLE, 0.5::DOUBLE, 0.9::DOUBLE]) AS p)
-    SELECT lang, p,
-           round(2.0 * (bucket + (ceil(p * total) - (cum - cnt)) / cnt), 6)
-               AS q_est,
-           CAST(total AS BIGINT) AS total_n
-    FROM cum CROSS JOIN p
-    WHERE cum >= ceil(p * total) AND (cum - cnt) < ceil(p * total)
-    """
-
-
-@register(
-    "token_length_qsketch",
-    _QSKETCH_ORACLE,
-)
-def q_token_length_qsketch(spark, sf_dir):
-    """Stored mergeable quantile sketch (sketches.qhist_sketch — the
-    deterministic fixed-grid alternative to KLL/t-digest, r12 verdict
-    #7): per-language token-count histograms over 256 two-token-wide
-    buckets, built as TWO separate snapshot sketches (even / odd
-    doc_ids — the stored-artifact-per-snapshot shape), merged with
-    qhist_merge (bucket-count addition, the EXACT merge law), then
-    p10/p50/p90 estimated by rank location + in-bucket interpolation.
-    The oracle computes the histogram over the WHOLE corpus in one
-    pass, so the value-hash match IS the merge proof — merged snapshot
-    sketches reproduce the whole-corpus sketch bit-for-bit (the
-    incremental_cluster_parity / scd2_merge_parity oracle device).
-    Unlike approx_percentile's engine-private KLL state, this sketch
-    persists as plain (group, bucket, n) parquet rows and merges across
-    snapshots forever with zero drift; estimates are within one bucket
-    width of the exact order statistic (accuracy + merge-invariance
-    pinned in tests/test_sketches.py). Late-r13 addition: enters the
-    r14 attestation window with the r08 remainder (COVERAGE.md)."""
-    docs = _cat(spark, sf_dir).documents
-    t = docs.select(
-        "doc_id",
-        "lang",
-        F.size(textops.tokens(F.col("text"))).cast("double").alias(
-            "n_tokens"
-        ),
-    )
-    knobs = dict(n_buckets=256, lo=0.0, hi=512.0)
-    snap_a = sketches.qhist_sketch(
-        t.filter(F.col("doc_id") % 2 == 0), ["lang"], "n_tokens", **knobs
-    )
-    snap_b = sketches.qhist_sketch(
-        t.filter(F.col("doc_id") % 2 == 1), ["lang"], "n_tokens", **knobs
-    )
-    merged = sketches.qhist_merge(snap_a, snap_b)
-    return sketches.qhist_quantiles(
-        merged, ["lang"], [0.1, 0.5, 0.9], **knobs
-    )
-
-
 @register(
     "doc_size_qsketch_log",
     """
@@ -7892,20 +7343,17 @@ def q_token_length_qsketch(spark, sf_dir):
 )
 def q_doc_size_qsketch_log(spark, sf_dir):
     """Auto-ranged LOG-grid quantile sketch over document sizes
-    (sketches.qhist_log_sketch, r13 verdict #3): the fixed-grid qhist
-    needs an a-priori [lo, hi) and silently clamps outliers into its
-    edge buckets — the wrong default for unbounded domains like
-    document byte/char sizes. The log grid buckets by
+    (sketches.qhist_log_sketch): unbounded domains like document
+    byte/char sizes have no a-priori range, so the log grid buckets by
     leading-two-decimal-digits band (exact below 100, <= 10% relative
     width above) with NO range knob, built from pure integer/string
     algebra so Spark and DuckDB agree bit-for-bit (libm log at bucket
-    boundaries is the cross-engine hazard this deliberately avoids),
-    and keeps the fixed grid's EXACT bucket-addition merge law —
-    attested here the same way as token_length_qsketch: two snapshot
+    boundaries is the cross-engine hazard this deliberately avoids).
+    Its merge law is EXACT bucket addition, attested here: two snapshot
     sketches (even/odd doc_ids) merged with qhist_merge must reproduce
     the oracle's whole-corpus histogram, then p5/p50/p95/p100 located
-    by rank + in-bucket interpolation. Clamp-loss-vs-log-accuracy
-    property pinned in tests/test_sketches.py."""
+    by rank + in-bucket interpolation. Heavy-tail accuracy pinned in
+    tests/test_sketches.py."""
     docs = _cat(spark, sf_dir).documents
     t = docs.select("doc_id", "source", "n_chars")
     a = sketches.qhist_log_sketch(
@@ -7917,186 +7365,6 @@ def q_doc_size_qsketch_log(spark, sf_dir):
     merged = sketches.qhist_merge(a, b)
     return sketches.qhist_log_quantiles(
         merged, ["source"], [0.05, 0.5, 0.95, 1.0]
-    )
-
-
-@register(
-    "streaming_kmv_distinct",
-    """
-    WITH t AS (SELECT lang,
-                      len(regexp_extract_all(text, '\\S+')) AS v
-               FROM documents),
-    h AS (SELECT DISTINCT lang,
-                 ('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15))::BIGINT
-                     AS h
-          FROM t),
-    r AS (SELECT lang, h,
-                 row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-          FROM h)
-    SELECT lang, CAST(count(*) AS BIGINT) AS sketch_size,
-           round(CASE WHEN count(*) < 64 THEN count(*) * 1.0
-                      ELSE 63.0 * 1152921504606846976
-                           / max(CASE WHEN rn = 64 THEN h END) END,
-                 4) AS kmv_estimate
-    FROM r WHERE rn <= 64 GROUP BY lang
-    """,
-)
-def q_streaming_kmv_distinct(spark, sf_dir):
-    """Streaming distinct-count maintenance (qsketch_ingest.kmv_stream,
-    r14): the KMV bottom-k sketch kept fresh per ingest wave, the
-    cardinality twin of streaming_qsketch_stats — per-language distinct
-    token-count values over the SAME 3-file documents stream (shared
-    landed source). Each micro-batch lands only its own bottom-64
-    hashes under batch={id} (overwrite = replay-idempotent; <= groups x
-    64 hashes per batch regardless of batch size); the returned
-    estimate comes from the dedup+slice merged read, and the bottom-k
-    merge law — bottomk(A ∪ B) = bottomk(bottomk(A) ∪ bottomk(B)) —
-    means the oracle's WHOLE-corpus replay (row_number <= 64 over
-    distinct md5 hashes) must hash-match the stream accumulation
-    bit-for-bit. This is how a 100-TB corpus tracks distinct
-    users/URLs/values per ingest wave without ever re-scanning or
-    shuffling the distinct values themselves."""
-    import os
-    import tempfile
-    import uuid
-
-    from .streaming import qsketch_ingest as qi
-
-    cat = _cat(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    src = _land_once(
-        os.path.join(
-            tempfile.gettempdir(), f"spark_graft_qsketch_src{tag}"
-        ),
-        fp,
-        lambda tmp: cat.documents.select(
-            "doc_id",
-            "lang",
-            F.size(textops.tokens(F.col("text"))).cast("double").alias(
-                "n_tokens"
-            ),
-        )
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(tmp),
-    )
-    stream = (
-        spark.readStream.schema(
-            "doc_id bigint, lang string, n_tokens double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select("lang", F.col("n_tokens").cast("long").alias("n_tok"))
-    )
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_kmv_{uuid.uuid4().hex[:8]}"
-    )
-    sketch_dir = os.path.join(work, "sketch")
-    q = qi.kmv_stream(
-        stream, sketch_dir, os.path.join(work, "ckpt"), ["lang"], "n_tok"
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_kmv_distinct: stream did not finish in 300s"
-        )
-    merged = qi.read_merged_kmv(spark, sketch_dir, ["lang"], k=64)
-    est = F.when(
-        F.size("kmin") < 64, F.size("kmin").cast("double")
-    ).otherwise(
-        F.lit(63.0) * F.lit(sketches.HASH_SPACE) / F.element_at("kmin", 64)
-    )
-    return merged.select(
-        "lang",
-        F.size("kmin").cast("long").alias("sketch_size"),
-        F.round(est, 4).alias("kmv_estimate"),
-    )
-
-
-@register(
-    "cms_token_freq",
-    """
-    WITH tok AS (
-        SELECT doc_id, unnest(regexp_extract_all(text, '\\S+')) AS token
-        FROM documents),
-    rr AS (SELECT unnest(range(0, 4)) AS r),
-    sk AS (
-        SELECT r,
-               ('0x' || substr(md5(CAST(r AS VARCHAR) || ':' || token),
-                               1, 15))::BIGINT % 512 AS b,
-               count(*) AS n
-        FROM tok, rr GROUP BY 1, 2),
-    exact AS (SELECT token, count(*) AS n_exact FROM tok GROUP BY 1),
-    top AS (SELECT token, CAST(n_exact AS BIGINT) AS n_exact
-            FROM exact ORDER BY n_exact DESC, token LIMIT 15),
-    est AS (
-        SELECT t.token, t.n_exact, min(coalesce(s.n, 0)) AS cms_est
-        FROM top t
-        CROSS JOIN rr
-        LEFT JOIN sk s ON s.r = rr.r
-             AND s.b = ('0x' || substr(md5(CAST(rr.r AS VARCHAR) || ':'
-                                       || t.token), 1, 15))::BIGINT % 512
-        GROUP BY 1, 2)
-    SELECT token, n_exact, CAST(cms_est AS BIGINT) AS cms_est,
-           CAST(cms_est - n_exact AS BIGINT) AS overcount
-    FROM est
-    """,
-)
-def q_cms_token_freq(spark, sf_dir):
-    """Count-Min sketch (sketches.cms_sketch, r14) — the FREQUENCY
-    member completing the mergeable-sketch family (KMV = distinct,
-    qhist = quantiles, CMS = point frequencies): 4 md5-derived hash
-    rows x 512 counters over the whole document token stream, built as
-    TWO per-snapshot sketches (even/odd doc_ids) merged by exact cell
-    addition (cms_merge == qhist_merge — one contract), then the 15
-    most frequent tokens' estimates joined to their exact counts so
-    every row carries its own measured one-sided error (overcount >= 0
-    always; <= 2N/512 w.h.p.). The oracle replays hashing, cell
-    counts, and the min-over-rows estimate — the merge law is what
-    makes the split build hash-match the whole-corpus replay. At
-    100 TB this is the artifact that answers "how often does this
-    token/URL/n-gram appear" per ingest wave from depth x width rows,
-    never a corpus scan."""
-    docs = _cat(spark, sf_dir).documents
-    tok = docs.select(
-        "doc_id", F.explode(textops.tokens(F.col("text"))).alias("token")
-    )
-    # ONE tokenize+explode pass pre-aggregated to (side, token, count)
-    # and materialized (r16): the two per-snapshot sketch builds and the
-    # exact counts previously each re-ran the corpus explode (3 passes),
-    # and the weighted cms_sketch build hashes the vocab, not the
-    # stream. Cell- and count-exact: counters are pure addition.
-    tcnt = (
-        tok.groupBy((F.col("doc_id") % 2).alias("_side"), "token")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .localCheckpoint(eager=False)
-    )
-    knobs = dict(depth=4, width=512)
-    sk = sketches.cms_merge(
-        sketches.cms_sketch(
-            tcnt.filter(F.col("_side") == 0), "token",
-            weight_col="_cnt", **knobs
-        ),
-        sketches.cms_sketch(
-            tcnt.filter(F.col("_side") == 1), "token",
-            weight_col="_cnt", **knobs
-        ),
-    )
-    exact = tcnt.groupBy("token").agg(F.sum("_cnt").alias("n_exact"))
-    top = (
-        exact.orderBy(F.desc("n_exact"), "token")
-        .limit(15)
-        .localCheckpoint(eager=False)
-    )
-    est = sketches.cms_estimate(sk, top, "token", **knobs)
-    return top.join(est, "token").select(
-        "token",
-        "n_exact",
-        F.col("cms_est").cast("long").alias("cms_est"),
-        (F.col("cms_est") - F.col("n_exact")).cast("long").alias(
-            "overcount"
-        ),
     )
 
 
@@ -8144,10 +7412,10 @@ def q_qsketch_drift_psi(spark, sf_dir):
     even vs odd calendar days of the events stream, per event_type —
     computed entirely from the (group, bucket, n) artifacts, never the
     rows. This is how a 100-TB corpus monitors distribution shift
-    between ingest snapshots: the per-snapshot sketches already exist
-    (token_length_qsketch / streaming_qsketch_stats store them), so the
-    drift check is a bucket-grain join of two frames whose size is
-    groups x occupied buckets, independent of corpus size — no rescan.
+    between ingest snapshots: given the stored per-snapshot sketches
+    (doc_size_qsketch_log's shape), the drift check is a bucket-grain
+    join of two frames whose size is groups x occupied buckets,
+    independent of corpus size — no rescan.
     PSI terms use symmetric Jeffreys add-0.5 smoothing over the union
     bucket domain (one-side-only buckets contribute finite mass) and
     are DECIMAL(28,12)-cast at the sum so both engines aggregate
@@ -8181,78 +7449,6 @@ def _day_parity_qsketch_psi(spark, sf_dir):
         ev.filter(F.col("side") == 1), ["event_type"], "value"
     )
     return sketches.qhist_psi(a, b, ["event_type"])
-
-
-@register("streaming_qsketch_stats", _QSKETCH_ORACLE)
-def q_streaming_qsketch_stats(spark, sf_dir):
-    """Incremental percentile maintenance over a LIVE stream
-    (streaming/qsketch_ingest.py): the documents table lands as a
-    3-file source, maxFilesPerTrigger=1 splits it into three real
-    micro-batches, and each batch appends only its own (lang, bucket,
-    n) sketch under batch={id} (overwrite = replay-idempotent —
-    exactly-once needs NO marker here because there is one output and
-    per-batch counts replace, never add). The returned quantiles come
-    from the bucket-grain sum over everything landed
-    (read_merged_sketch); the oracle computes the whole-corpus
-    histogram in one pass, so the value-hash match proves
-    stream-accumulated == batch-whole — the exact merge law doing the
-    attestation, as in token_length_qsketch. This is the stored
-    percentile artifact a 100-TB corpus refreshes per ingest wave
-    without ever re-scanning history; dir retention reuses the
-    decisions-sink archive policy verbatim (same layout). Per-invocation
-    uuid dirs stay on disk (fixture-sized); parity and accumulation
-    semantics pinned in tests/test_streaming.py. Late-r13 addition:
-    enters the r14 attestation window with the r08 remainder."""
-    import os
-    import tempfile
-    import uuid
-
-    from .streaming import qsketch_ingest as qi
-
-    cat = _cat(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_").replace(".", "_")
-    fp = _source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    src = _land_once(
-        os.path.join(
-            tempfile.gettempdir(), f"spark_graft_qsketch_src{tag}"
-        ),
-        fp,
-        lambda tmp: cat.documents.select(
-            "doc_id",
-            "lang",
-            F.size(textops.tokens(F.col("text"))).cast("double").alias(
-                "n_tokens"
-            ),
-        )
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(tmp),
-    )
-    stream = (
-        spark.readStream.schema(
-            "doc_id bigint, lang string, n_tokens double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_qsketch_{uuid.uuid4().hex[:8]}"
-    )
-    sketch_dir = os.path.join(work, "sketch")
-    ckpt = os.path.join(work, "ckpt")
-    knobs = dict(n_buckets=256, lo=0.0, hi=512.0)
-    q = qi.qsketch_stream(
-        stream, sketch_dir, ckpt, ["lang"], "n_tokens", **knobs
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_qsketch_stats: stream did not finish in 300s"
-        )
-    merged = qi.read_merged_sketch(spark, sketch_dir, ["lang"])
-    return sketches.qhist_quantiles(
-        merged, ["lang"], [0.1, 0.5, 0.9], **knobs
-    )
 
 
 @register(

@@ -158,20 +158,6 @@ def aes_cbc(data: bytes, key: bytes, encrypt: bool = False) -> bytes:
     return op.update(data) + op.finalize()
 
 
-def decrypt_manifest_db(
-    plist_bytes: bytes, db_bytes: bytes, passphrase: bytes | str
-) -> bytes:
-    """Manifest.plist + encrypted Manifest.db -> plaintext SQLite bytes."""
-    mp = plistlib.loads(plist_bytes)
-    kb = BackupKeybag(mp["BackupKeyBag"])
-    if not kb.unlock(passphrase):
-        raise ValueError("failed to unlock keybag: incorrect passphrase?")
-    mk = mp["ManifestKey"]
-    cls = struct.unpack("<l", mk[:4])[0]
-    key = kb.unwrap_for_class(cls, mk[4:])
-    return aes_cbc(db_bytes, key)
-
-
 def file_key_and_size(
     file_plist: bytes, keybag: BackupKeybag
 ) -> tuple[bytes | None, int | None]:

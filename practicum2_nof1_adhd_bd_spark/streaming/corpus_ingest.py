@@ -31,13 +31,6 @@ State never lives in executor memory: the index is disk-backed and
 band-bucket joins scale with batch x candidate fan-out, not corpus size.
 Batch-internal duplicates are also collapsed (min-id wins), so a batch
 containing its own copies admits exactly one.
-
-The dedup GRAIN is pluggable via ``key_expr`` (r12): pass a Column
-(e.g. ``urls.canonical_url(F.col("url"))``) and the stream becomes a
-keyed seen-filter — index key md5(key_expr), near screens vacuous —
-over the same stored index, Bloom pruning, and commit protocol. The
-crawl frontier's URL case is attested as
-``streaming_url_seen_decisions``.
 """
 
 from __future__ import annotations
@@ -249,7 +242,6 @@ def compact_decisions(
     spark,
     decisions_dir: str,
     up_to_batch: int,
-    schema: str = DECISION_SCHEMA,
 ) -> int:
     """Roll every committed ``batch=N`` dir with ``0 <= N <=
     up_to_batch`` into the single archive partition ``batch=-1``,
@@ -282,7 +274,7 @@ def compact_decisions(
     pre = jvm.org.apache.hadoop.fs.Path(pre_str)
     fs.delete(pre, True)  # stale partial write from an earlier crash
     cand_df = (
-        spark.read.schema(schema + ", batch int")
+        spark.read.schema(DECISION_SCHEMA + ", batch int")
         .option("basePath", decisions_dir)
         .parquet(*[f"{decisions_dir}/batch={b}" for b in cands])
         .withColumn("src_batch", F.col("batch").cast("int"))
@@ -290,7 +282,7 @@ def compact_decisions(
     )
     combined = cand_df
     if ARCHIVE_BATCH in dirs:
-        old = spark.read.schema(schema + ", src_batch int").parquet(
+        old = spark.read.schema(DECISION_SCHEMA + ", src_batch int").parquet(
             f"{decisions_dir}/batch={ARCHIVE_BATCH}"
         )
         combined = combined.unionByName(old)
@@ -305,7 +297,6 @@ def maybe_compact_decisions(
     current_batch_id: int,
     max_batch_dirs: int = 64,
     keep_last: int = 8,
-    schema: str = DECISION_SCHEMA,
 ) -> int:
     """Retention POLICY for the per-batch decisions sink — the
     decisions-side twin of ``similarity.maybe_compact_index`` (r12
@@ -325,9 +316,7 @@ def maybe_compact_decisions(
     ]
     if len(live) <= max_batch_dirs:
         return 0
-    return compact_decisions(
-        spark, decisions_dir, current_batch_id - keep_last, schema
-    )
+    return compact_decisions(spark, decisions_dir, current_batch_id - keep_last)
 
 
 def batch_committed(spark, index_dir: str, batch_id: int) -> bool:
@@ -364,34 +353,21 @@ def write_index(sig_df: DataFrame, index_dir: str, mode: str = "overwrite") -> N
     )
 
 
-def _key_hash(text_col: str, key_expr=None):
-    """The index key: md5 of the whitespace-normalized text by default,
-    md5 of ``key_expr`` when the stream dedups at a different grain
-    (e.g. canonical URL — a crawl frontier's seen-filter). ONE definition
-    shared by the signature builder and the bloom prefix derivation so
-    the two can never disagree."""
-    if key_expr is not None:
-        return F.md5(key_expr)
+def _key_hash(text_col: str):
+    """The index key: md5 of the whitespace-normalized text. ONE
+    definition shared by the signature builder and the bloom prefix
+    derivation so the two can never disagree."""
     return F.md5(
         F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     )
 
 
 def _batch_signatures(
-    batch: DataFrame, text_col: str, id_col: str, n_hashes: int, k: int,
-    key_expr=None,
+    batch: DataFrame, text_col: str, id_col: str, n_hashes: int, k: int
 ) -> DataFrame:
     hashes = batch.select(
-        F.col(id_col), _key_hash(text_col, key_expr).alias("text_hash")
+        F.col(id_col), _key_hash(text_col).alias("text_hash")
     )
-    if key_expr is not None:
-        # keyed (non-content) grain: near-dup screening is meaningless —
-        # two URLs are the same resource or they aren't — so no MinHash;
-        # null sigs make every near path downstream vacuous by the same
-        # rule as short documents
-        return hashes.withColumn(
-            "sig", F.lit(None).cast("array<bigint>")
-        )
     sigs = minhash_signatures_df(batch, text_col, id_col, n_hashes, k)
     # docs with < k tokens have no shingles -> no signature row; they
     # still get exact screening via text_hash (sig stays null)
@@ -409,16 +385,8 @@ def screen_batch(
     est_threshold: float = 0.8,
     batch_internal_near: bool = False,
     exact_index: DataFrame | None = None,
-    key_expr=None,
 ) -> tuple[DataFrame, DataFrame, "Callable[[], None]"]:
     """Screen one batch against a signature index.
-
-    ``key_expr`` (optional Column) switches the dedup GRAIN: the index
-    key becomes md5(key_expr) instead of md5(normalized text), and the
-    near screens go vacuous (null sigs) because near-duplicate semantics
-    only exist at content grain. The crawl-frontier use: key_expr =
-    canonical_url(url) turns the stream into a URL seen-filter with the
-    same stored index, Bloom pruning, and commit protocol.
 
     ``exact_index`` (optional) substitutes the EXACT screen's index side
     only — the Bloom-pruned prefix-partitioned read in ``ingest_stream``.
@@ -446,9 +414,7 @@ def screen_batch(
     batch-partition-invariant either way; near statuses are invariant
     only under this flag (or when admitted docs are mutually non-near).
     """
-    sig_b = _batch_signatures(
-        batch, text_col, id_col, n_hashes, k, key_expr
-    ).persist()
+    sig_b = _batch_signatures(batch, text_col, id_col, n_hashes, k).persist()
     sig_b.count()  # materialize: one text pass feeds all three screens
 
     # batch-internal exact collapse: min id per content survives
@@ -597,7 +563,6 @@ def ingest_stream(
     auto_compact_max_files: int | None = None,
     decisions_max_dirs: int | None = None,
     decisions_keep_last: int = 8,
-    key_expr=None,
 ):
     """Wire the screen into a foreachBatch stream: each micro-batch reads
     the current index, screens, appends decisions + admitted signatures.
@@ -697,7 +662,7 @@ def ingest_stream(
                     {
                         r["hp"]
                         for r in batch.select(
-                            _key_hash(text_col, key_expr).alias("text_hash")
+                            _key_hash(text_col).alias("text_hash")
                         )
                         .distinct()
                         .withColumn(
@@ -741,7 +706,7 @@ def ingest_stream(
             exact_index = exact_index.join(own, id_col, "left_anti")
         decisions, admitted_sigs, cleanup = screen_batch(
             batch, index, text_col, id_col, n_hashes, bands, k,
-            est_threshold, exact_index=exact_index, key_expr=key_expr,
+            est_threshold, exact_index=exact_index,
         )
         # materialize BOTH outputs, then write decisions BEFORE the index
         # append: appending to index_dir refreshes every cached relation

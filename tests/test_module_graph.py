@@ -104,3 +104,44 @@ def test_every_module_reachable_from_an_entry_point():
         todo.extend(_join(*parts[:i]) for i in range(len(parts)))
     orphans = sorted(set(MODULES) - seen)
     assert not orphans, orphans
+
+
+REPO = ROOT.parent
+CALLER_ROOTS = (ROOT, REPO / "tests", REPO / "tools", REPO / "perfbench")
+CALLER_FILES = (REPO / "bench.py", REPO / "__spark_entry__.py")
+
+
+def _named() -> set[str]:
+    """Every identifier used as a Name, Attribute or import alias in the
+    package and in the code that drives it."""
+    paths = [p for r in CALLER_ROOTS for p in r.rglob("*.py")]
+    paths += [p for p in CALLER_FILES if p.exists()]
+    names = set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.alias):
+                names.add(node.name.split(".")[-1])
+                if node.asname:
+                    names.add(node.asname)
+    return names
+
+
+def test_every_package_function_has_a_caller():
+    """An undecorated top-level function that nothing names is dead code
+    (decorated ones, e.g. registered queries, are reached through their
+    decorator)."""
+    named = _named()
+    dead = []
+    for path in MODULES.values():
+        for st in ast.parse(path.read_text()).body:
+            if (
+                isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not st.decorator_list
+                and st.name not in named
+            ):
+                dead.append(f"{path.relative_to(REPO)}:{st.lineno} {st.name}")
+    assert not dead, "\n".join(dead)

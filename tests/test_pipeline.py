@@ -142,6 +142,43 @@ def test_gold_job_budget(spark, sf_dir, tmp_path):
     assert 0 < n_jobs <= 13, n_jobs
 
 
+def test_gold_identical_across_shuffle_partitions(spark, sf_dir, tmp_path):
+    """Gold output does not depend on partitioning: the medallion built
+    with 1 and with 7 shuffle partitions writes value-identical unified,
+    labeled and segments tables. AQE coalescing is off for both builds,
+    or it would merge the 7 tiny partitions back into one."""
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    key = "spark.sql.shuffle.partitions"
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = {k: spark.conf.get(k) for k in (key, coalesce)}
+    golds = []
+    try:
+        spark.conf.set(coalesce, "false")
+        for n in (1, 7):
+            spark.conf.set(key, str(n))
+            paths = pipeline.run_medallion(spark, src, str(tmp_path / f"p{n}"))
+            golds.append({
+                layer: _sorted_rows(spark, paths[layer], date_col)
+                for layer, date_col in (
+                    ("unified", "date"),
+                    ("labeled", "date"),
+                    ("segments", "date_start"),
+                )
+            })
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    for layer in golds[0]:
+        cols, rows = golds[0][layer]
+        assert rows, layer
+        assert golds[1][layer] == (cols, rows), layer
+
+
+def _sorted_rows(spark, path, date_col):
+    df = spark.read.parquet(path)
+    return df.columns, [tuple(r) for r in df.orderBy(date_col).collect()]
+
+
 def test_bronze_partition_pruning(spark, sf_dir, tmp_path):
     out = str(tmp_path / "lake")
     bronze_path = pipeline.build_bronze(spark, sf_dir, out)

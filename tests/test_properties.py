@@ -898,177 +898,6 @@ def test_transitions_match_pure_python_any_stream(spark, events):
     assert got == exp
 
 
-@given(
-    vals=st.lists(
-        st.floats(min_value=-10.0, max_value=600.0, allow_nan=False),
-        min_size=1,
-        max_size=60,
-    ),
-    split_mod=st.integers(min_value=2, max_value=5),
-)
-@_settings
-def test_qhist_merge_equals_whole_and_bounds_error(spark, vals, split_mod):
-    """Any split of any input: merged per-part sketches == whole-corpus
-    sketch row-for-row, and every quantile estimate lands within one
-    bucket width of numpy's exact order statistic (after clamping values
-    into the grid's domain, which is what the edge buckets encode)."""
-    import numpy as np
-
-    from practicum2_nof1_adhd_bd_spark.operators import sketches
-
-    knobs = dict(n_buckets=64, lo=0.0, hi=512.0)
-    width = (knobs["hi"] - knobs["lo"]) / knobs["n_buckets"]
-    df = spark.createDataFrame(
-        [(i, "g", float(v)) for i, v in enumerate(vals)],
-        "i long, g string, v double",
-    )
-    whole = sketches.qhist_sketch(df, ["g"], "v", **knobs)
-    parts = [
-        sketches.qhist_sketch(
-            df.filter(f"i % {split_mod} = {r}"), ["g"], "v", **knobs
-        )
-        for r in range(split_mod)
-    ]
-    merged = sketches.qhist_merge(*parts)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-    probs = [0.25, 0.5, 0.75]
-    out = {
-        r["p"]: r["q_est"]
-        for r in sketches.qhist_quantiles(
-            merged, ["g"], probs, **knobs
-        ).collect()
-    }
-    clamped = np.clip(np.array(vals), knobs["lo"], knobs["hi"] - 1e-9)
-    for p in probs:
-        exact = float(np.quantile(clamped, p, method="inverted_cdf"))
-        assert abs(out[p] - exact) <= width + 1e-6, (p, out[p], exact)
-
-
-# -- robots.txt differential fuzz ------------------------------------------
-
-def _ref_robots_lines(txt):
-    """Pure-Python reference for the distributed robots parse: typed
-    lines with their agent-run ids (the _robots_runs contract)."""
-    import re
-
-    typed = []
-    for raw in txt.split("\n"):
-        line = re.sub(r"#.*$", "", raw).strip()
-        if not line:
-            continue
-        low = line.lower()
-        kind = None
-        if re.match(r"^user-agent\s*:", low):
-            kind = "agent"
-        elif re.match(r"^disallow\s*:", low):
-            kind = "disallow"
-        elif re.match(r"^allow\s*:", low):
-            kind = "allow"
-        elif re.match(r"^crawl-delay\s*:", low):
-            kind = "delay"
-        if kind is None:
-            continue
-        m = re.search(r":(.*)$", line)
-        val = m.group(1).strip() if m else ""
-        typed.append((kind, val))
-    runs, run_id, prev = [], 0, ""
-    for kind, val in typed:
-        if kind == "agent" and prev != "agent":
-            run_id += 1
-        runs.append((kind, val, run_id))
-        prev = kind
-    return runs
-
-
-def _ref_rules(txt):
-    runs = _ref_robots_lines(txt)
-    agents = {}
-    for kind, val, rid in runs:
-        if kind == "agent":
-            agents.setdefault(rid, set()).add(val.lower())
-    out = set()
-    for kind, val, rid in runs:
-        if kind in ("allow", "disallow") and val != "" and rid >= 1:
-            for a in agents.get(rid, ()):
-                out.add((a, kind == "allow", val, len(val)))
-    return out
-
-
-def _ref_delay(txt, agent, default):
-    runs = _ref_robots_lines(txt)
-    agents = {}
-    for kind, val, rid in runs:
-        if kind == "agent":
-            agents.setdefault(rid, set()).add(val.lower())
-    has_exact = any(agent in s for s in agents.values())
-    want = agent if has_exact else "*"
-    best = None
-    for kind, val, rid in runs:
-        if kind != "delay" or rid < 1:
-            continue
-        try:
-            d = float(val)
-        except ValueError:
-            continue
-        if d < 0:
-            continue
-        if want in agents.get(rid, ()):
-            best = d if best is None else max(best, d)
-    return default if best is None else best
-
-
-_robots_line = st.one_of(
-    st.sampled_from(
-        [
-            "User-agent: *",
-            "User-agent: graftbot",
-            "User-agent: OtherBot",
-            "user-AGENT: graftbot",
-            "Disallow: /private",
-            "Disallow: /a/b",
-            "Disallow:",
-            "Allow: /private/ok",
-            "Allow: /",
-            "Crawl-delay: 3",
-            "Crawl-delay: 0.5",
-            "Crawl-delay: soon",
-            "Crawl-delay: 10",
-            "# a comment",
-            "Disallow: /x # trailing comment",
-            "",
-            "Sitemap: http://e.example/s.xml",
-            "garbage line without colon",
-        ]
-    )
-)
-
-
-@given(lines=st.lists(_robots_line, min_size=0, max_size=14))
-@_settings
-def test_robots_parse_and_delay_match_pure_python_reference(spark, lines):
-    """Differential fuzz: for ANY robots.txt assembled from agent lines,
-    rules, delays, comments, blanks, and junk, the distributed parse
-    (group-run recovery included) and the REP crawl-delay selection
-    match a sequential pure-Python reference."""
-    from practicum2_nof1_adhd_bd_spark.operators import urls
-
-    txt = "\n".join(lines)
-    robots = spark.createDataFrame(
-        [("h.example", txt)], "host string, robots_txt string"
-    )
-    got_rules = {
-        (r["agent"], r["allow"], r["prefix"], r["prefix_len"])
-        for r in urls.parse_robots(robots).collect()
-    }
-    assert got_rules == _ref_rules(txt)
-    got_delay = urls.crawl_delays(robots, "graftbot", 1.5).collect()[0][
-        "crawl_delay"
-    ]
-    assert got_delay == _ref_delay(txt, "graftbot", 1.5)
-
-
 def _ref_log_bucket(v: int) -> tuple[int, int]:
     """Pure-Python reference for the log-grid bucket: (lo, width)."""
     if v < 0:

@@ -1,4 +1,5 @@
-"""KMV bottom-k distinct sketch: merge law, exact-small path, accuracy."""
+"""KMV bottom-k distinct sketch and the log-grid quantile histogram:
+merge laws, exact-small paths, accuracy, PSI."""
 
 from pyspark.sql import functions as F
 
@@ -80,90 +81,10 @@ def test_kmv_null_values_ignored_and_partition_invariant(spark):
     assert all(isinstance(h, int) for h in kmin)
 
 
-def test_qhist_quantiles_rejects_out_of_range_probs(spark):
-    """p=0 satisfies no bucket and p>1 exceeds every rank — both would
-    silently DROP their (group, p) output row; entry validation turns
-    that into an error (r13 ADVICE)."""
-    import pytest
-
-    sk = sketches.qhist_sketch(
-        spark.range(10).select(
-            F.lit("g").alias("g"), F.col("id").cast("double").alias("v")
-        ),
-        ["g"], "v", n_buckets=16, lo=0.0, hi=16.0,
-    )
-    for bad in (0.0, -0.1, 1.5):
-        with pytest.raises(ValueError, match="probs"):
-            sketches.qhist_quantiles(
-                sk, ["g"], [0.5, bad], n_buckets=16, lo=0.0, hi=16.0
-            )
-
-
-def test_qhist_merge_invariance_bit_exact(spark):
-    """The fixed-grid sketch's merge law is EXACT: sketching two halves
-    and merging yields the identical (group, bucket, n) rows as
-    sketching the whole — under any split and any partitioning."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(3000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        ((F.col("id") * 37) % 450).cast("double").alias("v"),
-    )
-    knobs = dict(n_buckets=128, lo=0.0, hi=512.0)
-    whole = sketches.qhist_sketch(df, ["g"], "v", **knobs)
-    a = sketches.qhist_sketch(
-        df.filter(F.col("id") % 2 == 0).repartition(7), ["g"], "v", **knobs
-    )
-    b = sketches.qhist_sketch(
-        df.filter(F.col("id") % 2 == 1).repartition(3), ["g"], "v", **knobs
-    )
-    merged = sketches.qhist_merge(a, b)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
-def test_qhist_quantiles_within_one_bucket_width(spark):
-    """Estimates land within one bucket width of the exact order
-    statistic, and the rank-location rule finds exactly one bucket per
-    (group, p)."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(5000).select(
-        F.lit("g").alias("g"),
-        ((F.col("id") * 7919) % 997).cast("double").alias("v"),
-    )
-    knobs = dict(n_buckets=256, lo=0.0, hi=1024.0)  # width 4
-    sk = sketches.qhist_sketch(df, ["g"], "v", **knobs)
-    probs = [0.1, 0.5, 0.9]
-    out = {
-        r["p"]: r
-        for r in sketches.qhist_quantiles(sk, ["g"], probs, **knobs).collect()
-    }
-    assert len(out) == 3
-    exact = df.agg(
-        *[F.expr(f"percentile(v, {p})").alias(str(p)) for p in probs]
-    ).collect()[0]
-    for p in probs:
-        assert abs(out[p]["q_est"] - exact[str(p)]) <= 4.0, p
-        assert out[p]["total_n"] == 5000
-
-
-def test_qhist_clamps_out_of_domain_values(spark):
-    """Values outside [lo, hi) land in the edge buckets — an
-    out-of-domain outlier shifts tail mass, never crashes or drops."""
-    df = spark.createDataFrame(
-        [("g", -50.0), ("g", 5.0), ("g", 999999.0)], "g string, v double"
-    )
-    sk = sketches.qhist_sketch(df, ["g"], "v", n_buckets=16, lo=0.0, hi=16.0)
-    rows = {r["bucket"]: r["n"] for r in sk.collect()}
-    assert rows == {0: 1, 5: 1, 15: 1}
-
-
 def test_qhist_log_merge_invariance_bit_exact(spark):
-    """The log grid keeps the fixed grid's EXACT merge law: sketching
-    two halves and merging yields identical (group, bucket_lo, n) rows
-    as sketching the whole, under any split and partitioning."""
+    """The log grid's merge law is EXACT: sketching two halves and
+    merging yields identical (group, bucket_lo, n) rows as sketching
+    the whole, under any split and partitioning."""
     df = spark.range(4000).select(
         (F.col("id") % 2).cast("string").alias("g"),
         ((F.col("id") * 7919) % 100000).alias("v"),
@@ -181,34 +102,39 @@ def test_qhist_log_merge_invariance_bit_exact(spark):
     )
 
 
-def test_qhist_log_unbounded_domain_beats_fixed_grid_clamp(spark):
-    """The clamp-loss property (r13 verdict #3): on a heavy-tailed
-    domain spanning 1..10^8, the FIXED grid sized for [0, 1024) clamps
-    all tail mass into its top bucket — its p95 estimate cannot exceed
-    the grid ceiling and misses the true order statistic by orders of
-    magnitude — while the auto-ranged LOG grid, with no range knob at
-    all, stays within its ~10% relative-width guarantee."""
+def test_qhist_log_heavy_tail_p95_within_relative_width(spark):
+    """On a heavy-tailed domain spanning nine decades (1..10^8) the
+    auto-ranged log grid, with no range knob at all, locates p95 within
+    its ~10% relative-width guarantee — a fixed [lo, hi) grid would
+    clamp all of that tail into its top bucket."""
     # ids 0..999 -> v = 10^(id % 9): nine decades, no a-priori range
     df = spark.range(1000).select(
         F.lit("g").alias("g"),
         F.pow(F.lit(10.0), (F.col("id") % 9).cast("double")).cast("long").alias("v"),
     )
     exact_p95 = df.selectExpr("percentile(v, 0.95) AS q").collect()[0]["q"]
-    assert exact_p95 >= 10**8  # the tail the fixed grid cannot see
-
-    fixed = sketches.qhist_sketch(
-        df, ["g"], "v", n_buckets=256, lo=0.0, hi=1024.0
-    )
-    fixed_p95 = sketches.qhist_quantiles(
-        fixed, ["g"], [0.95], n_buckets=256, lo=0.0, hi=1024.0
-    ).collect()[0]["q_est"]
-    assert fixed_p95 <= 1024.0  # clamped: off by ~5 orders of magnitude
+    assert exact_p95 >= 10**8  # the tail sits in the top decade
 
     logsk = sketches.qhist_log_sketch(df, ["g"], "v")
     log_p95 = sketches.qhist_log_quantiles(logsk, ["g"], [0.95]).collect()[
         0
     ]["q_est"]
     assert abs(log_p95 - exact_p95) / exact_p95 <= 0.11, log_p95
+
+
+def test_qhist_log_quantiles_rejects_out_of_range_probs(spark):
+    """p=0 satisfies no bucket and p>1 exceeds every rank — both would
+    silently DROP their (group, p) output row; entry validation turns
+    that into an error."""
+    import pytest
+
+    sk = sketches.qhist_log_sketch(
+        spark.range(10).select(F.lit("g").alias("g"), F.col("id").alias("v")),
+        ["g"], "v",
+    )
+    for bad in (0.0, -0.1, 1.5):
+        with pytest.raises(ValueError, match="probs"):
+            sketches.qhist_log_quantiles(sk, ["g"], [0.5, bad])
 
 
 def test_qhist_log_exact_below_100_and_underflow_bucket(spark):
@@ -250,55 +176,6 @@ def test_qhist_psi_identity_disjoint_and_smoothing(spark):
     # union domain: 50 exact sub-100 buckets + the single 1000-1099
     # log band holding all of side b, fully disjoint
     assert dis["n_buckets"] == 51
-
-
-def test_cms_one_sided_error_and_merge_invariance(spark):
-    """Count-Min contract: estimates NEVER undercount (cms_est >=
-    exact, for every queried value), the merge law is exact cell
-    addition under any split/partitioning, and an unseen value's
-    estimate is bounded by the sketch's collision mass (width >> n
-    here, so small)."""
-    df = spark.range(2000).select(
-        F.concat(F.lit("t"), (F.col("id") % 73).cast("string")).alias("v")
-    )
-    knobs = dict(depth=4, width=256)
-    whole = sketches.cms_sketch(df, "v", **knobs)
-    a = sketches.cms_sketch(
-        df.filter(F.col("id") % 2 == 0).repartition(5), "v", **knobs
-    )
-    b = sketches.cms_sketch(
-        df.filter(F.col("id") % 2 == 1).repartition(2), "v", **knobs
-    )
-    merged = sketches.cms_merge(a, b)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-    exact = df.groupBy("v").agg(F.count(F.lit(1)).alias("n_exact"))
-    est = sketches.cms_estimate(merged, exact.select("v"), "v", **knobs)
-    rows = est.join(exact, "v").collect()
-    assert len(rows) == 73
-    assert all(r["cms_est"] >= r["n_exact"] for r in rows)
-    # total overcount across all 73 values stays within the CMS bound's
-    # ballpark (2N/width per value on average-collision terms)
-    over = sum(r["cms_est"] - r["n_exact"] for r in rows)
-    assert over <= 73 * 2 * 2000 / 256
-
-
-def test_cms_weighted_build_matches_row_grain(spark):
-    """r16 weight_col contract: building a CMS from a pre-aggregated
-    (value, count) frame is CELL-EXACT against the row-grain build —
-    counters are pure addition, so summing weights == counting rows."""
-    df = spark.range(3000).select(
-        F.concat(F.lit("w"), (F.col("id") % 57).cast("string")).alias("v")
-    )
-    knobs = dict(depth=4, width=128)
-    rowgrain = sketches.cms_sketch(df, "v", **knobs)
-    pre = df.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    weighted = sketches.cms_sketch(pre, "v", weight_col="cnt", **knobs)
-    assert sorted(map(tuple, weighted.collect())) == sorted(
-        map(tuple, rowgrain.collect())
-    )
-    assert dict(weighted.dtypes)["n"] == dict(rowgrain.dtypes)["n"]
 
 
 def test_kmv_distinct_support_invariance(spark):

@@ -1211,50 +1211,6 @@ def test_maybe_compact_index_sampling_bounds_listing(spark, tmp_path):
     assert fired_at is not None
 
 
-def test_screen_batch_keyed_grain_url_seen_filter(spark):
-    """key_expr switches the dedup grain: the index key is
-    md5(canonical_url(url)), near screens are vacuous (null sigs), and
-    two spellings of one resource collapse — in-batch (min id wins) and
-    against the stored index — while distinct resources admit even when
-    their TEXT would be near-identical."""
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.operators import urls
-    from practicum2_nof1_adhd_bd_spark.streaming import corpus_ingest as ci
-
-    key = urls.canonical_url(F.col("url"))
-    index = ci._batch_signatures(
-        spark.createDataFrame(
-            [(1, "http://a.com/x?id=1")], "doc_id bigint, url string"
-        ),
-        "url", "doc_id", 8, 3, key_expr=key,
-    )
-    assert index.filter(F.col("sig").isNotNull()).count() == 0
-    batch = spark.createDataFrame(
-        [
-            (10, "HTTP://A.com:80/x/?id=1&utm_source=s"),  # stored, respelled
-            (11, "http://b.com/p?q=1"),                     # new resource
-            (12, "http://www.b.com/p?q=1#top"),             # batch twin of 11
-            (13, "http://b.com/p?q=2"),  # near-identical TEXT, distinct URL
-        ],
-        "doc_id bigint, url string",
-    )
-    dec, sigs, cleanup = ci.screen_batch(batch, index, "url", key_expr=key)
-    try:
-        d = {r["doc_id"]: r for r in dec.collect()}
-        assert d[10]["status"] == "exact_dup" and d[10]["matched_id"] == 1
-        assert d[11]["status"] == "admitted"
-        assert d[12]["status"] == "exact_dup" and d[12]["matched_id"] == 11
-        assert d[13]["status"] == "admitted"
-        # admitted signature rows carry the KEY hash and null sigs, so the
-        # appended index stays at URL grain
-        s = sigs.collect()
-        assert sorted(r["doc_id"] for r in s) == [11, 13]
-        assert all(r["sig"] is None for r in s)
-    finally:
-        cleanup()
-
-
 def test_attribution_join_stream_horizon_edges(spark, tmp_path):
     """Stream-stream interval join semantics: a response exactly AT the
     horizon is included, one second past it is excluded, same-instant
@@ -1533,345 +1489,3 @@ def test_ingest_stream_decisions_retention_end_to_end(spark, tmp_path):
     dirs = ci._decision_batch_dirs(spark, r_dec)
     assert -1 in dirs
     assert len([d for d in dirs if d >= 0]) < len(batches)
-
-
-def test_qsketch_stream_accumulates_across_batches_and_runs(spark, tmp_path):
-    """Incremental percentile maintenance: micro-batches append only
-    their own bucket counts; the merged read equals the one-pass sketch
-    of everything streamed so far, and a SECOND stream run over newly
-    landed files (same checkpoint) continues accumulating without
-    re-reading history."""
-    import json
-
-    from practicum2_nof1_adhd_bd_spark.operators import sketches
-    from practicum2_nof1_adhd_bd_spark.streaming import qsketch_ingest as qi
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sketch_dir = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    knobs = dict(n_buckets=32, lo=0.0, hi=64.0)
-
-    def land(name, rows):
-        p = src / f".{name}.tmp"
-        with open(p, "w") as f:
-            for g, v in rows:
-                f.write(json.dumps({"g": g, "v": v}) + "\n")
-        p.rename(src / name)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("g string, v double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        q = qi.qsketch_stream(
-            stream, sketch_dir, ckpt, ["g"], "v", **knobs
-        )
-        assert q.awaitTermination(120)
-
-    b1 = [("a", float(v)) for v in (1, 5, 5, 9, 33)]
-    b2 = [("a", float(v)) for v in (2, 40, 40)] + [("b", 7.0)]
-    land("f1.json", b1)
-    land("f2.json", b2)
-    run_once()
-
-    all_rows = b1 + b2
-    whole = sketches.qhist_sketch(
-        spark.createDataFrame(all_rows, "g string, v double"),
-        ["g"], "v", **knobs,
-    )
-    merged = qi.read_merged_sketch(spark, sketch_dir, ["g"])
-    assert sorted(map(tuple, merged.select("g", "bucket", "n").collect())) \
-        == sorted(map(tuple, whole.collect()))
-
-    # second RUN over a newly landed file: the checkpoint consumes only
-    # the new file, and the artifact keeps accumulating
-    b3 = [("b", float(v)) for v in (7, 7, 50)]
-    land("f3.json", b3)
-    run_once()
-    whole2 = sketches.qhist_sketch(
-        spark.createDataFrame(all_rows + b3, "g string, v double"),
-        ["g"], "v", **knobs,
-    )
-    merged2 = qi.read_merged_sketch(spark, sketch_dir, ["g"])
-    assert sorted(map(tuple, merged2.select("g", "bucket", "n").collect())) \
-        == sorted(map(tuple, whole2.collect()))
-
-
-def test_qsketch_stream_retention_preserves_merged_sketch(spark, tmp_path):
-    """compact_max_dirs wiring: batch dirs roll into the batch=-1
-    archive mid-stream and the merged sketch is unchanged — counts are
-    summable wherever they live."""
-    import json
-
-    from practicum2_nof1_adhd_bd_spark.operators import sketches
-    from practicum2_nof1_adhd_bd_spark.streaming import corpus_ingest as ci
-    from practicum2_nof1_adhd_bd_spark.streaming import qsketch_ingest as qi
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sketch_dir = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    knobs = dict(n_buckets=16, lo=0.0, hi=16.0)
-    rows = []
-    for b in range(5):
-        batch = [("g", float((b * 3 + j) % 16)) for j in range(4)]
-        rows += batch
-        p = src / f".f{b}.json.tmp"
-        with open(p, "w") as f:
-            for g, v in batch:
-                f.write(json.dumps({"g": g, "v": v}) + "\n")
-        p.rename(src / f"f{b}.json")
-    stream = (
-        spark.readStream.schema("g string, v double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = qi.qsketch_stream(
-        stream, sketch_dir, ckpt, ["g"], "v",
-        compact_max_dirs=1, keep_last=1, **knobs,
-    )
-    assert q.awaitTermination(120)
-    dirs = ci._decision_batch_dirs(spark, sketch_dir)
-    assert -1 in dirs and len([d for d in dirs if d >= 0]) < 5
-    whole = sketches.qhist_sketch(
-        spark.createDataFrame(rows, "g string, v double"), ["g"], "v", **knobs
-    )
-    merged = qi.read_merged_sketch(spark, sketch_dir, ["g"])
-    assert sorted(map(tuple, merged.select("g", "bucket", "n").collect())) \
-        == sorted(map(tuple, whole.collect()))
-
-
-def _frontier_delays():
-    # hand-pinned dim: slow.com throttled, others default at join time
-    return [("slow.com", 4.0), ("fast.com", 1.0)]
-
-
-def test_frontier_stream_requeues_overflow_across_waves(spark, tmp_path):
-    """The streaming frontier's backlog is real: a capacity-limited host
-    (delay 4, horizon 8 -> 2 slots/wave) emits its wave-1 top-2 and
-    re-queues the rest; wave 2 schedules the re-queued candidates AHEAD
-    of lower-priority new arrivals; the final backlog snapshot holds
-    exactly what was never scheduled."""
-    from practicum2_nof1_adhd_bd_spark.streaming import frontier_ingest as fi
-
-    slots = str(tmp_path / "slots")
-    backlog = str(tmp_path / "backlog")
-    w1 = spark.createDataFrame(
-        [(f"http://slow.com/a{i}", 10 - i) for i in range(5)],
-        "url string, priority int",
-    )
-    fi.process_wave(
-        spark, w1, 0, _frontier_delays(), slots, backlog, horizon_s=8.0
-    )
-    got0 = {r["url"]: r["slot"] for r in
-            spark.read.parquet(f"{slots}/batch=0").collect()}
-    # top-2 by priority: a0 (10) slot 0, a1 (9) slot 1
-    assert got0 == {"http://slow.com/a0": 0, "http://slow.com/a1": 1}
-    # wave 2: new low-priority candidates; re-queued a2 (8) and a3 (7)
-    # outrank them
-    w2 = spark.createDataFrame(
-        [("http://slow.com/b0", 1), ("http://fast.com/c0", 1)],
-        "url string, priority int",
-    )
-    fi.process_wave(
-        spark, w2, 1, _frontier_delays(), slots, backlog, horizon_s=8.0
-    )
-    got1 = {r["url"]: r["slot"] for r in
-            spark.read.parquet(f"{slots}/batch=1").collect()}
-    assert got1 == {
-        "http://slow.com/a2": 0, "http://slow.com/a3": 1,
-        "http://fast.com/c0": 0,
-    }
-    left = {r["url"] for r in
-            fi.read_backlog(spark, backlog, before_batch=2).collect()}
-    assert left == {"http://slow.com/a4", "http://slow.com/b0"}
-
-
-def test_frontier_wave_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-running wave N with the same
-    batch_id (crash replay) must land byte-identical slots AND backlog —
-    the replay reads state={N-1}, never its own crashed state={N}."""
-    from practicum2_nof1_adhd_bd_spark.streaming import frontier_ingest as fi
-
-    slots = str(tmp_path / "slots")
-    backlog = str(tmp_path / "backlog")
-    w1 = spark.createDataFrame(
-        [(f"http://slow.com/a{i}", i) for i in range(6)],
-        "url string, priority int",
-    )
-    fi.process_wave(
-        spark, w1, 0, _frontier_delays(), slots, backlog, horizon_s=8.0
-    )
-    w2 = spark.createDataFrame(
-        [("http://slow.com/z", 99)], "url string, priority int"
-    )
-    fi.process_wave(
-        spark, w2, 1, _frontier_delays(), slots, backlog, horizon_s=8.0
-    )
-    first_slots = sorted(
-        map(tuple, spark.read.parquet(f"{slots}/batch=1").collect())
-    )
-    first_backlog = sorted(
-        map(tuple, fi.read_backlog(spark, backlog, 2).collect())
-    )
-    # crash replay of wave 1 (state=1 exists from the "crashed" attempt)
-    fi.process_wave(
-        spark, w2, 1, _frontier_delays(), slots, backlog, horizon_s=8.0
-    )
-    assert sorted(
-        map(tuple, spark.read.parquet(f"{slots}/batch=1").collect())
-    ) == first_slots
-    assert sorted(
-        map(tuple, fi.read_backlog(spark, backlog, 2).collect())
-    ) == first_backlog
-
-
-def test_frontier_stream_retention_and_state_pruning(spark, tmp_path):
-    """End-to-end: slots-dir retention reuses the decisions archive
-    (batch=-1 + src_batch provenance) and read_all_slots surfaces the
-    ORIGINAL wave ids; unreachable backlog snapshots are pruned as waves
-    advance (only the last keep_states survive)."""
-    from practicum2_nof1_adhd_bd_spark.streaming import corpus_ingest as ci
-    from practicum2_nof1_adhd_bd_spark.streaming import frontier_ingest as fi
-
-    slots = str(tmp_path / "slots")
-    backlog = str(tmp_path / "backlog")
-    all_expected = []
-    for b in range(5):
-        wave = spark.createDataFrame(
-            [(f"http://fast.com/w{b}_{j}", 5) for j in range(2)],
-            "url string, priority int",
-        )
-        fi.process_wave(
-            spark, wave, b, _frontier_delays(), slots, backlog,
-            horizon_s=8.0, keep_states=2,
-            compact_max_dirs=1, keep_last=1,
-        )
-        all_expected += [(b, f"http://fast.com/w{b}_{j}") for j in range(2)]
-    dirs = ci._decision_batch_dirs(spark, slots)
-    assert -1 in dirs and len([d for d in dirs if d >= 0]) < 5
-    got = sorted(
-        (r["batch"], r["url"])
-        for r in fi.read_all_slots(spark, slots).collect()
-    )
-    assert got == sorted(all_expected)
-    # state pruning: the current snapshot plus keep_states=2 prior ones
-    assert fi._state_ids(spark, backlog) == [2, 3, 4]
-
-
-def test_kmv_stream_accumulates_and_respects_retention(spark, tmp_path):
-    """Streaming KMV: per-batch bottom-k hashes land under batch=N; the
-    merged read equals the one-pass sketch of everything streamed (the
-    bottom-k merge law), stays equal after a second run over newly
-    landed files, AND after the retention policy folds batch dirs into
-    the archive (dedup makes archived rows harmless)."""
-    import json
-
-    from practicum2_nof1_adhd_bd_spark.operators import sketches
-    from practicum2_nof1_adhd_bd_spark.streaming import corpus_ingest as ci
-    from practicum2_nof1_adhd_bd_spark.streaming import qsketch_ingest as qi
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sketch_dir = str(tmp_path / "kmv")
-    ckpt = str(tmp_path / "ckpt")
-
-    def land(name, rows):
-        p = src / f".{name}.tmp"
-        with open(p, "w") as f:
-            for g, v in rows:
-                f.write(json.dumps({"g": g, "v": v}) + "\n")
-        p.rename(src / name)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("g string, v long")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        q = qi.kmv_stream(
-            stream, sketch_dir, ckpt, ["g"], "v", k=8,
-            compact_max_dirs=1, keep_last=1,
-        )
-        assert q.awaitTermination(120)
-
-    b1 = [("a", v) for v in (1, 5, 5, 9, 33, 2, 7, 8, 11, 13)]
-    b2 = [("a", v) for v in (2, 40, 41, 42, 43, 44)] + [("b", 7)]
-    land("f1.json", b1)
-    land("f2.json", b2)
-    run_once()
-    whole = sketches.kmv_sketch(
-        spark.createDataFrame(b1 + b2, "g string, v long"), ["g"], "v", k=8
-    )
-    merged = qi.read_merged_kmv(spark, sketch_dir, ["g"], k=8)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-    # second run over a new file keeps accumulating off the checkpoint
-    b3 = [("b", v) for v in (7, 50, 51)]
-    land("f3.json", b3)
-    run_once()
-    whole2 = sketches.kmv_sketch(
-        spark.createDataFrame(b1 + b2 + b3, "g string, v long"),
-        ["g"], "v", k=8,
-    )
-    merged2 = qi.read_merged_kmv(spark, sketch_dir, ["g"], k=8)
-    assert sorted(map(tuple, merged2.collect())) == sorted(
-        map(tuple, whole2.collect())
-    )
-    # retention actually folded dirs (compact_max_dirs=1) and the merged
-    # sketch above was read straight through the archive
-    dirs = ci._decision_batch_dirs(spark, sketch_dir)
-    assert -1 in dirs
-
-
-def test_frontier_state_depth_flat_at_110_waves(spark, tmp_path):
-    """r14 verdict #6: drive 110 real waves through process_wave with a
-    persistently-throttled host so the backlog carries work across every
-    wave. State-dir count must stay flat at keep_states+1 the whole way
-    (never one dir per wave), the slots sink must stay compacted, and
-    the wave-grain accounting must close exactly: emitted + final
-    backlog == everything ever enqueued."""
-    from practicum2_nof1_adhd_bd_spark.streaming import corpus_ingest as ci
-    from practicum2_nof1_adhd_bd_spark.streaming import frontier_ingest as fi
-
-    slots = str(tmp_path / "slots")
-    backlog = str(tmp_path / "backlog")
-    n_waves, per_wave = 110, 3
-    # slow.com at delay 4.0 under an 8s horizon -> capacity 2 slots/wave,
-    # so each 3-candidate wave leaves one URL for the next wave: a real,
-    # growing backlog riding the state snapshots across all 110 waves
-    max_state_dirs = 0
-    for b in range(n_waves):
-        wave = spark.createDataFrame(
-            [(f"http://slow.com/w{b}_{j}", 5) for j in range(per_wave)],
-            "url string, priority int",
-        )
-        fi.process_wave(
-            spark, wave, b, _frontier_delays(), slots, backlog,
-            horizon_s=8.0, keep_states=2,
-            compact_max_dirs=4, keep_last=2,
-        )
-        max_state_dirs = max(max_state_dirs, len(fi._state_ids(spark, backlog)))
-    assert max_state_dirs <= 3, "state dirs must stay flat at keep_states+1"
-    assert fi._state_ids(spark, backlog) == [107, 108, 109]
-    live_dirs = [
-        d for d in ci._decision_batch_dirs(spark, slots) if d >= 0
-    ]
-    assert len(live_dirs) <= 4 + 2, "slots sink must stay compacted"
-    emitted = fi.read_all_slots(spark, slots)
-    n_emitted = emitted.count()
-    final_backlog = fi.read_backlog(spark, backlog, n_waves).count()
-    assert n_emitted == 2 * n_waves, "2 slots per wave (capacity-bound)"
-    assert n_emitted + final_backlog == n_waves * per_wave
-    # provenance intact through compaction at depth: every wave id 0..109
-    # appears exactly twice in the folded archive + live dirs
-    per_batch = {
-        r["batch"]: r["n"]
-        for r in emitted.groupBy("batch").count().withColumnRenamed(
-            "count", "n"
-        ).collect()
-    }
-    assert per_batch == {b: 2 for b in range(n_waves)}

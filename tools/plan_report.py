@@ -625,21 +625,6 @@ NOTES = {
         "rides that join as a residual; both priority counts come from "
         "ONE join pass (no second orders scan, no pivot)."
     ),
-    "url_canonical_dedup": (
-        "Canonicalization is one codegen'd projection riding the scan "
-        "(zero shuffles, text never leaves the executor); the verdict "
-        "is a hash-groupBy on the canonical key — map-side partial "
-        "combine absorbs hot-URL skew — joined back once. No window "
-        "over the canonical key, so no whole-group buffering."
-    ),
-    "robots_screen_decisions": (
-        "The parsed rules are a per-host dim and BROADCAST; the "
-        "path-prefix match is a broadcast theta-join against the crawl "
-        "side, which never shuffles — the only aggregation is the "
-        "verdict groupBy restoring the URL grain. Robots files are "
-        "bounded, so the parse windows (partitioned by host) hold "
-        "hundreds of lines of state, never corpus-scale."
-    ),
     "setsim_prefix_join": (
         "The global-rarity rank dictionary is vocab-sized and BROADCAST "
         "onto the corpus-grain token table; only the (1-t) rarest prefix "
@@ -660,16 +645,6 @@ NOTES = {
         "instead of re-scanning parquet. bottomk(bottomk(A) ∪ "
         "bottomk(B)) = bottomk(A ∪ B) makes the merged estimate "
         "partitioning-invariant — the property the oracle hash-attests."
-    ),
-    "crawl_frontier_slots": (
-        "The per-host delay dim BROADCASTS onto the candidates; the "
-        "salted pre-rank (r14) ranks within (host, crc32 % 32) "
-        "sub-partitions and keeps sub-rank <= ceil(horizon/delay), so "
-        "the final per-host window sorts at most 32 x cap rows — a "
-        "mega-host's backlog sort spreads over 32 tasks and never runs "
-        "whole in one. Two bounded exchanges replace one unbounded sort; "
-        "emitted slots stay hosts x (horizon/delay) regardless of "
-        "backlog depth."
     ),
     "doc_size_qsketch_log": (
         "Two snapshot scans collapse to (source, bucket_lo) counts "

@@ -201,8 +201,6 @@ QUERIES = [
     "forecast_revenue_change",
     "promo_revenue_share",
     "shipmode_priority_counts",
-    # url_canonical_dedup excluded: constant-size fixture (like
-    # iphone_backup_scan) — covered by the dedicated --url-rows probe
     # round-12 session-5 additions. Excluded for cause:
     # simhash_near_dups + decontaminate_containment (document
     # replication makes every replica an exact dup / a 1.0-containment
@@ -676,75 +674,6 @@ def probe_skew(spark, n_rows: int, n_salts: int = 8) -> dict:
     return out
 
 
-def probe_urls(spark, n_rows: int, factor: int = 10) -> dict:
-    """URL-canonicalization throughput + dedup scaling. Two timings at
-    n and factor*n synthesized messy URLs (the registry fixture formula,
-    so every normalization branch — case, ports, www, fragments,
-    tracking filter, param sort, slash collapse — executes on every
-    row): (a) canonicalize-only, a pure projection aggregated to one
-    row — this is the per-URL JVM cost, expected linear and
-    shuffle-free; (b) full url_dedup_decisions — adds the verdict
-    groupBy + join-back, the two-shuffle budget that must also stay
-    linear because the canonical key's hot-group mass is absorbed by
-    map-side partial aggregation. Each timing min-of-2 via noop sink."""
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.operators import urls as u
-
-    def messy(n: int):
-        i = F.col("id")
-        g = F.expr("id DIV 2")
-        scheme = F.when(g % 5 == 0, F.lit("https")).otherwise(F.lit("http"))
-        host_n = (g % 7).cast("string")
-        pathp = F.concat(F.lit("/path/"), g.cast("string"))
-        q_can = F.concat(F.lit("id="), g.cast("string"))
-        even = F.concat(
-            F.upper(scheme), F.lit("://Site"), host_n, F.lit(".Example:80"),
-            pathp, F.lit("?"), q_can,
-        )
-        odd = F.concat(
-            scheme, F.lit("://www.site"), host_n, F.lit(".example"), pathp,
-            F.lit("/?utm_source=news&"), q_can, F.lit("&fbclid=abc#top"),
-        )
-        return spark.range(n).select(
-            i.alias("doc_id"),
-            F.when(i % 2 == 0, even).otherwise(odd).alias("url"),
-        ).localCheckpoint(eager=True)
-
-    def timed(df) -> float:
-        # UNTIMED warmup first: the regex-heavy projections keep JIT-
-        # warming for several million invocations (measured: 4.7 -> 2.7 s
-        # across four repeats at 2M rows), so a cold 1x number reads as
-        # fake sub-linearity against the already-warm 10x run
-        df.write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    out = {"url_rows": n_rows, "url_factor": factor}
-    for tag, n in (("1x", n_rows), (f"{factor}x", n_rows * factor)):
-        base = messy(n)
-        canon = base.select(u.canonical_url(F.col("url")).alias("c")).agg(
-            F.count("c").alias("n"), F.min(F.length("c")).alias("m")
-        )
-        out[f"canon_only_{tag}_sec"] = timed(canon)
-        out[f"dedup_{tag}_sec"] = timed(u.url_dedup_decisions(base, "url", "doc_id"))
-        base.unpersist()
-    big = n_rows * factor
-    out["canon_urls_per_sec"] = int(big / out[f"canon_only_{factor}x_sec"])
-    out["dedup_urls_per_sec"] = int(big / out[f"dedup_{factor}x_sec"])
-    out["canon_ratio_10x"] = round(
-        out[f"canon_only_{factor}x_sec"] / max(out["canon_only_1x_sec"], 1e-9) / factor, 2
-    )
-    out["dedup_ratio_10x"] = round(
-        out[f"dedup_{factor}x_sec"] / max(out["dedup_1x_sec"], 1e-9) / factor, 2
-    )
-    return out
-
-
 SF1_SUITE = [
     # the 10 most expensive headline queries per BENCH_FULL/r14 (the
     # judge's "do the per-query 10x ratios compose at suite grain" ask)
@@ -830,8 +759,7 @@ FIXTURE_CONSTANT = {
     # 10x run re-lands the same-sized fixture under the new fingerprint,
     # so ratio ~1 is the EXPECTED result, not evidence of scaling
     "media_decode_features", "media_real_decode", "media_frame_decode",
-    "cda_probe", "url_canonical_dedup", "robots_screen_decisions",
-    "crawl_frontier_slots", "encrypted_zip_scan", "scd2_merge_parity",
+    "cda_probe", "encrypted_zip_scan", "scd2_merge_parity",
     "pmi_collocations", "boilerplate_strip_report",
     "bloom_screen_decisions",
 }
@@ -959,13 +887,6 @@ def main() -> None:
         "batch, full recompute tracks the corpus",
     )
     ap.add_argument(
-        "--url-rows",
-        type=int,
-        default=0,
-        help="run ONLY the URL-canonicalization throughput probe at n "
-        "and --factor x n synthesized messy URLs",
-    )
-    ap.add_argument(
         "--sf1-full",
         action="store_true",
         help="run the FULL-headline sf1-equivalent probe (every "
@@ -1013,10 +934,6 @@ def main() -> None:
                 probe_quantile(spark, args.quantile_n, args.quantile_accuracy)
             )
         )
-        return
-
-    if args.url_rows:
-        print(json.dumps(probe_urls(spark, args.url_rows, args.factor)))
         return
 
     if args.cluster_merge_batch:
