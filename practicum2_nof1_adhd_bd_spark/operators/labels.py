@@ -18,19 +18,22 @@ from ..sources.readers import fan_out
 def segment_zscore(
     df: DataFrame,
     value_cols: list[str],
-    segment_col: str = "segment_id",
+    segment_col: str | None = "segment_id",
     round_dp: int = 6,
     prefix: str = "z_",
 ) -> DataFrame:
     """A7 — per-segment z-score; std==0 or all-null => 0.0
-    (ref build_pbsi.py:84-111)."""
-    w = Window.partitionBy(segment_col)
-    out = df
-    for c in value_cols:
+    (ref build_pbsi.py:84-111). ``segment_col=None`` treats the whole
+    frame as one segment: an unpartitioned window, which runs in one
+    task, so pass it only daily-grain frames."""
+    w = Window.partitionBy(*([segment_col] if segment_col else []))
+
+    def z(c: str):
         mu, sd = F.avg(c).over(w), F.stddev_samp(c).over(w)
         z = F.when(sd > 0, (F.col(c) - mu) / sd).otherwise(F.lit(0.0))
-        out = out.withColumn(f"{prefix}{c}", F.round(z, round_dp))
-    return out
+        return F.round(z, round_dp)
+
+    return df.withColumns({f"{prefix}{c}": z(c) for c in value_cols})
 
 
 def weighted_composite(
@@ -50,24 +53,6 @@ def weighted_composite(
         term = F.coalesce(F.col(c), F.lit(0.0)) * F.lit(float(wgt))
         expr = term if expr is None else expr + term
     return df.withColumn(out_col, F.round(clip(expr, clip_lo, clip_hi), round_dp))
-
-
-def exact_quantile_thresholds(
-    df: DataFrame, value_col: str, probs: tuple[float, float] = (0.25, 0.75)
-) -> DataFrame:
-    """A8 first pass — EXACT interpolated percentiles as a 1-row frame
-    (ref build_pbsi.py:233-239 uses pandas quantile = linear interpolation;
-    percentile_approx would not hash-match the oracle).
-
-    The partial phase of exact percentile builds a value-count map over every
-    row, so the single column is fanned out first: partial maps build in
-    parallel and only the merge is single-task. (At 100 TB you'd switch to
-    approx_percentile and a tolerance-based gate; exactness is the oracle
-    contract here.)"""
-    return fan_out(df.select(value_col)).agg(
-        F.expr(f"percentile({value_col}, {probs[0]})").alias("p_lo"),
-        F.expr(f"percentile({value_col}, {probs[1]})").alias("p_hi"),
-    )
 
 
 def refined_exact_quantile_thresholds(
@@ -236,11 +221,11 @@ def approx_quantile_thresholds(
     accuracy: int = 10_000,
 ) -> DataFrame:
     """A8 first pass, 100-TB variant — approx_percentile (GK sketch) as a
-    1-row frame. Same shape as `exact_quantile_thresholds` but the partial
-    state is a bounded sketch (O(accuracy) per task, mergeable), not a
-    value-count map over every distinct value, so the merge never becomes a
-    single-task bottleneck as the input grows. Error is bounded by
-    1/accuracy relative rank."""
+    1-row frame. Same shape as `refined_exact_quantile_thresholds`, but the
+    partial state is a bounded sketch (O(accuracy) per task, mergeable), not
+    `percentile`'s value-count map over every distinct value, so the merge
+    never becomes a single-task bottleneck as the input grows. Error is
+    bounded by 1/accuracy relative rank."""
     pq = F.expr(
         f"approx_percentile({value_col}, array({probs[0]}, {probs[1]}), {accuracy})"
     )
@@ -274,33 +259,31 @@ def quantile_3way_label(
     the raw approx_percentile sketch — rows whose rank sits within
     1/accuracy of a cut point can flip label, nothing else.
 
-    Second pass is a broadcast cross-join of the 1-row threshold frame —
-    the scalar never hits the driver, so the plan is cluster-safe.
+    Their second pass is a broadcast cross-join of the 1-row threshold
+    frame — the scalar is never collected, so the plan is cluster-safe.
 
     ``bounded=True`` declares the input's distinct-value cardinality
     bounded (daily/calendar-grain frames: at most tens of thousands of
-    rows no matter the corpus size), which makes the single-merge
-    ``percentile`` aggregate's value-count map safe — one codegen pass
-    instead of the refined path's four jobs + bracket sort. Use the
-    default (refined) for event/row-grain inputs whose cardinality grows
-    with the data.
+    rows no matter the corpus size). The thresholds are then the
+    single-merge ``percentile`` aggregate over a whole-frame window, the
+    same value-count map as the refined path's reference: one pass, no
+    threshold frame, no join, and the upstream runs once. The window
+    runs in one task, so use the default (refined) for event/row-grain
+    inputs whose cardinality grows with the data.
     """
-    if exact and bounded:
-        # bounded callers pass AGGREGATE-grain frames (daily/calendar);
-        # materialize once so the threshold pass and the labeling pass
-        # don't each re-run the caller's full upstream aggregation (r16,
-        # the linear_shap_attribution lesson)
-        df = df.localCheckpoint(eager=False)
-        thresholds = exact_quantile_thresholds(df, value_col, probs)
-    elif exact:
-        thresholds = refined_exact_quantile_thresholds(df, value_col, probs)
-    else:
-        thresholds = approx_quantile_thresholds(df, value_col, probs, accuracy)
-    labeled = df.crossJoin(F.broadcast(thresholds))
     v = F.col(value_col)
+    if exact and bounded:
+        labeled = df
+        lo, hi = (F.percentile(v, p).over(Window.partitionBy()) for p in probs)
+    else:
+        if exact:
+            thresholds = refined_exact_quantile_thresholds(df, value_col, probs)
+        else:
+            thresholds = approx_quantile_thresholds(df, value_col, probs, accuracy)
+        labeled = df.crossJoin(F.broadcast(thresholds))
+        lo, hi = F.col("p_lo"), F.col("p_hi")
     return labeled.withColumn(
-        label_col,
-        F.when(v <= F.col("p_lo"), -1).when(v >= F.col("p_hi"), 1).otherwise(0),
+        label_col, F.when(v <= lo, -1).when(v >= hi, 1).otherwise(0)
     ).drop("p_lo", "p_hi")
 
 

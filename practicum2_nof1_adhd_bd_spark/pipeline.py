@@ -7,22 +7,38 @@ boundaries are partitioned Parquet tables, preserving the reference's
 re-entrancy (`--start-from-etl`): any layer can be rebuilt from the previous
 one without recomputing upstream.
 
-Layers (all snappy Parquet, written under ``<out_dir>/<layer>``):
+Layers (all snappy Parquet, written under ``<out_dir>/<layer>``), with
+the Spark jobs each build runs:
 
 - bronze/events          raw events, partitioned by event_date (partition
-                         pruning for every downstream temporal filter)
-- silver/daily           per-day per-type stats (A1 pivot fusion)
+                         pruning for every downstream temporal filter);
+                         3 jobs
+- silver/daily           per-day per-type stats in one conditional
+                         aggregate per declared type (A1 pivot fusion);
+                         2 jobs: the groupBy's map stage and the write
 - gold/unified           silver keyed by date. The date-spine join (J2,
                          joins.spine_left_join) unifies SEVERAL daily
                          domains onto one spine; silver is a single domain
                          already one row per date, so joining its distinct
                          dates back onto it would be an identity costing two
                          shuffles, and the layer is silver as written
-- gold/labeled           z-scores + PBSI composite + exact-quantile labels
-                         (A7/A8, build_pbsi.py:139-176); the percentile runs
-                         on the bounded (daily-grain) path
+- gold/labeled           whole-frame z-scores + PBSI composite + exact
+                         window-percentile labels (A7/A8,
+                         build_pbsi.py:139-176)
 - gold/segments          gaps-and-islands segment table (W6), read from the
-                         written labeled layer
+                         written labeled layer; gold is 3 jobs, one per write
+
+Reads of layers the build wrote declare their schema, so none runs a
+schema-inference job. ``EVENT_TYPES`` declares the event types silver
+aggregates, one n/mean/sum triple each (null on a day without that type);
+other types are ignored. The testdata types are not physiological
+signals, so the list is a modelling choice, not read from the data; it
+seeds ROADMAP item 6's domain map.
+
+Gold is one population-wide daily series, tens of rows, so each gold step
+reads its input on one partition (``coalesce(1)``): the whole-frame
+windows and the segment groupBy then plan with no exchange, where a
+``Window.partitionBy()`` would shuffle every row to one task anyway.
 
 At 100 TB: bronze is the only full-size layer and is written once,
 partitioned on the date key every later stage filters or joins on; silver
@@ -38,6 +54,13 @@ from pyspark.sql import functions as F
 
 from .operators import labels, windows
 from .sources.readers import Catalog
+
+# sorted; gold's composite takes the first three (see the module docstring)
+EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
+BRONZE_SCHEMA = "event_type STRING, value DOUBLE, event_date DATE"
+SILVER_SCHEMA = "date DATE, " + ", ".join(
+    f"{t}_n BIGINT, {t}_mean DOUBLE, {t}_sum DOUBLE" for t in EVENT_TYPES
+)
 
 
 def build_bronze(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
@@ -55,26 +78,24 @@ def build_bronze(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
 
 
 def build_silver(spark: SparkSession, bronze_path: str, out_dir: str) -> str:
-    """Daily per-type metrics from bronze (A1/A4 pivot fusion; S7 daily
-    cache — the reference's 180x-speedup layer)."""
+    """Daily per-type metrics from bronze in one aggregate (A1/A4 pivot
+    fusion; S7 daily cache — the reference's 180x-speedup layer): one row
+    per date, ``<type>_n``/``_mean``/``_sum`` per declared type, null on
+    a day without that type."""
     path = os.path.join(out_dir, "silver", "daily")
-    ev = spark.read.parquet(bronze_path)
-    daily = (
-        ev.groupBy(F.col("event_date").alias("date"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("value"), 6).alias("value_mean"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .groupBy("date")
-        .pivot("event_type")
-        .agg(
-            F.first("n").alias("n"),
-            F.first("value_mean").alias("mean"),
-            F.first("value_sum").alias("sum"),
-        )
-    )
-    daily.write.mode("overwrite").parquet(path)
+    ev = spark.read.schema(BRONZE_SCHEMA).parquet(bronze_path)
+    aggs = []
+    for t in EVENT_TYPES:
+        is_t = F.col("event_type") == t
+        value = F.when(is_t, F.col("value"))
+        aggs += [
+            F.sum(F.when(is_t, F.lit(1))).alias(f"{t}_n"),
+            F.round(F.avg(value), 6).alias(f"{t}_mean"),
+            F.round(F.sum(value), 2).alias(f"{t}_sum"),
+        ]
+    ev.groupBy(F.col("event_date").alias("date")).agg(*aggs).write.mode(
+        "overwrite"
+    ).parquet(path)
     return path
 
 
@@ -82,19 +103,21 @@ def build_gold(spark: SparkSession, silver_path: str, out_dir: str) -> dict[str,
     """Unified + labeled + segments gold layers (J2, A7/A8, W6).
 
     Every layer is daily-grain, so each step reads the layer written
-    before it and runs only the jobs its own write needs."""
-    daily = spark.read.parquet(silver_path)
-    num_cols = [c for c in daily.columns if c.endswith("_mean")][:3]
+    before it, on one partition, and runs one job: its own write."""
+
+    def read(path: str, schema: str):
+        # one partition satisfies the whole-frame windows and the segment
+        # groupBy, so they plan with no exchange; ROADMAP item 2 replaces
+        # this with partitioning on user_id
+        return spark.read.schema(schema).parquet(path).coalesce(1)
 
     unified_path = os.path.join(out_dir, "gold", "unified")
-    daily.write.mode("overwrite").parquet(unified_path)
+    read(silver_path, SILVER_SCHEMA).write.mode("overwrite").parquet(unified_path)
 
     labeled_path = os.path.join(out_dir, "gold", "labeled")
-    unified = spark.read.parquet(unified_path)
-    z = windows.global_zscore(unified, num_cols)
-    zcols = {
-        f"z_{c}": round(1.0 / max(len(num_cols), 1), 2) for c in num_cols
-    }
+    num_cols = [f"{t}_mean" for t in EVENT_TYPES[:3]]
+    z = labels.segment_zscore(read(unified_path, SILVER_SCHEMA), num_cols, None)
+    zcols = {f"z_{c}": round(1.0 / len(num_cols), 2) for c in num_cols}
     comp = labels.weighted_composite(z, zcols, "pbsi_score")
     labels.quantile_3way_label(comp, "pbsi_score", bounded=True).write.mode(
         "overwrite"
@@ -102,7 +125,7 @@ def build_gold(spark: SparkSession, silver_path: str, out_dir: str) -> dict[str,
 
     segments_path = os.path.join(out_dir, "gold", "segments")
     seg = windows.gaps_and_islands(
-        spark.read.parquet(labeled_path).select("date"), "date", [], max_gap_days=1
+        read(labeled_path, "date DATE"), "date", [], max_gap_days=1
     )
     windows.segment_summary(seg, "date", []).write.mode("overwrite").parquet(
         segments_path

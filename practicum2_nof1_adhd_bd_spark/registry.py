@@ -7040,9 +7040,11 @@ def q_streaming_ingest_decisions(spark, sf_dir):
     (screen_batch(batch_internal_near=True) closes the one-batch case;
     see its chain caveat). This fixture's batch docs are either exact
     index copies or mutually dissimilar, so the oracle is exact here.
-    Per-invocation uuid dirs stay on disk (the returned frame reads the
-    sink lazily); they are fixture-sized."""
+    The decisions are checkpointed before the per-invocation work dir
+    (source, index, sink, checkpoint) is removed, so no call leaves
+    files behind."""
     import os
+    import shutil
     import tempfile
     import uuid
 
@@ -7054,34 +7056,36 @@ def q_streaming_ingest_decisions(spark, sf_dir):
     )
     src, index_dir = os.path.join(work, "src"), os.path.join(work, "index")
     dec_dir, ckpt = os.path.join(work, "dec"), os.path.join(work, "ckpt")
-    # bootstrap the stored index artifact in the canonical hp-partitioned
-    # layout (r09): the micro-batch's exact screen then runs the
-    # Bloom-pruned prefix read — the sidecar is built lazily on first
-    # batch, and decisions stay identical to the full-index screen
-    ci.write_index(
-        ci._batch_signatures(
-            docs.filter(F.col("doc_id") % 5 != 0), "text", "doc_id", 8, 3
-        ),
-        index_dir,
-    )
-    batch = (
-        docs.filter(F.col("doc_id") % 10 == 1)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-        .unionByName(
-            docs.filter(F.col("doc_id") % 5 == 0).select(
-                (F.col("doc_id") + 2000000).alias("doc_id"), "text"
+    try:
+        # bootstrap the stored index artifact in the canonical hp-partitioned
+        # layout (r09): the micro-batch's exact screen then runs the Bloom-
+        # pruned prefix read — the sidecar is built lazily on first batch,
+        # and decisions stay identical to the full-index screen
+        ci.write_index(
+            ci._batch_signatures(
+                docs.filter(F.col("doc_id") % 5 != 0), "text", "doc_id", 8, 3
+            ),
+            index_dir,
+        )
+        batch = (
+            docs.filter(F.col("doc_id") % 10 == 1)
+            .select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
+            .unionByName(
+                docs.filter(F.col("doc_id") % 5 == 0).select(
+                    (F.col("doc_id") + 2000000).alias("doc_id"), "text"
+                )
             )
         )
-    )
-    batch.coalesce(1).write.mode("overwrite").json(src)
-    stream = spark.readStream.schema("doc_id bigint, text string").json(src)
-    q = ci.ingest_stream(stream, index_dir, dec_dir, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_ingest_decisions: stream did not finish in 300s")
-    return spark.read.schema(ci.DECISION_SCHEMA).parquet(dec_dir).select(
-        "doc_id", "status", "matched_id"
-    )
+        batch.coalesce(1).write.mode("overwrite").json(src)
+        stream = spark.readStream.schema("doc_id bigint, text string").json(src)
+        q = ci.ingest_stream(stream, index_dir, dec_dir, ckpt)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("streaming_ingest_decisions: stream ran over 300s")
+        dec = spark.read.schema(ci.DECISION_SCHEMA).parquet(dec_dir)
+        return dec.select("doc_id", "status", "matched_id").localCheckpoint(True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 ORACLES["streaming_ingest_decisions"] = _ingest_decisions_oracle()
@@ -10199,7 +10203,7 @@ def q_cda_probe(spark, sf_dir):
 
 
 def _register_medallion_silver() -> None:
-    types = ["click", "error", "purchase", "signup", "view"]
+    from .pipeline import EVENT_TYPES as types
     per_type = ",\n           ".join(
         f"NULLIF(count(*) FILTER (WHERE event_type = '{t}'), 0)"
         f" AS {t}_n,\n           "
@@ -10219,15 +10223,15 @@ def _register_medallion_silver() -> None:
     @register("medallion_silver_scan", sql)
     def q_medallion_silver_scan(spark, sf_dir):
         """S7's medallion lifecycle under the value-hash gate: bronze
-        (events partitioned by event_date) and silver (per-day per-type
-        pivot stats — the reference's 180x-speedup daily cache layer,
-        ref stage_csv_aggregation.py dual parquet cache) are BUILT to
-        /tmp through pipeline.build_bronze/build_silver once per events
+        (events partitioned by event_date) and silver (per-day stats per
+        declared event type — the reference's 180x-speedup daily cache
+        layer, ref stage_csv_aggregation.py dual parquet cache) are BUILT
+        to /tmp through pipeline.build_bronze/build_silver once per events
         fingerprint, then the silver table is read back and returned
-        as-is. The oracle recomputes the same pivot from the raw events
-        with FILTER aggregates (NULLIF(count,0) mirrors pivot's
-        absent-cell null), so the layered write -> partitioned read ->
-        pivot chain is attested end to end, not just pytest'd."""
+        as-is. The oracle recomputes the same stats from the raw events
+        with FILTER aggregates (NULLIF(count,0) mirrors silver's null on
+        a day without that type), so the layered write -> partitioned
+        read -> aggregate chain is attested end to end, not just pytest'd."""
         import os
         import tempfile
 

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -45,10 +47,12 @@ _DEFAULTS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    # local[32] runs all executor threads in the driver JVM; higher-order
-    # array expressions are allocation-heavy, so give the collector room
-    # (the host has 128 GiB; override via SPARK_GRAFT_DRIVER_MEM).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # local[N] runs all executor threads in one JVM; higher-order
+    # array expressions are allocation-heavy, so give the collector half
+    # the host's RAM, at most 24g (override via SPARK_GRAFT_DRIVER_MEM).
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{min(24 << 10, _RAM_MB // 2)}m"
+    ),
     # PySpark 4 captures the Python call site on EVERY DataFrame/Column
     # API call when this is on (the default) — one extra JVM round-trip
     # per operator, which r13 profiling measured as a material share of

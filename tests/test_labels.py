@@ -1,5 +1,8 @@
 """Label layer (A7/A8, PBSI composites) + folds."""
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from practicum2_nof1_adhd_bd_spark.operators import folds, labels
@@ -48,6 +51,30 @@ def test_quantile_3way_label_approx_agrees_with_exact(spark):
     n_agree = joined.filter(F.col("l_exact") == F.col("l_approx")).count()
     assert n > 0
     assert n_agree / n >= 0.99  # sketch error can only flip rank-boundary rows
+
+
+@pytest.mark.parametrize("n_parts", [1, 7])
+def test_bounded_window_label_matches_refined(spark, n_parts):
+    """The bounded path (a whole-frame window percentile) labels every row
+    as the refined exact path does, on seeded frames with ties and nulls,
+    whatever the input partitioning."""
+    for seed in range(3):
+        rng = random.Random(seed)
+        vals = [
+            None if rng.random() < 0.1 else rng.randint(0, 12) / 4
+            for _ in range(150 + seed)
+        ]
+        df = spark.createDataFrame(list(enumerate(vals)), "id long, v double")
+        df = df.repartition(n_parts)
+        got, want = (
+            {r["id"]: r["label_3cls"] for r in out.collect()}
+            for out in (
+                labels.quantile_3way_label(df, "v", bounded=True),
+                labels.quantile_3way_label(df, "v"),
+            )
+        )
+        assert got == want, seed
+        assert set(got.values()) == {-1, 0, 1}
 
 
 def test_threeway_threshold_label(spark):
@@ -102,7 +129,9 @@ def test_refined_quantiles_bit_equal_builtin(spark):
         df = spark.createDataFrame([(v,) for v in vals] or [(None,)], "x double")
         if not vals:
             df = df.filter("x is not null")
-        e = labels.exact_quantile_thresholds(df, "x").collect()[0]
+        e = df.agg(
+            F.percentile("x", 0.25).alias("p_lo"), F.percentile("x", 0.75).alias("p_hi")
+        ).collect()[0]
         r = labels.refined_exact_quantile_thresholds(df, "x").collect()[0]
         # bit-for-bit: the refined path must reproduce the builtin
         # percentile()'s interpolation exactly, not approximately

@@ -120,26 +120,106 @@ def test_gold_values_match_duckdb(spark, sf_dir, tmp_path, scale):
     assert got_segments == want_segments
 
 
+def _count_jobs(spark, group, build) -> int:
+    """Spark jobs that ``build()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_silver_job_budget(spark, sf_dir, tmp_path):
+    """Silver reads bronze with its declared schema and aggregates every
+    declared type in one groupBy: one shuffle, so two jobs (the map
+    stage and the write). An inferred bronze read (+1) or a pivot
+    without a value list (+4) exceeds the budget."""
+    out = str(tmp_path / "lake")
+    bronze = pipeline.build_bronze(spark, sf_dir, out)
+    n_jobs = _count_jobs(
+        spark, "silver-job-budget", lambda: pipeline.build_silver(spark, bronze, out)
+    )
+    assert 0 < n_jobs <= 2, n_jobs
+
+
 def test_gold_job_budget(spark, sf_dir, tmp_path):
-    """Gold writes three daily-grain tables in 12 Spark jobs: labels on
-    the bounded percentile path, silver written as the unified layer,
-    segments read from the written labeled layer. The budget keeps one
-    job of headroom; a return to the refined quantile path (31 jobs) or
-    to the single-domain spine join (14) exceeds it."""
+    """Gold writes three daily-grain tables in three Spark jobs, one per
+    write: every layer is read with its declared schema on one
+    partition, so the whole-frame z-score and percentile windows and the
+    segment groupBy plan with no exchange. An inferred read of silver,
+    unified or labeled (+1 each), or a return to the broadcast z-score
+    or threshold frames, exceeds the budget."""
     out = str(tmp_path / "lake")
     silver = pipeline.build_silver(
         spark, pipeline.build_bronze(spark, sf_dir, out), out
     )
-    sc = spark.sparkContext
-    group = "gold-job-budget"
-    sc.setJobGroup(group, "gold job budget")
-    try:
-        pipeline.build_gold(spark, silver, out)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 13, n_jobs
+    n_jobs = _count_jobs(
+        spark, "gold-job-budget", lambda: pipeline.build_gold(spark, silver, out)
+    )
+    assert 0 < n_jobs <= 3, n_jobs
+
+
+def _silver_and_labeled(spark, bronze, out):
+    silver = pipeline.build_silver(spark, bronze, out)
+    labeled = pipeline.build_gold(spark, silver, out)["labeled"]
+    return _sorted_rows(spark, silver, "date"), _sorted_rows(spark, labeled, "date")
+
+
+def test_undeclared_event_type_is_dropped(spark, sf_dir, tmp_path):
+    """Silver keeps only the declared event types: a bronze with an extra
+    type that sorts before all of them ("aaa") writes the same silver
+    columns and rows, and the same gold labels, as the bronze without
+    it. Under a column-order rule "aaa_mean" would displace one of the
+    composite's inputs."""
+    bronze = pipeline.build_bronze(spark, sf_dir, str(tmp_path / "lake"))
+    ev = spark.read.schema(pipeline.BRONZE_SCHEMA).parquet(bronze)
+    extra = ev.filter(F.col("event_type") == "click").withColumn(
+        "event_type", F.lit("aaa")
+    ).withColumn("value", F.col("value") * 7 + 1)
+    with_extra = str(tmp_path / "bronze_extra")
+    ev.unionByName(extra).write.partitionBy("event_date").parquet(with_extra)
+
+    want = _silver_and_labeled(spark, bronze, str(tmp_path / "a"))
+    got = _silver_and_labeled(spark, with_extra, str(tmp_path / "b"))
+    assert got[0][0] == ["date"] + [
+        f"{t}_{m}" for t in pipeline.EVENT_TYPES for m in ("n", "mean", "sum")
+    ]
+    assert want[0][1] and want[1][1]
+    assert got == want
+
+
+def test_silver_missing_type_is_null(spark, tmp_path):
+    """A declared type with no events on a day gives null n, mean and sum
+    on that day, not zero."""
+    rows = [
+        ("click", 1.0, "2024-01-01"),
+        ("click", 2.0, "2024-01-01"),
+        ("view", 4.0, "2024-01-01"),
+        ("click", 3.0, "2024-01-02"),
+    ]
+    bronze = str(tmp_path / "bronze")
+    spark.createDataFrame(rows, "event_type string, value double, d string").select(
+        "event_type", "value", F.to_date("d").alias("event_date")
+    ).write.partitionBy("event_date").parquet(bronze)
+    silver = pipeline.build_silver(spark, bronze, str(tmp_path / "lake"))
+    by_day = {
+        r["date"].day: r.asDict()
+        for r in spark.read.parquet(silver).collect()
+    }
+    assert sorted(by_day) == [1, 2]
+    assert (by_day[1]["click_n"], by_day[1]["click_mean"], by_day[1]["click_sum"]) == (
+        2, 1.5, 3.0
+    )
+    assert (by_day[1]["view_n"], by_day[1]["view_mean"]) == (1, 4.0)
+    assert (by_day[2]["view_n"], by_day[2]["view_mean"], by_day[2]["view_sum"]) == (
+        None, None, None
+    )
+    for t in ("error", "purchase", "signup"):
+        for day in by_day.values():
+            assert day[f"{t}_n"] is None and day[f"{t}_sum"] is None, t
 
 
 def test_gold_identical_across_shuffle_partitions(spark, sf_dir, tmp_path):

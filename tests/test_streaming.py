@@ -1,6 +1,7 @@
 """Structured Streaming surfaces validated against their batch twins."""
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -210,6 +211,23 @@ def test_incremental_corpus_ingest_stream(spark, tmp_path):
     assert dec[13]["status"] == "admitted"
     idx = spark.read.schema(ci.INDEX_SCHEMA).parquet(index_dir)
     assert sorted(r["doc_id"] for r in idx.collect()) == [1, 2, 13]
+
+
+def test_streaming_ingest_decisions_leaves_no_work_dir(spark, sf_dir):
+    """The streaming ingest query removes its per-call work dir (source,
+    index, sink, checkpoint) and still returns the batch twin's
+    decisions."""
+    import glob
+    import tempfile
+
+    from practicum2_nof1_adhd_bd_spark.registry import QUERIES
+
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_ingest_*")
+    before = set(glob.glob(pattern))
+    got = QUERIES["streaming_ingest_decisions"](spark, sf_dir).collect()
+    assert set(glob.glob(pattern)) <= before
+    want = QUERIES["incremental_ingest_decisions"](spark, sf_dir).collect()
+    assert got and sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_screen_batch_cold_start_and_empty_batch(spark):

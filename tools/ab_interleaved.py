@@ -23,7 +23,10 @@ registry queries: each pair is one old and one new
 ``build_bronze -> build_silver -> build_gold`` into fresh directories,
 timed per layer, with each layer's Spark jobs counted through a job group
 (``statusTracker().getJobIdsForGroup``), so a layer's gain is attributed
-by wall time and by jobs per build in the same contention window.
+by wall time and by jobs per build in the same contention window. The
+untimed warm builds' silver, unified, labeled and segments tables are
+compared first (same columns and types, equal rows after sorting), so a
+timing is read only for builds with equal outputs.
 
 Usage:
   python tools/ab_interleaved.py --old /tmp/repo_old [-n 5] q1 q2 ...
@@ -32,7 +35,8 @@ Usage:
 Prints one JSON line:
   {query: {"old": [...], "new": [...], "pair_ratios": [...],
            "median_pair_ratio": r}}   (ratio > 1 -> NEW is faster)
-  --pipeline: {"pipeline": {"old": {layer: [s...]}, "new": {...},
+  --pipeline: {"pipeline": {"identical": {table: bool},
+               "old": {layer: [s...]}, "new": {...},
                "jobs": {"old": {layer: n}, "new": {...}},
                "pair_ratios": {layer: [...]},
                "median_pair_ratio": {layer: r}}}
@@ -73,13 +77,19 @@ def _load_new(root: str, module: str):
 
 
 LAYERS = ("bronze", "silver", "gold")
+# the tables a build writes after bronze, by their path under the build dir
+TABLES = {
+    "silver": "silver/daily",
+    "unified": "gold/unified",
+    "labeled": "gold/labeled",
+    "segments": "gold/segments",
+}
 
 
-def _build(spark, pipe, sf_dir: str, tag: str) -> tuple[dict, dict]:
-    """One full medallion build into a fresh directory. Returns seconds
-    per layer (plus total) and Spark jobs per layer (plus total)."""
+def _build(spark, pipe, sf_dir: str, tag: str, out: str) -> tuple[dict, dict]:
+    """One full medallion build into ``out``. Returns seconds per layer
+    (plus total) and Spark jobs per layer (plus total)."""
     sc = spark.sparkContext
-    out = tempfile.mkdtemp(prefix="ab_build_")
     secs, jobs = {}, {}
     try:
         prev = sf_dir
@@ -93,18 +103,49 @@ def _build(spark, pipe, sf_dir: str, tag: str) -> tuple[dict, dict]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-        shutil.rmtree(out, ignore_errors=True)
     secs["total"] = round(sum(secs.values()), 3)
     jobs["total"] = sum(jobs.values())
     return secs, jobs
 
 
+def _timed_build(spark, pipe, sf_dir: str, tag: str) -> tuple[dict, dict]:
+    out = tempfile.mkdtemp(prefix="ab_build_")
+    try:
+        return _build(spark, pipe, sf_dir, tag, out)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def _same_table(spark, a_path: str, b_path: str) -> bool:
+    """Value identity of two written tables: the same columns and types
+    in the same order, and equal rows after sorting."""
+    a, b = (spark.read.parquet(p) for p in (a_path, b_path))
+    if a.dtypes != b.dtypes:
+        return False
+    a, b = (
+        d.toPandas().sort_values(d.columns).reset_index(drop=True) for d in (a, b)
+    )
+    return a.equals(b)
+
+
 def _pipeline_ab(spark, old_pipe, new_pipe, sf_dir: str, n: int) -> dict:
-    """Alternate old/new medallion builds after one untimed warm build
-    of each; pair i's ratio is old/new wall time per layer (> 1 -> NEW
-    is faster)."""
-    _build(spark, old_pipe, sf_dir, "warm old")
-    _build(spark, new_pipe, sf_dir, "warm new")
+    """One untimed warm build of each version, whose written tables are
+    compared for value identity; then alternating old/new builds. Pair
+    i's ratio is old/new wall time per layer (> 1 -> NEW is faster)."""
+    warm = {"old": tempfile.mkdtemp(prefix="ab_old_"),
+            "new": tempfile.mkdtemp(prefix="ab_new_")}
+    try:
+        _build(spark, old_pipe, sf_dir, "warm old", warm["old"])
+        _build(spark, new_pipe, sf_dir, "warm new", warm["new"])
+        identical = {
+            t: _same_table(
+                spark, os.path.join(warm["old"], rel), os.path.join(warm["new"], rel)
+            )
+            for t, rel in TABLES.items()
+        }
+    finally:
+        for d in warm.values():
+            shutil.rmtree(d, ignore_errors=True)
     layers = (*LAYERS, "total")
     secs = {"old": {k: [] for k in layers}, "new": {k: [] for k in layers}}
     jobs = {}
@@ -113,7 +154,7 @@ def _pipeline_ab(spark, old_pipe, new_pipe, sf_dir: str, n: int) -> dict:
         # alternate which side runs first, so a pair's position in a
         # contention wave does not favour one version
         for side, pipe in sides if i % 2 == 0 else sides[::-1]:
-            s, jobs[side] = _build(spark, pipe, sf_dir, f"{side}[{i}]")
+            s, jobs[side] = _timed_build(spark, pipe, sf_dir, f"{side}[{i}]")
             for k in layers:
                 secs[side][k].append(s[k])
     ratios = {
@@ -121,6 +162,7 @@ def _pipeline_ab(spark, old_pipe, new_pipe, sf_dir: str, n: int) -> dict:
         for k in layers
     }
     return {
+        "identical": identical,
         **secs,
         "jobs": jobs,
         "pair_ratios": ratios,
@@ -164,7 +206,8 @@ def main() -> None:
         print(
             "# pipeline: median_pair_ratio "
             + " ".join(f"{k}={v:.2f}" for k, v in res["median_pair_ratio"].items())
-            + f" jobs old={res['jobs']['old']} new={res['jobs']['new']}",
+            + f" jobs old={res['jobs']['old']} new={res['jobs']['new']}"
+            + f" identical={res['identical']}",
             file=sys.stderr,
         )
         print(json.dumps({"pipeline": res}))
