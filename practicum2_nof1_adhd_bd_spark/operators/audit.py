@@ -12,18 +12,28 @@ of log lines, and SQL-oracle-checkable.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _row(df: DataFrame, check: str, severity, metric, threshold) -> DataFrame:
-    return df.select(
-        F.lit(check).alias("check_name"),
-        severity.alias("severity"),
-        F.round(metric, 6).alias("metric"),
-        F.lit(float(threshold)).alias("threshold"),
+def _rows(base: DataFrame, *checks: tuple) -> DataFrame:
+    """One report row per ``(check, severity, metric, threshold)`` of the
+    1-row ``base`` in one projection: per-check union branches would each
+    get a column-pruned aggregate, so each would rerun its own exchange."""
+    return base.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(check).alias("check_name"),
+                        severity.alias("severity"),
+                        F.round(metric, 6).cast("double").alias("metric"),
+                        F.lit(float(threshold)).alias("threshold"),
+                    )
+                    for check, severity, metric, threshold in checks
+                ]
+            )
+        )
     )
 
 
@@ -55,8 +65,7 @@ def audit_daily_frame(
         F.avg((F.col(std_col) == 0).cast("double")).alias("pct_zero_std"),
     )
 
-    dup = _row(
-        base,
+    dup = (
         "duplicate_dates",
         F.when(F.col("n_rows") > F.col("n_dates"), "CRITICAL").otherwise("OK"),
         (F.col("n_rows") - F.col("n_dates")).cast("double"),
@@ -67,30 +76,27 @@ def audit_daily_frame(
         * 100.0
         / (F.datediff("d1", "d0") + 1)
     )
-    span = _row(
-        base,
+    span = (
         "span_missing_pct",
         F.when(span_missing > missing_pct_max, "WARNING").otherwise("OK"),
         span_missing,
         missing_pct_max,
     )
-    fab_mm = _row(
-        base,
+    fab_mm = (
         "fabrication_min_eq_mean_pct",
         F.when(F.col("pct_min_eq_mean") * 100 > fabrication_pct_max, "WARNING")
         .otherwise("OK"),
         F.col("pct_min_eq_mean") * 100,
         fabrication_pct_max,
     )
-    fab_std = _row(
-        base,
+    fab_std = (
         "fabrication_zero_std_pct",
         F.when(F.col("pct_zero_std") * 100 > fabrication_pct_max, "WARNING")
         .otherwise("OK"),
         F.col("pct_zero_std") * 100,
         fabrication_pct_max,
     )
-    return reduce(DataFrame.unionByName, [dup, span, fab_mm, fab_std])
+    return _rows(base, dup, span, fab_mm, fab_std)
 
 
 def audit_value_ranges(
@@ -113,17 +119,14 @@ def audit_value_ranges(
         ).alias("pv"),
         F.avg((F.col(n_col) == 1).cast("double")).alias("ps"),
     )
-    viol = _row(
-        base,
+    viol = (
         "range_violation_pct",
         F.when(F.col("pv") * 100 > viol_pct_max, "CRITICAL").otherwise("OK"),
         F.col("pv") * 100,
         viol_pct_max,
     )
-    single = _row(
-        base, "single_sample_days_pct", F.lit("INFO"), F.col("ps") * 100, 0.0
-    )
-    return viol.unionByName(single)
+    single = ("single_sample_days_pct", F.lit("INFO"), F.col("ps") * 100, 0.0)
+    return _rows(base, viol, single)
 
 
 def audit_cross_layer(
@@ -143,8 +146,9 @@ def audit_cross_layer(
     - unified coverage: % of unified days carrying data — the reference
       logs this (:505-509); emitted as an INFO row.
 
-    Three single-row aggregates cross-joined — scalar frames, no data
-    movement beyond the three scans (daily/unified are daily-grain)."""
+    Three single-row aggregates, unioned onto one partition and merged by
+    one more aggregate — scalar frames, no join and no data movement
+    beyond the three scans (daily/unified are daily-grain)."""
     e_days = events.agg(
         F.countDistinct(F.to_date(F.col(ts_col))).alias("_e")
     )
@@ -153,29 +157,29 @@ def audit_cross_layer(
         F.count(F.lit(1)).alias("_u"),
         F.sum(F.col(mean_col).isNotNull().cast("bigint")).alias("_u_data"),
     )
-    base = e_days.crossJoin(d_days).crossJoin(u_days)
-    ed = _row(
-        base,
+    scalars = e_days.unionByName(d_days, allowMissingColumns=True).unionByName(
+        u_days, allowMissingColumns=True
+    )
+    base = scalars.coalesce(1).agg(*[F.max(c).alias(c) for c in scalars.columns])
+    ed = (
         "xlayer_events_vs_daily_days",
         F.when(F.col("_e") != F.col("_d"), "CRITICAL").otherwise("OK"),
         F.abs(F.col("_e") - F.col("_d")).cast("double"),
         0.0,
     )
-    du = _row(
-        base,
+    du = (
         "xlayer_daily_vs_unified_days",
         F.when(F.col("_u") < F.col("_d"), "WARNING").otherwise("OK"),
         (F.col("_u") - F.col("_d")).cast("double"),
         0.0,
     )
-    cov = _row(
-        base,
+    cov = (
         "xlayer_unified_coverage_pct",
         F.lit("INFO"),
         F.col("_u_data") * 100.0 / F.col("_u"),
         0.0,
     )
-    return reduce(DataFrame.unionByName, [ed, du, cov])
+    return _rows(base, ed, du, cov)
 
 
 def reaggregation_consistency(
@@ -233,20 +237,27 @@ def audit_hourly_frame(
       boundary dropped or double-counted) skews these twins; INFO row
       (ref midnight-wrap consistency checks).
 
-    One aggregate over the events scan; all derived rows are scalar.
+    One aggregate over the events scan to the (day, hour) slot counts, on
+    one partition (at most 24 rows a day), and one global aggregate of
+    those with no exchange; all derived rows are scalar.
     """
-    h = F.hour(ts_col)
-    d = F.to_date(ts_col)
-    base = events.agg(
-        F.countDistinct(h).alias("h24"),
-        F.countDistinct(d, h).alias("slots"),
-        F.countDistinct(d).alias("ndays"),
-        F.sum((h == 23).cast("bigint")).alias("c23"),
-        F.sum((h == 0).cast("bigint")).alias("c0"),
+    slots = (
+        events.groupBy(F.to_date(ts_col).alias("d"), F.hour(ts_col).alias("h"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .coalesce(1)
+    )
+    # slots are distinct (day, hour) pairs, so distinct counts become set
+    # sizes and row counts: no Expand, so no exchange on one partition
+    d, h, n = F.col("d"), F.col("h"), F.col("n")
+    base = slots.agg(
+        F.size(F.collect_set(h)).alias("h24"),
+        F.count(F.when(d.isNotNull() & h.isNotNull(), n)).alias("slots"),
+        F.size(F.collect_set(d)).alias("ndays"),
+        F.sum((h == 23).cast("bigint") * n).alias("c23"),
+        F.sum((h == 0).cast("bigint") * n).alias("c0"),
     )
     cov_pct = F.col("h24") * 100.0 / 24
-    cov = _row(
-        base,
+    cov = (
         "hour_coverage_pct",
         F.when(cov_pct < hour_cov_min_pct, "WARNING").otherwise("OK"),
         cov_pct,
@@ -255,15 +266,13 @@ def audit_hourly_frame(
     empty_pct = (
         (F.col("ndays") * 24 - F.col("slots")) * 100.0 / (F.col("ndays") * 24)
     )
-    empty = _row(
-        base,
+    empty = (
         "empty_hour_slots_pct",
         F.when(empty_pct > empty_slot_pct_max, "WARNING").otherwise("OK"),
         empty_pct,
         empty_slot_pct_max,
     )
-    wrap = _row(
-        base,
+    wrap = (
         "midnight_wrap_imbalance_pct",
         F.lit("INFO"),
         F.abs(F.col("c23") - F.col("c0"))
@@ -271,7 +280,7 @@ def audit_hourly_frame(
         / F.greatest(F.col("c23") + F.col("c0"), F.lit(1)),
         0.0,
     )
-    return reduce(DataFrame.unionByName, [cov, empty, wrap])
+    return _rows(base, cov, empty, wrap)
 
 
 def audit_exit_code(report: DataFrame) -> int:

@@ -174,76 +174,63 @@ def temporal_instability(
     Spark's null-skipping avg/var_samp; normalization divides by the max
     only when it is positive.
 
-    Spark-first shape: segment assignment depends only on the DATE, so
-    the containment join runs over the distinct dates x broadcast
-    segments (segments are O(100) rows — the probe frame never shuffles),
-    then one melt (stack) + two hash aggregations. No windows, no UDFs;
-    the 1-row max frame broadcasts for the normalization, so the plan is
-    scan -> partial agg -> 2 small exchanges at any corpus size.
+    Spark-first shape: the features frame is DATE-grain (bounded rows at
+    any corpus size), so it runs on one partition with the O(100)
+    segments unioned in as rows. A whole-frame window hands each date the
+    segment list to filter; one aggregate per segment and one global
+    aggregate score every feature. Windows and aggregates on one
+    partition need no exchange; a join would re-shuffle both sides.
     """
     # Features absent from the frame score 0.0, same as all-null ones:
     # the ref guards with `if feat not in df.columns or ...isna().all()`
-    # (temporal_instability.py:112), so a missing column is a 0-score
-    # row, not an AnalysisException from the stack below.
-    present = [c for c in feature_cols if c in features_df.columns]
-    n = len(present)
-    stack_cols = ", ".join(f"'{c}', `{c}`" for c in present)
-    # the features frame is DATE-grain by this operator's containment
-    # spec (bounded rows at any corpus size) and has two consumers (the
-    # distinct-dates probe and the melt): materialize once so neither
-    # re-runs the caller's upstream aggregation (r16)
-    features_df = features_df.localCheckpoint(eager=False)
-    seg_of_date = (
-        features_df.select(date_col)
-        .distinct()
-        .join(
-            F.broadcast(segments),
-            (F.col(date_col) >= F.col(start_col))
-            & (F.col(date_col) <= F.col(end_col)),
-        )
-        .groupBy(date_col)
-        .agg(F.max(seg_id_col).alias("_seg"))
+    # (temporal_instability.py:112), so a missing column is a null column.
+    present = set(features_df.columns)
+    fcols = [f"_f{i}" for i in range(len(feature_cols))]
+    dates = features_df.select(
+        F.col(date_col).alias("_d"),
+        *[
+            (F.col(c) if c in present else F.lit(None)).cast("double").alias(f)
+            for c, f in zip(feature_cols, fcols)
+        ],
     )
-    if n:
-        long = features_df.selectExpr(
-            date_col, f"stack({n}, {stack_cols}) as (feature, value)"
-        )
-        seg_means = (
-            long.join(seg_of_date, date_col)
-            .groupBy("feature", "_seg")
-            .agg(F.avg("value").alias("_m"))
-        )
-        inst = seg_means.groupBy("feature").agg(
-            F.coalesce(F.var_samp("_m"), F.lit(0.0)).alias("instability")
-        )
-    else:  # every requested feature is missing: all rows come from the pad
-        inst = features_df.sparkSession.createDataFrame(
-            [], "feature string, instability double"
-        )
-    # every requested feature gets a row, ref-style: absent/all-null -> 0.0
-    all_feats = features_df.sparkSession.createDataFrame(
-        [(c,) for c in feature_cols], "feature string"
+    segs = segments.selectExpr(
+        f"struct(`{seg_id_col}` AS id, `{start_col}` AS lo, `{end_col}` AS hi) AS _s"
     )
-    inst = all_feats.join(inst, "feature", "left").select(
-        "feature", F.coalesce("instability", F.lit(0.0)).alias("instability")
-    )
-    if normalize:
-        mx = inst.agg(F.max("instability").alias("_mx"))
-        inst = inst.crossJoin(F.broadcast(mx)).select(
-            "feature",
-            "instability",
-            F.when(
-                F.col("_mx") > 0, F.col("instability") / F.col("_mx")
-            )
-            .otherwise(F.col("instability"))
-            .alias("instability_norm"),
+    d = F.col("_d")
+    # the last (highest-id) containing segment wins; none -> null, dropped
+    seg_of_date = F.array_max(
+        F.transform(
+            F.filter(
+                F.collect_list("_s").over(Window.partitionBy()),
+                lambda s: (s["lo"] <= d) & (d <= s["hi"]),
+            ),
+            lambda s: s["id"],
         )
+    )
+    seg_means = (
+        dates.unionByName(segs, allowMissingColumns=True)
+        .coalesce(1)
+        .withColumn("_seg", seg_of_date)
+        .filter(d.isNotNull() & F.col("_seg").isNotNull())
+        .groupBy("_seg")
+        .agg(*[F.avg(f).alias(f) for f in fcols])
+    )
+    inst = seg_means.agg(
+        *[F.coalesce(F.var_samp(f), F.lit(0.0)).alias(f) for f in fcols]
+    ).select(
+        F.stack(
+            F.lit(len(fcols)),
+            *[x for c, f in zip(feature_cols, fcols) for x in (F.lit(c), F.col(f))],
+        ).alias("feature", "instability")
+    )
     out_cols = [
         F.col("feature"),
         F.round("instability", round_dp).alias("instability"),
     ]
     if normalize:
-        out_cols.append(
-            F.round("instability_norm", round_dp).alias("instability_norm")
+        mx = F.max("instability").over(Window.partitionBy())
+        norm = F.when(mx > 0, F.col("instability") / mx).otherwise(
+            F.col("instability")
         )
+        out_cols.append(F.round(norm, round_dp).alias("instability_norm"))
     return inst.select(*out_cols).orderBy(F.desc("instability"), "feature")

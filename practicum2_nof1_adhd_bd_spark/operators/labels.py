@@ -8,11 +8,12 @@ column algebra over windows — no UDFs, fully codegen'd.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import clip
-from ..sources.readers import fan_out
 
 
 def segment_zscore(
@@ -62,156 +63,99 @@ def refined_exact_quantile_thresholds(
     accuracy: int = 1_000,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """EXACT interpolated percentiles via sketch-guided refinement — the
-    distributed form of exact order statistics, replacing the built-in
-    `percentile` aggregate's value-count-map merge (whose single-task
-    merge state grows with the number of distinct values).
+    """EXACT interpolated percentiles via sketch-guided refinement, in
+    place of the built-in `percentile` aggregate's value-count map (whose
+    single-task merge state grows with the number of distinct values).
 
-    Three codegen passes over the single value column:
+    Two scans, each one global aggregate collected as one row of scalars:
 
-    1. count + GK sketch bounds at p +- 3/accuracy (the sketch's rank
-       error is deterministically <= n/accuracy, so the bracket is
-       guaranteed to cover the target order statistics);
-    2. ONE merged aggregate for neighbor widening and the
-       below-raw-bound counts (converts global rank to in-bracket rank;
-       the widened-bound correction is recovered from the candidate
-       frame itself — see the inline note);
-    3. a range filter down to the bracketed candidates — O(n/accuracy)
-       rows, bounded by the accuracy knob, not the data — which alone get
-       sorted (per-cut row_number on the tiny frame).
+    1. count + GK sketch bounds at p +- 3/accuracy. The sketch's rank
+       error is at most n/accuracy, so each bracket covers its cut's
+       order statistics (for n <= accuracy the sketch is exact and a
+       bracket can collapse onto one of them);
+    2. per cut: the largest value below the bracket (``prv``), the
+       smallest above it (``nxt``), the count below it and the bracket's
+       values sorted — O(n/accuracy) of them, not O(n).
 
-    The k-th / (k+1)-th order statistics then interpolate with exactly the
-    built-in `percentile` formula, so results are bit-identical to the
-    single-merge aggregate (asserted in tests) while every corpus-width
-    stage stays a partial-aggregated scan. At 100 TB, accuracy trades
-    bracket width against sketch size: accuracy=10^6 keeps the ranked
-    slice under ~10^7 rows for n=10^12.
+    The order statistics at floor/ceil(p(n-1)) are read off ``prv``, the
+    bracket or ``nxt`` and interpolated with the built-in `percentile`'s
+    formula, so the results are bit-identical to it (asserted in tests);
+    should a rank fall outside its bracket, that aggregate answers. At
+    n=10^12, accuracy=10^6 keeps each collected bracket under ~10^7 values.
+    Returns a 1-row (p_lo, p_hi) frame; the two scalars are collected.
     """
-    p1, p2 = probs
+    v = F.col(value_col).cast("double")
+    vals = df.select(v.alias("_v")).filter(F.col("_v").isNotNull())
+    v = F.col("_v")
     eps = 3.0 / accuracy
-    # persist the projected column (4 passes read it) and every 1-row
-    # scalar frame: a crossJoin(broadcast(x)) re-executes x's subtree per
-    # consumer otherwise, and stats alone has five consumers.
-    vals = fan_out(df.select(value_col)).filter(F.col(value_col).isNotNull()).persist()
-    v = F.col(value_col)
-    bounds_arr = F.expr(
-        f"approx_percentile({value_col}, array("
-        f"{max(0.0, p1 - eps)}, {min(1.0, p1 + eps)}, "
-        f"{max(0.0, p2 - eps)}, {min(1.0, p2 + eps)}), {accuracy})"
+    bounds = [(max(0.0, p - eps), min(1.0, p + eps)) for p in probs]
+    edges = ", ".join(str(b) for lo_hi in bounds for b in lo_hi)
+    stats = _scalars(
+        vals,
+        F.count(v).alias("n"),
+        F.expr(f"approx_percentile(_v, array({edges}), {accuracy})").alias("b"),
     )
-    stats = vals.agg(F.count(v).alias("n"), bounds_arr.alias("_b")).select(
-        "n",
-        F.col("_b")[0].alias("lo1"),
-        F.col("_b")[1].alias("hi1"),
-        F.col("_b")[2].alias("lo2"),
-        F.col("_b")[3].alias("hi2"),
-    ).persist()
-    # Widen each bracket to its immediate neighbor values (for n <=
-    # accuracy the sketch is exact and the raw bracket can collapse onto
-    # a single order statistic, excluding the adjacent one interpolation
-    # needs) AND count rows strictly below each RAW low bound — one merged
-    # corpus pass (r16; formerly two sequential passes, because the below
-    # counts were taken against the widened bounds which exist only after
-    # the widening aggregate). The below count against the EFFECTIVE low
-    # bound is recovered exactly in the candidate frame: the only values
-    # below the raw bound that enter the widened bracket are the copies
-    # of prv (the maximum value < raw low), so
-    #   #{v < coalesce(prv, lo)} == braw - #{bracket rows with _v < lo}.
-    nb = vals.crossJoin(F.broadcast(stats)).agg(
-        F.max(F.when(v < F.col("lo1"), v)).alias("prv1"),
-        F.min(F.when(v > F.col("hi1"), v)).alias("nxt1"),
-        F.max(F.when(v < F.col("lo2"), v)).alias("prv2"),
-        F.min(F.when(v > F.col("hi2"), v)).alias("nxt2"),
-        F.sum((v < F.col("lo1")).cast("long")).alias("braw1"),
-        F.sum((v < F.col("lo2")).cast("long")).alias("braw2"),
-    )
-    eb = stats.crossJoin(F.broadcast(nb)).select(
-        "n",
-        F.coalesce("prv1", "lo1").alias("lo1"),
-        F.coalesce("nxt1", "hi1").alias("hi1"),
-        F.coalesce("prv2", "lo2").alias("lo2"),
-        F.coalesce("nxt2", "hi2").alias("hi2"),
-        F.col("lo1").alias("raw1"),
-        F.col("lo2").alias("raw2"),
-        "braw1",
-        "braw2",
-    ).persist()
-    with_b = vals.crossJoin(F.broadcast(eb))
-    cand = (
-        with_b.select(
-            v.alias("_v"),
-            F.when((v >= F.col("lo1")) & (v <= F.col("hi1")), 1).alias("_c1"),
-            F.when((v >= F.col("lo2")) & (v <= F.col("hi2")), 2).alias("_c2"),
-        )
-        .select("_v", F.explode(F.array("_c1", "_c2")).alias("cut"))
-        .filter(F.col("cut").isNotNull())
-    )
+    n, b = stats["n"], stats["b"]
     if stats_out is not None:
-        # diagnostic mode (scale probes / bound tests): report how many
-        # rows actually land in the sketch-guided brackets — the only
-        # part of the plan whose size is not a partial-agged scan
-        srow = stats.first()
-        stats_out["n"] = srow["n"]
-        stats_out["bracket_rows"] = cand.count()
-    # global target rank r = p*(n-1) (0-based); order stats at floor/ceil(r)
-    scalars = eb.select(
-        "n", "raw1", "raw2", "braw1", "braw2",
-        (F.lit(p1) * (F.col("n") - 1)).alias("r1"),
-        (F.lit(p2) * (F.col("n") - 1)).alias("r2"),
-    )
-    wcut = Window.partitionBy("cut")
-    j = (
-        cand.crossJoin(F.broadcast(scalars))
-        .withColumn("rk", F.row_number().over(wcut.orderBy("_v")))
-        # copies of prv inside this cut's bracket: both windows share the
-        # cut partitioning, so no second exchange
-        .withColumn(
-            "eqc",
-            F.sum(
-                (
-                    F.col("_v")
-                    < F.when(F.col("cut") == 1, F.col("raw1")).otherwise(
-                        F.col("raw2")
-                    )
-                ).cast("long")
-            ).over(wcut),
+        stats_out["n"] = n
+        stats_out["bracket_rows"] = 0
+    if n == 0:
+        return _threshold_frame(df, None, None)
+    aggs = []
+    for k in range(len(probs)):
+        lo, hi = F.lit(b[2 * k]), F.lit(b[2 * k + 1])
+        aggs += [
+            F.max(F.when(v < lo, v)).alias(f"prv{k}"),
+            F.min(F.when(v > hi, v)).alias(f"nxt{k}"),
+            F.count(F.when(v < lo, v)).alias(f"below{k}"),
+            F.sort_array(F.collect_list(F.when(v.between(lo, hi), v))).alias(
+                f"bracket{k}"
+            ),
+        ]
+    row = _scalars(vals, *aggs)
+    out = []
+    for k, p in enumerate(probs):
+        below, bracket = row[f"below{k}"], row[f"bracket{k}"]
+        if stats_out is not None:
+            stats_out["bracket_rows"] += len(bracket)
+        ranked = [row[f"prv{k}"], *bracket, row[f"nxt{k}"]]
+        # Spark's Percentile.getPercentile, step for step; the order
+        # statistic of global rank r is ranked[r - below + 1]
+        pos = (n - 1) * p
+        lower, higher = math.floor(pos), math.ceil(pos)
+        lower_key, higher_key = (
+            ranked[i] if 0 <= (i := r - below + 1) < len(ranked) else None
+            for r in (lower, higher)
         )
-    )
-    picked = j.select(
-        "cut", "_v", "n",
-        F.when(F.col("cut") == 1, F.col("r1")).otherwise(F.col("r2")).alias("r"),
-        (F.col("rk") - 1 - F.col("eqc")
-         + F.when(F.col("cut") == 1, F.col("braw1"))
-         .otherwise(F.col("braw2"))).alias("grk"),
-    ).filter(
-        (F.col("grk") == F.floor("r")) | (F.col("grk") == F.ceil("r"))
-    )
-    # percentile()'s interpolation: (ceil(r)-r)*v_floor + (r-floor(r))*v_ceil;
-    # when floor==ceil the single row carries full weight 1.
-    contrib = F.when(
-        F.floor("r") == F.ceil("r"), F.col("_v")
-    ).otherwise(
-        F.when(F.col("grk") == F.floor("r"), (F.ceil("r") - F.col("r")) * F.col("_v"))
-        .otherwise((F.col("r") - F.floor("r")) * F.col("_v"))
-    )
-    thr = picked.groupBy("cut").agg(F.sum(contrib).alias("thr"))
-    out = stats.select("n").crossJoin(
-        F.broadcast(
-            thr.groupBy().pivot("cut", [1, 2]).agg(F.first("thr"))
-        )
-    ).select(F.col("1").alias("p_lo"), F.col("2").alias("p_hi"))
-    # Materialize the 1-row threshold frame NOW, then release every cached
-    # intermediate: three registry queries run this inside a session, and
-    # un-released corpus-width `vals` partitions would accumulate across
-    # calls (same unpersist discipline as dedup.connected_components). The
-    # two scalars crossing the driver are the same class as the allowed
-    # scalar collects in ml.py.
+        if lower_key is None or higher_key is None:
+            out.append(vals.agg(F.percentile(v, p)).first()[0])
+        elif lower == higher or lower_key == higher_key:
+            out.append(lower_key)
+        else:
+            out.append((higher - pos) * lower_key + (pos - lower) * higher_key)
+    return _threshold_frame(df, *out)
+
+
+def _scalars(df: DataFrame, *aggs):
+    """The row of global aggregates ``aggs`` over ``df`` in one job: AQE
+    would run the exchange's map stage as a job of its own."""
+    conf = df.sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        row = out.collect()
+        return df.agg(*aggs).collect()[0]
     finally:
-        for f in (eb, stats, vals):
-            f.unpersist()
-    return df.sparkSession.createDataFrame(row, out.schema)
+        conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _threshold_frame(df: DataFrame, p_lo, p_hi) -> DataFrame:
+    """The 1-row (p_lo, p_hi) frame as a local relation of literals, which
+    the optimizer folds into the label expression."""
+    return df.sparkSession.sql(
+        "SELECT * FROM VALUES (CAST(:lo AS DOUBLE), CAST(:hi AS DOUBLE))"
+        " AS t(p_lo, p_hi)",
+        args={"lo": p_lo, "hi": p_hi},
+    )
 
 
 def approx_quantile_thresholds(
@@ -230,7 +174,7 @@ def approx_quantile_thresholds(
         f"approx_percentile({value_col}, array({probs[0]}, {probs[1]}), {accuracy})"
     )
     return (
-        fan_out(df.select(value_col))
+        df.select(value_col)
         .agg(pq.alias("_pq"))
         .select(
             F.col("_pq")[0].cast("double").alias("p_lo"),
@@ -260,7 +204,9 @@ def quantile_3way_label(
     1/accuracy of a cut point can flip label, nothing else.
 
     Their second pass is a broadcast cross-join of the 1-row threshold
-    frame — the scalar is never collected, so the plan is cluster-safe.
+    frame. The approximate path's thresholds stay in the plan; the exact
+    path collects its two scalars (and its sketch bounds and brackets)
+    into Python, so only O(n/accuracy) values ever leave the executors.
 
     ``bounded=True`` declares the input's distinct-value cardinality
     bounded (daily/calendar-grain frames: at most tens of thousands of

@@ -31,7 +31,7 @@ same bytes a 1000-executor merge would produce.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import hash64_md5
@@ -207,8 +207,6 @@ def qhist_log_quantiles(
     bad = [p for p in probs if not (0.0 < float(p) <= 1.0)]
     if bad:
         raise ValueError(f"probs must be in (0, 1], got {bad}")
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy(*group_cols)
         .orderBy("bucket_lo")
@@ -260,18 +258,22 @@ def qhist_psi(
     engines' partial aggregates), finishing scalar math in double;
     ln() runs on identical doubles in both engines. Output: (group...,
     n_buckets, psi) — one row per group, bounded by groups."""
-    from pyspark.sql import Window
-
     key = [c for c in sk_a.columns if c not in set(group_cols) | {"n"}]
     a = sk_a.withColumnRenamed("n", "n_a")
     b = sk_b.withColumnRenamed("n", "n_b")
-    j = (
-        a.join(b, [*group_cols, *key], "full")
-        .fillna(0, ["n_a", "n_b"])
-    )
+    j = a.join(b, [*group_cols, *key], "full").fillna(0, ["n_a", "n_b"])
+    return count_psi(j, group_cols, alpha)
+
+
+def count_psi(
+    counts: DataFrame, group_cols: list[str], alpha: float = 0.5
+) -> DataFrame:
+    """The PSI step of ``qhist_psi`` over one frame carrying both sides'
+    counts of each bucket (``n_a``, ``n_b``, zero where a side has none);
+    on one partition its windows and aggregate add no exchange."""
     wg = Window.partitionBy(*group_cols)
     j = (
-        j.withColumn("_ta", F.sum("n_a").over(wg))
+        counts.withColumn("_ta", F.sum("n_a").over(wg))
         .withColumn("_tb", F.sum("n_b").over(wg))
         .withColumn("_nb", F.count(F.lit(1)).over(wg))
     )

@@ -12,7 +12,8 @@ the Spark jobs each build runs:
 
 - bronze/events          raw events, partitioned by event_date (partition
                          pruning for every downstream temporal filter);
-                         3 jobs
+                         2 jobs once the events schema is known (the
+                         Catalog infers it on a process's first read)
 - silver/daily           per-day per-type stats in one conditional
                          aggregate per declared type (A1 pivot fusion);
                          2 jobs: the groupBy's map stage and the write

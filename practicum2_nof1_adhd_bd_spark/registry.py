@@ -3814,20 +3814,31 @@ def q_etl_audit_report(spark, sf_dir):
     from .operators import audit
 
     ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.avg("value").alias("value_mean"),
-        F.min("value").alias("value_min"),
-        F.stddev_samp("value").alias("value_std"),
-        F.count(F.lit(1)).alias("n_events"),
+    # three one-partition aggregates of events (this daily frame, the
+    # hourly audit's slots, the parity sketch); every check is a global
+    # aggregate of one of them, and the spine maps dates to means, no join
+    d = (
+        ev.groupBy(F.to_date("ts").alias("date"))
+        .agg(
+            F.avg("value").alias("value_mean"),
+            F.min("value").alias("value_min"),
+            F.stddev_samp("value").alias("value_std"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .coalesce(1)
     )
-    spine = d.agg(F.min("date").alias("d0"), F.max("date").alias("d1")).select(
-        F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("date")
+    day = F.when(F.col("date").isNotNull(), F.struct("date", "value_mean"))
+    unified = d.agg(
+        F.sequence(F.min("date"), F.max("date")).alias("days"),
+        F.map_from_entries(F.collect_list(day)).alias("means"),
+    ).select(
+        F.explode("days").alias("date"),
+        F.col("means")[F.col("date")].alias("value_mean"),
     )
-    unified = spine.join(d, "date", "left")
     return (
         audit.audit_daily_frame(d)
         .unionByName(audit.audit_value_ranges(d))
-        .unionByName(audit.audit_cross_layer(ev, d, unified))
+        .unionByName(audit.audit_cross_layer(d, d, unified, ts_col="date"))
         .unionByName(audit.audit_hourly_frame(ev))
         .unionByName(
             audit.sketch_drift_rows(
@@ -7435,8 +7446,9 @@ def q_qsketch_drift_psi(spark, sf_dir):
 
 def _day_parity_qsketch_psi(spark, sf_dir):
     """Shared construction for qsketch_drift_psi and the audit's drift
-    rows: log-grid value sketches of even vs odd calendar days per
-    event_type, PSI between them (sketches.qhist_psi)."""
+    rows: a log-grid value sketch per (event_type, day parity) on one
+    partition, its even/odd-day counts as two conditional sums per
+    bucket, and the PSI between them (sketches.count_psi) — no join."""
     ev = _cat(spark, sf_dir).events.filter(
         F.col("value").isNotNull() & F.col("ts").isNotNull()
     ).select(
@@ -7446,13 +7458,14 @@ def _day_parity_qsketch_psi(spark, sf_dir):
             "pmod(FLOOR(unix_timestamp(CAST(ts AS TIMESTAMP)) / 86400), 2)"
         ).alias("side"),
     )
-    a = sketches.qhist_log_sketch(
-        ev.filter(F.col("side") == 0), ["event_type"], "value"
+    sk = sketches.qhist_log_sketch(ev, ["event_type", "side"], "value")
+    counts = sk.coalesce(1).groupBy("event_type", "bucket_lo").agg(
+        *[
+            F.sum(F.when(F.col("side") == i, F.col("n")).otherwise(0)).alias(n)
+            for i, n in enumerate(["n_a", "n_b"])
+        ]
     )
-    b = sketches.qhist_log_sketch(
-        ev.filter(F.col("side") == 1), ["event_type"], "value"
-    )
-    return sketches.qhist_psi(a, b, ["event_type"])
+    return sketches.count_psi(counts, ["event_type"])
 
 
 @register(
@@ -10227,17 +10240,26 @@ def _register_medallion_silver() -> None:
         declared event type — the reference's 180x-speedup daily cache
         layer, ref stage_csv_aggregation.py dual parquet cache) are BUILT
         to /tmp through pipeline.build_bronze/build_silver once per events
-        fingerprint, then the silver table is read back and returned
-        as-is. The oracle recomputes the same stats from the raw events
-        with FILTER aggregates (NULLIF(count,0) mirrors silver's null on
-        a day without that type), so the layered write -> partitioned
-        read -> aggregate chain is attested end to end, not just pytest'd."""
+        fingerprint and build-code digest, then the silver table is read
+        back and returned as-is. The oracle recomputes the same stats
+        from the raw events with FILTER aggregates (NULLIF(count,0)
+        mirrors silver's null on a day without that type), so the layered
+        write -> partitioned read -> aggregate chain is attested end to
+        end, not just pytest'd."""
+        import hashlib
+        import inspect
         import os
         import tempfile
 
         from . import pipeline
 
+        # keyed by the events AND the code that builds the landing, so a
+        # changed build_bronze/build_silver lands a fresh copy
+        code = inspect.getsource(pipeline.build_bronze) + inspect.getsource(
+            pipeline.build_silver
+        ) + f"{pipeline.BRONZE_SCHEMA}{pipeline.SILVER_SCHEMA}{pipeline.EVENT_TYPES}"
         fp = _source_fingerprint(os.path.join(sf_dir, "events.parquet"))
+        fp += "_" + hashlib.sha256(code.encode()).hexdigest()[:12]
         prefix = os.path.join(
             tempfile.gettempdir(), "spark_graft_medallion_v1"
         )

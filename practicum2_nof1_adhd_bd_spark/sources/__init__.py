@@ -1,4 +1,4 @@
-from .readers import Catalog, read_csv_permissive, read_parquet_table
+from .readers import Catalog, read_csv_permissive
 from .xml_records import read_xml_records
 
-__all__ = ["Catalog", "read_csv_permissive", "read_parquet_table", "read_xml_records"]
+__all__ = ["Catalog", "read_csv_permissive", "read_xml_records"]

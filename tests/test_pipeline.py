@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from practicum2_nof1_adhd_bd_spark import pipeline
 from practicum2_nof1_adhd_bd_spark.operators import joins
+from practicum2_nof1_adhd_bd_spark.sources.readers import Catalog
 
 
 def test_medallion_end_to_end(spark, sf_dir, tmp_path):
@@ -130,6 +131,95 @@ def _count_jobs(spark, group, build) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bronze_job_budget(spark, sf_dir, tmp_path):
+    """Once the events schema is known, bronze runs two jobs: the
+    repartition's map stage and the write. Re-inferring the schema of
+    the unchanged events file (+1) exceeds the budget."""
+    Catalog(spark, sf_dir).events
+    out = str(tmp_path / "lake")
+    n_jobs = _count_jobs(
+        spark, "bronze-job-budget", lambda: pipeline.build_bronze(spark, sf_dir, out)
+    )
+    assert 0 < n_jobs <= 2, n_jobs
+
+
+def test_catalog_reuses_inferred_schema(spark, tmp_path):
+    """The first read of a file infers its schema; a second read of the
+    unchanged file runs no job, and a file rewritten at the same path
+    with another schema is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    cat = Catalog(spark, str(tmp_path))
+    assert _count_jobs(spark, "schema-first", lambda: cat.table("t")) > 0
+    second = {}
+    n_jobs = _count_jobs(
+        spark, "schema-reuse", lambda: second.update(df=cat.table("t"))
+    )
+    assert n_jobs == 0, n_jobs
+    assert second["df"].collect() == [(1,), (2,), (3,)]
+
+    pq.write_table(pa.table({"b": ["x", "y"], "c": [0.5, 1.5]}), path)
+    again = Catalog(spark, str(tmp_path)).table("t")
+    assert again.dtypes == [("b", "string"), ("c", "double")]
+    assert sorted(again.collect()) == [("x", 0.5), ("y", 1.5)]
+
+
+# query -> the most Spark jobs it may run, planned and written to the
+# noop sink at sf0.001 with every source schema already known
+MIX_JOB_BUDGETS = {
+    "quantile_3way_label": 6,
+    "etl_audit_report": 8,
+    "temporal_instability_scores": 4,
+}
+
+
+@pytest.mark.parametrize("query", sorted(MIX_JOB_BUDGETS))
+def test_mix_job_budgets(spark, sf_dir, query):
+    """The analytics mix's three heaviest queries stay within their job
+    budgets: the exact quantile in two one-job scans, the audit from
+    three one-partition aggregates, temporal instability on one
+    partition. A round-robin fan-out, a refined path with joined
+    threshold frames, per-check audit unions or a joined segment
+    assignment each exceed them."""
+    from practicum2_nof1_adhd_bd_spark.registry import QUERIES
+
+    def run():
+        QUERIES[query](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()
+    spark.catalog.clearCache()
+    n_jobs = _count_jobs(spark, f"mix-budget-{query}", run)
+    assert 0 < n_jobs <= MIX_JOB_BUDGETS[query], n_jobs
+
+
+def test_medallion_landing_keyed_by_build_code(spark, sf_dir, tmp_path, monkeypatch):
+    """medallion_silver_scan lands bronze and silver once per events file
+    and build code: a changed digest of the code lands a fresh
+    directory under the same prefix instead of reusing the old one."""
+    import glob
+    import tempfile
+
+    from practicum2_nof1_adhd_bd_spark.registry import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def landings():
+        return set(glob.glob(str(tmp_path / "spark_graft_medallion_v1_*")))
+
+    want = QUERIES["medallion_silver_scan"](spark, sf_dir).collect()
+    first = landings()
+    assert len(first) == 1
+    QUERIES["medallion_silver_scan"](spark, sf_dir).collect()
+    assert landings() == first
+    monkeypatch.setattr(pipeline, "SILVER_SCHEMA", pipeline.SILVER_SCHEMA + " ")
+    got = QUERIES["medallion_silver_scan"](spark, sf_dir).collect()
+    assert len(landings() - first) == 1
+    assert sorted(got) == sorted(want)
 
 
 def test_silver_job_budget(spark, sf_dir, tmp_path):

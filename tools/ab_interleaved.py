@@ -14,9 +14,9 @@ The OLD package is imported under a RENAMED copy (every intra-package
 import is relative — verified by grep — so the rename is transparent);
 a plain two-path import would break the moment any old function does a
 lazy relative import, which re-resolves through sys.modules and would
-silently pick up the NEW module. Only valid for queries with no Python
-UDFs (both versions' DataFrame plans are built from live module objects;
-the JVM sees only expressions).
+silently pick up the NEW module. The renamed copy is put on the Python
+workers' PYTHONPATH too (the session starts after it is loaded), so
+queries with pandas UDFs run on both sides.
 
 ``--pipeline`` runs the same interleaving over the medallion instead of
 registry queries: each pair is one old and one new
@@ -28,13 +28,20 @@ untimed warm builds' silver, unified, labeled and segments tables are
 compared first (same columns and types, equal rows after sorting), so a
 timing is read only for builds with equal outputs.
 
+In query mode each run's Spark jobs are counted through a job group
+too, and each version's rows are collected once, untimed, and compared
+after perfbench's normalisation (columns sorted by name, floats to 9
+dp, rows sorted), so a mix A/B attributes its gain by jobs and times only
+queries whose outputs are equal.
+
 Usage:
   python tools/ab_interleaved.py --old /tmp/repo_old [-n 5] q1 q2 ...
   python tools/ab_interleaved.py --old /tmp/repo_old --pipeline [-n 7]
 
 Prints one JSON line:
   {query: {"old": [...], "new": [...], "pair_ratios": [...],
-           "median_pair_ratio": r}}   (ratio > 1 -> NEW is faster)
+           "median_pair_ratio": r, "jobs": {"old": n, "new": n}},
+   "identical": {query: bool}}   (ratio > 1 -> NEW is faster)
   --pipeline: {"pipeline": {"identical": {table: bool},
                "old": {layer: [s...]}, "new": {...},
                "jobs": {"old": {layer: n}, "new": {...}},
@@ -68,6 +75,11 @@ def _load_old(old_root: str, module: str):
         os.path.join(old_root, PKG), os.path.join(stage, OLD_PKG)
     )
     sys.path.insert(0, stage)
+    # Python workers start from the JVM's environment: let them import
+    # the renamed package too, for queries with pandas UDFs
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [stage, os.environ.get("PYTHONPATH")])
+    )
     return importlib.import_module(f"{OLD_PKG}.{module}")
 
 
@@ -222,26 +234,46 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    def run(fn) -> float:
-        t0 = time.time()
-        fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        spark.catalog.clearCache()
-        return round(dt, 3)
+    sys.path.insert(0, os.path.join(here, "perfbench"))
+    from workloads import normalize
 
-    out = {}
+    sc = spark.sparkContext
+
+    def run(fn, group: str) -> tuple[float, int]:
+        """Seconds and Spark jobs of one query, planned and written to
+        the noop sink under the job group ``group``."""
+        sc.setJobGroup(group, group)
+        try:
+            t0 = time.time()
+            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time.time() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()
+        return round(dt, 3), len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def rows(fn) -> list[tuple]:
+        df = fn(spark, args.sf_dir)
+        out = normalize(df.collect(), df.columns)
+        spark.catalog.clearCache()
+        return out
+
+    out, identical = {}, {}
     for name in args.names:
         # one untimed warm pass per version: JIT + codegen cache for BOTH
         # plan shapes before any timed pair
-        spark.sparkContext.setJobDescription(f"ab warm: {name}")
-        run(old_q[name])
-        run(new_q[name])
-        olds, news = [], []
+        identical[name] = rows(old_q[name]) == rows(new_q[name])
+        run(old_q[name], f"ab warm old: {name}")
+        run(new_q[name], f"ab warm new: {name}")
+        secs = {"old": [], "new": []}
+        jobs = {}
+        sides = [("old", old_q), ("new", new_q)]
         for i in range(args.n):
-            spark.sparkContext.setJobDescription(f"ab old[{i}]: {name}")
-            olds.append(run(old_q[name]))
-            spark.sparkContext.setJobDescription(f"ab new[{i}]: {name}")
-            news.append(run(new_q[name]))
+            for side, q in sides if i % 2 == 0 else sides[::-1]:
+                dt, jobs[side] = run(q[name], f"ab {side}[{i}]: {name}")
+                secs[side].append(dt)
+        olds, news = secs["old"], secs["new"]
         ratios = [round(o / n, 3) for o, n in zip(olds, news)]
         out[name] = {
             "old": olds,
@@ -250,14 +282,17 @@ def main() -> None:
             "new_median": statistics.median(news),
             "pair_ratios": ratios,
             "median_pair_ratio": round(statistics.median(ratios), 3),
+            "jobs": jobs,
         }
         print(
             f"# {name}: old_med={out[name]['old_median']:.2f} "
             f"new_med={out[name]['new_median']:.2f} "
-            f"median_pair_ratio={out[name]['median_pair_ratio']:.2f}",
+            f"median_pair_ratio={out[name]['median_pair_ratio']:.2f} "
+            f"jobs old={jobs['old']} new={jobs['new']} "
+            f"identical={identical[name]}",
             file=sys.stderr,
         )
-    print(json.dumps(out))
+    print(json.dumps({**out, "identical": identical}))
 
 
 if __name__ == "__main__":
