@@ -16,25 +16,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _rows(base: DataFrame, *checks: tuple) -> DataFrame:
-    """One report row per ``(check, severity, metric, threshold)`` of the
-    1-row ``base`` in one projection: per-check union branches would each
-    get a column-pruned aggregate, so each would rerun its own exchange."""
-    return base.select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(check).alias("check_name"),
-                        severity.alias("severity"),
-                        F.round(metric, 6).cast("double").alias("metric"),
-                        F.lit(float(threshold)).alias("threshold"),
-                    )
-                    for check, severity, metric, threshold in checks
-                ]
+def _rows(frame: DataFrame, *checks: tuple) -> DataFrame:
+    """One report row per ``(check, severity, metric, threshold)``, whose
+    severity and metric are aggregate expressions over ``frame``: every
+    check comes from ONE global aggregate of it. Per-check aggregates or
+    union branches would each get a column-pruned copy of ``frame``, and
+    each copy would rerun the aggregate that built it."""
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(check).alias("check_name"),
+                severity.alias("severity"),
+                F.round(metric, 6).cast("double").alias("metric"),
+                F.lit(float(threshold)).alias("threshold"),
             )
-        )
+            for check, severity, metric, threshold in checks
+        ]
     )
+    return frame.agg(rows.alias("_rows")).select(F.inline("_rows"))
+
+
+def _over(metric, limit, severity: str = "WARNING"):
+    return F.when(metric > limit, severity).otherwise("OK")
 
 
 def audit_daily_frame(
@@ -56,47 +59,43 @@ def audit_daily_frame(
       smell) must stay under threshold (WARNING, :458-480)
     - fabrication_zero_std: % days with std == 0 under threshold (:458-480)
     """
-    base = daily.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct(date_col).alias("n_dates"),
-        F.min(date_col).alias("d0"),
-        F.max(date_col).alias("d1"),
-        F.avg((F.col(min_col) == F.col(mean_col)).cast("double")).alias("pct_min_eq_mean"),
-        F.avg((F.col(std_col) == 0).cast("double")).alias("pct_zero_std"),
+    return _rows(
+        daily,
+        *_daily_frame_checks(
+            date_col, mean_col, min_col, std_col, fabrication_pct_max, missing_pct_max
+        ),
     )
 
-    dup = (
-        "duplicate_dates",
-        F.when(F.col("n_rows") > F.col("n_dates"), "CRITICAL").otherwise("OK"),
-        (F.col("n_rows") - F.col("n_dates")).cast("double"),
-        0.0,
-    )
-    span_missing = (
-        (F.datediff("d1", "d0") + 1 - F.col("n_dates"))
-        * 100.0
-        / (F.datediff("d1", "d0") + 1)
-    )
-    span = (
-        "span_missing_pct",
-        F.when(span_missing > missing_pct_max, "WARNING").otherwise("OK"),
-        span_missing,
-        missing_pct_max,
-    )
-    fab_mm = (
-        "fabrication_min_eq_mean_pct",
-        F.when(F.col("pct_min_eq_mean") * 100 > fabrication_pct_max, "WARNING")
-        .otherwise("OK"),
-        F.col("pct_min_eq_mean") * 100,
-        fabrication_pct_max,
-    )
-    fab_std = (
-        "fabrication_zero_std_pct",
-        F.when(F.col("pct_zero_std") * 100 > fabrication_pct_max, "WARNING")
-        .otherwise("OK"),
-        F.col("pct_zero_std") * 100,
-        fabrication_pct_max,
-    )
-    return _rows(base, dup, span, fab_mm, fab_std)
+
+def _daily_frame_checks(
+    date_col, mean_col, min_col, std_col, fabrication_pct_max=10.0, missing_pct_max=5.0
+):
+    n_rows, n_dates = F.count(F.lit(1)), F.countDistinct(date_col)
+    span = F.datediff(F.max(date_col), F.min(date_col)) + 1
+    missing = (span - n_dates) * 100.0 / span
+    min_eq_mean = F.avg((F.col(min_col) == F.col(mean_col)).cast("double")) * 100
+    zero_std = F.avg((F.col(std_col) == 0).cast("double")) * 100
+    return [
+        (
+            "duplicate_dates",
+            _over(n_rows, n_dates, "CRITICAL"),
+            (n_rows - n_dates).cast("double"),
+            0.0,
+        ),
+        ("span_missing_pct", _over(missing, missing_pct_max), missing, missing_pct_max),
+        (
+            "fabrication_min_eq_mean_pct",
+            _over(min_eq_mean, fabrication_pct_max),
+            min_eq_mean,
+            fabrication_pct_max,
+        ),
+        (
+            "fabrication_zero_std_pct",
+            _over(zero_std, fabrication_pct_max),
+            zero_std,
+            fabrication_pct_max,
+        ),
+    ]
 
 
 def audit_value_ranges(
@@ -113,20 +112,17 @@ def audit_value_ranges(
     the F1/F2 range filters), and the % of single-sample days — the
     reference's per-day ``is_single_sample`` flag (:530-535) — is an
     always-emitted INFO row (informational, never gating)."""
-    base = daily.agg(
-        F.avg(
-            ((F.col(mean_col) < lo) | (F.col(mean_col) > hi)).cast("double")
-        ).alias("pv"),
-        F.avg((F.col(n_col) == 1).cast("double")).alias("ps"),
-    )
-    viol = (
-        "range_violation_pct",
-        F.when(F.col("pv") * 100 > viol_pct_max, "CRITICAL").otherwise("OK"),
-        F.col("pv") * 100,
-        viol_pct_max,
-    )
-    single = ("single_sample_days_pct", F.lit("INFO"), F.col("ps") * 100, 0.0)
-    return _rows(base, viol, single)
+    return _rows(daily, *_value_range_checks(mean_col, n_col, lo, hi, viol_pct_max))
+
+
+def _value_range_checks(mean_col, n_col, lo=30.0, hi=220.0, viol_pct_max=10.0):
+    mean = F.col(mean_col)
+    viol = F.avg(((mean < lo) | (mean > hi)).cast("double")) * 100
+    single = F.avg((F.col(n_col) == 1).cast("double")) * 100
+    return [
+        ("range_violation_pct", _over(viol, viol_pct_max, "CRITICAL"), viol, viol_pct_max),
+        ("single_sample_days_pct", F.lit("INFO"), single, 0.0),
+    ]
 
 
 def audit_cross_layer(
@@ -160,26 +156,50 @@ def audit_cross_layer(
     scalars = e_days.unionByName(d_days, allowMissingColumns=True).unionByName(
         u_days, allowMissingColumns=True
     )
-    base = scalars.coalesce(1).agg(*[F.max(c).alias(c) for c in scalars.columns])
-    ed = (
-        "xlayer_events_vs_daily_days",
-        F.when(F.col("_e") != F.col("_d"), "CRITICAL").otherwise("OK"),
-        F.abs(F.col("_e") - F.col("_d")).cast("double"),
-        0.0,
+    return _rows(
+        scalars.coalesce(1),
+        *_cross_layer_checks(*[F.max(c) for c in ("_e", "_d", "_u", "_u_data")]),
     )
-    du = (
-        "xlayer_daily_vs_unified_days",
-        F.when(F.col("_u") < F.col("_d"), "WARNING").otherwise("OK"),
-        (F.col("_u") - F.col("_d")).cast("double"),
-        0.0,
+
+
+def _cross_layer_checks(e_days, d_days, u_days, u_data):
+    return [
+        (
+            "xlayer_events_vs_daily_days",
+            F.when(e_days != d_days, "CRITICAL").otherwise("OK"),
+            F.abs(e_days - d_days).cast("double"),
+            0.0,
+        ),
+        (
+            "xlayer_daily_vs_unified_days",
+            F.when(u_days < d_days, "WARNING").otherwise("OK"),
+            (u_days - d_days).cast("double"),
+            0.0,
+        ),
+        ("xlayer_unified_coverage_pct", F.lit("INFO"), u_data * 100.0 / u_days, 0.0),
+    ]
+
+
+def audit_daily_report(daily: DataFrame) -> DataFrame:
+    """The rows of ``audit_daily_frame``, ``audit_value_ranges`` and
+    ``audit_cross_layer`` (default columns and thresholds) for a daily
+    frame with one row per date, aggregated from events, in one aggregate
+    of it. The frame's dates are the event days, and its date spine
+    (every day from the first date to the last, with the mean of its
+    date) is the unified layer."""
+    date, mean = F.col("date"), F.col("value_mean")
+    xlayer = _cross_layer_checks(
+        F.countDistinct(date),
+        F.count(F.lit(1)),
+        F.datediff(F.max(date), F.min(date)) + 1,
+        F.count(F.when(date.isNotNull() & mean.isNotNull(), 1)),
     )
-    cov = (
-        "xlayer_unified_coverage_pct",
-        F.lit("INFO"),
-        F.col("_u_data") * 100.0 / F.col("_u"),
-        0.0,
+    return _rows(
+        daily,
+        *_daily_frame_checks("date", "value_mean", "value_min", "value_std"),
+        *_value_range_checks("value_mean", "n_events"),
+        *xlayer,
     )
-    return _rows(base, ed, du, cov)
 
 
 def reaggregation_consistency(
@@ -249,38 +269,32 @@ def audit_hourly_frame(
     # slots are distinct (day, hour) pairs, so distinct counts become set
     # sizes and row counts: no Expand, so no exchange on one partition
     d, h, n = F.col("d"), F.col("h"), F.col("n")
-    base = slots.agg(
-        F.size(F.collect_set(h)).alias("h24"),
-        F.count(F.when(d.isNotNull() & h.isNotNull(), n)).alias("slots"),
-        F.size(F.collect_set(d)).alias("ndays"),
-        F.sum((h == 23).cast("bigint") * n).alias("c23"),
-        F.sum((h == 0).cast("bigint") * n).alias("c0"),
+    n_slots = F.count(F.when(d.isNotNull() & h.isNotNull(), n))
+    n_days = F.size(F.collect_set(d))
+    c23, c0 = (F.sum((h == hour).cast("bigint") * n) for hour in (23, 0))
+    cov_pct = F.size(F.collect_set(h)) * 100.0 / 24
+    empty_pct = (n_days * 24 - n_slots) * 100.0 / (n_days * 24)
+    return _rows(
+        slots,
+        (
+            "hour_coverage_pct",
+            F.when(cov_pct < hour_cov_min_pct, "WARNING").otherwise("OK"),
+            cov_pct,
+            hour_cov_min_pct,
+        ),
+        (
+            "empty_hour_slots_pct",
+            _over(empty_pct, empty_slot_pct_max),
+            empty_pct,
+            empty_slot_pct_max,
+        ),
+        (
+            "midnight_wrap_imbalance_pct",
+            F.lit("INFO"),
+            F.abs(c23 - c0) * 100.0 / F.greatest(c23 + c0, F.lit(1)),
+            0.0,
+        ),
     )
-    cov_pct = F.col("h24") * 100.0 / 24
-    cov = (
-        "hour_coverage_pct",
-        F.when(cov_pct < hour_cov_min_pct, "WARNING").otherwise("OK"),
-        cov_pct,
-        hour_cov_min_pct,
-    )
-    empty_pct = (
-        (F.col("ndays") * 24 - F.col("slots")) * 100.0 / (F.col("ndays") * 24)
-    )
-    empty = (
-        "empty_hour_slots_pct",
-        F.when(empty_pct > empty_slot_pct_max, "WARNING").otherwise("OK"),
-        empty_pct,
-        empty_slot_pct_max,
-    )
-    wrap = (
-        "midnight_wrap_imbalance_pct",
-        F.lit("INFO"),
-        F.abs(F.col("c23") - F.col("c0"))
-        * 100.0
-        / F.greatest(F.col("c23") + F.col("c0"), F.lit(1)),
-        0.0,
-    )
-    return _rows(base, cov, empty, wrap)
 
 
 def audit_exit_code(report: DataFrame) -> int:

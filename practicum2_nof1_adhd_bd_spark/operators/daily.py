@@ -5,6 +5,11 @@ accumulators / pandas groupby (ref stage_csv_aggregation.py:418-431,611-624,
 937-941). Here each is a single ``groupBy(to_date(ts))`` — map-side partial
 aggregation makes these shuffle only pre-aggregated partials, so they scale
 linearly with executor count at 100 TB. All stats stay JVM-side.
+
+``day_frame`` is the one daily table of the wearable metrics: silver's
+per-type columns and the all-type totals, which ``pipeline.build_silver``
+and the registry's day-grain queries select from instead of each writing
+its own aggregate.
 """
 
 from __future__ import annotations
@@ -48,6 +53,37 @@ def daily_stats(
         F.max(value_col).alias("value_max"),
         std.alias("value_std"),
     )
+
+
+def day_frame(
+    events: DataFrame, date: Column, keys: list[str], types: tuple[str, ...]
+) -> DataFrame:
+    """The daily metrics of silver and the wearable queries, one row per
+    ``date`` (and ``keys``) in one conditional aggregate:
+
+    - per event type ``t`` in ``types``: ``<t>_n`` (null on a day without
+      ``t``), ``<t>_mean`` (6 dp) and ``<t>_sum`` (2 dp);
+    - over all types: ``n_events``, ``value_mean`` (6 dp), ``value_sum``
+      (2 dp) and, when the events carry ``user_id``, ``n_users``.
+
+    Callers select what they read; column pruning drops the rest of the
+    aggregate, so a projection costs what its own aggregate would."""
+    aggs = [
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.avg("value"), 6).alias("value_mean"),
+        F.round(F.sum("value"), 2).alias("value_sum"),
+    ]
+    if "user_id" in events.columns:
+        aggs.append(F.countDistinct("user_id").alias("n_users"))
+    for t in types:
+        is_t = F.col("event_type") == t
+        value = F.when(is_t, F.col("value"))
+        aggs += [
+            F.sum(F.when(is_t, F.lit(1))).alias(f"{t}_n"),
+            F.round(F.avg(value), 6).alias(f"{t}_mean"),
+            F.round(F.sum(value), 2).alias(f"{t}_sum"),
+        ]
+    return events.groupBy(date.alias("date"), *keys).agg(*aggs)
 
 
 def daily_median_stats(

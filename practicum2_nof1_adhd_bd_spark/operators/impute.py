@@ -26,15 +26,15 @@ for every segment, so each segment's chain is independently seeded with 42
 — which is exactly the embarrassingly-parallel shape a Spark groupBy needs.
 Runs as grouped applyInPandas, one group per segment; thousands of segments
 impute concurrently. The global-median fallback is computed AFTER the
-per-segment pass (over imputed values, as the reference does) and joined
-back as a broadcast scalar row — no driver-side loop over segments.
+per-segment pass (over imputed values, as the reference does) by a
+whole-frame window over its output — no driver-side loop over segments.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -149,8 +149,11 @@ def impute_per_segment(
       column -> 0.0.
 
     Output schema = input schema with feature columns imputed (doubles, no
-    nulls). One Arrow batch per segment; the median fallback is a single
-    scalar row broadcast back, so no driver-side loop over segments.
+    nulls). One Arrow batch per segment. The median fallback is the
+    ``percentile`` aggregate over a whole-frame window of the imputed
+    rows, so the grouped UDF runs once. The window runs in one task (the
+    frames imputed here are daily-grain), with no exchange when the input
+    is read on one partition, and no driver-side loop over segments.
     """
     other_cols = [c for c in df.columns if c not in feature_cols]
     out_fields = ", ".join(
@@ -183,15 +186,10 @@ def impute_per_segment(
 
     # global post-MICE median fallback for rows the per-segment pass left
     # missing (small segments); all-NaN column -> 0.0
-    medians = imputed.agg(
-        *[
-            F.coalesce(
-                F.expr(f"percentile(`{c}`, 0.5)"), F.lit(0.0)
-            ).alias(f"_med_{c}")
+    whole = Window.partitionBy()
+    return imputed.withColumns(
+        {
+            c: F.coalesce(F.col(c), F.percentile(c, 0.5).over(whole), F.lit(0.0))
             for c in feature_cols
-        ]
+        }
     )
-    filled = imputed.crossJoin(F.broadcast(medians))
-    for c in feature_cols:
-        filled = filled.withColumn(c, F.coalesce(F.col(c), F.col(f"_med_{c}")))
-    return filled.drop(*[f"_med_{c}" for c in feature_cols])

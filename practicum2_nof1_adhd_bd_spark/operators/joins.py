@@ -4,8 +4,9 @@ The reference merges daily domain tables with pandas merge/concat
 (ref stage_unify_daily.py:103-216,441-460). Here each pattern is a reusable
 DataFrame combinator. Scale notes:
 
-- Date-spine joins key on low-cardinality dates; at 100 TB the daily tables
-  are tiny relative to events, so spine joins broadcast.
+- The date spine keys on low-cardinality dates; at 100 TB the daily tables
+  are tiny relative to events, so the spine merges them on one partition
+  with one union and one aggregate instead of joins.
 - The coalescing merge is expressed as anti-join + unionByName, which Catalyst
   plans as a broadcast anti-join when the preferred side is small.
 - Missing-day detection uses sequence+explode+anti-join, never a driver loop.
@@ -19,22 +20,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def date_spine(dfs: list[DataFrame], date_col: str = "date") -> DataFrame:
-    """J2 — distinct union of all dates across domain tables
-    (ref stage_unify_daily.py:441-449)."""
-    spines = [df.select(F.col(date_col).cast("date").alias(date_col)) for df in dfs]
-    return reduce(DataFrame.unionByName, spines).distinct()
+def spine_merge(tables: list[DataFrame], date_col: str = "date") -> DataFrame:
+    """J2 — every domain table on the date spine, the distinct union of
+    their dates (ref stage_unify_daily.py:441-460): the rows of left-joining
+    each table onto the spine, NaNs preserved (no ffill). Each table holds
+    at most one row per date and the value columns are disjoint.
 
-
-def spine_left_join(
-    spine: DataFrame, tables: list[DataFrame], date_col: str = "date"
-) -> DataFrame:
-    """J2 — left-join each domain table onto the date spine
-    (ref stage_unify_daily.py:450-460). NaNs preserved (no ffill)."""
-    out = spine
-    for t in tables:
-        out = out.join(t, on=date_col, how="left")
-    return out
+    One union and one aggregate on one partition: each table contributes
+    its values on its own dates and null elsewhere, so the max of a column
+    per date is the one value the left join would attach. A null date is
+    a spine row of nulls, as it matches nothing in the join. Daily tables
+    are date-grain, so one partition holds them and the aggregate needs no
+    exchange; two spine joins would shuffle each table twice."""
+    date = F.col(date_col)
+    parts = [t.withColumn(date_col, date.cast("date")) for t in tables]
+    values = [c for t in tables for c in t.columns if c != date_col]
+    return (
+        reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        .coalesce(1)
+        .groupBy(date_col)
+        .agg(*[F.max(F.when(date.isNotNull(), F.col(c))).alias(c) for c in values])
+    )
 
 
 def coalescing_merge(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import clip
+from ..sources.readers import literal_frame
 
 
 def segment_zscore(
@@ -136,6 +137,12 @@ def refined_exact_quantile_thresholds(
     return _threshold_frame(df, *out)
 
 
+def _threshold_frame(df: DataFrame, p_lo, p_hi) -> DataFrame:
+    """The 1-row (p_lo, p_hi) frame of literals, which the optimizer folds
+    into the label expression."""
+    return literal_frame(df.sparkSession, "p_lo double, p_hi double", [(p_lo, p_hi)])
+
+
 def _scalars(df: DataFrame, *aggs):
     """The row of global aggregates ``aggs`` over ``df`` in one job: AQE
     would run the exchange's map stage as a job of its own."""
@@ -146,16 +153,6 @@ def _scalars(df: DataFrame, *aggs):
         return df.agg(*aggs).collect()[0]
     finally:
         conf.set("spark.sql.adaptive.enabled", aqe)
-
-
-def _threshold_frame(df: DataFrame, p_lo, p_hi) -> DataFrame:
-    """The 1-row (p_lo, p_hi) frame as a local relation of literals, which
-    the optimizer folds into the label expression."""
-    return df.sparkSession.sql(
-        "SELECT * FROM VALUES (CAST(:lo AS DOUBLE), CAST(:hi AS DOUBLE))"
-        " AS t(p_lo, p_hi)",
-        args={"lo": p_lo, "hi": p_hi},
-    )
 
 
 def approx_quantile_thresholds(

@@ -133,7 +133,7 @@ def provenance_manifest(
     # serialize the biggest table's md5 onto one core; at real scale the
     # scans already fan out and this is a no-op. Net exchange count is
     # 2 (this + the 10-rows-per-partition agg) vs 2N before.
-    from ..sources.readers import fan_out
+    from ..sources.readers import fan_out, literal_frame
 
     allr = fan_out(allr)
     digest = "CAST(conv(substring(md5(_row), 1, 15), 16, 10) AS BIGINT)"
@@ -143,8 +143,8 @@ def provenance_manifest(
             "content_digest"
         ),
     )
-    spine = parts[0].sparkSession.createDataFrame(
-        [(n,) for n in names], "table_name string"
+    spine = literal_frame(
+        parts[0].sparkSession, "table_name string", [(n,) for n in names]
     )
     return spine.join(F.broadcast(agg), "table_name", "left").select(
         "table_name",

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import hash64_md5
+from ..sources.readers import literal_frame
 
 HASH_SPACE = float(1 << 60)  # hash64_md5 range [0, 2^60)
 
@@ -219,9 +220,7 @@ def qhist_log_quantiles(
         .withColumn("_before", F.col("_cum") - F.col("n"))
     )
     probs_df = F.broadcast(
-        sketch.sparkSession.createDataFrame(
-            [(float(p),) for p in probs], "p double"
-        )
+        literal_frame(sketch.sparkSession, "p double", [(p,) for p in probs])
     )
     rank = F.ceil(F.col("p") * F.col("_total"))
     lo = F.col("bucket_lo")

@@ -14,15 +14,16 @@ the Spark jobs each build runs:
                          pruning for every downstream temporal filter);
                          2 jobs once the events schema is known (the
                          Catalog infers it on a process's first read)
-- silver/daily           per-day per-type stats in one conditional
-                         aggregate per declared type (A1 pivot fusion);
-                         2 jobs: the groupBy's map stage and the write
-- gold/unified           silver keyed by date. The date-spine join (J2,
-                         joins.spine_left_join) unifies SEVERAL daily
-                         domains onto one spine; silver is a single domain
-                         already one row per date, so joining its distinct
-                         dates back onto it would be an identity costing two
-                         shuffles, and the layer is silver as written
+- silver/daily           per-day per-type stats, the per-type columns of
+                         daily.day_frame's one conditional aggregate (A1
+                         pivot fusion); 2 jobs: the groupBy's map stage
+                         and the write
+- gold/unified           silver keyed by date. The date spine (J2,
+                         joins.spine_merge) unifies SEVERAL daily domains
+                         onto one spine; silver is a single domain already
+                         one row per date, so its spine would be an
+                         identity costing a shuffle, and the layer is
+                         silver as written
 - gold/labeled           whole-frame z-scores + PBSI composite + exact
                          window-percentile labels (A7/A8,
                          build_pbsi.py:139-176)
@@ -53,7 +54,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators import labels, windows
+from .operators import daily, labels, windows
 from .sources.readers import Catalog
 
 # sorted; gold's composite takes the first three (see the module docstring)
@@ -80,23 +81,16 @@ def build_bronze(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
 
 def build_silver(spark: SparkSession, bronze_path: str, out_dir: str) -> str:
     """Daily per-type metrics from bronze in one aggregate (A1/A4 pivot
-    fusion; S7 daily cache — the reference's 180x-speedup layer): one row
-    per date, ``<type>_n``/``_mean``/``_sum`` per declared type, null on
-    a day without that type."""
+    fusion; S7 daily cache — the reference's 180x-speedup layer): the
+    per-type columns of ``daily.day_frame``, one row per date,
+    ``<type>_n``/``_mean``/``_sum`` per declared type, null on a day
+    without that type."""
     path = os.path.join(out_dir, "silver", "daily")
     ev = spark.read.schema(BRONZE_SCHEMA).parquet(bronze_path)
-    aggs = []
-    for t in EVENT_TYPES:
-        is_t = F.col("event_type") == t
-        value = F.when(is_t, F.col("value"))
-        aggs += [
-            F.sum(F.when(is_t, F.lit(1))).alias(f"{t}_n"),
-            F.round(F.avg(value), 6).alias(f"{t}_mean"),
-            F.round(F.sum(value), 2).alias(f"{t}_sum"),
-        ]
-    ev.groupBy(F.col("event_date").alias("date")).agg(*aggs).write.mode(
-        "overwrite"
-    ).parquet(path)
+    cols = [f"{t}_{m}" for t in EVENT_TYPES for m in ("n", "mean", "sum")]
+    daily.day_frame(ev, F.col("event_date"), [], EVENT_TYPES).select(
+        "date", *cols
+    ).write.mode("overwrite").parquet(path)
     return path
 
 

@@ -23,7 +23,8 @@ from .functions import skew
 from .operators import biomarkers, daily, dedup, drift, folds, impute, joins, labels
 from .operators import metrics, multimodal, similarity as sim, sketches
 from .operators import textops, windows
-from .sources.readers import Catalog
+from .pipeline import EVENT_TYPES
+from .sources.readers import Catalog, literal_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -41,6 +42,15 @@ def register(name: str, sql: str | None = None):
 
 def _cat(spark: SparkSession, sf_dir: str) -> Catalog:
     return Catalog(spark, sf_dir)
+
+
+def _days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events' ``daily.day_frame`` by calendar day, read on one
+    partition as gold reads its inputs: the wearable queries select their
+    daily metrics from it, and their windows and grouped steps over it
+    need no exchange."""
+    ev = _cat(spark, sf_dir).events
+    return daily.day_frame(ev, F.to_date("ts"), [], EVENT_TYPES).coalesce(1)
 
 
 _LAND_REAP_AGE_S = 3 * 3600.0
@@ -175,14 +185,12 @@ def q_daily_median_stats(spark, sf_dir):
     return daily.daily_median_stats(ev)
 
 
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
 @register(
     "daily_pivot_sum",
     "SELECT CAST(ts AS DATE) AS date, "
     + ", ".join(
         f"round(coalesce(sum(value) FILTER (WHERE event_type = '{t}'), 0), 2) AS {t}"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     )
     + " FROM events GROUP BY CAST(ts AS DATE)",
 )
@@ -190,7 +198,7 @@ def q_daily_pivot_sum(spark, sf_dir):
     """A11: pivot category -> per-day sum columns
     (ref sleep_from_extracted.py:414-431)."""
     ev = _cat(spark, sf_dir).events
-    return daily.daily_pivot_sum(ev, "ts", "event_type", "value", _EVENT_TYPES)
+    return daily.daily_pivot_sum(ev, "ts", "event_type", "value", list(EVENT_TYPES))
 
 
 @register(
@@ -311,8 +319,8 @@ def q_outer_join_daily(spark, sf_dir):
     """,
 )
 def q_date_spine_unify(spark, sf_dir):
-    """J2: date-spine left joins across domain dailies
-    (ref stage_unify_daily.py:441-460)."""
+    """J2: the date spine across domain dailies, as left joins would
+    build it (ref stage_unify_daily.py:441-460)."""
     c = _cat(spark, sf_dir)
     od = c.orders.groupBy(F.to_date("o_orderdate").alias("date")).agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -322,8 +330,7 @@ def q_date_spine_unify(spark, sf_dir):
         F.count(F.lit(1)).alias("n_lines"),
         F.round(F.sum("l_quantity"), 2).alias("qty_total"),
     )
-    spine = joins.date_spine([od, ld])
-    return joins.spine_left_join(spine, [od, ld])
+    return joins.spine_merge([od, ld])
 
 
 _VENDOR_A = """
@@ -408,7 +415,7 @@ def q_union_sum_fusion(spark, sf_dir):
     "SELECT date, "
     + ", ".join(
         f"nullif(count(CASE WHEN event_type = '{t}' THEN 1 END), 0) AS n_{t}"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     )
     + " FROM base GROUP BY date",
 )
@@ -421,7 +428,7 @@ def q_nway_outer_merge(spark, sf_dir):
         ev.filter(F.col("event_type") == t)
         .groupBy(F.to_date("ts").alias("date"))
         .agg(F.count(F.lit(1)).alias(f"n_{t}"))
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     ]
     return joins.nway_outer_merge(dfs)
 
@@ -474,11 +481,7 @@ def q_point_in_interval(spark, sf_dir):
     """J9: assign rows to fixed calendar intervals
     (ref src/biomarkers/segmentation.py:98-156)."""
     ev = _cat(spark, sf_dir).events
-    iv = spark.createDataFrame(
-        [(s, e) for s, e in _INTERVALS], "start_date string, end_date string"
-    ).select(
-        F.col("start_date").cast("date"), F.col("end_date").cast("date")
-    )
+    iv = literal_frame(spark, "start_date date, end_date date", _INTERVALS)
     e = ev.select(F.to_date("ts").alias("d"), "value")
     joined = joins.point_in_interval_join(e, iv, "d")
     return joined.groupBy("start_date", "end_date").agg(
@@ -576,10 +579,7 @@ _DAILY_MEAN = """
 """
 
 def _daily_mean(spark, sf_dir) -> DataFrame:
-    ev = _cat(spark, sf_dir).events
-    return ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean")
-    )
+    return _days(spark, sf_dir).select("date", "value_mean")
 
 
 @register(
@@ -884,16 +884,11 @@ def q_global_zscore(spark, sf_dir):
 def q_rolling_corr_7d(spark, sf_dir):
     """W3: trailing 7-row rolling Pearson correlation composed from window
     moments (ref postjoin_enricher.py:18-36)."""
-    ev = _cat(spark, sf_dir).events
-
-    def dly(t, name):
-        return (
-            ev.filter(F.col("event_type") == t)
-            .groupBy(F.to_date("ts").alias("date"))
-            .agg(F.round(F.avg("value"), 6).alias(name))
-        )
-
-    j = dly("click", "x").join(dly("view", "y"), "date")
+    # the days with both types, as the inner join of the two dailies
+    both = F.col("date").isNotNull() & F.col("click_n").isNotNull() & F.col("view_n").isNotNull()
+    j = _days(spark, sf_dir).filter(both).select(
+        "date", F.col("click_mean").alias("x"), F.col("view_mean").alias("y")
+    )
     return windows.rolling_corr(j, "date", "x", "y", 7, out_col="corr_x_y")
 
 
@@ -3019,13 +3014,8 @@ def q_pbsi_composite(spark, sf_dir):
     """The flagship chain: daily metrics -> global z-scores -> weighted
     clipped composite -> exact-percentile 3-way labels
     (ref build_pbsi.py:139-176,224-253 re-targeted at the events table)."""
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-    z = windows.global_zscore(d, ["value_mean", "n_events", "n_users"])
+    cols = ["value_mean", "n_events", "n_users"]
+    z = labels.segment_zscore(_days(spark, sf_dir).select("date", *cols), cols, None)
     comp = labels.weighted_composite(
         z,
         {"z_value_mean": 0.4, "z_n_events": 0.35, "z_n_users": 0.25},
@@ -3101,20 +3091,20 @@ def q_pipeline_report(spark, sf_dir):
     "u AS (SELECT date, "
     + ", ".join(
         f"nullif(count(CASE WHEN event_type = '{t}' THEN 1 END), 0) AS n_{t}"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     )
     + " FROM base GROUP BY date) "
     + " UNION ALL ".join(
         f"SELECT 'n_{t}' AS column_name, count(*) FILTER (WHERE n_{t} IS NULL) AS n_null, "
         f"round(count(*) FILTER (WHERE n_{t} IS NULL) * 100.0 / count(*), 6) AS pct_null FROM u"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     ),
 )
 def q_missingness_profile(spark, sf_dir):
     """A10: per-column missingness over the unified daily frame
     (ref stage_unify_daily.py:469-482)."""
     unified = q_nway_outer_merge(spark, sf_dir)
-    return daily.missingness_profile(unified, [f"n_{t}" for t in _EVENT_TYPES])
+    return daily.missingness_profile(unified, [f"n_{t}" for t in EVENT_TYPES])
 
 
 @register(
@@ -3495,7 +3485,7 @@ _INSTABILITY_SEGMENTS = [
         daily_cols=",\n               ".join(
             f"round(avg(value) FILTER (WHERE event_type = '{t}'), 6)"
             f" AS {t}_mean"
-            for t in _EVENT_TYPES
+            for t in EVENT_TYPES
         ),
         seg_rows=", ".join(
             f"({i}, DATE '{s}', DATE '{e}')"
@@ -3504,7 +3494,7 @@ _INSTABILITY_SEGMENTS = [
         melt="\n        UNION ALL ".join(
             f"SELECT seg, '{t}_mean' AS feature, {t}_mean AS value "
             "FROM daily JOIN sod USING (date)"
-            for t in _EVENT_TYPES
+            for t in EVENT_TYPES
         ),
     ),
 )
@@ -3514,28 +3504,16 @@ def q_temporal_instability_scores(spark, sf_dir):
     feature's per-segment means, max-normalized): daily per-type mean
     features, assigned to deterministic behavioral segments by date
     containment (last segment wins on overlap, unmatched days drop),
-    scored per feature. Closes the last uncovered reference analytics
-    module; composes the J9 point-in-interval device with A7-style
-    segment stats — one broadcast range join over distinct dates, one
-    melt, two hash aggregations, no windows."""
-    ev = _cat(spark, sf_dir).events
-    feats = [f"{t}_mean" for t in _EVENT_TYPES]
-    daily_f = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        *[
-            F.round(
-                F.avg(F.when(F.col("event_type") == t, F.col("value"))), 6
-            ).alias(f"{t}_mean")
-            for t in _EVENT_TYPES
-        ]
+    scored per feature. The features are the day frame's per-type
+    means and the segments a VALUES relation, so no Python worker runs
+    (see drift.temporal_instability for the one-partition plan)."""
+    feats = [f"{t}_mean" for t in EVENT_TYPES]
+    segments = literal_frame(
+        spark, "seg_id int, date_start date, date_end date", _INSTABILITY_SEGMENTS
     )
-    segments = spark.createDataFrame(
-        _INSTABILITY_SEGMENTS, "seg_id int, date_start string, date_end string"
-    ).select(
-        "seg_id",
-        F.to_date("date_start").alias("date_start"),
-        F.to_date("date_end").alias("date_end"),
+    return drift.temporal_instability(
+        _days(spark, sf_dir).select("date", *feats), segments, feats, "date"
     )
-    return drift.temporal_instability(daily_f, segments, feats, "date")
 
 
 def q_adwin_changes(spark, sf_dir):
@@ -3543,9 +3521,13 @@ def q_adwin_changes(spark, sf_dir):
     sequential by definition, so grouped applyInPandas; no SQL oracle
     (driver records rows-only check)."""
     ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(
-        F.col("event_type"), F.to_date("ts").alias("date")
-    ).agg(F.avg("value").alias("value_mean"))
+    # (type, day)-grain, read on one partition: the grouped UDF then
+    # needs no exchange
+    d = (
+        ev.groupBy(F.col("event_type"), F.to_date("ts").alias("date"))
+        .agg(F.avg("value").alias("value_mean"))
+        .coalesce(1)
+    )
     return drift.adwin_changes(
         d.withColumn("date", F.col("date").cast("string")),
         "date",
@@ -3584,14 +3566,8 @@ def q_quality_adjusted_label(spark, sf_dir):
     """§2.8: fixed-threshold 3-way classifier (ref som_from_autoexport.py:
     186-203) + per-missing-domain quality multiplier floored at 0.5
     (ref build_pbsi.py:179-186)."""
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        *[
-            F.round(
-                F.avg(F.when(F.col("event_type") == t, F.col("value"))), 6
-            ).alias(f"v_{t}")
-            for t in ("click", "error", "purchase")
-        ]
+    d = _days(spark, sf_dir).select(
+        "date", *[F.col(f"{t}_mean").alias(f"v_{t}") for t in ("click", "error", "purchase")]
     )
     flags = d.select(
         "date",
@@ -3815,8 +3791,8 @@ def q_etl_audit_report(spark, sf_dir):
 
     ev = _cat(spark, sf_dir).events
     # three one-partition aggregates of events (this daily frame, the
-    # hourly audit's slots, the parity sketch); every check is a global
-    # aggregate of one of them, and the spine maps dates to means, no join
+    # hourly audit's slots, the parity sketch), each feeding its checks
+    # through one global aggregate
     d = (
         ev.groupBy(F.to_date("ts").alias("date"))
         .agg(
@@ -3827,18 +3803,8 @@ def q_etl_audit_report(spark, sf_dir):
         )
         .coalesce(1)
     )
-    day = F.when(F.col("date").isNotNull(), F.struct("date", "value_mean"))
-    unified = d.agg(
-        F.sequence(F.min("date"), F.max("date")).alias("days"),
-        F.map_from_entries(F.collect_list(day)).alias("means"),
-    ).select(
-        F.explode("days").alias("date"),
-        F.col("means")[F.col("date")].alias("value_mean"),
-    )
     return (
-        audit.audit_daily_frame(d)
-        .unionByName(audit.audit_value_ranges(d))
-        .unionByName(audit.audit_cross_layer(d, d, unified, ts_col="date"))
+        audit.audit_daily_report(d)
         .unionByName(audit.audit_hourly_frame(ev))
         .unionByName(
             audit.sketch_drift_rows(
@@ -4376,11 +4342,11 @@ def q_label_halves_drift(spark, sf_dir):
 def _mode_case_sql(prefix: str) -> str:
     """CASE-expression argmax over the per-type window counts; first WHEN
     in type order wins ties (alphabetical — matches the Spark side)."""
-    total = " + ".join(f"{prefix}_{t}" for t in _EVENT_TYPES)
+    total = " + ".join(f"{prefix}_{t}" for t in EVENT_TYPES)
     whens = []
-    for t in _EVENT_TYPES:
+    for t in EVENT_TYPES:
         conds = " AND ".join(
-            f"{prefix}_{t} >= {prefix}_{u}" for u in _EVENT_TYPES if u != t
+            f"{prefix}_{t} >= {prefix}_{u}" for u in EVENT_TYPES if u != t
         )
         whens.append(f"WHEN {conds} THEN '{t}'")
     return f"CASE WHEN {total} = 0 THEN NULL " + " ".join(whens) + " END"
@@ -4397,7 +4363,7 @@ def _mode_case_sql(prefix: str) -> str:
         SELECT date, """
     + ", ".join(
         f"coalesce(sum(cnt) FILTER (WHERE event_type = '{t}'), 0) AS c_{t}"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     )
     + """
         FROM d GROUP BY date
@@ -4407,7 +4373,7 @@ def _mode_case_sql(prefix: str) -> str:
     + ", ".join(
         f"coalesce(sum(c_{t}) OVER wp, 0) AS p_{t}, "
         f"coalesce(sum(c_{t}) OVER wn, 0) AS n_{t}"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     )
     + """
         FROM px
@@ -4448,27 +4414,27 @@ def q_dominant_source_change(spark, sf_dir):
                 F.coalesce(
                     F.sum(F.when(F.col("event_type") == t, F.col("cnt"))), F.lit(0)
                 ).alias(f"c_{t}")
-                for t in _EVENT_TYPES
+                for t in EVENT_TYPES
             ]
         )
     )
     wp = W.orderBy("date").rowsBetween(-5, -1)
     wn = W.orderBy("date").rowsBetween(0, 4)
     cols = {}
-    for t in _EVENT_TYPES:
+    for t in EVENT_TYPES:
         cols[f"p_{t}"] = F.coalesce(F.sum(f"c_{t}").over(wp), F.lit(0))
         cols[f"n_{t}"] = F.coalesce(F.sum(f"c_{t}").over(wn), F.lit(0))
     w = px.select("date", *[v.alias(k) for k, v in cols.items()])
 
     def argmax(prefix):
         total = None
-        for t in _EVENT_TYPES:
+        for t in EVENT_TYPES:
             c = F.col(f"{prefix}_{t}")
             total = c if total is None else total + c
         expr = F.when(total == 0, F.lit(None).cast("string"))
-        for t in _EVENT_TYPES:
+        for t in EVENT_TYPES:
             cond = None
-            for u in _EVENT_TYPES:
+            for u in EVENT_TYPES:
                 if u == t:
                     continue
                 ge = F.col(f"{prefix}_{t}") >= F.col(f"{prefix}_{u}")
@@ -4811,11 +4777,8 @@ def q_impute_segments(spark, sf_dir):
     Missingness is injected deterministically (every 7th day) so the operator
     has gaps to fill; iterative ridge regression is not SQL-expressible ->
     rows-only check."""
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("value_sum"),
+    d = _days(spark, sf_dir).select(
+        "date", "value_mean", F.col("n_events").cast("double"), "value_sum"
     )
     d = d.withColumn(
         "value_mean",
@@ -9758,13 +9721,7 @@ def q_logreg_fold_cv(spark, sf_dir):
     distributed lbfgs (deterministic); no SQL oracle -> rows-only check."""
     from .operators import ml
 
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.countDistinct("user_id").cast("double").alias("n_users"),
-    )
-    lab = labels.quantile_3way_label(d, "value_mean", bounded=True)
+    lab = _daily_label_frame(spark, sf_dir)
     return ml.logreg_fold_cv(
         lab,
         ["value_mean", "n_events", "n_users"],
@@ -9787,13 +9744,7 @@ def q_lstm_fold_cv(spark, sf_dir):
     tests/test_deep.py)."""
     from .operators import deep
 
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.countDistinct("user_id").cast("double").alias("n_users"),
-    )
-    lab = labels.quantile_3way_label(d, "value_mean", bounded=True)
+    lab = _daily_label_frame(spark, sf_dir)
     return deep.lstm_fold_cv(
         lab,
         ["value_mean", "n_events", "n_users"],
@@ -9819,13 +9770,7 @@ def q_gru_fold_cv(spark, sf_dir):
     (finite-difference gradient verification in tests/test_deep.py)."""
     from .operators import deep
 
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.countDistinct("user_id").cast("double").alias("n_users"),
-    )
-    lab = labels.quantile_3way_label(d, "value_mean", bounded=True)
+    lab = _daily_label_frame(spark, sf_dir)
     return deep.gru_fold_cv(
         lab,
         ["value_mean", "n_events", "n_users"],
@@ -9850,13 +9795,7 @@ def q_conv1d_fold_cv(spark, sf_dir):
     rows-only (finite-difference verification in tests/test_deep.py)."""
     from .operators import deep
 
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.countDistinct("user_id").cast("double").alias("n_users"),
-    )
-    lab = labels.quantile_3way_label(d, "value_mean", bounded=True)
+    lab = _daily_label_frame(spark, sf_dir)
     return deep.conv1d_fold_cv(
         lab,
         ["value_mean", "n_events", "n_users"],
@@ -9881,13 +9820,7 @@ def q_cnn_lstm_fold_cv(spark, sf_dir):
     for the same reason as the others."""
     from .operators import deep
 
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.countDistinct("user_id").cast("double").alias("n_users"),
-    )
-    lab = labels.quantile_3way_label(d, "value_mean", bounded=True)
+    lab = _daily_label_frame(spark, sf_dir)
     return deep.cnn_lstm_fold_cv(
         lab,
         ["value_mean", "n_events", "n_users"],
@@ -9906,11 +9839,8 @@ QUERIES["cnn_lstm_fold_cv"] = q_cnn_lstm_fold_cv
 def _daily_label_frame(spark, sf_dir):
     """Shared ML feature frame: daily event aggregates + exact-quantile
     3-way label (the reference's PBSI-style target)."""
-    ev = _cat(spark, sf_dir).events
-    d = ev.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).cast("double").alias("n_events"),
-        F.countDistinct("user_id").cast("double").alias("n_users"),
+    d = _days(spark, sf_dir).select(
+        "date", "value_mean", *[F.col(c).cast("double") for c in ("n_events", "n_users")]
     )
     return labels.quantile_3way_label(d, "value_mean", bounded=True)
 
@@ -10216,7 +10146,6 @@ def q_cda_probe(spark, sf_dir):
 
 
 def _register_medallion_silver() -> None:
-    from .pipeline import EVENT_TYPES as types
     per_type = ",\n           ".join(
         f"NULLIF(count(*) FILTER (WHERE event_type = '{t}'), 0)"
         f" AS {t}_n,\n           "
@@ -10224,7 +10153,7 @@ def _register_medallion_silver() -> None:
         f" AS {t}_mean,\n           "
         f"round(sum(value) FILTER (WHERE event_type = '{t}'), 2)"
         f" AS {t}_sum"
-        for t in types
+        for t in EVENT_TYPES
     )
     sql = f"""
     SELECT CAST(ts AS DATE) AS date,
@@ -10254,9 +10183,10 @@ def _register_medallion_silver() -> None:
         from . import pipeline
 
         # keyed by the events AND the code that builds the landing, so a
-        # changed build_bronze/build_silver lands a fresh copy
-        code = inspect.getsource(pipeline.build_bronze) + inspect.getsource(
-            pipeline.build_silver
+        # changed build_bronze/build_silver/day_frame lands a fresh copy
+        code = "".join(
+            inspect.getsource(f)
+            for f in (pipeline.build_bronze, pipeline.build_silver, daily.day_frame)
         ) + f"{pipeline.BRONZE_SCHEMA}{pipeline.SILVER_SCHEMA}{pipeline.EVENT_TYPES}"
         fp = _source_fingerprint(os.path.join(sf_dir, "events.parquet"))
         fp += "_" + hashlib.sha256(code.encode()).hexdigest()[:12]
@@ -10271,7 +10201,7 @@ def _register_medallion_silver() -> None:
         root = _land_once(prefix, fp, build)
         silver = spark.read.parquet(os.path.join(root, "silver", "daily"))
         cols = ["date"] + [
-            f"{t}_{m}" for t in types for m in ("n", "mean", "sum")
+            f"{t}_{m}" for t in EVENT_TYPES for m in ("n", "mean", "sum")
         ]
         return silver.select(*cols)
 
@@ -10660,10 +10590,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> rolling mean -> composite z-labels."""
     ev = _cat(spark, sf_dir).events
     filtered = daily.range_filter(ev, "value", 30, 220)
-    d = filtered.groupBy(F.to_date("ts").alias("date")).agg(
-        F.round(F.avg("value"), 6).alias("value_mean"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
+    d = daily.day_frame(filtered, F.to_date("ts"), [], ()).select(
+        "date", "value_mean", "n_events", "n_users"
     )
     rolled = windows.rolling_mean(d, "date", ["value_mean"], 7)
     z = windows.global_zscore(rolled, ["value_mean", "n_events", "n_users"])

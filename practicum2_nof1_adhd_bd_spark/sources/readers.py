@@ -103,6 +103,23 @@ class Catalog:
         raise AttributeError(name)
 
 
+def literal_frame(spark: SparkSession, schema: str, rows) -> DataFrame:
+    """``rows`` (tuples in the order of the DDL ``schema``) as a SQL
+    ``VALUES`` relation of cast literals, which the optimizer folds into a
+    local relation. ``createDataFrame`` of a list builds a Python RDD
+    instead: its scan runs a Python worker, a fixed cost of about a
+    second per query whatever the row count."""
+    fields = StructType.fromDDL(schema).fields
+    args = {f"v{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)}
+    types = [f.dataType.simpleString() for f in fields]
+    values = ", ".join(
+        "(" + ", ".join(f"CAST(:v{i}_{j} AS {t})" for j, t in enumerate(types)) + ")"
+        for i in range(len(rows))
+    )
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names})", args=args)
+
+
 def fan_out(df: DataFrame, *key_cols: str, align: bool = False) -> DataFrame:
     """Widen a narrow input for compute-heavy per-row stages.
 

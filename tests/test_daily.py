@@ -124,3 +124,40 @@ def test_daily_mean_double_vs_decimal_exact_canary(spark, sf_dir):
     )
     bad = both.filter(F.col("dbl") != F.col("exact")).collect()
     assert bad == [], f"6dp boundary flip vs decimal-exact mean: {bad[:5]}"
+
+
+def test_day_frame_matches_silver(spark, tmp_path):
+    """day_frame's per-type columns are silver's, and a type absent on a
+    day reads a null count, mean and sum there; the all-type totals count
+    every event and user."""
+    from practicum2_nof1_adhd_bd_spark import pipeline
+
+    rows = [
+        ("2024-01-01 01:00:00", 60.0, "click", 1),
+        ("2024-01-01 02:00:00", 80.0, "click", 2),
+        ("2024-01-01 03:00:00", 10.5, "error", 1),
+        ("2024-01-02 01:00:00", 70.0, "click", 3),
+        ("2024-01-02 05:00:00", 2.25, "view", 3),
+    ]
+    ev = spark.createDataFrame(
+        rows, "ts string, value double, event_type string, user_id int"
+    ).withColumn("ts", F.to_timestamp("ts"))
+    types = pipeline.EVENT_TYPES
+    got = {
+        r["date"]: r
+        for r in daily.day_frame(ev, F.to_date("ts"), [], types).collect()
+    }
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    assert (got[d1]["click_n"], got[d1]["click_mean"], got[d1]["click_sum"]) == (2, 70.0, 140.0)
+    assert (got[d2]["error_n"], got[d2]["error_mean"], got[d2]["error_sum"]) == (None, None, None)
+    assert (got[d1]["n_events"], got[d1]["n_users"], got[d2]["value_sum"]) == (3, 2, 72.25)
+
+    bronze = str(tmp_path / "bronze")
+    ev.select("event_type", "value", F.to_date("ts").alias("event_date")).write.partitionBy(
+        "event_date"
+    ).parquet(bronze)
+    silver = spark.read.parquet(pipeline.build_silver(spark, bronze, str(tmp_path)))
+    cols = silver.columns
+    assert {r["date"]: tuple(r) for r in silver.collect()} == {
+        d: tuple(r[c] for c in cols) for d, r in got.items()
+    }

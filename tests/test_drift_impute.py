@@ -157,3 +157,25 @@ def test_temporal_instability_missing_feature_scores_zero(spark):
     ).collect()
     assert sorted(r["feature"] for r in all_missing) == ["ghost_a", "ghost_b"]
     assert all(r["instability"] == 0.0 for r in all_missing)
+
+
+def test_impute_one_udf_pass_and_post_mice_median(spark):
+    """The grouped UDF runs once: the global-median fallback is a window
+    over its output, not a second pass. A segment under ``min_rows``
+    gets the median of the imputed values (MICE-sampled cells included)."""
+    import numpy as np
+
+    seg1 = [(float(i), float(2 * i + 1) if i not in (3, 6) else None) for i in range(8)]
+    rows = [(1, i, x, y) for i, (x, y) in enumerate(seg1)]
+    rows += [(2, 0, 4.0, None), (2, 1, 5.0, 90.0)]
+    # one partition keeps each segment's rows in order, as MICE reads them
+    df = spark.createDataFrame(rows, "segment_id int, idx int, x double, y double")
+    out = impute.impute_per_segment(df.coalesce(1), ["x", "y"], min_rows=5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+
+    mat = impute._mice_impute(np.array(seg1, dtype="float64"))
+    want = float(np.median(np.append(mat[:, 1], 90.0)))
+    got = {(r["segment_id"], r["idx"]): r["y"] for r in out.collect()}
+    assert got[(2, 0)] == want
+    assert [got[(1, i)] for i in range(8)] == list(mat[:, 1])

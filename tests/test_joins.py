@@ -16,11 +16,30 @@ def _daily(spark, rows):
 def test_date_spine_and_left_join(spark):
     a = _daily(spark, [("2024-01-01", 1.0), ("2024-01-03", 3.0)])
     b = _daily(spark, [("2024-01-02", 2.0)]).withColumnRenamed("v", "w")
-    spine = joins.date_spine([a, b])
-    assert spine.count() == 3
-    out = joins.spine_left_join(spine, [a, b]).orderBy("date").collect()
+    out = joins.spine_merge([a, b]).orderBy("date").collect()
+    assert len(out) == 3
     assert [r["v"] for r in out] == [1.0, None, 3.0]
     assert [r["w"] for r in out] == [None, 2.0, None]
+
+
+def test_spine_merge_equals_spine_left_joins(spark):
+    """The merged spine holds the rows of left-joining every daily onto
+    the distinct union of their dates: a null-date row is a spine row of
+    nulls (it matches nothing), a date in one daily only gets nulls for
+    the other, and a null value stays null."""
+    a = _daily(
+        spark, [("2024-01-01", 1.0), ("2024-01-03", None), (None, 7.0)]
+    )
+    b = spark.createDataFrame(
+        [("2024-01-03", 30.0, "x"), ("2024-01-04", 40.0, None), (None, 8.0, "z")],
+        "date string, w double, tag string",
+    ).withColumn("date", F.col("date").cast("date"))
+    spine = a.select("date").union(b.select("date")).distinct()
+    want = spine.join(a, "date", "left").join(b, "date", "left")
+    got = joins.spine_merge([a, b])
+    assert got.columns == want.columns == ["date", "v", "w", "tag"]
+    assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+    assert (None, None, None, None) in [tuple(r) for r in got.collect()]
 
 
 def test_coalescing_merge_prefers_first_vendor(spark):

@@ -173,19 +173,28 @@ def test_catalog_reuses_inferred_schema(spark, tmp_path):
 # noop sink at sf0.001 with every source schema already known
 MIX_JOB_BUDGETS = {
     "quantile_3way_label": 6,
-    "etl_audit_report": 8,
-    "temporal_instability_scores": 4,
+    "etl_audit_report": 4,
+    "temporal_instability_scores": 2,
+    "pbsi_composite": 3,
+    "rolling_corr_7d": 2,
+    "date_spine_unify": 3,
+    "impute_segments": 2,
+    "adwin_changes": 2,
 }
 
 
 @pytest.mark.parametrize("query", sorted(MIX_JOB_BUDGETS))
 def test_mix_job_budgets(spark, sf_dir, query):
-    """The analytics mix's three heaviest queries stay within their job
-    budgets: the exact quantile in two one-job scans, the audit from
-    three one-partition aggregates, temporal instability on one
-    partition. A round-robin fan-out, a refined path with joined
-    threshold frames, per-check audit unions or a joined segment
-    assignment each exceed them."""
+    """The analytics mix's heaviest queries stay within their job
+    budgets: the exact quantile in two one-job scans; the audit from
+    three one-partition aggregates, each feeding its checks through one
+    global aggregate; the day-frame queries (temporal instability, PBSI,
+    rolling correlation, imputation) and ADWIN from one daily aggregate
+    on one partition; the date spine as one union and one aggregate of
+    its two dailies. A round-robin fan-out, a refined path with joined
+    threshold frames, per-check audit aggregates, a joined segment
+    assignment or z-score frame, a second imputation pass or spine joins
+    each exceed them."""
     from practicum2_nof1_adhd_bd_spark.registry import QUERIES
 
     def run():

@@ -623,3 +623,19 @@ def test_setsim_prefix_rank_map_broadcasts(spark, sf_dir):
     the corpus-grain token table as a broadcast, not a shuffle join."""
     plan = _plan(registry.QUERIES["setsim_prefix_join"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
+
+
+def test_literal_frames_scan_no_python_rdd(spark, sf_dir):
+    """The analytics mix and the three other queries with literal tables
+    build those tables as VALUES relations: a ``createDataFrame`` list is
+    a Python RDD (``Scan ExistingRDD``), whose Python worker costs about a
+    second per query for a handful of rows."""
+    import pathlib
+    import sys
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "perfbench"))
+    from workloads import ANALYTICS_MIX
+
+    names = [*ANALYTICS_MIX, "point_in_interval", "doc_size_qsketch_log", "snapshot_provenance"]
+    for name in names:
+        assert "ExistingRDD" not in _plan(registry.QUERIES[name](spark, sf_dir)), name

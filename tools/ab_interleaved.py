@@ -34,9 +34,15 @@ after perfbench's normalisation (columns sorted by name, floats to 9
 dp, rows sorted), so a mix A/B attributes its gain by jobs and times only
 queries whose outputs are equal.
 
+``--mix`` times whole passes of perfbench's 16-query analytics mix
+(``workloads.ANALYTICS_MIX``), alternating an old pass and a new pass in
+one JVM: the one-session stand-in for the workload's ``ops_per_s``. It
+checks every mix query's rows first, like query mode.
+
 Usage:
   python tools/ab_interleaved.py --old /tmp/repo_old [-n 5] q1 q2 ...
   python tools/ab_interleaved.py --old /tmp/repo_old --pipeline [-n 7]
+  python tools/ab_interleaved.py --old /tmp/repo_old --mix [-n 6]
 
 Prints one JSON line:
   {query: {"old": [...], "new": [...], "pair_ratios": [...],
@@ -48,6 +54,9 @@ Prints one JSON line:
                "pair_ratios": {layer: [...]},
                "median_pair_ratio": {layer: r}}}
   with layer in bronze, silver, gold, total.
+  --mix: {"mix": {"identical": {query: bool}, "old": [s...], "new": [s...],
+          "pair_ratios": [...], "median_pair_ratio": r,
+          "jobs": {"old": n, "new": n}}}   (seconds and jobs per pass)
 """
 
 from __future__ import annotations
@@ -184,6 +193,36 @@ def _pipeline_ab(spark, old_pipe, new_pipe, sf_dir: str, n: int) -> dict:
     }
 
 
+def _mix_ab(old_q, new_q, names: list[str], n: int, run, rows) -> dict:
+    """Whole passes over the query mix, one old and one new per pair in
+    the same shuffled order, which side first alternating; pass i's
+    ratio is old/new seconds (> 1 -> NEW is faster). Each version's rows
+    are compared first, and one untimed pass of each warms both."""
+    import random
+
+    identical = {q: rows(old_q[q]) == rows(new_q[q]) for q in names}
+    sides = [("old", old_q), ("new", new_q)]
+    for side, qs in sides:
+        for q in names:
+            run(qs[q], f"ab warm {side}: {q}")
+    secs = {"old": [], "new": []}
+    jobs = {}
+    for i in range(n):
+        order = random.Random(i).sample(names, len(names))
+        for side, qs in sides if i % 2 == 0 else sides[::-1]:
+            timed = [run(qs[q], f"ab {side}[{i}]: {q}") for q in order]
+            secs[side].append(round(sum(dt for dt, _ in timed), 3))
+            jobs[side] = sum(j for _, j in timed)
+    ratios = [round(o / nw, 3) for o, nw in zip(secs["old"], secs["new"])]
+    return {
+        "identical": identical,
+        **secs,
+        "pair_ratios": ratios,
+        "median_pair_ratio": round(statistics.median(ratios), 3),
+        "jobs": jobs,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--old", required=True, help="checkout of the OLD code")
@@ -197,10 +236,15 @@ def main() -> None:
         action="store_true",
         help="A/B the medallion builds instead of registry queries",
     )
+    ap.add_argument(
+        "--mix",
+        action="store_true",
+        help="A/B whole passes of perfbench's analytics mix",
+    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
-    if not args.pipeline and not args.names:
-        ap.error("name at least one query, or pass --pipeline")
+    if not (args.pipeline or args.mix or args.names):
+        ap.error("name at least one query, or pass --pipeline or --mix")
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     module = "pipeline" if args.pipeline else "registry"
@@ -235,7 +279,7 @@ def main() -> None:
     ).mode("overwrite").save()
 
     sys.path.insert(0, os.path.join(here, "perfbench"))
-    from workloads import normalize
+    from workloads import ANALYTICS_MIX, normalize
 
     sc = spark.sparkContext
 
@@ -258,6 +302,17 @@ def main() -> None:
         out = normalize(df.collect(), df.columns)
         spark.catalog.clearCache()
         return out
+
+    if args.mix:
+        res = _mix_ab(old_q, new_q, list(ANALYTICS_MIX), args.n, run, rows)
+        print(
+            f"# mix: median_pair_ratio={res['median_pair_ratio']:.2f} "
+            f"jobs old={res['jobs']['old']} new={res['jobs']['new']} "
+            f"identical={all(res['identical'].values())}",
+            file=sys.stderr,
+        )
+        print(json.dumps({"mix": res}))
+        return
 
     out, identical = {}, {}
     for name in args.names:
