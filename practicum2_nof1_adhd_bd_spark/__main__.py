@@ -14,7 +14,7 @@ the uniform surface is the query registry:
     python -m practicum2_nof1_adhd_bd_spark ann build --index DIR
         [--sf-dir D] [--n-bits B]           (bucket-partitioned artifact)
     python -m practicum2_nof1_adhd_bd_spark ann query --index DIR
-        --vector "0.1,0.2,..." [--k K] [--probe-hamming d]  (pruned probe)
+        --vector=0.1,-0.2,... [--k K] [--probe-hamming d]  (pruned probe)
 
 ``run`` prints the first rows (or writes parquet with --out); ``audit``
 runs the full ETL audit battery and exits with the reference's severity
@@ -61,24 +61,6 @@ def main(argv: list[str] | None = None) -> int:
                        help="comma-separated query components")
     p_ann.add_argument("--k", type=int, default=10)
     p_ann.add_argument("--probe-hamming", type=int, default=0)
-    p_ann.add_argument(
-        "--layout", choices=["axis", "multitable", "ivf", "ivfpq"],
-        default="axis",
-        help="axis = single axis-sign bucket partitioning; multitable = "
-             "L-way-replicated (tbl, bucket) partitioning with "
-             "query-directed probing; ivf = trained-Lloyd cell "
-             "partitioning with centroid sidecar; ivfpq = cell-"
-             "partitioned residual PQ codes with codebook/store "
-             "sidecars (IVFADC)",
-    )
-    p_ann.add_argument("--pq-m", type=int, default=4)
-    p_ann.add_argument("--pq-codes", type=int, default=8)
-    p_ann.add_argument("--rerank", type=int, default=50)
-    p_ann.add_argument("--n-tables", type=int, default=10)
-    p_ann.add_argument("--n-planes", type=int, default=8)
-    p_ann.add_argument("--n-flips", type=int, default=3)
-    p_ann.add_argument("--n-cells", type=int, default=8)
-    p_ann.add_argument("--n-probe", type=int, default=2)
 
     args, rest = ap.parse_known_args(argv)
 
@@ -111,49 +93,17 @@ def main(argv: list[str] | None = None) -> int:
 
         if args.action == "build":
             emb = Catalog(spark, args.sf_dir).embeddings
-            if args.layout == "multitable":
-                sim.write_multitable_index(
-                    emb, args.index,
-                    n_tables=args.n_tables, n_planes=args.n_planes,
-                )
-                print(f"wrote (tbl, bucket)-partitioned int8 index at {args.index}")
-            elif args.layout == "ivf":
-                sim.write_ivf_index(emb, args.index, n_cells=args.n_cells)
-                print(f"wrote cell-partitioned int8 IVF index at {args.index}")
-            elif args.layout == "ivfpq":
-                sim.write_ivfpq_index(
-                    emb, args.index, n_cells=args.n_cells,
-                    m=args.pq_m, k_codes=args.pq_codes,
-                )
-                print(f"wrote cell-partitioned IVFADC code index at {args.index}")
-            else:
-                sim.write_vector_index(emb, args.index, n_bits=args.n_bits)
-                print(f"wrote bucket-partitioned int8 index at {args.index}")
+            sim.write_vector_index(emb, args.index, n_bits=args.n_bits)
+            print(f"wrote bucket-partitioned int8 index at {args.index}")
             return 0
         if not args.vector:
             print("ann query needs --vector", file=sys.stderr)
             return 2
         qvec = [float(x) for x in args.vector.split(",")]
-        if args.layout == "multitable":
-            sim.query_multitable_index(
-                spark, args.index, qvec, k=args.k,
-                n_tables=args.n_tables, n_planes=args.n_planes,
-                n_flips=args.n_flips,
-            ).show(args.k, truncate=False)
-        elif args.layout == "ivf":
-            sim.query_ivf_index(
-                spark, args.index, qvec, k=args.k, n_probe=args.n_probe
-            ).show(args.k, truncate=False)
-        elif args.layout == "ivfpq":
-            sim.query_ivfpq_index(
-                spark, args.index, qvec, k=args.k, n_probe=args.n_probe,
-                rerank=args.rerank,
-            ).show(args.k, truncate=False)
-        else:
-            sim.query_vector_index(
-                spark, args.index, qvec, k=args.k,
-                n_bits=args.n_bits, probe_hamming=args.probe_hamming,
-            ).show(args.k, truncate=False)
+        sim.query_vector_index(
+            spark, args.index, qvec, k=args.k,
+            n_bits=args.n_bits, probe_hamming=args.probe_hamming,
+        ).show(args.k, truncate=False)
         return 0
 
     if args.cmd == "audit":

@@ -203,7 +203,7 @@ def build_bucketed_facts(
 
     The pre-write ``repartition(n_buckets, key)`` uses the same Murmur3
     hash as the bucket spec, so each write task holds exactly one
-    bucket's rows -> one well-sized file per bucket (the multitable-index
+    bucket's rows -> one well-sized file per bucket (the partitioned-index
     lesson: commit/listing overhead, not data bytes, dominates small
     artifacts). Metadata is dropped after the write — the files are the
     artifact; any session re-declares them with CREATE TABLE ...

@@ -11,6 +11,7 @@ reference's class-coverage gate.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -150,6 +151,20 @@ def logreg_fold_cv(
         "fold_id int, n_train bigint, n_val bigint, usable int, "
         "accuracy double, macro_f1 double, bal_acc double, kappa double",
     )
+
+
+def _without_summary(model):
+    """Drop a fitted model's training summary before ``transform``.
+
+    The prediction UDFs capture the model, and a binary
+    LogisticRegression or LinearSVC summary holds the training frame's
+    SparkSession. Once that session has run a ``pyspark.sql.Observation``,
+    the session carries an ObservationManager that cannot be serialized,
+    so every task of the transform fails. ``copy()`` is not enough:
+    LogisticRegressionModel's copy keeps the summary."""
+    if getattr(model, "hasSummary", False):
+        model._java_obj.setSummary(SparkContext._jvm.scala.Option.empty())
+    return model
 
 
 def _balanced_weights(train: DataFrame, label_col: str, w_col: str = "_w") -> DataFrame:
@@ -340,7 +355,7 @@ def model_zoo_fold_cv(
                     (F.col("_y_pred") + F.lit(shift)).cast("int").alias("y_pred"),
                 )
             else:
-                model = make(fc, lc, "_w").fit(tr)
+                model = _without_summary(make(fc, lc, "_w").fit(tr))
                 pred = model.transform(va).select(
                     (F.col(lc) + F.lit(shift)).cast("int").alias("y_true"),
                     (F.col("prediction") + F.lit(shift)).cast("int").alias("y_pred"),
@@ -438,10 +453,10 @@ def model_selection_grid(
             tr = scaler_model.transform(
                 assembler.transform(_balanced_weights(train, t_col))
             )
-            model = LogisticRegression(
+            model = _without_summary(LogisticRegression(
                 featuresCol="_feat", labelCol=t_col, weightCol="_w",
                 maxIter=max_iter, regParam=0.0, family="auto",
-            ).fit(tr)
+            ).fit(tr))
             va = scaler_model.transform(assembler.transform(val))
             pred = model.transform(va).select(
                 F.col(t_col).cast("int").alias("y_true"),

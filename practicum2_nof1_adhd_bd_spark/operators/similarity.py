@@ -2,8 +2,10 @@
 
 Brute-force cosine top-k as the correctness baseline, plus a numpy-batched
 `mapInPandas` variant as the scale path (same exact results — it's still
-exact top-k, just vectorized per partition then merged). An LSH-bucketed
-approximate variant provides the sub-linear candidate path.
+exact top-k, just vectorized per partition then merged). Around it: int8
+quantization, the bucket-partitioned int8 vector index (write, pruned
+query), compaction of partitioned index artifacts, and reciprocal-rank
+fusion of ranked lists.
 
 Scale design: the query side is a broadcast (one or few vectors); the corpus
 side streams through executors; per-partition top-k keeps only k rows per
@@ -169,1103 +171,14 @@ def cosine_topk_vectorized(
 
 def axis_sign_bucket(vec_col: str = "embedding", n_bits: int = 4) -> Column:
     """Axis-aligned sign bucket: integer whose bit j is sign(vec[j]) —
-    the deterministic, SQL-reproducible bucket family shared by
-    bucket_balanced_sample / ann_topk_axis, usable as a computed blocking
-    key for embedding_near_dup_pairs."""
+    the deterministic, SQL-reproducible partition key of the vector
+    index (vector_index_rows)."""
     bucket = None
     for j in range(n_bits):
         bit = (F.element_at(F.col(vec_col), j + 1) > 0).cast("int")
         term = bit * F.lit(2**j)
         bucket = term if bucket is None else bucket + term
     return bucket
-
-
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.3,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_expr: Column | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within blocking buckets.
-
-    The quadratic self-join runs only inside each block, so the join
-    shuffles on the block key and never crosses blocks. The block key is
-    either a pre-existing column (``block_col``, e.g. a stored cluster
-    id or the testdata label) or a COMPUTED expression (``block_expr``,
-    e.g. the axis-sign bucket family shared with bucket_balanced_sample,
-    or a sign-LSH / IVF-cell bucket) — the 100-TB form, where no curated
-    blocking column exists and the bucket must come out of the same scan
-    as the vector. Pairs are canonical (id_a < id_b)."""
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    block = block_expr if block_expr is not None else F.col(block_col)
-    # norms are computed once per VECTOR (n rows) before the pair join, not
-    # once per PAIR (n^2/blocks rows) — same float expression, 3x fewer
-    # array folds on the quadratic side.
-    base = embeddings.select(
-        F.col(id_col), block.alias("block"), dvec.alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    a = base.select(
-        F.col(id_col).alias("id_a"), F.col("block"),
-        F.col("v").alias("va"), F.col("nrm").alias("nrm_a"),
-    )
-    b = base.select(
-        F.col(id_col).alias("id_b"), F.col("block"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nrm_b"),
-    )
-    pairs = a.join(b, ["block"]).filter(F.col("id_a") < F.col("id_b"))
-    scored = pairs.select(
-        "id_a",
-        "id_b",
-        F.round(
-            _dot(F.col("va"), F.col("vb")) / (F.col("nrm_a") * F.col("nrm_b")), 6
-        ).alias("cosine"),
-    )
-    return scored.filter(F.col("cosine") >= threshold)
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_probe: int = 2,
-    coarse_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-style ANN: coarse quantizer = per-partition centroid (elementwise
-    mean embedding per `coarse_col`), probe the n_probe nearest centroids,
-    exact-rank only their members.
-
-    At scale the centroid table is tiny (one row per cell) and broadcast;
-    the corpus scan prunes to probed cells via a semi-join, so the exact
-    ranking touches ~n_probe/n_cells of the data. Deterministic given the
-    (pre-assigned) cell column, so it keeps an exact SQL oracle."""
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(
-        F.col(id_col), F.col(coarse_col).alias("cell"), dvec.alias("v")
-    )
-    # elementwise centroid per cell: posexplode -> per-(cell,pos) mean -> array
-    ex = base.select("cell", F.posexplode("v").alias("pos", "val"))
-    cm = ex.groupBy("cell", "pos").agg(F.avg("val").alias("m"))
-    cent = cm.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("cv")
-    )
-    q = base.filter(F.col(id_col) == query_id).select(F.col("v").alias("qv"))
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cell", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
-        .orderBy(F.desc("_cs"), F.asc("cell"))
-        .limit(n_probe)
-        .select("cell")
-    )
-    corpus = base.join(F.broadcast(probes), "cell", "left_semi")
-    scored = corpus.crossJoin(F.broadcast(q)).filter(F.col(id_col) != query_id)
-    return (
-        scored.select(
-            id_col, F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def ivf_kmeans_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_fit_rows: int = 100_000,
-) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer: MLlib KMeans (seeded) builds
-    the cell centroids, vectors are assigned to cells, the query probes its
-    n_probe nearest cells and exact-ranks their members.
-
-    This is the full index-build path (`ivf_topk` assumes pre-assigned
-    cells). The KMeans fit sees at most ``max_fit_rows`` vectors (seeded
-    sample) — the iterative fit must never scan the full corpus, since
-    k-means centroid quality saturates long before 1e5 points while each
-    extra iteration over 100 TB is a full read. Assignment of the corpus to
-    the trained centroids is a single narrow map; the tiny centroid table
-    broadcasts, and the corpus shuffles only once, on write, if the index is
-    persisted cell-partitioned.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(F.col(id_col), dvec.alias("v")).withColumn(
-        "_features", array_to_vector(F.col("v"))
-    )
-    n = base.count()
-    fit_set = (
-        base if n <= max_fit_rows
-        else base.sample(fraction=max_fit_rows / n, seed=seed)
-    )
-    km = KMeans(k=n_cells, seed=seed, featuresCol="_features", predictionCol="cell")
-    model = km.fit(fit_set)
-    assigned = model.transform(base).select(id_col, "cell", "v")
-    return ivf_topk(
-        assigned.withColumnRenamed("v", vec_col),
-        query_id,
-        k=k,
-        n_probe=n_probe,
-        coarse_col="cell",
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-
-
-def ivf_lloyd_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN whose coarse quantizer is TRAINED deterministically: Lloyd's
-    k-means with md5-selected seeds and a fixed, unrolled iteration count,
-    expressed entirely as join+groupBy — so the full index-BUILD path
-    (seed -> iterate -> assign -> probe -> rank) replays in SQL and sits
-    behind the value-hash gate. ``ivf_kmeans_topk`` (seeded MLlib fit)
-    stays the production path: MLlib adds k-means|| init, convergence
-    stopping, and a sampled fit set; this variant trades those for
-    engine-neutral determinism (the attestation device that graduated
-    ann_lsh_topk: replace non-replayable randomness with md5-derived
-    constants/choices).
-
-    Semantics: seeds = the ``n_cells`` corpus vectors with the smallest
-    md5(id) (RNG-free unbiased draw, the hash_split device), numbered in
-    that order. Each iteration assigns every vector to the nearest
-    centroid by squared euclidean distance (tie -> smallest cell), then
-    recomputes centroids as the elementwise member mean. After
-    ``n_iters`` rounds the corpus is assigned to the final centroids, the
-    query probes its ``n_probe`` nearest cells (cosine), and only their
-    members are exact-ranked.
-
-    Scale shape: the centroid frame (n_cells rows) collapses to ONE
-    broadcast array row per assignment, and assignment is a NARROW
-    per-row fold over it (r17) — zero corpus exchanges, zero joins back
-    to the corpus; centroid recompute is a posexplode +
-    (cell, pos) partial avg whose map-side combine leaves only
-    n_partitions x n_cells x dim rows on the wire. Each
-    iteration is one full corpus pass — which is why the iteration count
-    is fixed and small, and why the MLlib path caps its fit set
-    (ivf_kmeans_topk.max_fit_rows). Tiny centroid frames are eagerly
-    localCheckpoint'ed per round so the lineage (and the 100-TB plan)
-    doesn't re-run earlier passes.
-
-    Cross-engine float note: centroid means inherit each engine's
-    summation order; an assignment flips only if two cell distances
-    land within float-ulp of each other — the same accepted boundary
-    class as the attested one-shot centroid path (ivf_ann_topk)."""
-    final, cent, base = _lloyd_fit(
-        embeddings, n_cells, n_iters, id_col, vec_col
-    )
-    q = base.filter(F.col(id_col) == query_id).select(F.col("v").alias("qv"))
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cell", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
-        .orderBy(F.desc("_cs"), F.asc("cell"))
-        .limit(n_probe)
-        .select("cell")
-    )
-    members = final.join(F.broadcast(probes), "cell", "left_semi")
-    scored = members.crossJoin(F.broadcast(q)).filter(F.col(id_col) != query_id)
-    return (
-        scored.select(
-            id_col, F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _lloyd_fit(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The deterministic Lloyd quantizer build shared by ivf_lloyd_topk
-    (ANN serving) and semantic_dedup_ivf (cluster-then-dedup blocking):
-    md5-selected seeds, ``n_iters`` unrolled assign/recompute rounds as
-    join+groupBy. Returns (final_assignment(id, cell, v, vv),
-    centroids(cell, cv, cc), base(id, v, vv)). See ivf_lloyd_topk's
-    docstring for the scale shape and float notes."""
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(F.col(id_col), dvec.alias("v")).withColumn(
-        "vv", _dot(F.col("v"), F.col("v"))
-    )
-
-    from pyspark.sql import Window
-
-    # md5-selected seeds; the row_number window runs on an n_cells-row
-    # frame after the TakeOrdered limit — bounded, not a global sort
-    seeds = (
-        base.select(
-            F.col(id_col), F.col("v"),
-            F.md5(F.col(id_col).cast("string")).alias("_h"),
-        )
-        .orderBy("_h", id_col)
-        .limit(n_cells)
-    )
-    cent = seeds.select(
-        (
-            F.row_number().over(Window.orderBy("_h", id_col)) - 1
-        ).alias("cell"),
-        F.col("v").alias("cv"),
-    ).withColumn("cc", _dot(F.col("cv"), F.col("cv")))
-    cent = cent.localCheckpoint(eager=False)
-
-    def assign(c: DataFrame) -> DataFrame:
-        # argmin as a NARROW per-row fold (r17, guide §2.4): the n_cells
-        # centroids collapse to ONE broadcast row holding the sorted
-        # (cell, cv, cc) array, and each corpus row picks its nearest
-        # cell by folding that array — no crossJoin row fan-out and no
-        # corpus-wide exchange. The r16 form's groupBy(id) shuffled the
-        # whole (id, v, vv) corpus per assignment even though every
-        # fan-out row of an id already sat in one partition (the partial
-        # aggregate had collapsed the group before the exchange — the
-        # exchange moved fully-aggregated rows). Distances are the
-        # bit-identical expression (vv - 2*dot(v, cv) + cc, same _dot
-        # fold), the fold runs in ascending cell order with a strict <,
-        # so ties keep the smallest cell — exactly min_by's
-        # struct(d, cell) order on the finite, non-null distances this
-        # corpus produces (the premise every cosine consumer already
-        # makes).
-        carr = c.agg(
-            F.array_sort(F.collect_list(F.struct("cell", "cv", "cc"))).alias(
-                "_cents"
-            )
-        )
-        cand = F.transform(
-            F.col("_cents"),
-            lambda s: F.struct(
-                (
-                    F.col("vv") - 2 * _dot(F.col("v"), s["cv"]) + s["cc"]
-                ).alias("d"),
-                s["cell"].alias("cell"),
-            ),
-        )
-        best = F.aggregate(
-            cand,
-            F.struct(
-                F.lit(float("inf")).alias("d"),
-                F.lit(-1).cast("integer").alias("cell"),
-            ),
-            lambda acc, x: F.when(x["d"] < acc["d"], x).otherwise(acc),
-        )
-        return base.crossJoin(F.broadcast(carr)).select(
-            F.col(id_col), best["cell"].alias("cell"), "v", "vv"
-        )
-
-    for _ in range(n_iters):
-        assigned = assign(cent)
-        ex = assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-        cm = ex.groupBy("cell", "pos").agg(F.avg("val").alias("m"))
-        cent = (
-            cm.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .withColumn("cc", _dot(F.col("cv"), F.col("cv")))
-            .localCheckpoint(eager=False)
-        )
-
-    final = assign(cent)
-    return final, cent, base
-
-
-def md5_planes(n_planes: int, dim: int, salt: str = "") -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes from md5 — engine-neutral:
-    the same constants can be embedded verbatim in a SQL oracle, making
-    sign-LSH value-hash attestable (numpy's RandomState cannot be replayed
-    in SQL). Component (i, j) = (md5int('plane{salt}{i},{j}') % 2001 -
-    1000) / 1000 — uniform-ish in [-1, 1], which is all sign-LSH needs.
-    ``salt`` (e.g. ``"0:"``, ``"1:"``) seeds independent plane sets for
-    multi-table OR-construction; the unsalted family is the original
-    single-table one."""
-    import hashlib
-
-    return [
-        [
-            (
-                int(
-                    hashlib.md5(f"plane{salt}{i},{j}".encode()).hexdigest()[:15],
-                    16,
-                )
-                % 2001
-                - 1000
-            )
-            / 1000.0
-            for j in range(dim)
-        ]
-        for i in range(n_planes)
-    ]
-
-
-def random_hyperplane_buckets(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    plane_source: str = "numpy",
-) -> DataFrame:
-    """Sign-LSH bucketing: n_planes deterministic pseudo-random hyperplanes,
-    bucket = sign bit pattern. ANN queries only compare within the query's
-    bucket (and optionally neighboring buckets). ``plane_source="md5"``
-    uses the engine-neutral md5 constants (oracle-replayable);
-    ``"numpy"`` keeps the seeded-Gaussian planes."""
-    if plane_source == "md5":
-        dim = len(embeddings.select(vec_col).first()[0])
-        planes = md5_planes(n_planes, dim)
-    else:
-        import numpy as np
-
-        dim = len(embeddings.select(vec_col).first()[0])
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((n_planes, dim))
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(F.col(id_col), dvec.alias("v"))
-    bucket = None
-    for i in range(n_planes):
-        plane = F.array([F.lit(float(x)) for x in planes[i]])
-        bit = (_dot(F.col("v"), plane) > 0).cast("int")
-        term = bit * F.lit(2**i)
-        bucket = term if bucket is None else bucket + term
-    return base.withColumn("bucket", bucket).select(id_col, "bucket")
-
-
-def ann_topk_lsh(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    plane_source: str = "numpy",
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """Approximate top-k: exact cosine ranking restricted to the query's
-    LSH bucket neighborhood. Sub-linear candidate set at scale (corpus
-    partitioned by bucket); recall tunable via ``n_planes`` AND
-    ``probe_hamming`` — multi-probe LSH (Lv et al., VLDB'07): also probe
-    buckets within Hamming distance d of the query's sign pattern, since
-    a true neighbor's dot product only needs to cross zero on d planes to
-    land one bucket over. d=1 probes n_planes+1 of the 2^n_planes buckets
-    (candidates ~(1+n_planes)/2^n_planes of the corpus). Measured
-    recall@10 on the sf0.1 testdata embeddings (near-uniform vectors —
-    the WORST case for LSH; clustered real embeddings fare far better):
-    0.08 at d=0, 0.24 at d=1, 0.55 at d=2, vs candidate fractions
-    1/64, 7/64, 22/64 at n_planes=6."""
-    buckets = random_hyperplane_buckets(
-        embeddings, n_planes, id_col, vec_col, seed, plane_source
-    )
-    qb = buckets.filter(F.col(id_col) == query_id).select(
-        F.col("bucket").alias("qbucket")
-    )
-    cands = buckets.join(
-        F.broadcast(qb),
-        F.bit_count(F.col("bucket").bitwiseXOR(F.col("qbucket")))
-        <= probe_hamming,
-    ).select(id_col)
-    corpus = embeddings.join(cands, id_col, "left_semi")
-    return cosine_topk_bruteforce(corpus, query_id, k, id_col, vec_col)
-
-
-def _multitable_buckets(
-    embeddings: DataFrame,
-    n_tables: int,
-    n_planes: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Per-vector sign buckets for every LSH table in ONE corpus pass:
-    (id, vec, b0..b{L-1}). All L*P dots run in a single codegen
-    explode-aggregate (the minhash_signatures_df device): higher-order
-    array folds evaluate INTERPRETED per element, so 40 per-row folds
-    measured ~5x slower than exploding positions once and summing
-    val * plane[pos] for every plane as map-side-combined aggregates. A
-    one-row exploded array stays in its task in position order, so each
-    sum folds left-to-right — the same float sequence as the fold it
-    replaces (and as the oracle's list_inner_product). Plane components
-    ride as a broadcast dim-row constant table (one column per
-    (table, plane)) — a literal-array element_at per aggregate would
-    rebuild the array per exploded row (CreateArray is not
-    constant-folded).
-
-    Driver-side cost matters here as much as the plan (r13/r14 bench:
-    the 2x-floor flags on the serving queries were pure plan-BUILD
-    latency). Three construction-side levers, zero plan change:
-    the ENTIRE L*P aggregate — dots AND the sign-bucket algebra — is ONE
-    parsed struct expression (one py4j call instead of 80 F.expr calls +
-    a second 10-expression select; a struct of aggregates is a legal
-    aggregate expression, and `_s.*` expands in declared field order);
-    the planes table goes through Arrow (spark.createDataFrame(pandas))
-    rather than row-at-a-time conversion; and the planes DataFrame is
-    CACHED per (session, L, P, dim) — it is a deterministic md5 constant
-    table, so bench repeats and multi-query sessions skip its ~0.1-0.6s
-    Arrow localization entirely. ``dim`` skips the first() probe job
-    when the caller already knows the vector width (e.g. it collected
-    the query vector)."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(F.col(id_col), F.col(vec_col), dvec.alias("v"))
-    ex = fan_out(base, id_col).select(
-        F.col(id_col), F.col(vec_col), F.posexplode("v").alias("pos", "val")
-    )
-    spark = embeddings.sparkSession
-    planes_df = _planes_table(spark, n_tables, n_planes, dim)
-    # backtick-quote the caller-supplied identifier: expression strings
-    # (unlike the Column API) must escape names containing spaces/dots/
-    # hyphens or they mis-parse / mis-bind. The bucket bit algebra reads
-    # each sum(val * _c{t}_{i}) exactly where the old two-step form read
-    # its _d{t}_{i} alias — same aggregate, same post-agg projection.
-    buckets = ", ".join(
-        "("
-        + " + ".join(
-            f"CAST(sum(val * _c{t}_{i}) > 0 AS INT) * {2**i}"
-            for i in range(n_planes)
-        )
-        + f") AS b{t}"
-        for t in range(n_tables)
-    )
-    joined = ex.join(F.broadcast(planes_df), "pos")
-    agg = joined.groupBy(id_col).agg(
-        F.expr(
-            f"struct(first(`{vec_col}`) AS `{vec_col}`, {buckets}) AS _s"
-        )
-    )
-    return agg.select(id_col, "_s.*")
-
-
-_PLANES_TABLES: dict[tuple[str, int, int, int], DataFrame] = {}
-
-
-def _planes_table(spark, n_tables: int, n_planes: int, dim: int) -> DataFrame:
-    """The broadcast constant table of md5 plane components — one column
-    per (table, plane), one row per vector position. Deterministic in its
-    key, so cached per Spark application (applicationId is unique per
-    context, so a stopped-and-restarted session can never serve a stale
-    DataFrame the way an id()-keyed cache could)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, n_tables, n_planes, dim)
-    cached = _PLANES_TABLES.get(key)
-    if cached is not None:
-        return cached
-    # purge entries from stopped contexts so JVM-side DataFrame handles
-    # don't accumulate across session restarts in a long-lived process
-    for stale in [k for k in _PLANES_TABLES if k[0] != app_id]:
-        del _PLANES_TABLES[stale]
-    all_planes = [
-        md5_planes(n_planes, dim, salt=f"{t}:") for t in range(n_tables)
-    ]
-    planes_pd = pd.DataFrame(
-        {
-            "pos": pd.Series(range(dim), dtype="int32"),
-            **{
-                f"_c{t}_{i}": pd.Series(
-                    all_planes[t][i], dtype="float64"
-                )
-                for t in range(n_tables)
-                for i in range(n_planes)
-            },
-        }
-    )
-    df = spark.createDataFrame(planes_pd)
-    _PLANES_TABLES[key] = df
-    return df
-
-
-def multitable_lsh_candidates(
-    embeddings: DataFrame,
-    query_id: int | None,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec: list[float] | None = None,
-) -> DataFrame:
-    """Candidate ids for multi-table sign-LSH (OR-construction, Lv et al.
-    VLDB'07 combined with the classic Indyk-Motwani multi-table scheme):
-    ``n_tables`` independent md5-derived plane sets (salt ``"{t}:"`` per
-    table), each vector gets one sign-bucket per table, and a corpus
-    vector is a candidate if it lands within the query's Hamming-d ball
-    in ANY table. Per-table candidate mass ~(1 + C(P,1) + ... +
-    C(P,d))/2^P of the corpus; the union over L tables is sub-additive
-    (overlap), so the fraction knob is (L, P, d). More tables buys recall
-    at linear candidate cost — the standard LSH recall lever that a
-    single table cannot reach (a true neighbor only needs to collide
-    once).
-
-    Scale shape: bucket assignment is one codegen projection (L*P array
-    folds, no shuffle); the query's L buckets broadcast as one row; the
-    membership test is bit algebra on that broadcast — the corpus never
-    shuffles. At 100 TB the corpus would be written bucket-partitioned
-    per table so the probe prunes partitions instead of scanning."""
-    b = _multitable_buckets(embeddings, n_tables, n_planes, id_col, vec_col)
-    dim = (
-        len(query_vec)
-        if query_vec is not None
-        else len(embeddings.select(vec_col).first()[0])
-    )
-    if query_vec is not None:
-        # EXTERNAL query (the serving call): its per-table buckets are
-        # computed driver-side with the SAME sequential fold order as the
-        # executor-side sums (identical IEEE doubles -> identical signs),
-        # and enter the membership test as literals — no scan, no join at
-        # all on the query side
-        cond = None
-        for t in range(n_tables):
-            planes = md5_planes(n_planes, dim, salt=f"{t}:")
-            qb_t = 0
-            for i in range(n_planes):
-                acc = 0.0
-                for x, pc in zip(query_vec, planes[i]):
-                    acc += float(x) * pc
-                if acc > 0:
-                    qb_t += 2**i
-            hit = (
-                F.bit_count(F.col(f"b{t}").bitwiseXOR(F.lit(qb_t)))
-                <= probe_hamming
-            )
-            cond = hit if cond is None else cond | hit
-        return b.filter(cond).select(id_col, vec_col)
-    qb = b.filter(F.col(id_col) == query_id).select(
-        *[F.col(f"b{t}").alias(f"qb{t}") for t in range(n_tables)]
-    )
-    cond = None
-    for t in range(n_tables):
-        hit = (
-            F.bit_count(F.col(f"b{t}").bitwiseXOR(F.col(f"qb{t}")))
-            <= probe_hamming
-        )
-        cond = hit if cond is None else cond | hit
-    # the vector column rides along so the caller can rank WITHOUT a
-    # join back to the corpus (the semi-join alternative sort-merges on
-    # id; this shape's only join is the 1-row broadcast membership test)
-    return b.join(F.broadcast(qb), cond).select(id_col, vec_col)
-
-
-def ann_topk_multitable(
-    embeddings: DataFrame,
-    query_id: int | None,
-    k: int = 10,
-    n_tables: int = 5,
-    n_planes: int = 8,
-    probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec: list[float] | None = None,
-    eager_candidates: bool = False,
-) -> DataFrame:
-    """Approximate top-k via multi-table sign-LSH: exact cosine ranking
-    restricted to the union of the query's per-table Hamming-d balls
-    (multitable_lsh_candidates). Lifts recall well past what one table's
-    multi-probe ball can reach at the same candidate budget — measured on
-    the near-uniform testdata panel (LSH's worst case; see SCALING §2c
-    and tools/recall_probe.py): recall@10 0.562 at 18.4% candidates
-    (L=5, P=8, d=1) vs 0.238 at ~11% for the single-table 6-plane d=1
-    ball. md5-derived planes keep the whole path SQL-replayable
-    (value-hash attested).
-
-    ``eager_candidates=True`` localCheckpoints the candidate frame before
-    ranking: with a corpus ``query_id`` the ranker consumes it on TWO plan
-    branches (the broadcast 1-row query side and the scored side), and
-    Spark does not share a subplan across branches (the Q15 lesson), so
-    without the checkpoint the full bucket pass runs twice per action."""
-    cands = multitable_lsh_candidates(
-        embeddings, query_id, n_tables, n_planes, probe_hamming,
-        id_col, vec_col, query_vec=query_vec,
-    )
-    if eager_candidates:
-        cands = cands.localCheckpoint(eager=True)
-    # cands carries the vector column — rank directly, no corpus join-back
-    # (a corpus query is always its own candidate: Hamming 0 in every
-    # table; an external query_vec ranks against its ball's members)
-    return cosine_topk_bruteforce(
-        cands, query_id, k, id_col, vec_col, query_vec=query_vec
-    )
-
-
-def multiprobe_bucket_sets(
-    query_vec: list[float],
-    n_tables: int = 5,
-    n_planes: int = 8,
-    n_flips: int = 4,
-) -> list[list[int]]:
-    """Query-DIRECTED probe sets (Lv et al. VLDB'07 multi-probe proper):
-    per table, the query's plane dots are computed driver-side with the
-    SAME sequential fold order as the executor-side sums (identical IEEE
-    doubles -> identical signs), then instead of probing the full
-    Hamming-1 ball (P flips), only the ``n_flips`` planes with the
-    SMALLEST |dot| — the ones a true neighbor is most likely to disagree
-    on — are flipped. Ties break on plane index. Returns one sorted
-    bucket list per table (base bucket + directed flips): 1 + n_flips
-    buckets instead of 1 + P, cutting candidate fraction at nearly the
-    same recall. O(L * P * dim) driver arithmetic on one vector — no
-    Spark job."""
-    sets = []
-    dim = len(query_vec)
-    for t in range(n_tables):
-        planes = md5_planes(n_planes, dim, salt=f"{t}:")
-        dots = []
-        qb = 0
-        for i in range(n_planes):
-            acc = 0.0
-            for x, pc in zip(query_vec, planes[i]):
-                acc += float(x) * pc
-            dots.append(acc)
-            if acc > 0:
-                qb += 1 << i
-        order = sorted(range(n_planes), key=lambda i: (abs(dots[i]), i))
-        probes = {qb} | {qb ^ (1 << i) for i in order[:n_flips]}
-        sets.append(sorted(probes))
-    return sets
-
-
-def ann_topk_multiprobe(
-    embeddings: DataFrame,
-    query_id: int | None,
-    k: int = 10,
-    n_tables: int = 5,
-    n_planes: int = 8,
-    n_flips: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec: list[float] | None = None,
-) -> DataFrame:
-    """Multi-table sign-LSH ANN with query-directed probing: candidate =
-    bucket membership in any table's directed probe set
-    (multiprobe_bucket_sets — base bucket + the n_flips lowest-|margin|
-    flips), exact cosine rank over the union. Compared with the full
-    Hamming-1 ball (ann_topk_multitable), the directed sets probe
-    (1+n_flips)/(1+P) of the buckets per table, so the candidate
-    fraction drops proportionally while keeping the flips that carry
-    almost all of the ball's recall (measured: SCALING §2c /
-    tools/recall_probe.py). The probe sets enter the corpus pass as
-    LITERAL lists — at 100 TB, with the corpus written bucket-partitioned
-    per table, they are exactly the partition directories read.
-
-    The 1-row query-vector collect for a corpus ``query_id`` is O(1)
-    driver traffic (pushed-down id filter, the cosine_topk_vectorized
-    precedent); the corpus never shuffles — one explode-agg bucket pass,
-    literal membership filter, TakeOrdered rank. Whole path (dots, |margin|
-    ordering, flips, in-union rank) is deterministic scalar arithmetic,
-    SQL-replayable (ann_multiprobe_topk's oracle)."""
-    cands, qv = multiprobe_candidates(
-        embeddings, query_id, n_tables, n_planes, n_flips,
-        id_col, vec_col, query_vec,
-    )
-    cands = cands.localCheckpoint(eager=True)
-    return cosine_topk_bruteforce(
-        cands, query_id, k, id_col, vec_col, query_vec=qv
-    )
-
-
-def multiprobe_candidates(
-    embeddings: DataFrame,
-    query_id: int | None,
-    n_tables: int = 5,
-    n_planes: int = 8,
-    n_flips: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec: list[float] | None = None,
-) -> tuple[DataFrame, list[float]]:
-    """(candidates, query_vector) for the query-directed probe: corpus
-    bucket pass (_multitable_buckets, one exchange-free explode-agg) then
-    a LITERAL probe-set membership filter — no join at all on the query
-    side. The candidate frame carries the vector column so the ranker
-    never joins back to the corpus."""
-    if query_vec is None:
-        row = (
-            embeddings.filter(F.col(id_col) == query_id)
-            .select(
-                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                    "v"
-                )
-            )
-            .collect()
-        )
-        if not row:
-            raise ValueError(f"query id {query_id} not found")
-        qv = [float(x) for x in row[0]["v"]]
-    else:
-        qv = [float(x) for x in query_vec]
-    probe_sets = multiprobe_bucket_sets(qv, n_tables, n_planes, n_flips)
-    # the collected query vector pins dim — no extra first() probe job
-    b = _multitable_buckets(
-        embeddings, n_tables, n_planes, id_col, vec_col, dim=len(qv)
-    )
-    cond = F.expr(
-        " OR ".join(
-            f"b{t} IN ({', '.join(str(p) for p in probes)})"
-            for t, probes in enumerate(probe_sets)
-        )
-    )
-    return b.filter(cond).select(id_col, vec_col), qv
-
-
-def write_multitable_index(
-    embeddings: DataFrame,
-    path: str,
-    n_tables: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The multi-table serving artifact: int8-quantized rows REPLICATED
-    once per LSH table and written parquet-partitioned by (tbl, bucket),
-    so a query-directed probe (multiprobe_bucket_sets) reads ONLY the
-    L * (1 + n_flips) partition directories its probe sets name — the
-    on-disk form of ann_topk_multiprobe, where "candidate fraction" is
-    literally the fraction of directories read. Lx storage is the
-    classic multi-table LSH trade (Indyk-Motwani): int8 (4x smaller than
-    float32) pays for ~4 tables' replication by itself.
-
-    Quantization (qvec, scale, dequantized norm) is materialized ONCE
-    per vector before the L-way stack, so the explode replicates plain
-    columns, not expressions."""
-    b = _multitable_buckets(embeddings, n_tables, n_planes, id_col, vec_col)
-    # a narrow join on id to attach bucket columns to separately-built
-    # quantized rows would shuffle both sides; instead carry the bucket
-    # columns THROUGH the quantization projection chain
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    scaled = b.withColumn("v", dvec).withColumn(
-        "scale",
-        F.greatest(
-            F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))),
-            F.lit(1e-12),
-        )
-        / 127.0,
-    )
-    qcols = scaled.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col("v"), lambda x: F.round(x / F.col("scale")).cast("tinyint")
-        ).alias("qvec"),
-        "scale",
-        *[F.col(f"b{t}") for t in range(n_tables)],
-    )
-    deq = qcols.withColumn(
-        "dv", dequantized(F.col("qvec"), F.col("scale"))
-    ).withColumn("nrm", F.sqrt(_dot(F.col("dv"), F.col("dv"))))
-    stacked = deq.select(
-        "vec_id",
-        "qvec",
-        "scale",
-        "nrm",
-        F.posexplode(
-            F.array(*[F.col(f"b{t}") for t in range(n_tables)])
-        ).alias("tbl", "bucket"),
-    )
-    # cluster by the partition key pair before writing: otherwise every
-    # write task emits a file into every (tbl, bucket) directory it
-    # touches — tasks x L x 2^P tiny files — and each probe's scan pays
-    # listing/open overhead that dwarfs the data read (measured 4.2 s ->
-    # 0.6 s serving at sf0.1). One exchange at build time, one
-    # well-sized file per directory. The partition COUNT is explicit:
-    # this build is commit-bound (one file create+rename per populated
-    # directory, L x min(2^P, n) of them), and AQE's coalescing — tuned
-    # for shuffle volume, blind to commit parallelism — would collapse a
-    # small exchange to ONE task committing every file serially
-    # (measured 35 s -> 9-12 s at sf0.1 with the explicit count; each
-    # key pair still hashes to exactly one partition, so the
-    # one-file-per-directory property is unchanged).
-    stacked.repartition(
-        stacked.sparkSession.sparkContext.defaultParallelism, "tbl", "bucket"
-    ).write.partitionBy("tbl", "bucket").mode("overwrite").parquet(path)
-
-
-def query_multitable_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_tables: int = 10,
-    n_planes: int = 8,
-    n_flips: int = 3,
-) -> DataFrame:
-    """Serve a top-k query from a write_multitable_index artifact: the
-    directed probe sets (multiprobe_bucket_sets — base bucket + the
-    n_flips lowest-|margin| flips per table) become an OR of literal
-    (tbl, bucket) predicates over the partition columns, so ONLY those
-    directories are read (PartitionFilters, plan-asserted). A vector hit
-    in several tables is deduplicated by a min-tbl groupBy over the
-    candidate frame (candidate-sized shuffle, never corpus-sized), then
-    exact dequantized-cosine rank."""
-    probe_sets = multiprobe_bucket_sets(query_vec, n_tables, n_planes, n_flips)
-    cond = None
-    for t, probes in enumerate(probe_sets):
-        hit = (F.col("tbl") == t) & F.col("bucket").isin(probes)
-        cond = hit if cond is None else cond | hit
-    qv = F.array([F.lit(float(x)) for x in query_vec])
-    qn = sum(float(x) * float(x) for x in query_vec) ** 0.5
-    # name the probe directories EXPLICITLY instead of opening the whole
-    # artifact root: partition DISCOVERY over L x 2^P directories costs
-    # more than the probe itself (measured ~5 s vs ~0.3 s of data read at
-    # sf0.1), and it grows with the artifact — listing L*(1+m) named
-    # dirs is O(probe budget) at any corpus size. basePath keeps the
-    # (tbl, bucket) partition columns; the redundant literal filter stays
-    # on top so the scan still carries PartitionFilters (plan-asserted)
-    # and an over-wide glob could never widen the candidate set.
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    probe_dirs = [
-        d
-        for t, probes in enumerate(probe_sets)
-        for d in (f"{path}/tbl={t}/bucket={b}" for b in probes)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(d))
-    ]
-    if not probe_dirs:
-        return spark.createDataFrame([], "vec_id bigint, cosine double")
-    idx = (
-        spark.read.option("basePath", path).parquet(*probe_dirs).filter(cond)
-    )
-    uniq = idx.groupBy("vec_id").agg(
-        F.first("qvec").alias("qvec"),
-        F.first("scale").alias("scale"),
-        F.first("nrm").alias("nrm"),
-    )
-    deq = uniq.select(
-        "vec_id", dequantized(F.col("qvec"), F.col("scale")).alias("dv"), "nrm"
-    )
-    return (
-        deq.select(
-            "vec_id",
-            F.round(
-                _dot(F.col("dv"), qv) / (F.col("nrm") * F.lit(qn)), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The IVF serving artifact — the trained-quantizer member of the
-    index family (axis buckets: write_vector_index; LSH tables:
-    write_multitable_index): int8 rows parquet-partitioned by their
-    deterministic-Lloyd cell (_lloyd_fit), with the final centroids
-    stored as a tiny ``_centroids`` parquet beside the data so serving
-    needs no corpus pass to pick probes. Cells are data-adaptive, so at
-    100 TB each partition directory holds one coherent region of the
-    embedding space and a query reads only its ``n_probe`` nearest
-    regions — the classic IVF layout, on plain partitioned parquet."""
-    final, cent, _base = _lloyd_fit(
-        embeddings, n_cells, n_iters, id_col, vec_col
-    )
-    # quantize the assigned rows: same projection chain as
-    # vector_index_rows but carrying the cell instead of the axis bucket
-    scaled = final.withColumn(
-        "scale",
-        F.greatest(
-            F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))),
-            F.lit(1e-12),
-        )
-        / 127.0,
-    )
-    quant = scaled.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col("v"), lambda x: F.round(x / F.col("scale")).cast("tinyint")
-        ).alias("qvec"),
-        "scale",
-        "cell",
-    )
-    deq = quant.withColumn(
-        "dv", dequantized(F.col("qvec"), F.col("scale"))
-    )
-    rows = deq.select(
-        "vec_id",
-        "qvec",
-        "scale",
-        F.sqrt(_dot(F.col("dv"), F.col("dv"))).alias("nrm"),
-        "cell",
-    )
-    # explicit count pins the commit parallelism against AQE coalescing
-    # (see write_multitable_index); one cell still -> one partition
-    rows.repartition(
-        rows.sparkSession.sparkContext.defaultParallelism, "cell"
-    ).write.partitionBy("cell").mode("overwrite").parquet(path)
-    cent.select("cell", "cv").write.mode("overwrite").parquet(
-        f"{path}/_centroids"
-    )
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-) -> DataFrame:
-    """Serve top-k from a write_ivf_index artifact: the stored centroids
-    (n_cells rows — an O(1) driver read) rank by cosine against the
-    query driver-side with the same sequential fold order as SQL's
-    list_inner_product (ties to the smaller cell), and ONLY the
-    ``n_probe`` winning cell directories are opened — named explicitly,
-    the multitable device, so neither partition discovery nor IO ever
-    touches the other cells. Exact dequantized-cosine rank inside."""
-    qv_list = [float(x) for x in query_vec]
-    cent_rows = spark.read.parquet(f"{path}/_centroids").collect()
-    scored = []
-    for r in cent_rows:
-        cv = [float(x) for x in r["cv"]]
-        dot = 0.0
-        cc = 0.0
-        for x, c in zip(qv_list, cv):
-            dot += x * c
-        for c in cv:
-            cc += c * c
-        qn_ = sum(x * x for x in qv_list) ** 0.5
-        scored.append((dot / ((cc ** 0.5) * qn_), int(r["cell"])))
-    scored.sort(key=lambda t: (-t[0], t[1]))
-    probes = [cell for _cs, cell in scored[:n_probe]]
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    probe_dirs = [
-        d
-        for d in (f"{path}/cell={c}" for c in probes)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(d))
-    ]
-    if not probe_dirs:
-        return spark.createDataFrame([], "vec_id bigint, cosine double")
-    qv = F.array([F.lit(x) for x in qv_list])
-    qn = sum(x * x for x in qv_list) ** 0.5
-    idx = (
-        spark.read.option("basePath", path)
-        .parquet(*probe_dirs)
-        .filter(F.col("cell").isin(probes))
-    )
-    deq = idx.select(
-        "vec_id", dequantized(F.col("qvec"), F.col("scale")).alias("dv"), "nrm"
-    )
-    return (
-        deq.select(
-            "vec_id",
-            F.round(
-                _dot(F.col("dv"), qv) / (F.col("nrm") * F.lit(qn)), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def bucket_balanced_sample(
-    embeddings: DataFrame,
-    k_per_bucket: int = 8,
-    n_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Diversity-balanced corpus sampling: partition the embedding space
-    into sign-pattern buckets and take an equal per-bucket quota, so a
-    subsample cannot be flooded by the corpus's dominant semantic mode
-    (cluster-balanced selection, the embedding-space analogue of the
-    per-source stratified_sample_k).
-
-    Buckets are the sign bits of the first ``n_bits`` embedding components
-    — an axis-aligned special case of sign-LSH that is deterministic and
-    SQL-reproducible (no seeded hyperplanes), giving the query a value-hash
-    oracle; swap in random_hyperplane_buckets or the trained IVF centroids
-    (ivf_kmeans_topk) when bucket quality matters more than attestability.
-    Within a bucket the quota picks the k smallest md5(id) — an unbiased,
-    RNG-free draw (same device as hash_split).
-
-    Scale: bucket assignment is a codegen'd projection (no shuffle); the
-    quota is one window rank per bucket — a single shuffle on the bucket
-    key. With 2^n_bits buckets well below partition count, AQE's skew
-    split handles a hot bucket; for pathological skew, pre-aggregate a
-    per-partition top-k (the cosine_topk pattern) before the global rank.
-    """
-    from pyspark.sql import Window
-
-    bucket = None
-    for j in range(n_bits):
-        bit = (F.element_at(F.col(vec_col), j + 1) > 0).cast("int")
-        term = bit * F.lit(2**j)
-        bucket = term if bucket is None else bucket + term
-    ranked = embeddings.select(
-        F.col(id_col), bucket.alias("bucket")
-    ).withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("bucket").orderBy(
-                F.md5(F.col(id_col).cast("string"))
-            )
-        ),
-    )
-    return ranked.filter(F.col("rn") <= k_per_bucket).select(
-        id_col, "bucket", F.col("rn").alias("quota_rank")
-    )
-
-
-def ann_topk_axis(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """ANN with a deterministic, SQL-reproducible bucketer: exact cosine
-    ranking restricted to the query's axis-aligned sign bucket (the
-    bucket_balanced_sample hash family). Same sub-linear candidate shape
-    as ann_topk_lsh — corpus partitioned by bucket, only the query's cell
-    is scanned — but with no seeded hyperplanes, so the whole query sits
-    behind a value-hash oracle; use random_hyperplane_buckets when recall
-    across arbitrary directions matters more than attestability."""
-    bucket = None
-    for j in range(n_bits):
-        bit = (F.element_at(F.col(vec_col), j + 1) > 0).cast("int")
-        term = bit * F.lit(2**j)
-        bucket = term if bucket is None else bucket + term
-    b = embeddings.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
-    qb = b.filter(F.col(id_col) == query_id).select(
-        F.col("bucket").alias("qbucket")
-    )
-    # multi-probe: the Hamming-d ball around the query bucket (see
-    # ann_topk_lsh) — same recall-vs-candidate-budget knob, still pure
-    # bit algebra the oracle replays
-    cands = b.join(
-        F.broadcast(qb),
-        F.bit_count(F.col("bucket").bitwiseXOR(F.col("qbucket")))
-        <= probe_hamming,
-    ).select(id_col, vec_col)
-    return cosine_topk_bruteforce(cands, query_id, k, id_col, vec_col)
 
 
 def int8_quantize(
@@ -1329,140 +242,6 @@ def int8_cosine_topk(
         scored.select(
             id_col,
             F.round(cosine(F.col("dv"), F.col("qdv")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def int8_rerank_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_tables: int = 10,
-    n_planes: int = 8,
-    n_flips: int = 4,
-    rerank: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-stage ANN serving — the asymmetric-distance re-rank recipe
-    (Jegou et al. 2011, ADC): a WIDE query-directed multi-probe
-    candidate set is ranked by int8 ASYMMETRIC cosine (quantized corpus
-    vector against the full-precision query), and only the top
-    ``rerank`` survivors get the exact full-precision re-rank to top-k.
-
-    The scale story: the wide coarse stage touches int8 rows — 4x fewer
-    bytes than a float32 rank over the same candidate fraction (16x vs
-    float64) — while exact arithmetic touches only rerank/corpus rows
-    (the broadcast id-join back to the corpus here stands in for the
-    artifact form's id-keyed fetch). Recall is bounded above by the
-    probe stage's candidate recall; int8 ranking fidelity costs ~0-2
-    points of it at practical rerank depths (SCALING §2c measures the
-    operating point).
-
-    Construction is parsed-string selectExpr throughout (r14 verdict #1:
-    the 2.7x-floor flag was py4j plan-build latency — the qlit array
-    alone was ~130 round trips, each cosine fold ~50 more; the string
-    twins parse to the SAME Catalyst expressions in ~4 calls total).
-    The top-R frame feeds exactly ONE consumer (the broadcast id-fetch),
-    so it is NOT checkpointed — the r14 eager localCheckpoint paid a
-    full extra job submission + materialization for a subplan the single
-    action would only have run once anyway."""
-    cand, qv = multiprobe_candidates(
-        embeddings, query_id, n_tables, n_planes, n_flips, id_col, vec_col
-    )
-    qarr = _darr_sql(qv)
-    # coarse int8 scoring via the explode + scalar-aggregate device
-    # (the _multitable_buckets lesson, extended): higher-order folds
-    # evaluate INTERPRETED per element AND pay a long per-session JIT
-    # warm-up (measured: the fold form needed ~6 executions to drop
-    # from 2.5 s to 0.9 s; this form starts at the floor). One
-    # posexplode, the query components ride a 64-row broadcast constant
-    # table, dequantize + products are plain codegen'd scalar columns,
-    # and the per-id sums fold left-to-right in position order (one
-    # id's exploded rows stay in its task, the oracle-parity argument
-    # _multitable_buckets already carries) — the float sequence is
-    # bit-identical to the fold it replaces. The query-side norm folds
-    # driver-side with the same left-to-right order
-    # (multiprobe_bucket_sets precedent).
-    spark = embeddings.sparkSession
-    qq = 0.0
-    for x in qv:
-        qq += x * x
-    qtab = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "pos": pd.Series(range(len(qv)), dtype="int32"),
-                "_qc": pd.Series(qv, dtype="float64"),
-            }
-        )
-    )
-    scaled = (
-        cand.filter(F.col(id_col) != F.lit(query_id))
-        .selectExpr(
-            f"`{id_col}`",
-            f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS v",
-        )
-        .selectExpr(
-            f"`{id_col}`",
-            "v",
-            "greatest(array_max(transform(v, x -> abs(x))), 1E-12D)"
-            " / CAST(127.0 AS DOUBLE) AS scale",
-        )
-    )
-    ex = scaled.select(
-        F.col(id_col), F.col("scale"), F.posexplode("v").alias("pos", "val")
-    ).withColumn("_dv", F.expr("round(val / scale) * scale"))
-    coarse = (
-        ex.join(F.broadcast(qtab), "pos")
-        .groupBy(id_col)
-        .agg(
-            F.expr(
-                "struct(sum(_dv * _qc) AS _num, sum(_dv * _dv) AS _den)"
-                " AS _s"
-            )
-        )
-        .selectExpr(
-            f"`{id_col}`",
-            f"(_s._num / (SQRT(_s._den) * SQRT(CAST('{qq!r}' AS DOUBLE))))"
-            " AS _approx",
-        )
-        .orderBy(F.desc("_approx"), F.asc(id_col))
-        .limit(rerank)
-    )
-    # fetch the survivors by LITERAL id filter (the ivfpq-serve device):
-    # the rerank cut is bounded (collect = rerank ids, O(1) driver
-    # traffic), and an In(id, ...) predicate pushes into the parquet
-    # scan's row-group stats — at 100 TB the exact stage is a point
-    # lookup, where the broadcast-join form re-scans the whole corpus to
-    # probe a hash table. Also measured 2.5x faster in suite context
-    # (the broadcast job re-executes the coarse subplan under the
-    # exchange; the collect runs it once as a plain job). Above
-    # 1000 survivors the literal list would bloat the plan — ship the
-    # cut as a broadcast semi join instead (same rule as query_ivfpq).
-    ids = [r[0] for r in coarse.select(id_col).collect()]
-    if len(ids) > 1000:
-        # carry the id field's real DataType so a string/decimal id
-        # column joins without a miscast (ADVICE r15)
-        from pyspark.sql.types import StructField, StructType
-
-        id_field = embeddings.schema[id_col]
-        ids_df = embeddings.sparkSession.createDataFrame(
-            [(i,) for i in ids],
-            StructType([StructField(id_col, id_field.dataType, False)]),
-        )
-        exact = embeddings.join(F.broadcast(ids_df), id_col, "semi")
-    else:
-        exact = embeddings.filter(F.col(id_col).isin(ids))
-    return (
-        exact.selectExpr(
-            f"`{id_col}`",
-            f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS dv",
-        )
-        .selectExpr(
-            f"`{id_col}`",
-            f"round({_cosine_sql('dv', qarr)}, 6) AS cosine",
         )
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
@@ -1575,10 +354,9 @@ def write_vector_index(
     # recipe (at petabyte scale the same repartition keys the write; file
     # count within a directory then follows data volume, not task count).
     # Explicit partition count: AQE would coalesce a small exchange to
-    # one task and serialize the per-directory file commits (see
-    # write_multitable_index, where 2,541 dirs made this a 3x build
-    # stall); the explicit count pins commit parallelism while each
-    # bucket still hashes to one partition (one file per directory).
+    # one task and serialize the per-directory file commits; the explicit
+    # count pins commit parallelism while each bucket still hashes to one
+    # partition (one file per directory).
     rows.repartition(
         rows.sparkSession.sparkContext.defaultParallelism, "bucket"
     ).write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -1676,10 +454,10 @@ def compact_index(
     ingest's batch gap, where foreachBatch's sequential execution
     guarantees no concurrent reader; for genuinely concurrent serving,
     layer a versioned-directory pointer like pipeline.py's snapshot
-    writes on top). Works for any of the three on-disk ANN artifacts
-    (bucket / (tbl, bucket) / cell layouts) via ``partition_cols`` —
-    root-level ``_`` sidecars, files AND directories (_bloom.bin,
-    _centroids, _codebooks, _store, _commits), are carried over.
+    writes on top). Works for any partitioned artifact via
+    ``partition_cols`` (the vector index's ``bucket``, the corpus
+    signature index's ``hp``) — root-level ``_`` sidecars, files AND
+    directories (_bloom.bin, _commits), are carried over.
 
     ``dedup_cols`` (optional): dropDuplicates on these key columns during
     the rewrite. The streaming ingests pass their id column so that the
@@ -1699,8 +477,7 @@ def compact_index(
 
     def _count_files(p) -> int:
         # data files only: skip hidden names AND anything under a hidden
-        # directory (sidecar parquet like _centroids/, commit markers
-        # under _commits/)
+        # directory (commit markers under _commits/)
         base = str(fs.makeQualified(p)).rstrip("/")
         n = 0
         it = fs.listFiles(p, True)
@@ -1726,7 +503,7 @@ def compact_index(
     # intersects 2-char string prefixes against directory names, so the
     # renamed hashes would be silently skipped (duplicates admitted).
     # As strings, values are exactly the directory-name text, so int-typed
-    # layouts (bucket=, cell=) round-trip unchanged too.
+    # layouts (bucket=) round-trip unchanged too.
     infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     infer_prev = spark.conf.get(infer_key)
     spark.conf.set(infer_key, "false")
@@ -1742,12 +519,11 @@ def compact_index(
     finally:
         spark.conf.set(infer_key, infer_prev)
     # Carry root-level sidecars into the compacted tree: compaction does
-    # not change CONTENT, so membership/quantizer sidecars stay exactly
-    # valid — dropping one would force a full-index rebuild (_bloom.bin)
-    # or break serving outright (the cell layouts store _centroids /
-    # _codebooks / _store as parquet DIRECTORIES, and query_ivf_index /
-    # query_ivfpq_index fail without them). FileUtil.copy recurses for
-    # directory sources, so files and directories take the same call.
+    # not change CONTENT, so membership sidecars stay exactly valid —
+    # dropping one would force a full-index rebuild (_bloom.bin) or lose
+    # the batch commit markers (the _commits DIRECTORY). FileUtil.copy
+    # recurses for directory sources, so files and directories take the
+    # same call.
     # Parquet-invisible "_" names only; Spark's own _SUCCESS marker is
     # already in the new tree.
     for st in fs.listStatus(jpath):
@@ -1911,641 +687,5 @@ def rrf_fuse(
     return (
         fused.select(F.col(id_col), F.round(rrf, 6).alias("rrf"))
         .orderBy(F.col("rrf").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — Jegou et al. 2011, "Product Quantization for
-# Nearest Neighbor Search". The corpus memory story beyond int8: each
-# vector is stored as m sub-space codebook ids (m bytes at k<=256), so a
-# 64-dim float64 row (512 B) compresses to 4 B — 128x. ADC (asymmetric
-# distance computation) ranks candidates by m table lookups per row
-# against a per-query lookup table, never touching the original floats.
-# ---------------------------------------------------------------------------
-
-
-def pq_fit_encode(
-    embeddings: DataFrame,
-    m: int = 4,
-    k_codes: int = 8,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    passthrough: tuple[str, ...] = (),
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic PQ codebook fit + corpus encode. Returns
-    ``(codes(vec_id, codes array<int>), cent(sub, code, cv, cc))``.
-
-    Fit: the vector space splits into ``m`` contiguous sub-spaces of
-    dim/m components; each sub-space gets its own ``k_codes``-centroid
-    Lloyd quantizer (``n_iters`` unrolled rounds). Seeds reuse the
-    _lloyd_fit device — the k_codes corpus vectors with the smallest
-    md5(id), each SLICED per sub-space — so the whole build is
-    engine-neutral and SQL-replayable (no RNG). All m sub-quantizers
-    train in ONE pass per iteration over an exploded (vec_id, sub, sv)
-    frame: F.inline fans each row out to its m slices in the scan
-    projection (no join), assignment is a NARROW per-row argmin fold
-    over the broadcast per-sub codeword arrays (r17 — zero corpus
-    exchanges), and recompute is the same posexplode +
-    (sub, code, pos) partial avg as _lloyd_fit. The final encode never
-    explodes at all: one fold per row emits the whole codes array in
-    sub order, so the corpus crosses no exchange end to end.
-
-    Scale note: like ivf_kmeans_topk's max_fit_rows, a 100-TB fit would
-    first prune the exploded frame to a deterministic md5-prefix sample
-    (WHERE md5(id) < '04...') — centroid quality saturates orders of
-    magnitude below corpus size; the encode pass (assign against fixed
-    centroids) is the only stage that must see every row, and it is a
-    broadcast map. Float note: centroid means inherit engine summation
-    order — the same accepted ulp-boundary class as ivf_lloyd_topk."""
-    from pyspark.sql import Window
-
-    dim = len(embeddings.select(vec_col).first()[0])
-    d = dim // m
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(
-        F.col(id_col), *[F.col(c) for c in passthrough], dvec.alias("v")
-    )
-    sub = base.select(
-        id_col,
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.slice("v", s * d + 1, d).alias("sv"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ),
-    ).withColumn("svv", _dot(F.col("sv"), F.col("sv")))
-
-    seeds = (
-        base.select(
-            F.col(id_col),
-            F.col("v"),
-            F.md5(F.col(id_col).cast("string")).alias("_h"),
-        )
-        .orderBy("_h", id_col)
-        .limit(k_codes)
-    )
-    # number the seeds BEFORE the inline fan-out: a generator in the same
-    # projection expands rows first, so row_number would count the m-fold
-    # expansion (0..m*k-1), not the seeds
-    numbered = seeds.select(
-        (F.row_number().over(Window.orderBy("_h", id_col)) - 1).alias("code"),
-        "v",
-    )
-    cent = numbered.select(
-        "code",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.slice("v", s * d + 1, d).alias("cv"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ),
-    ).withColumn("cc", _dot(F.col("cv"), F.col("cv")))
-    cent = cent.localCheckpoint(eager=False)
-
-    def assign(c: DataFrame) -> DataFrame:
-        # narrow per-(id, sub) argmin (r17, guide §2.4): per sub-space
-        # the k_codes codewords collapse to one array row; the broadcast
-        # join on "sub" attaches it without exchanging the sliced
-        # corpus, and the fold replaces the r16 k_codes-way fan-out +
-        # groupBy(id, sub) corpus exchange. Distances are the
-        # bit-identical expression, fold ascending by code with strict <
-        # == min_by's struct(d, code) tie-to-smallest-code (same finite-
-        # distance premise as _lloyd_fit.assign).
-        carr = c.groupBy("sub").agg(
-            F.array_sort(F.collect_list(F.struct("code", "cv", "cc"))).alias(
-                "_cw"
-            )
-        )
-        cand = F.transform(
-            F.col("_cw"),
-            lambda w: F.struct(
-                (
-                    F.col("svv") - 2 * _dot(F.col("sv"), w["cv"]) + w["cc"]
-                ).alias("d"),
-                w["code"].alias("code"),
-            ),
-        )
-        best = F.aggregate(
-            cand,
-            F.struct(
-                F.lit(float("inf")).alias("d"),
-                F.lit(-1).cast("integer").alias("code"),
-            ),
-            lambda acc, x: F.when(x["d"] < acc["d"], x).otherwise(acc),
-        )
-        return sub.join(F.broadcast(carr), "sub").select(
-            F.col(id_col), "sub", best["code"].alias("code"), "sv", "svv"
-        )
-
-    for _ in range(n_iters):
-        assigned = assign(cent)
-        ex = assigned.select(
-            "sub", "code", F.posexplode("sv").alias("pos", "val")
-        )
-        cm = ex.groupBy("sub", "code", "pos").agg(F.avg("val").alias("mu"))
-        cent = (
-            cm.groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                    lambda s: s["mu"],
-                ).alias("cv")
-            )
-            .withColumn("cc", _dot(F.col("cv"), F.col("cv")))
-            .localCheckpoint(eager=False)
-        )
-
-    # final encode: all m argmins in ONE narrow pass straight off the
-    # un-exploded corpus (r17) — the r16 form exploded to (id, sub) rows,
-    # assigned each, then paid a groupBy(id) exchange + collect_list just
-    # to re-assemble the codes array whose order (sub 0..m-1) this
-    # transform produces by construction. Per sub the slice/norm/distance
-    # expressions are the exact ones the exploded form evaluated, so the
-    # argmin (strict <, ascending code) picks identical codes.
-    # ``passthrough`` columns of the input ride along so callers that
-    # need (cell, codes) rows (IVFADC) skip a corpus self-join too.
-    flat = cent.agg(
-        F.array_sort(
-            F.collect_list(F.struct("sub", "code", "cv", "cc"))
-        ).alias("_cwf")
-    )
-
-    def _code_for(s: Column) -> Column:
-        sv = F.slice(F.col("v"), s * d + 1, F.lit(d))
-        svv = _dot(sv, sv)
-        # element_at references each codeword struct in place — slicing
-        # _cwf would copy k_codes centroid arrays per row per sub
-        cand = F.transform(
-            F.sequence(F.lit(1), F.lit(k_codes)),
-            lambda j: F.element_at(F.col("_cwf"), s * k_codes + j),
-        )
-        scored = F.transform(
-            cand,
-            lambda w: F.struct(
-                (svv - 2 * _dot(sv, w["cv"]) + w["cc"]).alias("d"),
-                w["code"].alias("code"),
-            ),
-        )
-        return F.aggregate(
-            scored,
-            F.struct(
-                F.lit(float("inf")).alias("d"),
-                F.lit(-1).cast("integer").alias("code"),
-            ),
-            lambda acc, x: F.when(x["d"] < acc["d"], x).otherwise(acc),
-        )["code"]
-
-    codes = base.crossJoin(F.broadcast(flat)).select(
-        F.col(id_col),
-        *[F.col(c) for c in passthrough],
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)), _code_for
-        ).alias("codes"),
-    )
-    return codes, cent
-
-
-def pq_adc_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    m: int = 4,
-    k_codes: int = 8,
-    n_iters: int = 2,
-    rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ-compressed ANN serving with asymmetric distance + exact
-    re-rank (Jegou et al. 2011 ADC; ref analytics' similarity reports
-    are the spec surface, ml7_analysis.py:118-170 neighbor panels).
-
-    Serving shape: the per-query lookup table — inner product and
-    squared norm of every (sub, code) centroid against the query's
-    slice — is m*k_codes scalars, computed DRIVER-side from the
-    collected centroid frame (bounded constants, the multiprobe
-    literal-probe device). The ADC scan then scores every encoded row
-    with a FIXED-ORDER chain of m element_at lookups into literal
-    arrays — zero joins, zero shuffles, whole-stage codegen over rows
-    that are m small ints wide. approx_cos rounds to 6dp before the
-    top-``rerank`` cut (ulp-robust cross-engine ordering, vec_id
-    tie-break); survivors carry their raw vector through the cut
-    (pq_fit_encode passthrough), so the exact re-rank is a rerank-row
-    projection — no second corpus scan, no broadcast id fetch, and the
-    whole serve is ONE action (r17; the r16 eager checkpoint + id-join
-    re-read the corpus to fetch rows the coarse scan had already read).
-
-    At 100 TB: the coarse scan reads m bytes per vector instead of
-    512 — the table that doesn't fit in cluster RAM as float64 does as
-    PQ codes — and recall is bounded by code granularity; rerank depth
-    trades it back (SCALING §2c measures the operating point)."""
-    # the raw vector column rides the encode pass (passthrough), so the
-    # exact re-rank reads the top-``rerank`` survivors' vectors straight
-    # off the coarse cut — the r16 form re-scanned the WHOLE corpus with
-    # a broadcast id-join just to fetch <= rerank rows the coarse scan
-    # had already read (r17, guide §1.2 one-pass rule). Float arrays are
-    # half the bytes of the casted doubles, and the TakeOrdered heap
-    # carries only rerank rows per partition, so the carry is ~free.
-    codes, cent = pq_fit_encode(
-        embeddings, m, k_codes, n_iters, id_col, vec_col,
-        passthrough=(vec_col,),
-    )
-    row = (
-        embeddings.filter(F.col(id_col) == query_id)
-        .select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
-        )
-        .collect()
-    )
-    if not row:
-        raise ValueError(f"query id {query_id} not found")
-    qv = [float(x) for x in row[0]["v"]]
-    d = len(qv) // m
-    qnorm = 0.0
-    for x in qv:
-        qnorm += x * x
-    qnorm = qnorm ** 0.5
-
-    # driver-side LUT from the (bounded) centroid frame: ip[sub][code],
-    # cc[sub][code] — python loops mirror _dot's left-to-right fold
-    ip = [[0.0] * k_codes for _ in range(m)]
-    cc = [[0.0] * k_codes for _ in range(m)]
-    for r in cent.collect():
-        s, c = int(r["sub"]), int(r["code"])
-        acc = 0.0
-        for j, x in enumerate(r["cv"]):
-            acc += float(x) * qv[s * d + j]
-        ip[s][c] = acc
-        cc[s][c] = float(r["cc"])
-
-    adc_ip = None
-    adc_cc = None
-    for s in range(m):
-        t_ip = F.element_at(
-            F.array([F.lit(v) for v in ip[s]]), F.col("codes")[s] + 1
-        )
-        t_cc = F.element_at(
-            F.array([F.lit(v) for v in cc[s]]), F.col("codes")[s] + 1
-        )
-        adc_ip = t_ip if adc_ip is None else adc_ip + t_ip
-        adc_cc = t_cc if adc_cc is None else adc_cc + t_cc
-    approx = adc_ip / (F.lit(qnorm) * F.sqrt(adc_cc))
-
-    # single consumer now (the re-rank select below), and the whole
-    # serve is ONE action — the r16 eager localCheckpoint paid an extra
-    # synchronous job to materialize a frame the single action would
-    # only have run once anyway (the int8_rerank lesson).
-    coarse = (
-        codes.filter(F.col(id_col) != query_id)
-        .select(id_col, F.round(approx, 6).alias("_approx"), vec_col)
-        .orderBy(F.desc("_approx"), F.asc(id_col))
-        .limit(rerank)
-    )
-    qlit = F.array([F.lit(x) for x in qv])
-    return (
-        coarse.select(
-            F.col(id_col),
-            F.round(
-                cosine(
-                    F.transform(F.col(vec_col), lambda x: x.cast("double")),
-                    qlit,
-                ),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    k_codes: int = 8,
-    n_iters: int = 2,
-    rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVFADC — the full FAISS-style production recipe (Jegou et al.
-    2011 §IV): a trained coarse quantizer partitions the corpus into
-    cells, each vector's RESIDUAL against its cell centroid is
-    product-quantized, and a query scans only its n_probe nearest
-    cells, scoring candidates by lookup-table ADC over the residual
-    codes before the exact top-k re-rank.
-
-    Residual encoding is what separates this from flat PQ: residuals
-    concentrate near the origin, so the same codebook budget spends
-    its resolution on a much smaller ball — and the cell id itself
-    carries the coarse position for free. Storage per vector is
-    log2(n_cells) bits + m code bytes.
-
-    Build shape: _lloyd_fit (the shared deterministic coarse
-    quantizer), one broadcast join to materialize residuals, then
-    pq_fit_encode on the residual frame (ONE shared codebook across
-    cells — the standard IVFADC memory/quality trade). Serving shape:
-    the probe set, the per-cell query dots and the three ADC tables
-    (query.residual-codeword, cellcentroid.codeword, codeword norms)
-    are ALL driver-side constants built from the two bounded centroid
-    frames; the candidate scan is cell-membership filter + fixed-order
-    element_at chains — zero shuffles, and at 100 TB (artifact form:
-    partitionBy(cell), the write_ivf_index layout) the n_probe cell
-    directories are the only bytes read. approx cosine =
-    (q.c + sum_sub q_sub.cw) / (|q| * sqrt(|c|^2 + 2*sum c_sub.cw +
-    sum |cw|^2)) — exact expansion of cos(q, c + r_hat), fixed
-    left-associative addition order so the SQL oracle replays it
-    bit-for-bit. Same ulp-boundary caveat class as ivf_lloyd_topk."""
-    final, cent, base = _lloyd_fit(embeddings, n_cells, n_iters, id_col, vec_col)
-    resid = final.join(F.broadcast(cent), "cell").select(
-        id_col,
-        "cell",
-        F.zip_with("v", "cv", lambda a, b: a - b).alias("rv"),
-        # the casted vector rides to the coarse cut so the exact re-rank
-        # reads the <= rerank survivors' vectors off the candidate scan
-        # instead of re-scanning the whole corpus with a broadcast
-        # id-join (r17, guide §1.2); costs one extra vector column in
-        # the checkpoint, saves a full corpus pass per serve
-        F.col("v").alias("_ov"),
-        # ~8 build jobs consume the residual frame (dim probe, PQ seed
-        # pass, per-iteration recomputes, the encode); the lazy
-        # checkpoint materializes the coarse assignment + residual once
-        # instead of per job (r17, guide §5 reuse rule)
-    ).localCheckpoint(eager=False)
-    # "cell" and "_ov" ride the encode pass (pq_fit_encode passthrough,
-    # r17), so no corpus self-join is needed to pair each row's cell and
-    # raw vector with its codes
-    codes, books = pq_fit_encode(
-        resid, m=m, k_codes=k_codes, n_iters=n_iters,
-        id_col=id_col, vec_col="rv", passthrough=("cell", "_ov"),
-    )
-    enc = codes
-
-    row = (
-        embeddings.filter(F.col(id_col) == query_id)
-        .select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
-        )
-        .collect()
-    )
-    if not row:
-        raise ValueError(f"query id {query_id} not found")
-    qv = [float(x) for x in row[0]["v"]]
-
-    cells = {int(r["cell"]): (list(r["cv"]), float(r["cc"])) for r in cent.collect()}
-    cw = {}
-    for r in books.collect():
-        cw[(int(r["sub"]), int(r["code"]))] = (list(r["cv"]), float(r["cc"]))
-    probes, approx = _ivfpq_probe_and_approx(cells, cw, qv, m, k_codes, n_probe)
-
-    # single consumer + single action now: the eager checkpoint's extra
-    # synchronous job and the corpus-rescanning broadcast id-join are
-    # both gone — the carried "_ov" IS the transform(cast double) the
-    # re-rank used to recompute on re-fetched rows, bit-identical
-    coarse = (
-        enc.filter(F.col("cell").isin(probes))
-        .filter(F.col(id_col) != query_id)
-        .select(id_col, F.round(approx, 6).alias("_approx"), "_ov")
-        .orderBy(F.desc("_approx"), F.asc(id_col))
-        .limit(rerank)
-    )
-    qlit = F.array([F.lit(x) for x in qv])
-    return (
-        coarse.select(
-            F.col(id_col),
-            F.round(cosine(F.col("_ov"), qlit), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _ivfpq_probe_and_approx(
-    cells: dict[int, tuple[list[float], float]],
-    cw: dict[tuple[int, int], tuple[list[float], float]],
-    qv: list[float],
-    m: int,
-    k_codes: int,
-    n_probe: int,
-):
-    """The driver-side half of IVFADC serving, shared by ivf_pq_topk
-    (in-memory) and query_ivfpq_index (artifact): given the two bounded
-    centroid tables as plain dicts, pick the n_probe cells and build
-    the ADC approx-cosine Column over rows carrying (cell, codes).
-    Python dots fold left-to-right (the _dot order), every table
-    becomes a literal array indexed by element_at, and the addition
-    trees are fixed left-associative — the exact shape _ivf_pq_oracle
-    replays in SQL. Returns (probes, approx_col)."""
-    d = len(qv) // m
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += float(x) * float(y)
-        return acc
-
-    qnorm = dot(qv, qv) ** 0.5
-    probe_rank = sorted(
-        (
-            (-(dot(cv, qv) / ((cc ** 0.5) * qnorm)), cell)
-            for cell, (cv, cc) in cells.items()
-        ),
-    )[:n_probe]
-    probes = [cell for _, cell in probe_rank]
-
-    n_all = max(cells) + 1
-    qc_arr = [0.0] * n_all
-    cc_arr = [0.0] * n_all
-    for cell, (cv, cc) in cells.items():
-        qc_arr[cell] = dot(cv, qv)
-        cc_arr[cell] = cc
-    ipq = [[0.0] * k_codes for _ in range(m)]
-    rr = [[0.0] * k_codes for _ in range(m)]
-    ipc = [[[0.0] * k_codes for _ in range(m)] for _ in range(n_all)]
-    for (s, c), (w, wcc) in cw.items():
-        ipq[s][c] = dot(w, qv[s * d:(s + 1) * d])
-        rr[s][c] = wcc
-        for cell, (cv, _) in cells.items():
-            ipc[cell][s][c] = dot(w, cv[s * d:(s + 1) * d])
-
-    cell1 = F.col("cell") + 1
-    qc_term = F.element_at(F.array([F.lit(v) for v in qc_arr]), cell1)
-    cc_term = F.element_at(F.array([F.lit(v) for v in cc_arr]), cell1)
-
-    def chain(tables_per_sub):
-        out = None
-        for s in range(m):
-            t = F.element_at(
-                F.array([F.lit(v) for v in tables_per_sub[s]]),
-                F.col("codes")[s] + 1,
-            )
-            out = t if out is None else out + t
-        return out
-
-    def chain_cellwise(tab3):
-        # flattened (cell, code) literal per sub: idx = cell*k_codes + code
-        out = None
-        for s in range(m):
-            flat = [
-                tab3[cell][s][c]
-                for cell in range(n_all)
-                for c in range(k_codes)
-            ]
-            t = F.element_at(
-                F.array([F.lit(v) for v in flat]),
-                F.col("cell") * k_codes + F.col("codes")[s] + 1,
-            )
-            out = t if out is None else out + t
-        return out
-
-    adc_ip = qc_term + chain(ipq)
-    n2 = cc_term + F.lit(2.0) * chain_cellwise(ipc) + chain(rr)
-    return probes, adc_ip / (F.lit(qnorm) * F.sqrt(n2))
-
-
-def write_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    m: int = 4,
-    k_codes: int = 8,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The IVFADC serving ARTIFACT — the compressed member of the index
-    family (int8 axis: write_vector_index; int8 LSH: write_multitable_
-    index; int8 IVF: write_ivf_index): each row stores ONLY its m
-    residual code bytes, parquet-partitioned by trained-Lloyd cell,
-    with three sidecars beside the data — ``_centroids`` (coarse),
-    ``_codebooks`` (the shared residual PQ tables) and ``_store`` (the
-    full-precision rows the exact re-rank fetches by id; in production
-    this is the source corpus itself, carried here so the artifact is
-    self-contained). At 100 TB the codes partition is ~m bytes/vector —
-    the candidate scan that fits in page cache when even int8 doesn't —
-    and a query opens n_probe cell directories of it plus an id-pruned
-    read of the store."""
-    final, cent, base = _lloyd_fit(embeddings, n_cells, n_iters, id_col, vec_col)
-    resid = final.join(F.broadcast(cent), "cell").select(
-        id_col,
-        "cell",
-        F.zip_with("v", "cv", lambda a, b: a - b).alias("rv"),
-        # ~8 build jobs consume the residual frame (dim probe, PQ seed
-        # pass, per-iteration recomputes, the encode); the lazy
-        # checkpoint materializes the coarse assignment + residual once
-        # instead of per job (r17, guide §5 reuse rule)
-    ).localCheckpoint(eager=False)
-    codes, books = pq_fit_encode(
-        resid, m=m, k_codes=k_codes, n_iters=n_iters,
-        id_col=id_col, vec_col="rv", passthrough=("cell",),
-    )
-    rows = codes.select(F.col(id_col).alias("vec_id"), "cell", "codes")
-    rows.repartition(
-        rows.sparkSession.sparkContext.defaultParallelism, "cell"
-    ).write.partitionBy("cell").mode("overwrite").parquet(path)
-    cent.select("cell", "cv").write.mode("overwrite").parquet(
-        f"{path}/_centroids"
-    )
-    books.select("sub", "code", "cv", "cc").write.mode("overwrite").parquet(
-        f"{path}/_codebooks"
-    )
-    base.select(F.col(id_col).alias("vec_id"), "v").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/_store")
-
-
-def query_ivfpq_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    rerank: int = 50,
-    exclude_id: int | None = None,
-    inlist_max: int = 1000,
-) -> DataFrame:
-    """Serve top-k from a write_ivfpq_index artifact: both sidecar
-    centroid tables are O(1) driver reads; probes and the three ADC
-    lookup tables become literals (_ivfpq_probe_and_approx); ONLY the
-    n_probe winning cell directories of the codes partition are opened
-    (named explicitly + basePath — the partition-discovery device); and
-    the exact re-rank reads the ``_store`` with the rerank ids pushed
-    into its scan filter. No corpus-sized frame is ever shuffled."""
-    qv_list = [float(x) for x in query_vec]
-    cells = {}
-    for r in spark.read.parquet(f"{path}/_centroids").collect():
-        cv = [float(x) for x in r["cv"]]
-        acc = 0.0  # same left-to-right fold as the build's _dot
-        for x in cv:
-            acc += x * x
-        cells[int(r["cell"])] = (cv, acc)
-    cw = {}
-    for r in spark.read.parquet(f"{path}/_codebooks").collect():
-        cw[(int(r["sub"]), int(r["code"]))] = (
-            [float(x) for x in r["cv"]],
-            float(r["cc"]),
-        )
-    m = max(s for s, _ in cw) + 1
-    k_codes = max(c for _, c in cw) + 1
-    probes, approx = _ivfpq_probe_and_approx(
-        cells, cw, qv_list, m, k_codes, n_probe
-    )
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    probe_dirs = [
-        d
-        for d in (f"{path}/cell={c}" for c in probes)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(d))
-    ]
-    if not probe_dirs:
-        return spark.createDataFrame([], "vec_id bigint, cosine double")
-    idx = (
-        spark.read.option("basePath", path)
-        .parquet(*probe_dirs)
-        .filter(F.col("cell").isin(probes))
-    )
-    if exclude_id is not None:
-        idx = idx.filter(F.col("vec_id") != exclude_id)
-    coarse = (
-        idx.select("vec_id", F.round(approx, 6).alias("_approx"))
-        .orderBy(F.desc("_approx"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    ids = [int(r["vec_id"]) for r in coarse.collect()]
-    store = spark.read.parquet(f"{path}/_store")
-    if len(ids) > inlist_max:
-        # r14 judge nit: at rerank depths worth 10k+ a literal IN-list
-        # bloats the plan (and its codegen) linearly — ship the cut as a
-        # broadcast semi join instead; below that the literal filter is
-        # cheaper (no join node, pushdown-friendly)
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], "vec_id bigint"
-        )
-        store = store.join(F.broadcast(ids_df), "vec_id", "semi")
-    else:
-        store = store.filter(F.col("vec_id").isin(ids))
-    return (
-        store.selectExpr(
-            "vec_id",
-            f"round({_cosine_sql('v', _darr_sql(qv_list))}, 6) AS cosine",
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )

@@ -8471,338 +8471,6 @@ def q_cosine_topk_vectorized(spark, sf_dir):
     return sim.cosine_topk_vectorized(emb, query_id=0, k=10)
 
 
-def _sign_lsh_oracle(n_planes: int = 6, dim: int = 64) -> str:
-    """DuckDB twin of the sign-LSH path: the md5-derived plane constants
-    embed verbatim (same doubles both engines), buckets are the same sign
-    bits, the multi-probe neighborhood is the same Hamming<=1 ball, and
-    the in-bucket cosine ranking reuses the attested
-    list_inner_product algebra. Sign flips require |dot| within float-ulp
-    of zero — same accepted boundary class as 6dp rounds."""
-    planes = sim.md5_planes(n_planes, dim)
-    bits = " + ".join(
-        f"(CASE WHEN list_inner_product(v, "
-        f"[{', '.join(repr(x) for x in p)}]::DOUBLE[]) > 0 "
-        f"THEN {2 ** i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    b AS (SELECT vec_id, v, ({bits}) AS bucket FROM e),
-    q AS (SELECT bucket AS qb, v AS qv FROM b WHERE vec_id = 0)
-    SELECT vec_id,
-           round(list_inner_product(v, qv)
-                 / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(qv, qv))), 6)
-               AS cosine
-    FROM b, q
-    WHERE bit_count(xor(b.bucket, q.qb)) <= 1 AND vec_id != 0
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """
-
-
-def _multitable_lsh_oracle(
-    n_tables: int = 5, n_planes: int = 8, dim: int = 64, d: int = 1
-) -> str:
-    """DuckDB twin of the multi-table sign-LSH path: the per-table
-    md5-derived plane constants (salt "{t}:") embed verbatim, each table's
-    bucket is the same sign-bit sum, and the OR-construction membership
-    (within the Hamming-d ball in ANY table) is the same bit algebra.
-    In-union exact cosine ranking reuses the attested list_inner_product
-    fold. Same float-ulp sign-flip boundary class as _sign_lsh_oracle."""
-    table_bits = []
-    for t in range(n_tables):
-        planes = sim.md5_planes(n_planes, dim, salt=f"{t}:")
-        bits = " + ".join(
-            f"(CASE WHEN list_inner_product(v, "
-            f"[{', '.join(repr(x) for x in p)}]::DOUBLE[]) > 0 "
-            f"THEN {2 ** i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
-        table_bits.append(f"({bits}) AS b{t}")
-    bcols = ",\n           ".join(table_bits)
-    qcols = ", ".join(f"b{t} AS qb{t}" for t in range(n_tables))
-    any_hit = " OR ".join(
-        f"bit_count(xor(b.b{t}, q.qb{t})) <= {d}" for t in range(n_tables)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    b AS (SELECT vec_id, v,
-           {bcols}
-          FROM e),
-    q AS (SELECT {qcols}, v AS qv FROM b WHERE vec_id = 0)
-    SELECT vec_id,
-           round(list_inner_product(v, qv)
-                 / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(qv, qv))), 6)
-               AS cosine
-    FROM b, q
-    WHERE ({any_hit}) AND vec_id != 0
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """
-
-
-def _multiprobe_lsh_oracle(
-    n_tables: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
-    n_flips: int = 4,
-    rank_int8: bool = False,
-) -> str:
-    """DuckDB twin of the query-DIRECTED multi-probe path
-    (sim.ann_topk_multiprobe): replay the query's per-(table, plane) dots
-    against the embedded md5-plane constants, rank flips per table by
-    (|dot| ASC, plane ASC), take the base bucket + top-n_flips flipped
-    buckets as each table's probe set, then membership + exact cosine
-    rank. This attests the probe-set CHOICE itself — the part Lv et al.
-    adds over the Hamming-ball oracle — not just the rank.
-
-    ``rank_int8=True`` is the multitable_index_topk serving twin: ranks
-    the int8-DEQUANTIZED corpus vectors (what the artifact stores) and
-    keeps the query row in the result (an external query has no self row
-    to exclude)."""
-    table_bits = []
-    dot_rows = []
-    for t in range(n_tables):
-        planes = sim.md5_planes(n_planes, dim, salt=f"{t}:")
-        bits = " + ".join(
-            f"(CASE WHEN list_inner_product(v, "
-            f"[{', '.join(repr(x) for x in p)}]::DOUBLE[]) > 0 "
-            f"THEN {2 ** i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
-        table_bits.append(f"({bits}) AS b{t}")
-        for i, p in enumerate(planes):
-            arr = ", ".join(repr(x) for x in p)
-            dot_rows.append(
-                f"SELECT {t} AS t, {i} AS i, {2 ** i} AS w, "
-                f"list_inner_product(qv, [{arr}]::DOUBLE[]) AS d FROM q"
-            )
-    bcols = ",\n           ".join(table_bits)
-    dots_union = "\n        UNION ALL ".join(dot_rows)
-    any_hit = " OR ".join(
-        f"EXISTS (SELECT 1 FROM probes p WHERE p.t = {t} AND p.pb = b.b{t})"
-        for t in range(n_tables)
-    )
-    if rank_int8:
-        base_cte = """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    s AS (SELECT vec_id, v,
-                 greatest(list_max(list_transform(v, x -> abs(x))), 1e-12)
-                     / 127.0 AS sc
-          FROM e),
-    d AS (SELECT vec_id, v,
-                 list_transform(v, x -> CAST(round(x / sc) AS INT) * sc) AS dv
-          FROM s),"""
-        rank_col, rank_src, excl = "dv", "d", ""
-    else:
-        base_cte = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),"
-        rank_col, rank_src, excl = "v", "e", "vec_id != 0 AND "
-    return f"""
-    WITH {base_cte}
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    b AS (SELECT vec_id, {rank_col},
-           {bcols}
-          FROM {rank_src}),
-    dots AS ({dots_union}),
-    qb AS (SELECT t, CAST(sum(CASE WHEN d > 0 THEN w ELSE 0 END) AS INT)
-                  AS qb
-           FROM dots GROUP BY t),
-    fl AS (SELECT t, w,
-                  row_number() OVER (PARTITION BY t
-                                     ORDER BY abs(d) ASC, i ASC) AS rk
-           FROM dots),
-    probes AS (
-        SELECT t, qb AS pb FROM qb
-        UNION
-        SELECT f.t, xor(g.qb, f.w) AS pb
-        FROM fl f JOIN qb g ON f.t = g.t WHERE f.rk <= {n_flips}
-    )
-    SELECT vec_id,
-           round(list_inner_product({rank_col}, qv)
-                 / (sqrt(list_inner_product({rank_col}, {rank_col}))
-                    * sqrt(list_inner_product(qv, qv))), 6) AS cosine
-    FROM b, q
-    WHERE {excl}({any_hit})
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """
-
-
-@register("ann_multiprobe_topk", _multiprobe_lsh_oracle(n_tables=10, n_flips=3))
-def q_ann_multiprobe_topk(spark, sf_dir):
-    """Query-DIRECTED multi-probe ANN (Lv et al. VLDB'07 proper, the r07
-    verdict's #4): 10 md5-plane tables, and instead of each table's full
-    Hamming-1 ball (1+8 buckets) the probe set is the base bucket + the
-    3 flips with the smallest |query margin| — the planes a true
-    neighbor most plausibly disagrees on. Directed probing dominates the
-    ball's recall-per-budget frontier on the fixed panel (SCALING §2c):
-    this setting matches ann_multitable_topk's recall@10 = 0.562 at a
-    16.9% candidate fraction vs the ball's 18.4%, and at the ball's
-    budget reaches ~0.59-0.63. The oracle replays the probe-set choice
-    itself — dots, |margin| ordering, flips — not just the rank."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ann_topk_multiprobe(
-        emb, query_id=0, k=10, n_tables=10, n_planes=8, n_flips=3
-    )
-
-
-def _int8_rerank_oracle(
-    n_tables: int = 10,
-    n_planes: int = 8,
-    dim: int = 64,
-    n_flips: int = 4,
-    rerank: int = 100,
-    k: int = 10,
-) -> str:
-    """DuckDB twin of sim.int8_rerank_topk: multiprobe candidate choice
-    (raw-vector buckets, query-directed flips) -> coarse ASYMMETRIC rank
-    (int8-dequantized corpus vector x full-precision query) cut at
-    ``rerank`` with (approx DESC, id ASC) ties -> exact full-precision
-    re-rank to top-k. Attests both stages AND the cut boundary."""
-    table_bits = []
-    dot_rows = []
-    for t in range(n_tables):
-        planes = sim.md5_planes(n_planes, dim, salt=f"{t}:")
-        bits = " + ".join(
-            f"(CASE WHEN list_inner_product(v, "
-            f"[{', '.join(repr(x) for x in p)}]::DOUBLE[]) > 0 "
-            f"THEN {2 ** i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
-        table_bits.append(f"({bits}) AS b{t}")
-        for i, p in enumerate(planes):
-            arr = ", ".join(repr(x) for x in p)
-            dot_rows.append(
-                f"SELECT {t} AS t, {i} AS i, {2 ** i} AS w, "
-                f"list_inner_product(qv, [{arr}]::DOUBLE[]) AS d FROM q"
-            )
-    bcols = ",\n           ".join(table_bits)
-    dots_union = "\n        UNION ALL ".join(dot_rows)
-    any_hit = " OR ".join(
-        f"EXISTS (SELECT 1 FROM probes p WHERE p.t = {t} AND p.pb = b.b{t})"
-        for t in range(n_tables)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    b AS (SELECT vec_id, v,
-           {bcols}
-          FROM e),
-    dots AS ({dots_union}),
-    qb AS (SELECT t, CAST(sum(CASE WHEN d > 0 THEN w ELSE 0 END) AS INT)
-                  AS qb
-           FROM dots GROUP BY t),
-    fl AS (SELECT t, w,
-                  row_number() OVER (PARTITION BY t
-                                     ORDER BY abs(d) ASC, i ASC) AS rk
-           FROM dots),
-    probes AS (
-        SELECT t, qb AS pb FROM qb
-        UNION
-        SELECT f.t, xor(g.qb, f.w) AS pb
-        FROM fl f JOIN qb g ON f.t = g.t WHERE f.rk <= {n_flips}
-    ),
-    cand AS (SELECT vec_id, v FROM b, q
-             WHERE vec_id != 0 AND ({any_hit})),
-    s AS (SELECT vec_id, v,
-                 greatest(list_max(list_transform(v, x -> abs(x))), 1e-12)
-                     / 127.0 AS sc
-          FROM cand),
-    d AS (SELECT vec_id, list_transform(v, x -> round(x / sc) * sc) AS dv
-          FROM s),
-    coarse AS (SELECT vec_id,
-                      list_inner_product(dv, qv)
-                      / (sqrt(list_inner_product(dv, dv))
-                         * sqrt(list_inner_product(qv, qv))) AS approx,
-                      row_number() OVER (
-                          ORDER BY list_inner_product(dv, qv)
-                              / (sqrt(list_inner_product(dv, dv))
-                                 * sqrt(list_inner_product(qv, qv))) DESC,
-                              vec_id ASC) AS rk
-               FROM d, q
-               QUALIFY rk <= {rerank})
-    SELECT e.vec_id,
-           round(list_inner_product(e.v, qv)
-                 / (sqrt(list_inner_product(e.v, e.v))
-                    * sqrt(list_inner_product(qv, qv))), 6) AS cosine
-    FROM e JOIN coarse USING (vec_id), q
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT {k}
-    """
-
-
-@register("int8_rerank_topk", _int8_rerank_oracle())
-def q_int8_rerank_topk(spark, sf_dir):
-    """Two-stage ANN serving under the value-hash gate
-    (sim.int8_rerank_topk, the Jegou et al. ADC re-rank recipe —
-    previously pytest-only): a wide query-directed multiprobe candidate
-    set is ranked by int8 ASYMMETRIC cosine (4x fewer bytes touched
-    than float32 at the same candidate fraction), and only the top-100
-    survivors pay the exact full-precision re-rank to top-10. The
-    oracle replays candidate choice, quantization, the asymmetric
-    coarse rank INCLUDING its cut boundary, and the exact re-rank —
-    operating-point numbers in SCALING §2c."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.int8_rerank_topk(
-        emb, query_id=0, k=10, n_tables=10, n_planes=8, n_flips=4, rerank=100
-    )
-
-
-@register(
-    "multitable_index_topk",
-    _multiprobe_lsh_oracle(n_tables=10, n_flips=3, rank_int8=True),
-)
-def q_multitable_index_topk(spark, sf_dir):
-    """The multi-table serving ARTIFACT end to end under the value-hash
-    gate (r07 verdict #1's stretch): write_multitable_index lands the
-    int8 rows replicated per LSH table, parquet-partitioned by
-    (tbl, bucket); query_multitable_index turns vector 0's directed
-    probe sets (multiprobe_bucket_sets) into literal partition
-    predicates — the scan reads exactly the L*(1+m) probe directories
-    (PartitionFilters, plan-asserted in tests/test_plans.py) — then
-    dedupes multi-table hits and ranks dequantized cosine. Oracle
-    replays quantize -> per-table buckets -> probe-set choice ->
-    dequantized rank from the raw embeddings table."""
-    import os
-    import tempfile
-
-    emb = _cat(spark, sf_dir).embeddings
-    fp = _source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    prefix = os.path.join(tempfile.gettempdir(), "spark_graft_mtindex_v1")
-    path = _land_once(
-        prefix, fp,
-        lambda tmp: sim.write_multitable_index(
-            emb, tmp, n_tables=10, n_planes=8
-        ),
-    )
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
-    return sim.query_multitable_index(
-        spark, path, qvec, k=10, n_tables=10, n_planes=8, n_flips=3
-    )
-
-
-@register("ann_multitable_topk", _multitable_lsh_oracle())
-def q_ann_multitable_topk(spark, sf_dir):
-    """Multi-table OR-construction sign-LSH ANN (Indyk-Motwani tables x
-    Lv et al. multi-probe): 5 independent md5-plane tables, candidate =
-    Hamming<=1 collision in ANY table, exact cosine rank over the union.
-    Measured recall@10 0.562 at 18.4% mean candidate fraction on the
-    fixed recall_probe panel (sf0.1) — vs 0.238 at ~11% for the
-    single-table ball (SCALING §2c). Fully SQL-replayable via the salted
-    md5-plane device."""
-    emb = _cat(spark, sf_dir).embeddings
-    # eager_candidates: the ranker's broadcast-query branch and scored
-    # branch would otherwise each run the full bucket pass (no subplan
-    # sharing across branches) — checkpointing the ~18% candidate frame
-    # halves the work and pins the bench spread
-    return sim.ann_topk_multitable(
-        emb, query_id=0, k=10, n_tables=5, n_planes=8, probe_hamming=1,
-        eager_candidates=True,
-    )
-
-
 @register(
     "int8_cosine_topk",
     """
@@ -8894,825 +8562,6 @@ def q_vector_index_topk(spark, sf_dir):
     return sim.query_vector_index(
         spark, path, qvec, k=10, n_bits=4, probe_hamming=1
     )
-
-
-@register("ann_lsh_topk", _sign_lsh_oracle())
-def q_ann_lsh_topk(spark, sf_dir):
-    """Approximate top-k via sign-LSH bucketing. Planes are md5-derived
-    (similarity.md5_planes) so the oracle replays bucket assignment and
-    in-bucket exact-cosine ranking bit-for-bit — this query graduated from
-    rows-only when the numpy seeded planes (not replayable in SQL) were
-    swapped for engine-neutral constants."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ann_topk_lsh(emb, query_id=0, k=10, n_planes=6, plane_source="md5")
-
-
-@register(
-    "ann_axis_topk",
-    """
-    WITH e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-             + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-             + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-             + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END) AS bucket
-        FROM embeddings
-    ),
-    q AS (SELECT v AS qv, bucket AS qbucket FROM e WHERE vec_id = 0)
-    SELECT vec_id,
-           round(list_inner_product(v, qv)
-                 / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(qv, qv))),
-                 6) AS cosine
-    FROM e, q
-    WHERE bit_count(xor(e.bucket, q.qbucket)) <= 1 AND vec_id != 0
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """,
-)
-def q_ann_axis_topk(spark, sf_dir):
-    """ANN with the deterministic axis-aligned sign bucketer
-    (sim.ann_topk_axis): exact cosine ranking restricted to the query's
-    Hamming<=1 bucket ball (multi-probe — see ann_topk_lsh) — the
-    sub-linear LSH candidate shape, fully SQL-reproducible, so the
-    approximate path itself sits behind the value-hash gate."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ann_topk_axis(emb, query_id=0, k=10, n_bits=4)
-
-
-@register(
-    "embedding_near_dup",
-    """
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_inner_product(a.v, b.v)
-                 / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))),
-                 6) AS cosine
-    FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE round(list_inner_product(a.v, b.v)
-                / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))),
-                6) >= 0.3
-    """,
-)
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs inside blocking buckets (the
-    label column stands in for an LSH/cluster block key) — the quadratic
-    join never crosses blocks, so it shuffles on the block key only."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.embedding_near_dup_pairs(emb, threshold=0.3, block_col="label")
-
-
-@register(
-    "embedding_near_dup_bucketed",
-    """
-    WITH e AS (
-        SELECT vec_id,
-               (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-             + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-             + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-             + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END) AS block,
-               embedding::DOUBLE[] AS v
-        FROM embeddings
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_inner_product(a.v, b.v)
-                 / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))),
-                 6) AS cosine
-    FROM e a JOIN e b ON a.block = b.block AND a.vec_id < b.vec_id
-    WHERE round(list_inner_product(a.v, b.v)
-                / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))),
-                6) >= 0.3
-    """,
-)
-def q_embedding_near_dup_bucketed(spark, sf_dir):
-    """Embedding near-dup with a COMPUTED blocking key: the axis-sign
-    bucket (sim.axis_sign_bucket, the bucket_balanced_sample family)
-    derived from the vector in the same scan — no curated label/cluster
-    column required, which is the 100-TB situation. The plan shows bucket
-    computation + a block-keyed self-join; cross-bucket pairs are
-    excluded by construction (the documented blocked-near-dup
-    approximation; raise n_bits to trade recall for block size)."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.embedding_near_dup_pairs(
-        emb, threshold=0.3, block_expr=sim.axis_sign_bucket("embedding", 4)
-    )
-
-
-@register(
-    "bucket_balanced_sample",
-    """
-    WITH b AS (
-        SELECT vec_id,
-               (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-             + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-             + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-             + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END) AS bucket
-        FROM embeddings
-    ), r AS (
-        SELECT vec_id, bucket,
-               row_number() OVER (
-                   PARTITION BY bucket ORDER BY md5(CAST(vec_id AS VARCHAR))
-               ) AS quota_rank
-        FROM b
-    )
-    SELECT vec_id, bucket, quota_rank FROM r WHERE quota_rank <= 8
-    """,
-)
-def q_bucket_balanced_sample(spark, sf_dir):
-    """Diversity-balanced sampling: equal per-bucket quota over sign-pattern
-    embedding buckets, k smallest md5(id) within each (RNG-free) — the
-    cluster-balanced subsample a curation pipeline draws so dominant
-    semantic modes can't flood a eval/seed set
-    (sim.bucket_balanced_sample)."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.bucket_balanced_sample(emb, k_per_bucket=8, n_bits=4)
-
-
-def _register_semantic_dedup() -> None:
-    """SemDeDup-style semantic dedup: embedding-cosine near-dup pairs at a
-    high threshold -> connected components -> keep one representative per
-    semantic cluster. The oracle composes the registered near-dup pair SQL
-    (single source of truth for the pair set) inside the same recursive-CTE
-    shape as dedup_clusters, so it must build after embedding_near_dup
-    registers."""
-    pair_sql = ORACLES["embedding_near_dup"]
-    sql = f"""
-    WITH RECURSIVE p AS ({pair_sql}),
-    ed AS (
-        SELECT id_a AS a, id_b AS b FROM p WHERE cosine >= 0.5
-        UNION ALL
-        SELECT id_b, id_a FROM p WHERE cosine >= 0.5
-    ),
-    reach(node, lab) AS (
-        SELECT vec_id, vec_id FROM embeddings
-        UNION
-        SELECT ed.b, r.lab FROM reach r JOIN ed ON r.node = ed.a
-    )
-    SELECT node AS vec_id, min(lab) AS cluster_id,
-           node = min(lab) AS is_canonical
-    FROM reach GROUP BY node
-    """
-
-    @register("semantic_dedup", sql)
-    def q_semantic_dedup(spark, sf_dir):
-        """Semantic (embedding-space) dedup: cosine >= 0.5 pairs within
-        blocks -> min-label connected components -> cluster id + canonical
-        keeper per vector. keep = is_canonical; at 100 TB the block key is
-        a coarse k-means cell (see ivf_kmeans_topk) so the quadratic
-        verify stays within cells."""
-        emb = _cat(spark, sf_dir).embeddings
-        pairs = sim.embedding_near_dup_pairs(
-            emb, threshold=0.3, block_col="label"
-        ).filter(F.col("cosine") >= 0.5)
-        return dedup.connected_components(
-            pairs, emb.select("vec_id"), id_col="vec_id"
-        )
-
-    # computed-block-key twin: the pair SQL is the registered bucketed
-    # near-dup oracle (single source of truth), same recursive-CTE shell
-    pair_sql_b = ORACLES["embedding_near_dup_bucketed"]
-    sql_b = f"""
-    WITH RECURSIVE p AS ({pair_sql_b}),
-    ed AS (
-        SELECT id_a AS a, id_b AS b FROM p WHERE cosine >= 0.5
-        UNION ALL
-        SELECT id_b, id_a FROM p WHERE cosine >= 0.5
-    ),
-    reach(node, lab) AS (
-        SELECT vec_id, vec_id FROM embeddings
-        UNION
-        SELECT ed.b, r.lab FROM reach r JOIN ed ON r.node = ed.a
-    )
-    SELECT node AS vec_id, min(lab) AS cluster_id,
-           node = min(lab) AS is_canonical
-    FROM reach GROUP BY node
-    """
-
-    @register("semantic_dedup_bucketed", sql_b)
-    def q_semantic_dedup_bucketed(spark, sf_dir):
-        """Semantic dedup with a COMPUTED blocking key (axis-sign bucket
-        derived from the vector in the same scan — no curated label or
-        pre-clustered cell required): cosine >= 0.5 pairs within sign
-        buckets -> connected components -> canonical keeper. The full
-        100-TB SemDeDup story end to end: bucket computation, block-keyed
-        quadratic verify, min-label propagation — all value-hash
-        attested."""
-        emb = _cat(spark, sf_dir).embeddings
-        pairs = sim.embedding_near_dup_pairs(
-            emb, threshold=0.3,
-            block_expr=sim.axis_sign_bucket("embedding", 4),
-        ).filter(F.col("cosine") >= 0.5)
-        return dedup.connected_components(
-            pairs, emb.select("vec_id"), id_col="vec_id"
-        )
-
-
-_register_semantic_dedup()
-
-
-@register(
-    "ivf_ann_topk",
-    """
-    WITH e AS (SELECT vec_id, label AS cell, embedding::DOUBLE[] AS v FROM embeddings),
-    u AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS val FROM e),
-    cm AS (SELECT cell, pos, avg(val) AS m FROM u GROUP BY 1, 2),
-    c AS (SELECT cell, list(m ORDER BY pos) AS cv FROM cm GROUP BY 1),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    p AS (
-        SELECT cell FROM c, q
-        ORDER BY list_inner_product(cv, qv)
-                 / (sqrt(list_inner_product(cv, cv)) * sqrt(list_inner_product(qv, qv)))
-                 DESC, cell ASC
-        LIMIT 2
-    )
-    SELECT vec_id,
-           round(list_inner_product(v, qv)
-                 / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(qv, qv))),
-                 6) AS cosine
-    FROM e JOIN p USING (cell), q
-    WHERE vec_id != 0
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """,
-)
-def q_ivf_ann_topk(spark, sf_dir):
-    """IVF-style ANN: per-cell centroids (elementwise mean), probe the 2
-    nearest cells, exact-rank only their members — the sub-linear scale path
-    when the corpus is pre-clustered."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ivf_topk(emb, query_id=0, k=10, n_probe=2, coarse_col="label")
-
-
-def q_ivf_kmeans_topk(spark, sf_dir):
-    """IVF ANN with a trained (seeded MLlib KMeans) coarse quantizer —
-    index build + probe + exact rank. KMeans is not SQL-expressible ->
-    rows-only check; ivf_lloyd_topk is the deterministic twin that puts
-    the full index-BUILD path (seed -> iterate -> assign) under the
-    value-hash gate, and ivf_ann_topk attests the probe/rank math."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ivf_kmeans_topk(emb, query_id=0, k=10, n_cells=8, n_probe=2)
-
-QUERIES["ivf_kmeans_topk"] = q_ivf_kmeans_topk
-
-
-def _lloyd_prefix_ctes(n_cells: int = 8) -> str:
-    """Shared CTE prefix replaying sim._lloyd_fit's 2 unrolled Lloyd
-    iterations: md5-seed selection, nearest-centroid assignment
-    (row_number == Spark's min_by with the same (distance, cell)
-    tie-break), elementwise-mean recompute. Ends at ``a3`` — the final
-    (vec_id, v, cell) assignment — consumed by both the ivf_lloyd_topk
-    oracle (probe + rank) and the semantic_dedup_ivf oracle (cell-blocked
-    pairs + connected components). Distances use the identical
-    vv - 2*v.c + c.c algebra."""
-
-    def assign(cent: str, name: str) -> str:
-        return f"""{name} AS (
-        SELECT vec_id, v, cell FROM (
-            SELECT e.vec_id, e.v, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY e.vv - 2 * list_inner_product(e.v, c.cv)
-                                + c.cc ASC, c.cell ASC) AS rn
-            FROM e CROSS JOIN {cent} c) t WHERE rn = 1)"""
-
-    def recompute(a: str, name: str) -> str:
-        return f"""{name}l AS (
-        SELECT cell, list(m ORDER BY pos) AS cv FROM (
-            SELECT cell, pos, avg(val) AS m FROM (
-                SELECT cell, generate_subscripts(v, 1) AS pos,
-                       unnest(v) AS val FROM {a}) u
-            GROUP BY 1, 2) g GROUP BY cell),
-    {name} AS (SELECT cell, cv, list_inner_product(cv, cv) AS cc FROM {name}l)"""
-
-    return f"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                      list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS vv
-               FROM embeddings),
-    seeds AS (
-        SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-                   AS cell, v
-        FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_cells}
-    ),
-    c0 AS (SELECT cell, v AS cv, list_inner_product(v, v) AS cc FROM seeds),
-    {assign('c0', 'a1')},
-    {recompute('a1', 'c1')},
-    {assign('c1', 'a2')},
-    {recompute('a2', 'c2')},
-    {assign('c2', 'a3')}"""
-
-
-def _ivf_lloyd_oracle(n_cells: int = 8, n_probe: int = 2, k: int = 10) -> str:
-    """DuckDB twin of sim.ivf_lloyd_topk: the shared Lloyd prefix
-    (_lloyd_prefix_ctes) then cosine cell probe + in-cell exact rank."""
-    return f"""
-    WITH {_lloyd_prefix_ctes(n_cells)},
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    p AS (
-        SELECT cell FROM c2, q
-        ORDER BY list_inner_product(cv, qv)
-                 / (sqrt(list_inner_product(cv, cv)) * sqrt(list_inner_product(qv, qv)))
-                 DESC, cell ASC
-        LIMIT {n_probe}
-    )
-    SELECT vec_id,
-           round(list_inner_product(v, qv)
-                 / (sqrt(list_inner_product(v, v)) * sqrt(list_inner_product(qv, qv))),
-                 6) AS cosine
-    FROM a3 JOIN p USING (cell), q
-    WHERE vec_id != 0
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT {k}
-    """
-
-
-@register("ivf_lloyd_topk", _ivf_lloyd_oracle())
-def q_ivf_lloyd_topk(spark, sf_dir):
-    """IVF ANN with a deterministically TRAINED quantizer: md5-selected
-    seeds + 2 unrolled Lloyd iterations as join+groupBy, then probe the 2
-    nearest cells and exact-rank their members (sim.ivf_lloyd_topk).
-    Graduates the index-build path from rows-only — the attestation
-    device that graduated ann_lsh_topk (md5-derived choices replace
-    non-replayable randomness); ivf_kmeans_topk remains the documented
-    MLlib production path."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ivf_lloyd_topk(emb, query_id=0, k=10, n_cells=8, n_probe=2)
-
-
-@register(
-    "embedding_cell_drift",
-    f"""
-    WITH {_lloyd_prefix_ctes(8)},
-    j AS (SELECT cell,
-                 sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS n_a,
-                 sum(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS n_b
-          FROM a3 GROUP BY cell),
-    t AS (SELECT cell, n_a, n_b,
-                 sum(n_a) OVER () AS ta,
-                 sum(n_b) OVER () AS tb,
-                 count(*) OVER () AS nb
-          FROM j)
-    SELECT CAST(max(nb) AS BIGINT) AS n_buckets,
-           round(CAST(sum(CAST(
-                 ((n_a + 0.5) / (ta + 0.5 * nb)
-                  - (n_b + 0.5) / (tb + 0.5 * nb))
-                 * ln(((n_a + 0.5) / (ta + 0.5 * nb))
-                      / ((n_b + 0.5) / (tb + 0.5 * nb)))
-                 AS DECIMAL(28,12))) AS DOUBLE), 6) AS psi
-    FROM t
-    """,
-)
-def q_embedding_cell_drift(spark, sf_dir):
-    """Embedding-distribution drift via IVF cell occupancy (r14): train
-    the deterministic Lloyd quantizer ONCE on the whole corpus
-    (sim._lloyd_fit — the same build ivf_lloyd_topk attests), split the
-    assignment by vec_id parity as two snapshots, and score PSI between
-    their cell-occupancy distributions (sketches.qhist_psi — the cell
-    histogram IS a sketch with bucket = cell). This is the ANN-health
-    check a 100-TB vector store runs between refreshes: if new
-    embeddings drift away from the trained coarse quantizer, cell
-    occupancy skews, probe pruning degrades, and the quantizer needs
-    retraining — detected here from two (cell, n) frames of n_cells
-    rows each, never a vector rescan. The oracle replays the full
-    chain: the shared 2-round Lloyd CTE prefix, per-parity cell counts,
-    Jeffreys-smoothed decimal-summed PSI."""
-    emb = _cat(spark, sf_dir).embeddings
-    final, _cent, _base = sim._lloyd_fit(emb, n_cells=8, n_iters=2)
-    # both parity histograms from ONE corpus pass (r17, guide §1.2):
-    # the per-side filter+groupBy form scanned and assigned the corpus
-    # twice; a conditional count per parity in one (cell) aggregate
-    # yields the same BIGINTs, and the n_cells-row result checkpoints
-    # lazily so the two qhist_psi inputs share the single pass. A cell
-    # whose members are all one parity now carries an explicit 0 where
-    # the filtered form omitted the row — identical after qhist_psi's
-    # full join + fillna(0).
-    odd = F.col("vec_id") % 2 == 1
-    both = (
-        final.groupBy("cell")
-        .agg(
-            F.count(F.when(~odd, F.lit(1))).alias("n_a"),
-            F.count(F.when(odd, F.lit(1))).alias("n_b"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    return sketches.qhist_psi(
-        both.select("cell", F.col("n_a").alias("n")),
-        both.select("cell", F.col("n_b").alias("n")),
-        [],
-    )
-
-
-def _pq_adc_oracle(
-    m: int = 4, d: int = 16, k_codes: int = 8, rerank: int = 50, k: int = 10
-) -> str:
-    """DuckDB twin of sim.pq_adc_topk: per-sub-space Lloyd codebooks
-    (seeds = the k_codes smallest-md5 corpus vectors, SLICED per sub —
-    the _lloyd_prefix_ctes device applied per sub-space), 2 unrolled
-    assign/recompute rounds keyed (vec_id, sub)/(sub, code), corpus
-    encode, then the ADC stage replayed with the SAME fixed-order
-    addition as the Spark element_at chain: four correlated scalar
-    lookups summed left-associatively, rounded to 6dp before the
-    top-rerank cut, exact cosine re-rank on the survivors."""
-
-    def assign(cent: str, name: str) -> str:
-        return f"""{name} AS (
-        SELECT vec_id, sub, sv, svv, code FROM (
-            SELECT t.vec_id, t.sub, t.sv, t.svv, c.code,
-                   row_number() OVER (PARTITION BY t.vec_id, t.sub
-                       ORDER BY t.svv - 2 * list_inner_product(t.sv, c.cv)
-                                + c.cc ASC, c.code ASC) AS rn
-            FROM es t JOIN {cent} c ON t.sub = c.sub) x WHERE rn = 1)"""
-
-    def recompute(a: str, name: str) -> str:
-        return f"""{name}l AS (
-        SELECT sub, code, list(mu ORDER BY pos) AS cv FROM (
-            SELECT sub, code, pos, avg(val) AS mu FROM (
-                SELECT sub, code, generate_subscripts(sv, 1) AS pos,
-                       unnest(sv) AS val FROM {a}) u
-            GROUP BY 1, 2, 3) g GROUP BY sub, code),
-    {name} AS (SELECT sub, code, cv, list_inner_product(cv, cv) AS cc
-               FROM {name}l)"""
-
-    def chain(col: str) -> str:
-        terms = [
-            f"(SELECT {col} FROM lut WHERE sub={s} AND code=kk.codes[{s + 1}])"
-            for s in range(m)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = f"({out} + {t})"
-        return out
-
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    subs AS (SELECT unnest(generate_series(0, {m - 1})) AS sub),
-    es0 AS (
-        SELECT e.vec_id, s.sub,
-               e.v[s.sub * {d} + 1 : s.sub * {d} + {d}] AS sv
-        FROM e, subs s),
-    es AS (SELECT vec_id, sub, sv,
-                  list_inner_product(sv, sv) AS svv FROM es0),
-    seeds AS (
-        SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                  vec_id) - 1 AS code, v
-        FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT {k_codes}),
-    c0l AS (
-        SELECT s.sub, sd.code,
-               sd.v[s.sub * {d} + 1 : s.sub * {d} + {d}] AS cv
-        FROM seeds sd, subs s),
-    c0 AS (SELECT sub, code, cv, list_inner_product(cv, cv) AS cc FROM c0l),
-    {assign('c0', 'a1')},
-    {recompute('a1', 'c1')},
-    {assign('c1', 'a2')},
-    {recompute('a2', 'c2')},
-    {assign('c2', 'a3')},
-    codes AS (SELECT vec_id, list(code ORDER BY sub) AS codes
-              FROM a3 GROUP BY vec_id),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    lut AS (SELECT c.sub, c.code,
-                   list_inner_product(
-                       c.cv, q.qv[c.sub * {d} + 1 : c.sub * {d} + {d}]) AS ip,
-                   c.cc AS cc
-            FROM c2 c, q),
-    scored AS (
-        SELECT kk.vec_id,
-               {chain('ip')} AS adc_ip,
-               {chain('cc')} AS adc_cc
-        FROM codes kk),
-    cand AS (
-        SELECT s.vec_id
-        FROM scored s, q
-        WHERE s.vec_id != 0
-        ORDER BY round(s.adc_ip
-                       / (sqrt(list_inner_product(q.qv, q.qv))
-                          * sqrt(s.adc_cc)), 6) DESC,
-                 s.vec_id ASC
-        LIMIT {rerank})
-    SELECT e.vec_id,
-           round(list_inner_product(e.v, q.qv)
-                 / (sqrt(list_inner_product(e.v, e.v))
-                    * sqrt(list_inner_product(q.qv, q.qv))), 6) AS cosine
-    FROM e JOIN cand USING (vec_id), q
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT {k}
-    """
-
-
-def _ivf_pq_oracle(
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    d: int = 16,
-    k_codes: int = 8,
-    rerank: int = 50,
-    k: int = 10,
-    dim: int = 64,
-) -> str:
-    """DuckDB twin of sim.ivf_pq_topk (IVFADC): the shared Lloyd coarse
-    prefix (_lloyd_prefix_ctes -> a3/c2), elementwise residuals, a
-    p-prefixed per-sub-space Lloyd codebook fit over the residuals,
-    then the ADC cosine expansion cos(q, c + r_hat) replayed with the
-    exact left-associative addition trees the Spark element_at chains
-    build: adc_ip = qc + (((ipq0+ipq1)+ipq2)+ipq3), n2 = (cc +
-    2*ipc-chain) + rr-chain."""
-
-    def passign(cent: str, name: str) -> str:
-        return f"""{name} AS (
-        SELECT vec_id, sub, sv, svv, code FROM (
-            SELECT t.vec_id, t.sub, t.sv, t.svv, c.code,
-                   row_number() OVER (PARTITION BY t.vec_id, t.sub
-                       ORDER BY t.svv - 2 * list_inner_product(t.sv, c.cv)
-                                + c.cc ASC, c.code ASC) AS rn
-            FROM pes t JOIN {cent} c ON t.sub = c.sub) x WHERE rn = 1)"""
-
-    def precompute(a: str, name: str) -> str:
-        return f"""{name}l AS (
-        SELECT sub, code, list(mu ORDER BY pos) AS cv FROM (
-            SELECT sub, code, pos, avg(val) AS mu FROM (
-                SELECT sub, code, generate_subscripts(sv, 1) AS pos,
-                       unnest(sv) AS val FROM {a}) u
-            GROUP BY 1, 2, 3) g GROUP BY sub, code),
-    {name} AS (SELECT sub, code, cv, list_inner_product(cv, cv) AS cc
-               FROM {name}l)"""
-
-    def chain(col: str, with_cell: bool) -> str:
-        terms = []
-        for s in range(m):
-            cell_pred = " AND cell = enc.cell" if with_cell else ""
-            terms.append(
-                f"(SELECT {col} FROM {'lutc' if with_cell else 'lutq'} "
-                f"WHERE sub={s} AND code=enc.codes[{s + 1}]{cell_pred})"
-            )
-        out = terms[0]
-        for t in terms[1:]:
-            out = f"({out} + {t})"
-        return out
-
-    return f"""
-    WITH {_lloyd_prefix_ctes(n_cells)},
-    rs AS (
-        SELECT a3.vec_id, a3.cell,
-               list_transform(generate_series(1, {dim}),
-                              i -> a3.v[i] - c.cv[i]) AS rv
-        FROM a3 JOIN c2 c USING (cell)),
-    psubs AS (SELECT unnest(generate_series(0, {m - 1})) AS sub),
-    pes0 AS (
-        SELECT rs.vec_id, s.sub,
-               rs.rv[s.sub * {d} + 1 : s.sub * {d} + {d}] AS sv
-        FROM rs, psubs s),
-    pes AS (SELECT vec_id, sub, sv,
-                   list_inner_product(sv, sv) AS svv FROM pes0),
-    pseeds AS (
-        SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                  vec_id) - 1 AS code, rv
-        FROM rs ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT {k_codes}),
-    pc0l AS (
-        SELECT s.sub, sd.code,
-               sd.rv[s.sub * {d} + 1 : s.sub * {d} + {d}] AS cv
-        FROM pseeds sd, psubs s),
-    pc0 AS (SELECT sub, code, cv, list_inner_product(cv, cv) AS cc
-            FROM pc0l),
-    {passign('pc0', 'pa1')},
-    {precompute('pa1', 'pc1')},
-    {passign('pc1', 'pa2')},
-    {precompute('pa2', 'pc2')},
-    {passign('pc2', 'pa3')},
-    pcodes AS (SELECT vec_id, list(code ORDER BY sub) AS codes
-               FROM pa3 GROUP BY vec_id),
-    enc AS (SELECT a3.vec_id, a3.cell, p.codes
-            FROM a3 JOIN pcodes p USING (vec_id)),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    probes AS (
-        SELECT cell FROM c2, q
-        ORDER BY list_inner_product(cv, qv)
-                 / (sqrt(list_inner_product(cv, cv))
-                    * sqrt(list_inner_product(qv, qv))) DESC, cell ASC
-        LIMIT {n_probe}),
-    t1 AS (SELECT c.cell, list_inner_product(c.cv, q.qv) AS qc,
-                  c.cc AS cc
-           FROM c2 c, q),
-    lutq AS (SELECT p.sub, p.code,
-                    list_inner_product(
-                        p.cv,
-                        q.qv[p.sub * {d} + 1 : p.sub * {d} + {d}]) AS ipq,
-                    p.cc AS rr
-             FROM pc2 p, q),
-    lutc AS (SELECT c.cell, p.sub, p.code,
-                    list_inner_product(
-                        p.cv,
-                        c.cv[p.sub * {d} + 1 : p.sub * {d} + {d}]) AS ipc
-             FROM pc2 p, c2 c),
-    scored AS (
-        SELECT enc.vec_id,
-               ((SELECT qc FROM t1 WHERE t1.cell = enc.cell)
-                + {chain('ipq', False)}) AS adc_ip,
-               (((SELECT cc FROM t1 WHERE t1.cell = enc.cell)
-                 + 2.0 * {chain('ipc', True)})
-                + {chain('rr', False)}) AS n2
-        FROM enc JOIN probes USING (cell)),
-    cand AS (
-        SELECT s.vec_id
-        FROM scored s, q
-        WHERE s.vec_id != 0
-        ORDER BY round(s.adc_ip
-                       / (sqrt(list_inner_product(q.qv, q.qv))
-                          * sqrt(s.n2)), 6) DESC,
-                 s.vec_id ASC
-        LIMIT {rerank})
-    SELECT e.vec_id,
-           round(list_inner_product(e.v, q.qv)
-                 / (sqrt(list_inner_product(e.v, e.v))
-                    * sqrt(list_inner_product(q.qv, q.qv))), 6) AS cosine
-    FROM e JOIN cand USING (vec_id), q
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT {k}
-    """
-
-
-@register("ivf_pq_topk", _ivf_pq_oracle())
-def q_ivf_pq_topk(spark, sf_dir):
-    """IVFADC (Jegou et al. 2011 §IV, the FAISS-style production
-    layout): trained coarse cells + one shared product-quantizer over
-    cell RESIDUALS; the query probes 2 cells and ADC-scores only their
-    members via driver-side lookup tables before the exact top-k
-    re-rank (sim.ivf_pq_topk). Storage per vector = 3 bits of cell +
-    m=4 code bytes; the whole build->encode->probe->serve path sits
-    behind the value-hash gate."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.ivf_pq_topk(
-        emb, query_id=0, k=10, n_cells=8, n_probe=2, m=4, k_codes=8,
-        n_iters=2, rerank=50,
-    )
-
-
-@register("ivfpq_index_topk", _ivf_pq_oracle())
-def q_ivfpq_index_topk(spark, sf_dir):
-    """The IVFADC serving ARTIFACT end to end under the value-hash gate
-    — the compressed member of the index family: m=4 residual code
-    bytes per row, parquet-partitioned by trained-Lloyd cell, with
-    centroid/codebook/store sidecars. Serving ranks the sidecar
-    centroids driver-side, opens ONLY the n_probe winning cell
-    directories, ADC-scores codes against literal lookup tables, and
-    exact-re-ranks via an id-pruned read of the store
-    (sim.query_ivfpq_index). Oracle = _ivf_pq_oracle verbatim: the
-    artifact round-trip must be value-identical to the in-memory
-    ivf_pq_topk."""
-    import os
-    import tempfile
-
-    emb = _cat(spark, sf_dir).embeddings
-    fp = _source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    prefix = os.path.join(tempfile.gettempdir(), "spark_graft_ivfpq_v1")
-    path = _land_once(
-        prefix, fp,
-        lambda tmp: sim.write_ivfpq_index(
-            emb, tmp, n_cells=8, m=4, k_codes=8, n_iters=2
-        ),
-    )
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0)
-        .select("embedding")
-        .first()[0]
-    ]
-    return sim.query_ivfpq_index(
-        spark, path, qvec, k=10, n_probe=2, rerank=50, exclude_id=0
-    )
-
-
-@register("pq_adc_topk", _pq_adc_oracle())
-def q_pq_adc_topk(spark, sf_dir):
-    """Product-quantized ANN serving (Jegou et al. 2011 ADC): per-sub-space
-    deterministic Lloyd codebooks compress each vector to m=4 code bytes
-    (128x vs float64), the per-query lookup table is m*k_codes driver-side
-    constants, the coarse scan is a zero-shuffle fixed-order element_at
-    chain over the codes, and the top-50 survivors get the exact cosine
-    re-rank (sim.pq_adc_topk). The full build->encode->serve path sits
-    behind the value-hash gate via the md5-seeded-Lloyd attestation
-    device."""
-    emb = _cat(spark, sf_dir).embeddings
-    return sim.pq_adc_topk(
-        emb, query_id=0, k=10, m=4, k_codes=8, n_iters=2, rerank=50
-    )
-
-
-def _register_ivf_index_topk() -> None:
-    sql = f"""
-    WITH {_lloyd_prefix_ctes(8)},
-    s AS (SELECT a3.vec_id, a3.v, a3.cell,
-                 greatest(list_max(list_transform(a3.v, x -> abs(x))), 1e-12)
-                     / 127.0 AS sc
-          FROM a3),
-    d AS (SELECT vec_id, cell,
-                 list_transform(v, x -> CAST(round(x / sc) AS INT) * sc) AS dv
-          FROM s),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    p AS (SELECT cell FROM c2, q
-          ORDER BY list_inner_product(cv, qv)
-                   / (sqrt(list_inner_product(cv, cv))
-                      * sqrt(list_inner_product(qv, qv))) DESC, cell ASC
-          LIMIT 2)
-    SELECT vec_id,
-           round(list_inner_product(dv, qv)
-                 / (sqrt(list_inner_product(dv, dv))
-                    * sqrt(list_inner_product(qv, qv))), 6) AS cosine
-    FROM d JOIN p USING (cell), q
-    ORDER BY cosine DESC, vec_id ASC
-    LIMIT 10
-    """
-
-    @register("ivf_index_topk", sql)
-    def q_ivf_index_topk(spark, sf_dir):
-        """The IVF serving ARTIFACT end to end under the value-hash gate
-        — the trained-quantizer member of the index family (axis:
-        vector_index_topk; LSH tables: multitable_index_topk): int8 rows
-        parquet-partitioned by deterministic-Lloyd cell with the
-        centroids stored beside the data, served by ranking centroids
-        driver-side (n_cells rows, O(1)) and opening ONLY the n_probe
-        winning cell directories. Oracle replays the Lloyd fit
-        (_lloyd_prefix_ctes), int8 quantization, centroid probe and
-        dequantized rank from the raw embeddings — build AND serve
-        attested. Same float caveat class as ivf_lloyd_topk (centroid
-        means inherit summation order)."""
-        import os
-        import tempfile
-
-        emb = _cat(spark, sf_dir).embeddings
-        fp = _source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-        prefix = os.path.join(tempfile.gettempdir(), "spark_graft_ivfindex_v1")
-        path = _land_once(
-            prefix, fp,
-            lambda tmp: sim.write_ivf_index(emb, tmp, n_cells=8, n_iters=2),
-        )
-        qvec = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .first()[0]
-        ]
-        return sim.query_ivf_index(spark, path, qvec, k=10, n_probe=2)
-
-
-_register_ivf_index_topk()
-
-
-def _register_semantic_dedup_ivf() -> None:
-    sql = f"""
-    WITH RECURSIVE {_lloyd_prefix_ctes(8)},
-    p AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM a3 x JOIN a3 y ON x.cell = y.cell AND x.vec_id < y.vec_id
-        WHERE round(list_inner_product(x.v, y.v)
-                    / (sqrt(list_inner_product(x.v, x.v))
-                       * sqrt(list_inner_product(y.v, y.v))), 6) >= 0.5
-    ),
-    ed AS (SELECT id_a AS a, id_b AS b FROM p
-           UNION ALL SELECT id_b, id_a FROM p),
-    reach(node, lab) AS (
-        SELECT vec_id, vec_id FROM embeddings
-        UNION
-        SELECT ed.b, r.lab FROM reach r JOIN ed ON r.node = ed.a
-    )
-    SELECT node AS vec_id, min(lab) AS cluster_id,
-           node = min(lab) AS is_canonical
-    FROM reach GROUP BY node
-    """
-
-    @register("semantic_dedup_ivf", sql)
-    def q_semantic_dedup_ivf(spark, sf_dir):
-        """SemDeDup over TRAINED cells — the published recipe exactly
-        (Abbas et al.: k-means cluster, then dedup within clusters): the
-        block key is the deterministic Lloyd quantizer's cell assignment
-        (sim._lloyd_fit, the ivf_lloyd_topk build), pairs at cosine >=
-        0.5 never cross cells, min-label connected components pick one
-        canonical keeper per semantic cluster. The assignment frame is
-        eagerly localCheckpointed: the quadratic self-join consumes it on
-        both sides and Spark shares no subplan across branches. Oracle
-        reuses the attested Lloyd CTE prefix, so the trained-quantizer
-        blocking is value-hash attested end to end."""
-        from .sources.readers import fan_out
-
-        emb = _cat(spark, sf_dir).embeddings
-        assigned, _cent, _base = sim._lloyd_fit(emb, n_cells=8, n_iters=2)
-        # fan_out restores the executor-wide layout the r16 assignment
-        # exchange used to leave behind (r17: _lloyd_fit's assign is now
-        # a narrow map, so a small-file scan would feed the QUADRATIC
-        # in-cell verify from a single partition); hash-by-id matches
-        # the old post-groupBy partitioning, and at real scale the scan
-        # already yields >= parallelism splits so this no-ops.
-        cells = fan_out(
-            assigned.select(
-                "vec_id", F.col("v").alias("embedding"), "cell"
-            ),
-            "vec_id",
-        ).localCheckpoint(eager=True)
-        pairs = sim.embedding_near_dup_pairs(
-            cells, threshold=0.5, block_col="cell"
-        )
-        return dedup.connected_components(
-            pairs, emb.select("vec_id"), id_col="vec_id"
-        )
-
-
-_register_semantic_dedup_ivf()
 
 
 def q_logreg_fold_cv(spark, sf_dir):
@@ -10718,11 +9567,11 @@ _FRONT_ORDER = [
     "shap_attribution_topk",
     # behavior-touched r16: unigram_surprisal under the explode-free
     # token-total rewrite (r15 verdict #4 — output verified identical,
-    # plan drops one explode chain + the BNLJ); int8_rerank_topk under
-    # the deep-rerank id-DataType fix (r15 ADVICE — construction-only
-    # on the <=1000 path the oracle exercises)
+    # plan drops one explode chain + the BNLJ)
     "unigram_surprisal",
-    "int8_rerank_topk",
+    # rule (a): J2's implementation was rewritten as one union and one
+    # aggregate over the dailies (joins.spine_merge)
+    "date_spine_unify",
     # late-r16 behavior-touched: bigram/trigram under the same
     # explode-free model-scalar rewrites (V from the vocab-sized gram
     # frames / N,V from the unigram frame — construction-only, same

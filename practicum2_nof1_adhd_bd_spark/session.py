@@ -57,7 +57,7 @@ _DEFAULTS = {
     # API call when this is on (the default) — one extra JVM round-trip
     # per operator, which r13 profiling measured as a material share of
     # driver-side plan-build latency on expression-heavy queries
-    # (ann_multiprobe_topk's 80-agg bucket pass). The engine's
+    # (an 80-aggregate LSH bucket pass). The engine's
     # error-handling does not rely on Python-side call-site origins, so
     # trade the debug breadcrumbs for dispatch latency. (The driver's
     # bare-session oracle gate keeps the Spark default.)

@@ -121,17 +121,6 @@ def test_cosine_topk_vectorized_matches_bruteforce(spark):
     ]
 
 
-def test_ann_lsh_topk_returns_bucket_subset(spark):
-    out = similarity.ann_topk_lsh(_embeddings(spark), query_id=0, k=3, n_planes=2)
-    rows = out.collect()
-    assert all(r["vec_id"] != 0 for r in rows)
-    assert len(rows) <= 3
-    # exact near neighbor must land in the query's bucket with 2 planes
-    bf_top = similarity.cosine_topk_bruteforce(_embeddings(spark), 0, 1).collect()[0]
-    if rows:
-        assert rows[0]["cosine"] <= bf_top["cosine"] + 1e-9
-
-
 def test_corpus_clean_summary(spark):
     extra = spark.createDataFrame(
         [(6, "111 222 333 444")], "doc_id long, text string"  # no alpha chars
@@ -174,27 +163,6 @@ def test_connected_components_chain_and_singleton(spark):
     assert out[10]["cluster_id"] == 10 and out[11]["cluster_id"] == 10
     assert out[99]["cluster_id"] == 99 and out[99]["is_canonical"] is True
     assert out[2]["is_canonical"] is False and out[1]["is_canonical"] is True
-
-
-def test_semantic_dedup_clusters_by_cosine(spark):
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0], 0),
-            (1, [0.99, 0.14], 0),   # ~cos 0.990 with vec 0
-            (2, [0.0, 1.0], 0),     # orthogonal -> own cluster
-            (3, [1.0, 0.0], 1),     # same direction as 0 but different block
-        ],
-        "vec_id long, embedding array<float>, label int",
-    )
-    pairs = sim.embedding_near_dup_pairs(emb, threshold=0.9, block_col="label")
-    cc = dedup.connected_components(pairs, emb.select("vec_id"), id_col="vec_id")
-    out = {r["vec_id"]: r for r in cc.collect()}
-    assert out[0]["cluster_id"] == 0 and out[1]["cluster_id"] == 0
-    assert not out[1]["is_canonical"] and out[0]["is_canonical"]
-    # blocking prevents cross-block pairs; orthogonal vector stays alone
-    assert out[2]["cluster_id"] == 2 and out[3]["cluster_id"] == 3
 
 
 def test_incremental_exact_dedup_admits_only_new_content(spark):
@@ -297,31 +265,6 @@ def test_snapshot_diff_statuses(spark):
         4: "unchanged",
         5: "added",
     }
-
-
-def test_multiprobe_lsh_recall_dominates_single_bucket(spark):
-    """Multi-probe (Hamming<=1) candidates are a superset of the d=0
-    bucket, so recall@k can only improve; verify both the set relation
-    and that the probe knob actually widens the candidate pool."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-
-    rows = [
-        (i, [math.sin(i * 0.7 + j) for j in range(8)]) for i in range(300)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    d0 = {r["vec_id"] for r in sim.ann_topk_lsh(
-        emb, 5, 20, n_planes=4, plane_source="md5", probe_hamming=0
-    ).collect()}
-    d1 = {r["vec_id"] for r in sim.ann_topk_lsh(
-        emb, 5, 20, n_planes=4, plane_source="md5", probe_hamming=1
-    ).collect()}
-    exact = {r["vec_id"] for r in sim.cosine_topk_bruteforce(emb, 5, 20).collect()}
-    assert len(d1 & exact) >= len(d0 & exact)
-    assert len(d1) >= len(d0)
 
 
 def test_lsh_ops_leave_no_session_cache(spark, sf_dir):

@@ -16,14 +16,13 @@ def test_oracle_keys_subset_of_queries():
     # grid; gradients finite-difference-verified in tests/test_deep.py),
     # quality_classifier_fit (distributed logistic GD, numpy-reference-
     # verified in tests/test_textops.py; its frozen-weight scoring twin
-    # quality_classifier_scores IS oracle-attested) and ivf_kmeans_topk
-    # (its deterministic twin ivf_lloyd_topk is oracle-attested)
+    # quality_classifier_scores IS oracle-attested)
     assert len(qs) >= 40
     assert set(qs) - set(oracles) == {
         "adwin_changes", "impute_segments", "logreg_fold_cv",
         "lstm_fold_cv", "gru_fold_cv", "conv1d_fold_cv",
         "cnn_lstm_fold_cv", "model_zoo_fold_cv", "model_selection_grid",
-        "quality_classifier_fit", "ivf_kmeans_topk",
+        "quality_classifier_fit",
     }
 
 
@@ -49,8 +48,9 @@ def test_attestation_window_is_stable():
     been attested. Round-16 window (r15 verdict #1): canary + the 3
     r16-new queries (bucket-pruned point lookup, WinZip-AES encrypted
     ZIP scan, exact linear SHAP) + the r16 behavior-touched set
-    (unigram_surprisal explode-free total, int8_rerank_topk deep-path
-    id-type fix, bigram/trigram explode-free model scalars) + the 6
+    (unigram_surprisal explode-free total, bigram/trigram explode-free
+    model scalars) + date_spine_unify (J2 rewritten as one union and one
+    aggregate) + the 6
     owed r10-cohort queries + the first 36 of the 44-query
     last-green-r11 cohort in ledger order (the remaining 7 spill to
     r17 — COVERAGE.md ledger). Rows-only (no-oracle) queries
@@ -64,8 +64,9 @@ def test_attestation_window_is_stable():
         "bucketed_point_lookup", "encrypted_zip_scan",
         "shap_attribution_topk",
         # behavior-touched r16
-        "unigram_surprisal", "int8_rerank_topk",
-        "bigram_surprisal", "trigram_surprisal",
+        "unigram_surprisal", "bigram_surprisal", "trigram_surprisal",
+        # implementation rewritten (J2: one union and one aggregate)
+        "date_spine_unify",
         # the 6 owed r10-cohort queries (r15 verdict #1)
         "sole_return_supplier", "stratified_sample_k", "user_last_value",
         "vector_index_topk", "volume_shipping", "xml_records_scan",

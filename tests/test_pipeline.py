@@ -443,6 +443,29 @@ def test_cli_list_run_audit(spark, sf_dir, capsys, tmp_path):
     assert rc in (0, 1, 2)
 
 
+def test_cli_ann_build_and_query(spark, sf_dir, capsys, tmp_path):
+    """`ann build` lands the bucket-partitioned int8 vector index and
+    `ann query` serves a top-k from it: a corpus vector's own row comes
+    back first. A query without --vector exits 2."""
+    from practicum2_nof1_adhd_bd_spark.__main__ import main
+
+    index = str(tmp_path / "vindex")
+    assert main(["ann", "build", "--index", index, "--sf-dir", sf_dir]) == 0
+    assert "bucket-partitioned int8 index" in capsys.readouterr().out
+    vec = Catalog(spark, sf_dir).embeddings.filter("vec_id = 0").first()
+    arg = ",".join(repr(float(x)) for x in vec["embedding"])
+    # the = form: argparse would read a leading "-0.1" as an option
+    rc = main(["ann", "query", "--index", index, f"--vector={arg}", "--k", "3"])
+    assert rc == 0
+    rows = [
+        line.split("|")[1].strip()
+        for line in capsys.readouterr().out.splitlines()
+        if line.startswith("|") and "vec_id" not in line
+    ]
+    assert len(rows) == 3 and rows[0] == "0"
+    assert main(["ann", "query", "--index", index]) == 2
+
+
 def test_cli_rejects_unknown_query_before_session_start(monkeypatch, capsys):
     """An unknown query name exits 2 without starting the JVM: the name
     is checked against the registry before any session is built."""

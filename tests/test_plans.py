@@ -109,16 +109,6 @@ def test_snapshot_diff_exchanges_carry_hashes_not_text(spark, sf_dir):
         assert "text#" not in header, header
 
 
-def test_bucket_balanced_sample_single_exchange(spark, sf_dir):
-    """Bucket assignment is a projection; the only shuffle is the window
-    rank on the bucket key."""
-    plan = _plan(registry.QUERIES["bucket_balanced_sample"](spark, sf_dir))
-    final = plan.split("+- == Initial Plan ==")[0]
-    import re
-
-    assert len(re.findall(r"\bExchange\b", final)) == 1
-
-
 def test_provenance_scan_prunes_to_digest_columns(spark, sf_dir):
     """The manifest must not read columns outside the canonical set —
     lineitem's digest skips the double columns, so the scan schema must
@@ -188,40 +178,6 @@ def test_ingest_screen_needs_no_index_text(spark):
         assert rows[1]["matched_id"] == 99
     finally:
         cleanup()
-
-
-def test_multitable_lsh_broadcasts_query_buckets(spark, sf_dir):
-    """ann_multitable_topk: the query's per-table bucket row broadcasts
-    (BroadcastNestedLoopJoin over the OR-condition); the corpus is never
-    sort-merge-joined, and the final rank is TakeOrdered, not a global
-    sort."""
-    plan = _plan(registry.QUERIES["ann_multitable_topk"](spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_ivf_lloyd_assignment_is_broadcast_partial_agg(spark, sf_dir):
-    """ivf_lloyd_topk: every centroid frame joins in as a broadcast (the
-    corpus side never shuffles with the n_cells fan-out attached — only
-    the (id, cell) argmin frame exchanges), and the in-cell rank is
-    TakeOrdered."""
-    plan = _plan(registry.QUERIES["ivf_lloyd_topk"](spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan  # centroid cross joins
-    assert "SortMergeJoin" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_bucketed_near_dup_shuffles_on_block_key(spark, sf_dir):
-    """embedding_near_dup_bucketed: the quadratic self-join is an equijoin
-    on the COMPUTED block key (shuffle or broadcast hash join — never a
-    cartesian), so pair work stays inside buckets."""
-    plan = _plan(registry.QUERIES["embedding_near_dup_bucketed"](spark, sf_dir))
-    assert ("SortMergeJoin" in plan) or ("BroadcastHashJoin" in plan) or (
-        "ShuffledHashJoin" in plan
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_q15_single_lineitem_scan_and_broadcast_max(spark, sf_dir):
@@ -294,140 +250,6 @@ def test_vector_index_probe_prunes_partitions(spark, tmp_path, sf_dir):
         scored.append((cos, int(r["vec_id"])))
     expect = [i for c, i in sorted(scored, key=lambda t: (-t[0], t[1]))[:5]]
     assert [r["vec_id"] for r in rows] == expect
-
-
-def test_multitable_index_probe_prunes_partitions(spark, tmp_path, sf_dir):
-    """write_multitable_index + query_multitable_index: the directed
-    probe sets must reach the scan as PartitionFilters over (tbl,
-    bucket) — the multi-table artifact's whole point is that candidate
-    fraction is literally the fraction of directories read — and hits
-    must dedupe across tables (no duplicate vec_ids in the top-k)."""
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-    from practicum2_nof1_adhd_bd_spark.sources.readers import Catalog
-
-    emb = Catalog(spark, sf_dir).embeddings
-    path = str(tmp_path / "mtindex")
-    sim.write_multitable_index(emb, path, n_tables=3, n_planes=6)
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    out = sim.query_multitable_index(
-        spark, path, qvec, k=5, n_tables=3, n_planes=6, n_flips=2
-    )
-    rows = out.collect()
-    plan = _plan(out)
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters")[1][:400]
-    assert "tbl" in pf and "bucket" in pf
-    got = [r["vec_id"] for r in rows]
-    assert len(got) == len(set(got)) == 5
-    # the probed directory set matches the driver-side probe sets
-    sets = sim.multiprobe_bucket_sets(qvec, 3, 6, 2)
-    probed = {
-        (r["tbl"], r["bucket"])
-        for r in spark.read.parquet(path)
-        .filter(
-            (
-                (F.col("tbl") == 0) & F.col("bucket").isin(sets[0])
-            )
-            | ((F.col("tbl") == 1) & F.col("bucket").isin(sets[1]))
-            | ((F.col("tbl") == 2) & F.col("bucket").isin(sets[2]))
-        )
-        .select("tbl", "bucket")
-        .distinct()
-        .collect()
-    }
-    allowed = {(t, b) for t, s in enumerate(sets) for b in s}
-    assert probed <= allowed
-
-
-def test_ivf_index_probe_prunes_to_cells(spark, tmp_path, sf_dir):
-    """write_ivf_index + query_ivf_index: serving must open ONLY the
-    n_probe winning cell directories (named explicitly; the literal cell
-    filter still shows as PartitionFilters), store int8 rows, and keep
-    the centroid sidecar invisible to the partitioned read (underscore
-    prefix)."""
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-    from practicum2_nof1_adhd_bd_spark.sources.readers import Catalog
-
-    emb = Catalog(spark, sf_dir).embeddings
-    path = str(tmp_path / "ivfindex")
-    sim.write_ivf_index(emb, path, n_cells=4, n_iters=1)
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    out = sim.query_ivf_index(spark, path, qvec, k=5, n_probe=2)
-    rows = out.collect()
-    assert len(rows) == 5
-    plan = _plan(out)
-    assert "PartitionFilters" in plan
-    assert "cell" in plan.split("PartitionFilters")[1][:200]
-    stored = spark.read.parquet(path)  # _centroids must be ignored
-    assert dict(stored.dtypes)["qvec"] == "array<tinyint>"
-    cells = {r["cell"] for r in out.sparkSession.read.parquet(path).select("cell").distinct().collect()}
-    assert len(cells) >= 2
-
-
-def test_ivfpq_index_probe_prunes_partitions(spark, tmp_path, sf_dir):
-    """write_ivfpq_index + query_ivfpq_index: the probe's cell filter
-    must reach the codes scan as PartitionFilters, the codes partition
-    must store ONLY (vec_id, codes, cell) — the m-byte compressed form,
-    no float columns — and the artifact serve must be value-identical
-    to the in-memory ivf_pq_topk (same fit, same ADC, same re-rank)."""
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-    from practicum2_nof1_adhd_bd_spark.sources.readers import Catalog
-
-    emb = Catalog(spark, sf_dir).embeddings
-    path = str(tmp_path / "ivfpq")
-    sim.write_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=4, n_iters=1)
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    out = sim.query_ivfpq_index(
-        spark, path, qvec, k=5, n_probe=2, rerank=20, exclude_id=0
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-
-    # the codes partition holds only the compressed columns
-    stored = spark.read.parquet(path)
-    assert set(stored.columns) == {"vec_id", "codes", "cell"}
-
-    # the coarse scan prunes to the probed cell directories: rebuild the
-    # pruned read the query used and assert PartitionFilters
-    cells = {}
-    for r in spark.read.parquet(f"{path}/_centroids").collect():
-        cv = [float(x) for x in r["cv"]]
-        acc = 0.0
-        for x in cv:
-            acc += x * x
-        cells[int(r["cell"])] = (cv, acc)
-    cw = {
-        (int(r["sub"]), int(r["code"])): ([float(x) for x in r["cv"]], float(r["cc"]))
-        for r in spark.read.parquet(f"{path}/_codebooks").collect()
-    }
-    probes, _ = sim._ivfpq_probe_and_approx(cells, cw, qvec, 4, 4, 2)
-    pruned = (
-        spark.read.option("basePath", path)
-        .parquet(*[f"{path}/cell={c}" for c in probes])
-        .filter(f"cell in ({','.join(map(str, probes))})")
-    )
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan
-    assert "cell" in plan.split("PartitionFilters")[1][:200]
-
-    # artifact serve == in-memory serve, value for value
-    mem = sim.ivf_pq_topk(
-        emb, 0, k=5, n_cells=4, n_probe=2, m=4, k_codes=4,
-        n_iters=1, rerank=20,
-    ).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in rows] == [
-        (r["vec_id"], r["cosine"]) for r in mem
-    ]
-
-    # the deep-rerank fetch path (broadcast semi join instead of a
-    # literal IN-list, r14 judge nit) must be value-identical
-    deep = sim.query_ivfpq_index(
-        spark, path, qvec, k=5, n_probe=2, rerank=20, exclude_id=0,
-        inlist_max=0,
-    ).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in deep] == [
-        (r["vec_id"], r["cosine"]) for r in rows
-    ]
 
 
 def test_disjunctive_envelope_filters_reach_both_scans(spark, sf_dir):

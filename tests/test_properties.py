@@ -244,36 +244,6 @@ def test_int8_quantize_reconstruction_bound(spark, vec):
         assert abs(orig - q * scale) <= scale / 2 + 1e-9
 
 
-@given(
-    n_tables=st.integers(min_value=1, max_value=3),
-    d=st.integers(min_value=0, max_value=1),
-)
-@_settings
-def test_multitable_candidates_monotone(spark, n_tables, d):
-    """The multi-table candidate set grows monotonically in BOTH knobs:
-    more tables (OR over more Hamming balls) and a larger probe radius
-    can only add candidates — and the query itself is always one."""
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-
-    rows = [
-        (i, [((i * 7 + j * 3) % 11) - 5.0 for j in range(6)]) for i in range(12)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-    def cands(L, dd):
-        return {
-            r["vec_id"]
-            for r in sim.multitable_lsh_candidates(
-                emb, 0, n_tables=L, n_planes=4, probe_hamming=dd
-            ).collect()
-        }
-
-    base = cands(n_tables, d)
-    assert 0 in base
-    assert base <= cands(n_tables + 1, d)
-    assert base <= cands(n_tables, d + 1)
-
-
 @given(target=st.integers(min_value=1, max_value=60))
 @_settings
 def test_apply_mixture_quota_bounds(spark, target):
@@ -330,43 +300,6 @@ def test_int8_quantize_error_bound(spark, vec):
         assert -127 <= q <= 127
     nrm = math.sqrt(sum(d * d for d in deq))
     assert abs(row["nrm"] - nrm) <= 1e-9 * max(1.0, nrm)
-
-
-@given(
-    vec=st.lists(
-        st.floats(
-            min_value=-10, max_value=10, allow_nan=False, allow_infinity=False
-        ),
-        min_size=8,
-        max_size=8,
-    ),
-    n_flips=st.integers(min_value=0, max_value=8),
-)
-@_settings
-def test_multiprobe_sets_shape(vec, n_flips):
-    """For ANY query vector: each table's directed probe set contains the
-    base bucket, has exactly min(n_flips, P)+1 members (flips are
-    distinct single-bit toggles), and every member is within Hamming 1
-    of the base — the directed set is always a SUBSET of the Hamming-1
-    ball it replaces."""
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-
-    n_tables, n_planes = 3, 8
-    sets = sim.multiprobe_bucket_sets(vec, n_tables, n_planes, n_flips)
-    assert len(sets) == n_tables
-    for t, probes in enumerate(sets):
-        planes = sim.md5_planes(n_planes, len(vec), salt=f"{t}:")
-        qb = 0
-        for i in range(n_planes):
-            acc = 0.0
-            for x, pc in zip(vec, planes[i]):
-                acc += float(x) * pc
-            if acc > 0:
-                qb += 1 << i
-        assert qb in probes
-        assert len(probes) == min(n_flips, n_planes) + 1
-        for p in probes:
-            assert bin(p ^ qb).count("1") <= 1
 
 
 @given(

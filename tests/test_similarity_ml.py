@@ -1,4 +1,4 @@
-"""Unit tests — embedding near-dup, IVF ANN, MLlib fold CV."""
+"""Unit tests — exact and int8 cosine top-k, MLlib fold CV."""
 
 import datetime as dt
 
@@ -18,29 +18,6 @@ def _emb(spark):
     return spark.createDataFrame(
         rows, "vec_id bigint, embedding array<float>, label int"
     )
-
-
-def test_near_dup_blocked(spark):
-    out = sim.embedding_near_dup_pairs(_emb(spark), threshold=0.9, block_col="label")
-    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    assert (0, 1) in pairs           # same block, high cosine
-    assert (0, 3) not in pairs       # high cosine but cross-block
-    assert (0, 2) not in pairs       # same block, low cosine
-    assert all(a < b for a, b in pairs)
-
-
-def test_ivf_probes_nearest_cells(spark):
-    out = sim.ivf_topk(_emb(spark), query_id=0, k=3, n_probe=1, coarse_col="label")
-    got = [r["vec_id"] for r in out.collect()]
-    # probe 1 cell: query's own cluster (centroid nearest to [1,0,0]) -> only block 0
-    assert got[0] == 1
-    assert 3 not in got and 4 not in got
-
-
-def test_ivf_two_probes_cover_all(spark):
-    out = sim.ivf_topk(_emb(spark), query_id=0, k=4, n_probe=2, coarse_col="label")
-    got = {r["vec_id"] for r in out.collect()}
-    assert got == {1, 2, 3, 4}
 
 
 def test_logreg_separable(spark):
@@ -101,6 +78,37 @@ def test_model_zoo_shapes_and_determinism(spark):
     assert knn["usable"] == 1 and knn["accuracy"] == 0.333333
 
 
+def test_model_fits_run_after_session_observation(spark):
+    """Once a session has used a pyspark.sql.Observation (perfbench does,
+    on every op), a fitted model's training summary drags that session's
+    ObservationManager into the transform's task closure, which is not
+    serializable. The zoo (LinearSVC) and the selection grid (binary
+    LogisticRegression, whose copy() keeps the summary) must still run.
+    A child session keeps the shared test session free of the
+    Observation."""
+    from pyspark.sql import Observation
+
+    s = spark.newSession()
+    obs = Observation("zoo_guard")
+    s.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get == {"n": 3}
+    d0 = dt.date(2024, 1, 1)
+    rows = []
+    for i in range(10):
+        x = float(i % 3 - 1)
+        rows.append((d0 + dt.timedelta(days=i), x, x * 2.0, int(x)))
+    df = s.createDataFrame(rows, "date date, f1 double, f2 double, label int")
+    out = ml.model_zoo_fold_cv(
+        df, ["f1", "f2"], "label", train_days=7, gap_days=0, val_days=3
+    ).collect()
+    assert len(out) == 6 and all(r["usable"] == 1 for r in out)
+    grid = ml.model_selection_grid(
+        df, {"FS-A": ["f1", "f2"]}, "label", train_days=5, gap_days=0,
+        val_days=2,
+    ).collect()
+    assert len(grid) == 2 and all(r["n_folds_used"] > 0 for r in grid)
+
+
 def test_model_selection_grid_shape_and_determinism(spark):
     d0 = dt.date(2024, 1, 1)
     rows = []
@@ -137,47 +145,6 @@ def test_model_selection_grid_shape_and_determinism(spark):
         df, fs, "label", train_days=7, gap_days=0, val_days=3
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-
-
-def test_ivf_kmeans_full_index_path(spark):
-    import random
-
-    random.seed(7)
-    # two tight clusters far apart; kmeans with k=2 must separate them
-    rows = []
-    for i in range(20):
-        rows.append((i, [10.0 + random.random(), 0.0, 0.0], 0))
-    for i in range(20, 40):
-        rows.append((i, [0.0, 10.0 + random.random(), 0.0], 0))
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
-    out = sim.ivf_kmeans_topk(emb, query_id=0, k=5, n_cells=2, n_probe=1)
-    got = [r["vec_id"] for r in out.collect()]
-    assert len(got) == 5
-    # probing 1 cell from a query in cluster A returns only cluster-A ids
-    assert all(g < 20 for g in got)
-
-
-def test_bucket_balanced_sample_quota(spark):
-    from practicum2_nof1_adhd_bd_spark.operators.similarity import (
-        bucket_balanced_sample,
-    )
-
-    # 40 vectors, 2 sign-buckets on the first 2 dims (dims 3+ ignored)
-    rows = [
-        (i, [1.0 if i % 2 else -1.0, 1.0, 0.5, -0.5]) for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    out = bucket_balanced_sample(emb, k_per_bucket=3, n_bits=2)
-    got = out.collect()
-    per_bucket = {}
-    for r in got:
-        per_bucket.setdefault(r["bucket"], []).append(r["quota_rank"])
-    # exactly two populated buckets (patterns 0b10 and 0b11), 3 each
-    assert set(per_bucket) == {2, 3}
-    assert all(sorted(v) == [1, 2, 3] for v in per_bucket.values())
-    # determinism: same draw on re-run
-    again = bucket_balanced_sample(emb, k_per_bucket=3, n_bits=2).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 
 
 def test_selection_rule_report_rule_and_gates(spark):
@@ -232,61 +199,6 @@ def test_selection_rule_report_unusable_folds_excluded(spark):
     assert out[0]["selected"] == 0
 
 
-def test_multitable_lsh_union_dominates_single_table(spark):
-    """OR-construction: the multi-table candidate set contains every
-    single-table (table 0) Hamming-ball candidate, and includes the query
-    itself; recall can therefore only go up with more tables."""
-    from pyspark.sql import functions as F
-
-    emb = _emb(spark)
-    multi = {
-        r["vec_id"]
-        for r in sim.multitable_lsh_candidates(
-            emb, 0, n_tables=3, n_planes=4, probe_hamming=1
-        ).collect()
-    }
-    single = {
-        r["vec_id"]
-        for r in sim.multitable_lsh_candidates(
-            emb, 0, n_tables=1, n_planes=4, probe_hamming=1
-        ).collect()
-    }
-    assert 0 in multi and single <= multi
-
-
-def test_multitable_topk_exact_within_candidates(spark):
-    """The ranked output is the exact cosine order restricted to the
-    candidate union (self excluded), never more than k rows."""
-    emb = _emb(spark)
-    out = sim.ann_topk_multitable(
-        emb, 0, k=3, n_tables=3, n_planes=4, probe_hamming=1
-    ).collect()
-    assert 0 not in {r["vec_id"] for r in out}
-    cs = [r["cosine"] for r in out]
-    assert cs == sorted(cs, reverse=True) and len(out) <= 3
-
-
-def test_ivf_lloyd_partitions_and_ranks(spark):
-    """Deterministic Lloyd IVF: with n_cells=2 on two clear clusters the
-    probe of the query's nearest cell returns its cluster-mates first,
-    and repeated runs give identical output (no RNG anywhere)."""
-    rows = [
-        (0, [1.0, 0.0, 0.0], 0),
-        (1, [0.98, 0.05, 0.0], 0),
-        (2, [0.95, 0.02, 0.1], 0),
-        (3, [0.0, 1.0, 0.0], 1),
-        (4, [0.05, 0.99, 0.0], 1),
-        (5, [0.0, 0.97, 0.1], 1),
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>, label int"
-    )
-    a = sim.ivf_lloyd_topk(emb, query_id=0, k=2, n_cells=2, n_probe=1).collect()
-    b = sim.ivf_lloyd_topk(emb, query_id=0, k=2, n_cells=2, n_probe=1).collect()
-    assert a == b
-    assert {r["vec_id"] for r in a} == {1, 2}  # own cluster only, self excluded
-
-
 def test_int8_quantize_error_bound_and_topk_fidelity(spark):
     """Symmetric int8: every reconstructed component is within scale/2 of
     the original (scale = max|v|/127), and the quantized top-k equals the
@@ -319,126 +231,18 @@ def test_int8_quantize_error_bound_and_topk_fidelity(spark):
 
 def test_external_query_vector_matches_corpus_query(spark):
     """query_vec (the serving call) must return the same neighbors as the
-    corpus-row form when given that row's own vector — for both the
-    brute-force ranker and the multi-table LSH path (driver-side bucket
-    computation uses the same sequential fold order as the executors)."""
+    corpus-row form when given that row's own vector."""
     emb = _emb(spark)
     qvec = [1.0, 0.0, 0.0]  # vec_id 0's embedding
     by_id = sim.cosine_topk_bruteforce(emb, 0, k=3).collect()
     by_vec = sim.cosine_topk_bruteforce(emb, 0, k=3, query_vec=qvec).collect()
     assert [tuple(r) for r in by_id] == [tuple(r) for r in by_vec]
 
-    mt_id = sim.ann_topk_multitable(
-        emb, 0, k=3, n_tables=3, n_planes=4, probe_hamming=1
-    ).collect()
-    mt_vec = sim.ann_topk_multitable(
-        emb, 0, k=3, n_tables=3, n_planes=4, probe_hamming=1, query_vec=qvec
-    ).collect()
-    assert [tuple(r) for r in mt_id] == [tuple(r) for r in mt_vec]
-
     # external-only query (no corpus row to exclude): still ranks
     out = sim.cosine_topk_bruteforce(
         emb, None, k=2, query_vec=[0.5, 0.5, 0.0]
     ).collect()
     assert len(out) == 2
-
-
-def test_int8_rerank_topk_matches_exact_rank_of_candidates(spark):
-    """ADC re-rank invariant: with rerank >= candidate count the output
-    IS the exact cosine ranking restricted to the directed probe's
-    candidate set (int8 coarse ordering cannot drop anything when
-    everything survives to the exact stage), and ranked scores are the
-    full-precision ones, not the quantized approximations."""
-    emb = _emb(spark)
-    args = dict(n_tables=3, n_planes=4, n_flips=2)
-    out = sim.int8_rerank_topk(emb, 0, k=3, rerank=1000, **args).collect()
-    cand, qv = sim.multiprobe_candidates(emb, 0, **args)
-    cand_ids = {
-        r["vec_id"] for r in cand.collect() if r["vec_id"] != 0
-    }
-    exp = [
-        r["vec_id"]
-        for r in sim.cosine_topk_bruteforce(emb, 0, k=len(cand_ids) + 1)
-        .collect()
-        if r["vec_id"] in cand_ids
-    ][:3]
-    assert [r["vec_id"] for r in out] == exp
-    assert 0 not in {r["vec_id"] for r in out}
-    cs = [r["cosine"] for r in out]
-    assert cs == sorted(cs, reverse=True)
-
-
-def test_pq_fit_encode_shapes_and_determinism(spark):
-    """PQ build invariants: every vector gets exactly m codes, each code
-    is a valid codebook id, the centroid frame covers every non-empty
-    (sub, code) cell with dim/m-wide vectors, and a rebuild is
-    bit-identical (md5 seeds + unrolled Lloyd — no RNG anywhere)."""
-    emb = _emb(spark).select(
-        "vec_id",
-        F.flatten(F.array_repeat(F.col("embedding"), 4)).alias("embedding"),
-    )  # 12-dim so m=3 -> d=4
-    codes, cent = sim.pq_fit_encode(emb, m=3, k_codes=2, n_iters=2)
-    got = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
-    assert set(got) == {0, 1, 2, 3, 4}
-    assert all(len(c) == 3 for c in got.values())
-    assert all(0 <= x < 2 for c in got.values() for x in c)
-    cent_rows = cent.collect()
-    assert all(len(r["cv"]) == 4 for r in cent_rows)
-    assert {r["sub"] for r in cent_rows} == {0, 1, 2}
-    codes2, _ = sim.pq_fit_encode(emb, m=3, k_codes=2, n_iters=2)
-    assert got == {r["vec_id"]: list(r["codes"]) for r in codes2.collect()}
-
-
-def test_pq_adc_topk_full_rerank_matches_bruteforce(spark):
-    """With rerank >= corpus size the ADC coarse stage cannot drop a true
-    neighbor: pq_adc_topk degenerates to the exact brute-force ranking —
-    the PQ twin of the int8 re-rank invariant."""
-    emb = _emb(spark).select(
-        "vec_id",
-        F.flatten(F.array_repeat(F.col("embedding"), 4)).alias("embedding"),
-    )
-    out = sim.pq_adc_topk(
-        emb, 0, k=3, m=3, k_codes=2, n_iters=1, rerank=100
-    ).collect()
-    exp = sim.cosine_topk_bruteforce(emb, 0, k=3).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in out] == [
-        (r["vec_id"], r["cosine"]) for r in exp
-    ]
-
-
-def test_ivf_pq_topk_full_probe_full_rerank_matches_bruteforce(spark):
-    """IVFADC degenerate invariant: probing every cell with rerank >=
-    corpus size leaves nothing for the coarse stages to drop — the
-    output must be the exact brute-force ranking (residual encoding,
-    ADC expansion and cell routing all cancel out)."""
-    emb = _emb(spark).select(
-        "vec_id",
-        F.flatten(F.array_repeat(F.col("embedding"), 4)).alias("embedding"),
-    )
-    out = sim.ivf_pq_topk(
-        emb, 0, k=3, n_cells=2, n_probe=2, m=3, k_codes=2,
-        n_iters=1, rerank=100,
-    ).collect()
-    exp = sim.cosine_topk_bruteforce(emb, 0, k=3).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in out] == [
-        (r["vec_id"], r["cosine"]) for r in exp
-    ]
-
-
-def test_multitable_buckets_accept_quoted_identifiers(spark):
-    """The expression-string rewrite interpolates caller identifiers
-    into SQL (r13 ADVICE): names needing backticks (spaces, dots,
-    hyphens) must still parse and bind — the Column API accepted them
-    before the rewrite, so the string path must too."""
-    emb = _emb(spark).select(
-        F.col("vec_id").alias("vec id"),
-        F.col("embedding").alias("my-embedding"),
-    )
-    out = sim.multitable_lsh_candidates(
-        emb, 0, n_tables=2, n_planes=4, probe_hamming=1,
-        id_col="vec id", vec_col="my-embedding",
-    ).collect()
-    assert 0 in {r["vec id"] for r in out}
 
 
 def test_sql_expression_twins_bit_exact(spark):
@@ -470,34 +274,6 @@ def test_sql_expression_twins_bit_exact(spark):
         "<d", col_row["cos_col"]
     )
     assert not math.isnan(sql_row["cos_sql"])
-
-
-def test_int8_rerank_deep_path_non_bigint_id(spark):
-    """The >1000-survivor deep-rerank path ships the id cut as a
-    broadcast semi join; it must carry the id field's REAL DataType
-    (ADVICE r15: it hardcoded bigint, breaking string/int ids that the
-    <=1000 isin() path handled)."""
-    import hashlib
-
-    rows = []
-    for i in range(1200):
-        h = hashlib.md5(f"v{i}".encode()).digest()
-        rows.append((f"id_{i:04d}", [h[j] / 255.0 for j in range(8)]))
-    emb = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    deep = sim.int8_rerank_topk(
-        emb, "id_0000", k=5, n_tables=4, n_planes=2, n_flips=2,
-        rerank=1150,
-    ).collect()
-    shallow = sim.int8_rerank_topk(
-        emb, "id_0000", k=5, n_tables=4, n_planes=2, n_flips=2,
-        rerank=900,
-    ).collect()
-    assert len(deep) == 5
-    # the deep (broadcast-semi) and shallow (isin) fetch paths must
-    # agree on the exact-cosine ranking of the shared survivors
-    assert [(r["vec_id"], r["cosine"]) for r in deep] == [
-        (r["vec_id"], r["cosine"]) for r in shallow
-    ]
 
 
 def test_linear_shap_matches_numpy_closed_form(spark):

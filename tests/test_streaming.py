@@ -612,51 +612,6 @@ def test_corpus_index_compaction_preserves_sidecar_and_decisions(
     assert statuses[900] == "exact_dup" and statuses[901] == "admitted"
 
 
-def test_compact_index_preserves_cell_layout_sidecars(spark, tmp_path):
-    """compact_index over the CELL-layout artifacts (write_ivf_index /
-    write_ivfpq_index), whose quantizer sidecars are parquet DIRECTORIES
-    (_centroids, _codebooks, _store) rather than root-level files: the
-    carry loop must copy them recursively, or the post-swap delete of the
-    precompact tree destroys the quantizer and serving fails on a missing
-    _centroids path. Serving must return bit-identical rows before and
-    after the swap for BOTH artifact kinds."""
-    import os
-
-    from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
-
-    emb = spark.createDataFrame(
-        [
-            (i, [float((i * 7 + j * 3) % 11) - 5.0 + 0.1 * j for j in range(4)])
-            for i in range(24)
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
-    qv = [0.2, -0.1, 0.9, 0.4]
-
-    ivf = str(tmp_path / "ivf")
-    sim.write_ivf_index(emb, ivf, n_cells=4, n_iters=2)
-    before = sim.query_ivf_index(spark, ivf, qv, k=5, n_probe=2).collect()
-    nb, na = sim.compact_index(spark, ivf, partition_cols=["cell"])
-    assert nb > 0 and na > 0
-    assert os.path.isdir(os.path.join(ivf, "_centroids"))
-    after = sim.query_ivf_index(spark, ivf, qv, k=5, n_probe=2).collect()
-    assert before == after
-
-    ivfpq = str(tmp_path / "ivfpq")
-    sim.write_ivfpq_index(emb, ivfpq, n_cells=4, m=2, k_codes=4, n_iters=2)
-    before = sim.query_ivfpq_index(
-        spark, ivfpq, qv, k=5, n_probe=2, rerank=10
-    ).collect()
-    nb, na = sim.compact_index(spark, ivfpq, partition_cols=["cell"])
-    assert nb > 0 and na > 0
-    for side in ("_centroids", "_codebooks", "_store"):
-        assert os.path.isdir(os.path.join(ivfpq, side)), side
-    after = sim.query_ivfpq_index(
-        spark, ivfpq, qv, k=5, n_probe=2, rerank=10
-    ).collect()
-    assert before == after
-
-
 def _corpus_ingest_harness(spark, tmp_path, sub):
     """(land, run_once, dirs) helpers for a jsonl-file-fed corpus ingest."""
     import json

@@ -80,11 +80,6 @@ NOTES = {
         "shuffle on o_custkey, rank inside the sorted partition, filter "
         "rn=1 evaluated before project."
     ),
-    "embedding_near_dup": (
-        "Block-keyed self-join: norms computed once per vector before the "
-        "join, pair work restricted to equal block keys — cost tracks "
-        "candidate pairs, never corpus^2."
-    ),
     "media_real_decode": (
         "Two narrow Arrow-batched Python stages (generate, decode) after "
         "one guarded fan-out repartition; the scan reads only doc_id+text "
@@ -165,12 +160,6 @@ NOTES = {
         "full-outer sort-merge join — text never reaches an exchange, so "
         "the diff costs two narrow shuffles regardless of document size."
     ),
-    "bucket_balanced_sample": (
-        "Bucket assignment is a codegen'd projection on the scan; the "
-        "quota is one window rank partitioned by bucket — a single "
-        "exchange on the bucket key, with AQE skew-split as the backstop "
-        "for a hot bucket."
-    ),
     "audio_frame_features": (
         "One Arrow-batched mapInPandas decodes each clip where it lives "
         "and emits narrow frame-grain feature rows — no shuffle at all; "
@@ -213,38 +202,6 @@ NOTES = {
         "signature-estimate algebra against the stored index — per-batch "
         "cost scales with batch x candidate fan-out, never corpus size."
     ),
-    "ann_lsh_topk": (
-        "Sign-LSH bucket assignment is a codegen'd projection (md5-"
-        "derived plane literals); the exact-cosine ranking runs only "
-        "inside the query's bucket after a broadcast of the 1-row query "
-        "bucket — candidate set is corpus/2^planes, sub-linear at scale."
-    ),
-    "ann_multitable_topk": (
-        "Multi-table OR-construction: all L*P plane dots compute in ONE "
-        "codegen explode-aggregate against a broadcast 64-row plane-"
-        "constant table (interpreted per-row folds measured ~2x slower); "
-        "membership is a 1-row BroadcastNestedLoopJoin over the Hamming-"
-        "ball union, candidates carry their vectors (no corpus join-"
-        "back), and the final rank is TakeOrdered. Candidate mass is the "
-        "sub-additive union of L Hamming balls — the recall/budget knob."
-    ),
-    "ivf_lloyd_topk": (
-        "Deterministic Lloyd build: md5-seeded centroids, each iteration "
-        "= broadcast centroid crossJoin -> map-side min_by argmin that "
-        "collapses the n_cells fan-out BEFORE the exchange and carries "
-        "the vector through the aggregate (ONE corpus exchange per "
-        "assignment, no corpus join-back) -> posexplode partial-avg "
-        "recompute; tiny centroid frames localCheckpoint per round (lazy "
-        "since r16: each materializes inside the next broadcast build, "
-        "no blocking per-iteration job) so "
-        "the lineage re-runs no corpus pass. Probe + in-cell TakeOrdered."
-    ),
-    "embedding_near_dup_bucketed": (
-        "Blocking key COMPUTED from the vector in the same scan (axis-"
-        "sign bucket) — the 100-TB form with no curated label column; "
-        "the quadratic self-join stays a block-keyed equijoin (never "
-        "cartesian), norms computed once per vector before the pair join."
-    ),
     "large_volume_customers": (
         "TPC-H Q18 shape: ONE lineitem aggregate serves both the HAVING "
         "filter and the output total (a literal translation re-scans "
@@ -264,12 +221,6 @@ NOTES = {
         "a 100-TB index stores: 4x smaller than float32, so 4x more "
         "candidates fit a scan budget."
     ),
-    "semantic_dedup_bucketed": (
-        "Computed axis-sign block key -> block-keyed quadratic verify "
-        "(never cartesian) -> min-label connected-components loop on the "
-        "tiny pair/label frames only; the corpus embedding scan happens "
-        "once. The no-curated-label SemDeDup path end to end."
-    ),
     "ingest_internal_near_decisions": (
         "One persisted text pass per batch feeds every screen; the "
         "internal near stage is a band-bucket SELF-join of the batch's "
@@ -284,45 +235,12 @@ NOTES = {
         "TakeOrdered. Index IO is ball/2^n_bits of the artifact at any "
         "corpus size."
     ),
-    "ann_multiprobe_topk": (
-        "One explode-agg corpus pass computes all L*P dots against a "
-        "broadcast constant plane table (map-side combined); the directed "
-        "probe sets are driver-side literals, so membership is a pure "
-        "filter — no query-side join at all; candidates carry vectors "
-        "(checkpointed, two consumers) and rank via TakeOrdered. At 100 "
-        "TB the probe sets are exactly the (tbl, bucket) directories the "
-        "multitable artifact reads."
-    ),
-    "multitable_index_topk": (
-        "The serving twin on disk: directed probe sets become literal "
-        "(tbl, bucket) predicates -> PartitionFilters, so the scan reads "
-        "L*(1+m) directories of the L-way-replicated int8 artifact; the "
-        "cross-table dedupe groupBy shuffles only the candidate rows, "
-        "then dequantized cosine + TakeOrdered."
-    ),
-    "semantic_dedup_ivf": (
-        "Lloyd assignment (broadcast centroids, one corpus exchange per "
-        "iteration, min_by partial agg) is checkpointed (lazily since "
-        "r16), then "
-        "consumed by both sides of the cell-blocked quadratic verify — "
-        "without the checkpoint the full fit would run twice (no subplan "
-        "sharing). Pair graph and component loop run on pair-sized "
-        "frames; the corpus is scanned once per fit pass, never "
-        "quadratically."
-    ),
     "cda_probe": (
         "lineSep='<' text scan turns element tags into rows (splittable, "
         "file-parallel across documents); totals are one partial-agg "
         "pass, and the first-code-child association is a per-file window "
         "— one shuffle on the file key, sequential only within a "
         "document, exactly the reference's parse granularity."
-    ),
-    "ivf_index_topk": (
-        "Serving the IVF artifact: centroids come from the O(1) sidecar "
-        "read, only the n_probe winning cell directories are opened "
-        "(explicitly named — no discovery of the other cells), and the "
-        "in-cell dequantize + rank is one codegen projection + "
-        "TakeOrdered. IO tracks the probed region, not the corpus."
     ),
     "encrypted_backup_scan": (
         "binaryFile blob scan -> broadcast plist join -> ONE "
@@ -433,37 +351,6 @@ NOTES = {
         "broadcast) — the textbook group-by-every-column plan would "
         "shuffle name/acctbal strings at fact grain. Top-20 is "
         "TakeOrdered, never a global sort."
-    ),
-    "pq_adc_topk": (
-        "Product quantization end to end: the codebook fit touches "
-        "exploded 1/m-width slices (one exchange per Lloyd round, "
-        "broadcast centroids, map-side min_by argmin), and the ADC "
-        "serving scan is ZERO-shuffle — per-query lookup tables are "
-        "driver-side literals, scoring is a fixed-order element_at "
-        "chain in whole-stage codegen over rows that are m small ints "
-        "wide. The top-rerank survivors carry their raw vector through "
-        "the coarse cut (encode passthrough, r17), so the exact re-rank "
-        "is a projection over rerank rows — one corpus scan, one "
-        "action, no broadcast id-join re-read. At 100 TB the coarse "
-        "scan reads m bytes/vector — 64-128x less than the float "
-        "corpus."
-    ),
-    "ivf_pq_topk": (
-        "The in-memory IVFADC twin: its bench cost (~3-4 s at sf0.1) is "
-        "BUILD-per-run — two deterministic narrow-map Lloyd fits "
-        "(coarse + residual codebooks, zero corpus exchanges, r17) plus "
-        "the passthrough encode — not serving; the re-rank reads the "
-        "survivors' carried vectors instead of re-scanning the corpus "
-        "(r17). The artifact form (ivfpq_index_topk) pays the build "
-        "once at write time and serves warm in ~0.7 s; this query "
-        "exists to put the full build path under the value-hash gate."
-    ),
-    "ivfpq_index_topk": (
-        "The IVFADC artifact serve: two O(1) sidecar reads, n_probe "
-        "cell directories of m-byte code rows (PartitionFilters "
-        "asserted in tests/test_plans.py), ADC against literal tables, "
-        "and an id-pruned store read for the exact re-rank — bytes "
-        "touched track probes x codes + rerank x floats, never corpus."
     ),
     "sole_return_supplier": (
         "Q21's EXISTS + NOT-EXISTS without self-joins: one fact pass to "

@@ -163,31 +163,24 @@ QUERIES = [
     "hash_split",
     "chunk_dedup_profile",
     "snapshot_diff_report",
-    "bucket_balanced_sample",
     # round-6 additions (iphone_backup_scan excluded: constant-size fixture)
     "etl_audit_report",
     "snapshot_provenance",
     "incremental_ingest_decisions",
     "selection_rule_report",
     # round-7 additions (embeddings + orders/lineitem now replicate too)
-    "ann_multitable_topk",
-    "ivf_lloyd_topk",
     "int8_cosine_topk",
-    "embedding_near_dup_bucketed",
     "apply_mixture_sample",
     "large_volume_customers",
     "calibration_bins",
     # round-8 additions
-    "ann_multiprobe_topk",
-    "semantic_dedup_ivf",
     "vector_index_topk",
-    "multitable_index_topk",
     "duplicate_spans",
     "local_supplier_volume",
     # round-11 additions (decontaminate_fuzzy excluded: replication makes
     # every replica an exact eval-dup, so the pair stage degenerates to
     # the C(10,2)-per-group blowup already characterized by the
-    # minhash_lsh_pairs / semantic_dedup_ivf footnotes)
+    # minhash_lsh_pairs footnote)
     "temporal_instability_scores",
     "trigram_surprisal",
     "dsir_select_topk",
@@ -213,7 +206,6 @@ QUERIES = [
     "weighted_sample_topk",
     "zipf_law_fit",
     "benford_digit_audit",
-    "int8_rerank_topk",
     # the event-analytics trio: event replicas KEEP their user ids, so
     # 10x means 10x-denser per-user streams — the hot-key stress case
     # for user-keyed windows/aggs — while the output grain (steps /
@@ -228,7 +220,7 @@ QUERIES = [
 # claim under test is that probe IO tracks the probe budget, not the
 # corpus; build linearity is the plain one-pass write covered by the
 # other rows
-PRELAND = {"vector_index_topk", "multitable_index_topk"}
+PRELAND = {"vector_index_topk"}
 
 
 def time_queries(spark, sf_dir: str) -> dict[str, float]:
@@ -400,16 +392,12 @@ def _tree_bytes(path: str) -> int:
 
 
 def probe_index_build(spark, tmp: str, sf_dir: str, factor: int) -> dict:
-    """One-time BUILD cost of the three on-disk ANN artifacts (the warm
-    serve path is benched elsewhere; multitable_index_topk's 33.5 s cold
-    bench repeat is this build). Times write_vector_index /
-    write_multitable_index / write_ivf_index over the sf corpus at 1x
-    and ``factor``x (vec_id-shifted replicas, built in-memory), reporting
-    seconds + partition-directory / data-file counts + artifact MB so the
-    build's scaling axis is explicit: vector index writes 2^n_bits dirs,
-    multitable L x min(2^P, corpus) dirs (the dominant cost — one row
-    REPLICA per table), IVF n_cells dirs + the Lloyd fit's per-iteration
-    corpus exchange."""
+    """One-time BUILD cost of the on-disk vector index (the warm serve
+    path is benched elsewhere). Times write_vector_index over the sf
+    corpus at 1x and ``factor``x (vec_id-shifted replicas, built
+    in-memory), reporting seconds + partition-directory / data-file
+    counts + artifact MB so the build's scaling axis is explicit: the
+    index writes 2^n_bits dirs."""
     from pyspark.sql import functions as F
 
     from practicum2_nof1_adhd_bd_spark.operators import similarity as sim
@@ -437,47 +425,25 @@ def probe_index_build(spark, tmp: str, sf_dir: str, factor: int) -> dict:
                 .repartition(32)
                 .localCheckpoint(eager=True)  # replica build off the clock
             )
-        for name, build, pcols in (
-            (
-                "vector_index",
-                lambda p, e=emb: sim.write_vector_index(e, p),
-                1,
-            ),
-            (
-                "multitable_index",
-                lambda p, e=emb: sim.write_multitable_index(e, p),
-                2,
-            ),
-            (
-                "ivf_index",
-                lambda p, e=emb: sim.write_ivf_index(e, p),
-                1,
-            ),
-            (
-                "ivfpq_index",
-                lambda p, e=emb: sim.write_ivfpq_index(e, p),
-                1,
-            ),
-        ):
-            path = os.path.join(tmp, f"build_{name}_{mult}x")
-            t0 = time.time()
-            build(path)
-            sec = round(time.time() - t0, 2)
-            n_dirs = n_files = 0
-            for root, dirs, files in os.walk(path):
-                n_dirs += sum(1 for d in dirs if "=" in d)
-                n_files += sum(1 for f in files if f.endswith(".parquet"))
-            out["builds"].append(
-                {
-                    "artifact": name,
-                    "scale": f"{mult}x",
-                    "rows_in": n0 * mult,
-                    "build_sec": sec,
-                    "partition_dirs": n_dirs,
-                    "data_files": n_files,
-                    "mb": round(_tree_bytes(path) / 1e6, 2),
-                }
-            )
+        path = os.path.join(tmp, f"build_vector_index_{mult}x")
+        t0 = time.time()
+        sim.write_vector_index(emb, path)
+        sec = round(time.time() - t0, 2)
+        n_dirs = n_files = 0
+        for root, dirs, files in os.walk(path):
+            n_dirs += sum(1 for d in dirs if "=" in d)
+            n_files += sum(1 for f in files if f.endswith(".parquet"))
+        out["builds"].append(
+            {
+                "artifact": "vector_index",
+                "scale": f"{mult}x",
+                "rows_in": n0 * mult,
+                "build_sec": sec,
+                "partition_dirs": n_dirs,
+                "data_files": n_files,
+                "mb": round(_tree_bytes(path) / 1e6, 2),
+            }
+        )
     return out
 
 
@@ -675,18 +641,14 @@ def probe_skew(spark, n_rows: int, n_salts: int = 8) -> dict:
 
 
 SF1_SUITE = [
-    # the 10 most expensive headline queries per BENCH_FULL/r14 (the
-    # judge's "do the per-query 10x ratios compose at suite grain" ask)
+    # the most expensive headline queries per BENCH_FULL/r14 that are
+    # still registered (the judge's "do the per-query 10x ratios compose
+    # at suite grain" ask)
     "setsim_prefix_join",
-    "ivf_pq_topk",
-    "semantic_dedup_ivf",
     "langid_classifier_scores",
     "minhash_lsh_pairs",
-    "pq_adc_topk",
     "trigram_surprisal",
-    "int8_rerank_topk",
     "quantile_3way_label",
-    "ivf_lloyd_topk",
 ]
 
 
@@ -696,7 +658,7 @@ def probe_sf1_suite(spark, sf_dir: str, factor: int) -> dict:
     replicate is itself minutes of IO), then time the TOP-10 most
     expensive headline queries at both scales, median of 3 warm repeats
     each. Reports per-query medians, ratios, and the suite sums. The
-    pair-output queries (setsim/minhash/semantic_dedup) see the
+    pair-output queries (setsim/minhash) see the
     documented C(factor,2)-per-duplicate-group blowup — replication
     makes every replica a true near-dup, which is the worst case, not a
     plan regression (SCALING §2p-10x)."""
@@ -749,9 +711,8 @@ PAIR_QUADRATIC = {
     # replication makes every replica a true (near-)dup of its original:
     # TRUE pair/span output grows C(factor,2)-per-group — the documented
     # worst case, not a plan property (SCALING §2p-10x)
-    "minhash_lsh_pairs", "setsim_prefix_join", "semantic_dedup_ivf",
+    "minhash_lsh_pairs", "setsim_prefix_join",
     "simhash_near_dups", "decontaminate_fuzzy", "decontaminate_containment",
-    "embedding_near_dup", "embedding_near_dup_bucketed",
     "duplicate_spans", "duplicate_span_cut", "chunk_dedup_profile",
 }
 FIXTURE_CONSTANT = {
@@ -868,7 +829,7 @@ def main() -> None:
         "--index-build-factor",
         type=int,
         default=0,
-        help="run ONLY the ANN-artifact build-cost probe at 1x and Nx",
+        help="run ONLY the vector-index build-cost probe at 1x and Nx",
     )
     ap.add_argument(
         "--skew-rows",
